@@ -40,12 +40,15 @@ object WeatherDims {
     wmo.toDF("code", "description")
   }
 
-  /** Broadcast lookup join with default — the weather.py:92-114 shape. */
+  /** Broadcast lookup join with default — the weather.py:92-114 shape.
+    * The default renders like Python's `"Code {}".format(code)`: a
+    * missing code reads `Code None`. */
   def withDescription(s: SparkSession, df: DataFrame): DataFrame =
     df.join(broadcast(wmoDf(s)), Seq("code"), "left")
       .withColumn(
         "description",
-        coalesce(col("description"), format_string("Code %d", col("code"))))
+        coalesce(col("description"), concat(lit("Code "),
+          coalesce(col("code").cast("string"), lit("None")))))
 
   /** Chained CASE WHEN code IN (...) — the weather.py:117-130 shape. */
   def iconCol(code: Column): Column =
@@ -67,5 +70,5 @@ object WeatherDims {
     }.mkString("CASE ", " ", " ELSE 'unknown' END")
 
   def descSql(codeCol: String): String =
-    s"COALESCE(description, 'Code ' || $codeCol)"
+    s"COALESCE(description, 'Code ' || COALESCE(CAST($codeCol AS VARCHAR), 'None'))"
 }

@@ -486,18 +486,20 @@ object DedupOps {
       .orderBy("a_id", "b_id")
   }
 
-  /** Sign-aggregated SimHash sketch per doc (doc_id, simhash) at any
-    * bit width — since round 18 ONE map-side projection: the native
+  /** Sign-aggregated SimHash sketch per doc (doc_id, `carry`…,
+    * simhash) at any bit width — since round 18 ONE map-side
+    * projection: the native
     * [[graft.plans.TokSketch]] fold over the per-doc distinct token
     * array, bit-identical to the former explode + dictionary join +
     * bit-sum aggregate (parity asserted in TokSketchSpec; the legacy
     * relational formulation is kept below as the spec's reference).
     * No explode, no dictionary exchange, no 62-column aggregate
     * exchange — the sketch relation is now as cheap as a column. */
-  private def sketchOf(docs: DataFrame, bits: Int): DataFrame = {
+  private def sketchOf(docs: DataFrame, bits: Int,
+      carry: String*): DataFrame = {
     graft.plans.TokSketch.register(docs.sparkSession)
-    docs.select(col("doc_id"),
-      graft.plans.TokSketch.simhashOf(distinctToks, bits).as("simhash"))
+    docs.select((col("doc_id") +: carry.map(col)) :+
+      graft.plans.TokSketch.simhashOf(distinctToks, bits).as("simhash"): _*)
   }
 
   /** LEGACY relational sketch derivation (explode + distinct-token
@@ -1086,7 +1088,10 @@ object DedupOps {
     * aggregations — the corpus-side scan is bucket-aligned, exchange-
     * free. The merge hint pins the bucketed SMJ so table stats can
     * never flip the corpus side into a broadcast (driver-bound at
-    * scale) and AQE cannot re-shape the aligned read. */
+    * scale) and AQE cannot re-shape the aligned read. The contract's
+    * `doc_id` order is applied here, on the batch path only: the
+    * per-batch core stays unordered, so a stream pays no range
+    * exchange per micro-batch. */
   def dedupIncrementalIndexed(s: SparkSession, dir: String,
       indexTable: String): DataFrame =
     dedupAgainstIndex(s,
@@ -1094,6 +1099,7 @@ object DedupOps {
         .filter(col("src_idx") >= IncrementalCorpusSrcs)
         .select("doc_id", "lang", "source", "toks"),
       indexTable)
+      .orderBy("doc_id")
 
   /** The per-batch decision core of [[dedupIncrementalIndexed]]:
     * `batchDocs` is any (doc_id, lang, source, toks) relation — the
@@ -1102,13 +1108,19 @@ object DedupOps {
     * the decision logic in one function is what makes "per-batch
     * decisions match the batch operator" true by construction (and
     * asserted on data in StreamingOpsSpec): a doc's decision depends
-    * only on (doc, corpus index), never on its batch-mates. Registers
-    * `shared` relations — callers running per-batch (the streaming
-    * sink) release them via Core.releaseShared() after consuming. */
+    * only on (doc, corpus index), never on its batch-mates. One row per
+    * doc, in no particular order.
+    *
+    * `batchDocs` is read ONCE: every doc reaches the decision through
+    * the LEFT candidate join itself (explode_outer keeps a doc with no
+    * tokens, the outer join keeps a doc with no candidates), so no
+    * join back to the batch is needed. Inside a streaming
+    * `foreachBatch` the batch is the stateful watermark-dedup plan, and
+    * a second read would re-run that dedup and re-commit its state
+    * store on every micro-batch. */
   private[graft] def dedupAgainstIndex(s: SparkSession,
       batchDocs: DataFrame, indexTable: String,
       threshold: Double = 0.6): DataFrame = {
-    val batch = shared(batchDocs)
     // b_sz rides along map-side (tokens are distinct, so size(toks)
     // IS the contract's per-doc exploded-token count): the delta needs
     // no size aggregation, mirroring the denormalized c_sz. The delta
@@ -1120,31 +1132,33 @@ object DedupOps {
     // merge-run buffering spread over salt× more bucketed keys. Cost:
     // salt× the DELTA's shuffle volume — the side that is tiny
     // relative to the corpus the index layout keeps exchange-free.
-    val delta = batch.select(col("lang"), explode(col("toks")).as("tok"),
-      col("doc_id").as("b_id"), size(col("toks")).as("b_sz"))
+    val delta = batchDocs.select(col("doc_id"), col("source"),
+        col("lang"), explode_outer(col("toks")).as("tok"),
+        size(col("toks")).as("b_sz"))
       .withColumn("__salt",
         explode(array((0 until IncrementalIndexSalt).map(lit): _*)))
-    val dupOf = delta.hint("merge")
-      .join(s.table(indexTable), Seq("lang", "tok", "__salt"))
-      .groupBy("b_id", "c_id", "b_sz", "c_sz")
+    val jaccard = col("inter").cast(DoubleType) /
+      (col("b_sz") + col("c_sz") - col("inter"))
+    decisions(delta.hint("merge")
+      .join(s.table(indexTable), Seq("lang", "tok", "__salt"), "left")
+      .groupBy("doc_id", "source", "c_id", "b_sz", "c_sz")
       .agg(count(lit(1)).as("inter"))
-      .filter(col("inter").cast(DoubleType)
-        / (col("b_sz") + col("c_sz") - col("inter")) >= threshold)
-      .groupBy("b_id")
-      .agg(min(col("c_id")).as("dup_of"))
-      .withColumnRenamed("b_id", "doc_id")
-    batch.select("doc_id", "source")
-      .join(dupOf, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"), col("dup_of"),
-        col("dup_of").isNull.as("is_new"))
-      .orderBy("doc_id")
+      .groupBy("doc_id", "source")
+      .agg(min(when(jaccard >= threshold, col("c_id"))).as("dup_of")))
   }
+
+  /** (doc_id, source, dup_of) → the decision rows both per-batch cores
+    * emit: (doc_id, source, dup_of, is_new). */
+  private def decisions(dupOf: DataFrame): DataFrame =
+    dupOf.select(col("doc_id"), col("source"), col("dup_of"),
+      col("dup_of").isNull.as("is_new"))
 
   /** (band, bbits) LSH bucket rows of a 62-bit sketch relation — the
     * [[bandedJoin]] pigeonhole tiling ([[Simhash64HammingMax]]+1 = 4
     * bands of 16 bits) as a standalone projection, shared by the
     * sketch-index build and the per-batch probe so both sides bucket
-    * identically by construction. */
+    * identically by construction. Every column of `sketch` rides along
+    * on each of a doc's band rows. */
   private def simhash64BandRows(sketch: DataFrame): DataFrame = {
     val nBands = Simhash64HammingMax + 1
     val width = (Simhash64Bits + nBands - 1) / nBands
@@ -1154,10 +1168,7 @@ object DedupOps {
         shiftright(col("simhash"), j * width).bitwiseAND(lit(mask))
           .as("bbits"))
     }: _*)
-    sketch.select(col("doc_id"), col("simhash"),
-        explode(bandStructs).as("bs"))
-      .select(col("doc_id"), col("simhash"),
-        col("bs.band").as("band"), col("bs.bbits").as("bbits"))
+    sketch.select(col("*"), inline(bandStructs))
   }
 
   /** One-time GLOBAL SimHash sketch index over the corpus — the
@@ -1194,26 +1205,19 @@ object DedupOps {
     * (band, bbits); the corpus side reads bucket-aligned (merge-hint
     * pinned, exchange-free at every corpus scale); duplicate
     * multi-band collisions collapse in the min-aggregation, so no
-    * first-band arithmetic is needed on this path. */
+    * first-band arithmetic is needed on this path. Like
+    * [[dedupAgainstIndex]] it reads `batchDocs` once — the band join is
+    * a LEFT join (a doc always has 4 band rows, a null sketch included)
+    * — and emits one row per doc, in no particular order. */
   private[graft] def dedupAgainstSimhashIndex(s: SparkSession,
-      batchDocs: DataFrame, indexTable: String): DataFrame = {
-    val batch = shared(batchDocs)
-    val probe = simhash64BandRows(simhash64SketchesOf(batch))
-      .select(col("band"), col("bbits"), col("doc_id").as("b_id"),
-        col("simhash").as("b_sh"))
-    val dupOf = probe.hint("merge")
-      .join(s.table(indexTable), Seq("band", "bbits"))
-      .filter(bit_count(col("b_sh").bitwiseXOR(col("c_sh")))
-        .cast(IntegerType) <= Simhash64HammingMax)
-      .groupBy("b_id")
-      .agg(min(col("c_id")).as("dup_of"))
-      .withColumnRenamed("b_id", "doc_id")
-    batch.select("doc_id", "source")
-      .join(dupOf, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"), col("dup_of"),
-        col("dup_of").isNull.as("is_new"))
-      .orderBy("doc_id")
-  }
+      batchDocs: DataFrame, indexTable: String): DataFrame =
+    decisions(simhash64BandRows(sketchOf(batchDocs, Simhash64Bits, "source"))
+      .hint("merge")
+      .join(s.table(indexTable), Seq("band", "bbits"), "left")
+      .groupBy("doc_id", "source")
+      .agg(min(when(bit_count(col("simhash").bitwiseXOR(col("c_sh")))
+        .cast(IntegerType) <= Simhash64HammingMax, col("c_id")))
+        .as("dup_of")))
 
   /** Directional token containment |A∩B|/|A| >= `threshold` within
     * `source` blocks as a plain relational count-join over the one

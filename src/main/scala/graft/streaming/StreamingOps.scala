@@ -69,10 +69,18 @@ object StreamingOps {
     * (asserted in StreamingOpsSpec), and the corpus side stays
     * exchange-free on every batch: only the delta explodes and
     * shuffles, the 100 TB ingest shape. `onBatch` receives each
-    * micro-batch's decision rows (doc_id, source, dup_of, is_new);
-    * shared caches registered by the decision core are released after
-    * each batch (the per-query cache scope — a long-running stream
-    * must not accumulate dead cached relations). */
+    * micro-batch's decision rows (doc_id, source, dup_of, is_new), one
+    * per document and unordered: a global sort would cost every batch
+    * a range exchange and a sampling job.
+    *
+    * Invariant: a `foreachBatch` body reads its micro-batch ONCE. The
+    * micro-batch is the stateful watermark-dedup plan, and every extra
+    * read of it (a self-join, a second action) re-runs that dedup and
+    * re-commits its state store — doubling the state rows updated and
+    * the commit time of every batch. The decision core is written to
+    * that rule (one LEFT candidate join, no join back to the batch),
+    * and so is [[simhashDedupStream]]; StreamingOpsSpec checks it on
+    * the stream's own progress (numRowsUpdated == new documents). */
   def incrementalDedup(docs: DataFrame, watermark: String,
       indexTable: String)(
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
@@ -86,7 +94,6 @@ object StreamingOps {
             array_distinct(split(lower(col("text")), " ")).as("toks")),
           indexTable)
         onBatch(decisions, id)
-        graft.core.Core.releaseShared()
       }
   }
 
@@ -103,9 +110,9 @@ object StreamingOps {
     * StreamingOpsSpec) and the corpus side reads exchange-free on
     * every batch: only the micro-batch's sketch rows shuffle — 4
     * 16-byte rows per arriving doc, never text. `onBatch` receives
-    * each batch's decision rows (doc_id, source, dup_of, is_new);
-    * shared caches registered by the decision core are released after
-    * each batch (the per-query cache scope). A full ingest loop would
+    * each batch's decision rows (doc_id, source, dup_of, is_new), one
+    * per document and unordered; the batch is read once (the
+    * [[incrementalDedup]] invariant). A full ingest loop would
     * append the new docs' sketch rows to the index between batches —
     * kept out of the operator (index maintenance policy, not decision
     * semantics), exactly like `incrementalDedup`. */
@@ -120,7 +127,6 @@ object StreamingOps {
         val decisions = graft.operators.DedupOps.dedupAgainstSimhashIndex(
           s, b.select("doc_id", "lang", "source", "text"), indexTable)
         onBatch(decisions, id)
-        graft.core.Core.releaseShared()
       }
   }
 

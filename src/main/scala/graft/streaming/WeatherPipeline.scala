@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import scala.util.control.NonFatal
+
 /** The reference's main loop (/root/reference/weather.py:315-333) as a
   * Structured Streaming pipeline:
   *
@@ -103,7 +105,9 @@ object WeatherPipeline {
   }
 
   /** Run the loop: each micro-batch renders one frame to `sink`; any
-    * tick failure emits the degraded frame and the query keeps running. */
+    * non-fatal tick failure emits the degraded frame and the query keeps
+    * running. Fatal errors (out of memory, interrupts, linkage errors)
+    * are not ticks gone wrong: they propagate and stop the query. */
   def run(spark: SparkSession, forecastPaths: String, title: String,
       trigger: Trigger, checkpoint: String)(sink: Seq[Frame] => Unit): StreamingQuery =
     observations(spark, forecastPaths).writeStream
@@ -116,7 +120,7 @@ object WeatherPipeline {
             renderFrame(title, interpret(batch.sparkSession, batch))
               .as(Encoders.product[Frame]).collect().toSeq
           } catch {
-            case e: Throwable => Seq(errorFrame(title, e))
+            case NonFatal(e) => Seq(errorFrame(title, e))
           }
         sink(frames)
       }

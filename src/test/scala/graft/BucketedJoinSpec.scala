@@ -89,4 +89,45 @@ class BucketedJoinSpec extends AnyFunSuite {
     assert(indexed.collect().map(_.toSeq).toSeq == contract)
     spark.sql("DROP TABLE IF EXISTS dedup_idx")
   }
+
+  test("indexed incremental dedup decides every arriving doc exactly " +
+    "once and matches the contract on edge inputs") {
+    import spark.implicits._
+    // (doc_id, lang, source, text): corpus = src0..src9, arriving =
+    // src10+ (the contract's batch boundary)
+    val corpus = Seq(
+      (1L, "en", "src0", "the quick brown fox jumps"),
+      (2L, "en", "src1", "a slow green turtle walks home"),
+      (3L, "de", "src2", "der schnelle braune fuchs"),
+      (4L, "en", "src3", null))
+    val cases = Seq(
+      "null text, unindexed lang, empty text" -> (corpus ++ Seq(
+        (10L, "en", "src10", "the quick brown fox jumps"),
+        (11L, "en", "src11", null),
+        (12L, "xx", "src12", "the quick brown fox jumps"),
+        (13L, "en", "src13", "a slow green turtle walks"),
+        (14L, "en", "src14", ""))),
+      "nothing matches" -> (corpus ++ Seq(
+        (20L, "en", "src10", "entirely unrelated words here"),
+        (21L, "de", "src11", "ganz andere woerter"))),
+      "empty batch" -> corpus)
+    for ((name, docs) <- cases) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+      docs.toDF("doc_id", "lang", "source", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      spark.sql("DROP TABLE IF EXISTS dedup_idx_edge")
+      graft.operators.DedupOps.buildIncrementalIndex(spark, dir,
+        "dedup_idx_edge")
+      val indexed = graft.operators.DedupOps
+        .dedupIncrementalIndexed(spark, dir, "dedup_idx_edge")
+        .collect().map(_.toSeq).toSeq
+      val contract = SparkEntry.queries("dedup_incremental")(spark, dir)
+        .collect().map(_.toSeq).toSeq
+      Core.releaseShared()
+      val arriving = docs.filter(_._3.drop(3).toInt >= 10).map(_._1)
+      assert(indexed.map(_.head) == arriving.sorted, s"$name: $indexed")
+      assert(indexed == contract, s"$name: $indexed vs $contract")
+    }
+    spark.sql("DROP TABLE IF EXISTS dedup_idx_edge")
+  }
 }

@@ -6,7 +6,7 @@ import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Obs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MemoryStream-driven tests for watermark late-drop, session windows,
@@ -16,6 +16,19 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   private def ts(min: Int): Timestamp =
     Timestamp.valueOf(f"2026-08-12 10:$min%02d:00")
+
+  /** The watermark dedup's state of the last micro-batch that carried
+    * input (a watermark advance may run a no-data batch after it): it
+    * updated exactly `updated` rows — the batch's new documents — and
+    * holds `total`, every distinct document seen so far. A sink that
+    * reads its micro-batch twice re-runs the dedup and doubles both. */
+  private def assertStateOnce(q: StreamingQuery, updated: Int,
+      total: Int): Unit = {
+    val op = q.recentProgress.filter(_.numInputRows > 0).last
+      .stateOperators(0)
+    assert(op.numRowsUpdated == updated, op.json)
+    assert(op.numRowsTotal == total, op.json)
+  }
 
   test("watermarked tumbling window drops late data (append mode)") {
     import spark.implicits._
@@ -123,11 +136,13 @@ class StreamingOpsSpec extends AnyFunSuite {
       .start()
     in.addData(first.toIndexedSeq)
     q.processAllAvailable()
+    assertStateOnce(q, updated = first.length, total = first.length)
     // batch 2: the remaining docs PLUS an at-least-once redelivery of a
     // batch-1 doc — the watermark dedup must suppress it, so it is
     // decided exactly once (in batch 1)
     in.addData((second :+ first.head).toIndexedSeq)
     q.processAllAvailable()
+    assertStateOnce(q, updated = second.length, total = batchDocs.length)
     q.stop()
 
     import scala.jdk.CollectionConverters._
@@ -186,9 +201,11 @@ class StreamingOpsSpec extends AnyFunSuite {
       .start()
     in.addData(first.toIndexedSeq)
     q.processAllAvailable()
+    assertStateOnce(q, updated = first.length, total = first.length)
     // batch 2 redelivers a batch-1 doc: decided exactly once overall
     in.addData((second :+ first.head).toIndexedSeq)
     q.processAllAvailable()
+    assertStateOnce(q, updated = second.length, total = arriving.length)
     q.stop()
 
     import scala.jdk.CollectionConverters._
@@ -204,7 +221,6 @@ class StreamingOpsSpec extends AnyFunSuite {
     val batchRun = graft.operators.DedupOps.dedupAgainstSimhashIndex(
       spark, deltaDf, "simhash_idx_stream")
       .collect().map(_.toSeq).toSeq
-    graft.core.Core.releaseShared()
     assert(streamed.toSet == batchRun.toSet)
     // and the banded candidate rule is EXACT over sketches: dup_of ==
     // the min corpus doc within Hamming <= Simhash64HammingMax,

@@ -34,6 +34,15 @@ class WeatherDimsSpec extends AnyFunSuite {
     assert(out(-1) == "Code -1")
   }
 
+  test("a missing code falls back to 'Code None', as Python's " +
+    "\"Code {}\".format(None)") {
+    val out = Seq(Option.empty[Int], Some(4)).toDF("code")
+      .transform(df => WeatherDims.withDescription(spark, df))
+      .collect().map(r => Option(r.get(0)) -> r.getString(1)).toMap
+    assert(out(None) == "Code None")
+    assert(out(Some(4)) == "Code 4")
+  }
+
   test("icon classification is total: every int maps, first-match-wins") {
     val domain = -5 to 105
     val out = domain.toDF("code")
