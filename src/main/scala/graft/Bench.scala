@@ -1,101 +1,83 @@
 package graft
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+/** Bench's run history (docs/bench_history.jsonl), read once into rows.
+  * Only rows measured on the same corpus tag, the same session core
+  * count and the same JVM heap are kept: a timing taken on another
+  * corpus or host shape is no baseline for this run. Rows that lack
+  * any of the three keys are dropped. Corrupt lines are skipped, and a
+  * missing or unreadable file reads as no rows, so the tripwire and the
+  * guard line simply stay quiet. */
+private[graft] object BenchHistory {
+
+  /** One archived run: per-query seconds (-1.0 marks a failed query),
+    * the total, whether it was an `--only` subset, and the host-floor
+    * probes (-1.0 marks a failed probe). */
+  final case class Row(queries: Map[String, Double], total: Option[Double],
+      partial: Boolean, floor: Map[String, Double])
+
+  def read(path: Path, corpus: String, cpus: Int, heapBytes: Long)
+      : Seq[Row] = {
+    val mapper = new ObjectMapper()
+    def numbers(n: JsonNode): Map[String, Double] =
+      n.properties().asScala.map(e => e.getKey -> e.getValue.asDouble(-1.0))
+        .toMap
+    val lines =
+      try Files.readAllLines(path).asScala.toSeq
+      catch { case NonFatal(_) => Nil }
+    lines.filter(_.trim.nonEmpty).flatMap { l =>
+      try {
+        val node = mapper.readTree(l)
+        val b = if (node.has("bench")) node.get("bench") else node
+        val sameHost = b.has("corpus") && b.get("corpus").asText == corpus &&
+          b.has("cpus") && b.get("cpus").asInt == cpus &&
+          b.has("heap_bytes") && b.get("heap_bytes").asLong == heapBytes
+        if (!sameHost) None
+        else Some(Row(numbers(b.path("queries")),
+          if (b.has("value")) Some(b.get("value").asDouble) else None,
+          b.path("partial").asBoolean(false), numbers(b.path("floor"))))
+      } catch { case NonFatal(_) => None }
+    }
+  }
+
+  def median(vs: Seq[Double]): Double = {
+    val s = vs.sorted
+    s(s.size / 2)
+  }
+
+  /** Per-query medians over the last `lastRuns` rows, partial runs
+    * included (the medians are per query) and failed timings excluded. */
+  def medians(rows: Seq[Row], lastRuns: Int): Map[String, Double] =
+    rows.takeRight(lastRuns).flatMap(_.queries).filter(_._2 > 0)
+      .groupMap(_._1)(_._2).map { case (q, vs) => q -> median(vs) }
+
+  /** Totals of the last `lastRuns` full (non-partial) runs — the guard
+    * line's median-of-3 reference. */
+  def totals(rows: Seq[Row], lastRuns: Int): Seq[Double] =
+    rows.filterNot(_.partial).flatMap(_.total).takeRight(lastRuns)
+
+  /** Median of a floor-probe field over the last `lastRuns` full runs
+    * that recorded one, -1.0 when none did. Failed probes archive -1.0
+    * sentinels; those are NOT measurements and are filtered out, or a
+    * few failed-probe runs would poison the median the floor factors
+    * divide by (ADVICE r16). */
+  def floor(rows: Seq[Row], field: String, lastRuns: Int): Double = {
+    val vs = rows.filterNot(_.partial).flatMap(_.floor.get(field))
+      .filter(_ > 0.0).takeRight(lastRuns)
+    if (vs.isEmpty) -1.0 else median(vs)
+  }
+}
+
 object Bench {
-
-  /** Per-query medians from docs/bench_history.jsonl (last `lastRuns`
-    * SAME-CORPUS runs, failed timings excluded) — the same data
-    * bench_guard.py reads post-hoc, loaded in-run so the tripwire can
-    * fire BEFORE the bench ships its numbers. Missing/corrupt history,
-    * or no records for this corpus tag ⇒ empty map (the tripwire
-    * simply stays quiet). Records without a tag (pre-round-7) are
-    * excluded once a tag is in use — they predate the regen that
-    * motivated tagging. */
-  private def historyMedians(lastRuns: Int, corpus: String)
-      : Map[String, Double] = {
-    try {
-      val path = java.nio.file.Paths.get("docs/bench_history.jsonl")
-      if (!java.nio.file.Files.exists(path)) return Map.empty
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val lines = java.nio.file.Files.readAllLines(path)
-      import scala.jdk.CollectionConverters._
-      val runs = lines.asScala.filter(_.trim.nonEmpty).flatMap { l =>
-        try {
-          val node = mapper.readTree(l)
-          val bench = if (node.has("bench")) node.get("bench") else node
-          val sameCorpus = bench.has("corpus") &&
-            bench.get("corpus").asText() == corpus
-          if (sameCorpus && bench.has("queries")) Some(bench.get("queries"))
-          else None
-        } catch { case _: Throwable => None }
-      }.takeRight(lastRuns)
-      val byQuery = scala.collection.mutable.Map
-        .empty[String, List[Double]].withDefaultValue(Nil)
-      for (qs <- runs; name <- qs.fieldNames().asScala) {
-        val v = qs.get(name).asDouble(-1.0)
-        if (v > 0) byQuery(name) = v :: byQuery(name)
-      }
-      byQuery.toMap.collect { case (name, vs) if vs.nonEmpty =>
-        val sorted = vs.sorted
-        name -> sorted(sorted.size / 2)
-      }
-    } catch { case _: Throwable => Map.empty }
-  }
-
-  /** Totals of the last `lastRuns` FULL (non-partial) same-corpus runs
-    * from the history — the guard line's median-of-3 reference, the
-    * same protocol BASELINE.md records. Empty on missing/corrupt
-    * history (the guard line then reports hist_median3: -1). */
-  private def historyTotals(lastRuns: Int, corpus: String): Seq[Double] = {
-    try {
-      val path = java.nio.file.Paths.get("docs/bench_history.jsonl")
-      if (!java.nio.file.Files.exists(path)) return Nil
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val lines = java.nio.file.Files.readAllLines(path)
-      import scala.jdk.CollectionConverters._
-      lines.asScala.filter(_.trim.nonEmpty).flatMap { l =>
-        try {
-          val node = mapper.readTree(l)
-          val bench = if (node.has("bench")) node.get("bench") else node
-          val ok = bench.has("corpus") &&
-            bench.get("corpus").asText() == corpus &&
-            bench.has("value") && !bench.has("partial")
-          if (ok) Some(bench.get("value").asDouble()) else None
-        } catch { case _: Throwable => None }
-      }.takeRight(lastRuns).toSeq
-    } catch { case _: Throwable => Nil }
-  }
-
-  /** Median of a floor-probe field over the last `lastRuns` FULL runs
-    * that recorded one (any corpus — the probes measure the HOST, not
-    * the data; rounds before round 16 carry no floor fields and are
-    * simply absent). Failed probes archive -1.0 sentinels; those are
-    * NOT measurements and are filtered here, or a few failed-probe
-    * runs in the window would poison the host median the floor
-    * factors divide by (ADVICE r16). -1 when no history. */
-  private def historyFloor(field: String, lastRuns: Int): Double = {
-    try {
-      val path = java.nio.file.Paths.get("docs/bench_history.jsonl")
-      if (!java.nio.file.Files.exists(path)) return -1.0
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val lines = java.nio.file.Files.readAllLines(path)
-      import scala.jdk.CollectionConverters._
-      val vs = lines.asScala.filter(_.trim.nonEmpty).flatMap { l =>
-        try {
-          val node = mapper.readTree(l)
-          val bench = if (node.has("bench")) node.get("bench") else node
-          if (bench.has("floor") && !bench.has("partial")
-              && bench.get("floor").has(field))
-            Some(bench.get("floor").get(field).asDouble())
-          else None
-        } catch { case _: Throwable => None }
-      }.filter(_ > 0.0).takeRight(lastRuns).toSeq.sorted
-      if (vs.isEmpty) -1.0 else vs(vs.size / 2)
-    } catch { case _: Throwable => -1.0 }
-  }
 
   def main(args: Array[String]): Unit = {
     // --only=q1,q2 restricts the run to named queries (affordable
-    // per-query iteration, mirrors Scale's flag). Such runs ship with
+    // per-query iteration). Such runs ship with
     // "partial":true so total-based gates (bench_guard's driver-total
     // median) skip them; per-query history medians stay valid either
     // way — they are keyed per query.
@@ -103,14 +85,9 @@ object Bench {
       .collectFirst { case a if a.startsWith("--only=") =>
         a.stripPrefix("--only=").split(",").map(_.trim).toSet }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Core.localSession()
+    val cpus = spark.sparkContext.defaultParallelism
+    val heapBytes = Runtime.getRuntime.maxMemory
     // Warm the JVM/session once so no measured query is charged Spark's
     // startup cost. A trivial range-sum is NOT enough: profiling showed
     // the first query in a fresh JVM runs its stages 3-20x slow
@@ -169,14 +146,14 @@ object Bench {
       spark.catalog.clearCache()
       // Measured-and-rejected (round 13): extending this warmup to all
       // six pipeline_* queries bought NOTHING — the family ran 44.3 s
-      // vs 44.5 s quiet without it. (A Profile cold-vs-warm comparison
-      // had suggested ~19 s of compile tax, but Profile's warm rerun
+      // vs 44.5 s quiet without it. (A by-hand cold-vs-warm comparison
+      // had suggested ~19 s of compile tax, but its warm rerun
       // reuses the query's materialized `shared()` persists — warm
       // DATA, which this bench rightly clears per query — not compile
       // state.) The pipeline_full pass above remains the useful part:
       // it compiles the shared dedup backbone the alphabetical
       // first-toucher would otherwise pay for.
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       // a failed warmup must not fail the bench, but it must be LOUD:
       // every first-position query then carries the JIT tax the warmup
       // exists to absorb, and a silent swallow would read as drift
@@ -200,7 +177,7 @@ object Bench {
     try {
       def settleProbe(): Double = {
         val t0 = System.nanoTime()
-        spark.range(0, 20000000L, 1, 32)
+        spark.range(0, 20000000L, 1, cpus)
           .selectExpr("id % 1001 AS k", "id AS v")
           .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
           .write.format("noop").mode("overwrite").save()
@@ -223,7 +200,7 @@ object Bench {
       }
       System.err.println(f"[bench] settle: $probes%d probes, floor " +
         f"$best%.3fs, stable=$stable%b")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] settle failed (continuing): " +
         e.getMessage)
     }
@@ -237,10 +214,10 @@ object Bench {
     // driver run carries its own host evidence. spin_ms: a fixed
     // 2e8-step xorshift fold on one thread — pure CPU, no JVM/Spark
     // surface beyond the JIT (one untimed warm pass). stage_ms: median
-    // per-job wall of 12 trivial single-stage 32-task jobs — the
-    // scheduling/launch floor every multi-stage plan pays per stage.
+    // per-job wall of 12 trivial single-stage jobs, one task per core —
+    // the scheduling/launch floor every multi-stage plan pays per stage.
     // The guard line reports each as a factor vs the history median of
-    // the same probe (host property, corpus-independent): factors ~1.0
+    // the same probe on the same host shape: factors ~1.0
     // = same host band; stage factor >> spin factor = the r14
     // VM-floor signature, totals drift without any code-side cause.
     var floorSpinMs = -1.0
@@ -261,13 +238,13 @@ object Bench {
       floorSpinMs = math.min(spin(), spin())
       val stageTs = (0 until 12).map { _ =>
         val t0 = System.nanoTime()
-        spark.range(0, 32, 1, 32).count()
+        spark.range(0, cpus, 1, cpus).count()
         (System.nanoTime() - t0) / 1e6
       }.sorted
       floorStageMs = stageTs(stageTs.size / 2)
       System.err.println(f"[bench] floor probes: spin=$floorSpinMs%.1fms " +
         f"stage=$floorStageMs%.1fms")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] floor probes failed (continuing): " +
         e.getMessage)
     }
@@ -316,7 +293,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
         }
@@ -351,7 +328,9 @@ object Bench {
     // is the grade, so the tripwire must fire in-run, not post-hoc.
     def tripFactor(med: Double): Double = if (med >= 3.0) 1.75 else 2.5
     val corpus = graft.core.Core.corpusTag(sfDir)
-    val medians = historyMedians(lastRuns = 7, corpus = corpus)
+    val history = BenchHistory.read(Paths.get("docs/bench_history.jsonl"),
+      corpus, cpus, heapBytes)
+    val medians = BenchHistory.medians(history, lastRuns = 7)
     val reruns = scala.collection.mutable.Map.empty[String, (Double, Double)]
     val timed = firstPass.map { case (name, sec, ok) =>
       val med = medians.getOrElse(name, 0.0)
@@ -385,8 +364,7 @@ object Bench {
       val mRatios = timed.collect { case (n, v, true)
         if v > 0 && medians.getOrElse(n, 0.0) >= 1.0 => v / medians(n) }
       val band =
-        if (mRatios.isEmpty) 1.0
-        else { val s = mRatios.sorted; s(s.size / 2) }
+        if (mRatios.isEmpty) 1.0 else BenchHistory.median(mRatios)
       if (only.isEmpty && band >= 1.08) {
         System.err.println(f"[bench] loaded window detected (band " +
           f"$band%.3f) — remeasuring the most inflated queries")
@@ -430,7 +408,7 @@ object Bench {
     val floorJson =
       s""""floor":{"spin_ms":${r1(floorSpinMs)},"stage_ms":${r1(floorStageMs)}}"""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errors,"reruns":$rr,$floorJson,"corpus":"$corpus"$partial,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errors,"reruns":$rr,$floorJson,"corpus":"$corpus","cpus":$cpus,"heap_bytes":$heapBytes$partial,"sf":"$sfDir"}"""
     println(line)
     // The per-round artifact keeps only the last ~2000 chars of stdout,
     // and the full per-query line (~5 KB at 169 queries) has never fit:
@@ -453,24 +431,23 @@ object Bench {
     // AFTER the headline so both survive the ~2000-char stdout tail,
     // one line of attribution evidence computed from the same history
     // file bench_guard.py reads: the median of the last 3 full
-    // same-corpus totals, this run's ratio to it, the median per-query
-    // ratio to the per-query history medians (the load-band estimate),
+    // same-corpus, same-host totals, this run's ratio to it, the median
+    // per-query ratio to the per-query history medians (the load-band
+    // estimate),
     // and a drift verdict — "uniform_load" when the whole basket moved
     // together (a host window, not a regression) vs "query_drift"
     // naming the outliers (a real regression: specific queries slow
     // while the rest sit at their medians).
     try {
       val round3 = (x: Double) => math.round(x * 1000) / 1000.0
-      val totals = historyTotals(lastRuns = 3, corpus = corpus)
+      val totals = BenchHistory.totals(history, lastRuns = 3)
       val histMed =
-        if (totals.isEmpty) -1.0
-        else { val s = totals.sorted; s(s.size / 2) }
+        if (totals.isEmpty) -1.0 else BenchHistory.median(totals)
       val ratio = if (histMed > 0) total / histMed else -1.0
       val qRatios = timedFinal.collect { case (n, v, true)
         if v > 0 && medians.getOrElse(n, 0.0) >= 1.0 => (n, v / medians(n)) }
       val bandMed =
-        if (qRatios.isEmpty) -1.0
-        else { val s = qRatios.map(_._2).sorted; s(s.size / 2) }
+        if (qRatios.isEmpty) -1.0 else BenchHistory.median(qRatios.map(_._2))
       // outlier = a query far above BOTH its own median and the run's
       // overall band — what a genuine regression looks like under load.
       // TIERED by the query's own median (round-13 verdict #5 / ADVICE:
@@ -508,8 +485,8 @@ object Bench {
       // history median — stage_factor >> spin_factor is the measured
       // VM-floor signature (BASELINE.md round 14), reading ~1.0/~1.0
       // on an unchanged host
-      val spinH = historyFloor("spin_ms", 7)
-      val stageH = historyFloor("stage_ms", 7)
+      val spinH = BenchHistory.floor(history, "spin_ms", 7)
+      val stageH = BenchHistory.floor(history, "stage_ms", 7)
       val spinF =
         if (spinH > 0 && floorSpinMs > 0) floorSpinMs / spinH else -1.0
       val stageF =
@@ -520,21 +497,21 @@ object Bench {
         s""""floor_factor_spin":${round3(spinF)},""" +
         s""""floor_factor_stage":${round3(stageF)},""" +
         s""""outliers":$oStr,"verdict":"$verdict"}""")
-    } catch { case _: Throwable => } // evidence must never fail the bench
+    } catch { case NonFatal(_) => } // evidence must never fail the bench
     // self-archive: the driver's BENCH_r{N}.json has truncated its tail
     // both rounds (30+ per-query timings lost each time), so persist
     // the full line locally — latest snapshot + append-only history.
     try {
       // a --only run must not clobber the latest FULL snapshot
       if (only.isEmpty)
-        java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SELF.json"),
+        Files.write(Paths.get("BENCH_SELF.json"),
           (line + "\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(java.nio.file.Paths.get("docs/bench_history.jsonl"),
+      Files.write(Paths.get("docs/bench_history.jsonl"),
         (s"""{"at":${System.currentTimeMillis / 1000},"bench":$line}""" + "\n")
           .getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
-    } catch { case _: Throwable => } // archival must never fail the bench
+    } catch { case NonFatal(_) => } // archival must never fail the bench
     spark.stop()
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import scala.util.control.NonFatal
+
 /** Shared table loaders and oracle-safe expression helpers.
   *
   * Determinism rules (SURVEY.md §7.3): every contract query ends in a
@@ -62,7 +64,7 @@ object Core {
     *    fires (inputs arrive as many >= 128 MB files) and the plan is
     *    byte-identical to the ungated read;
     *  - leaf file count < defaultParallelism / 2: a many-file directory
-    *    (Scale's generated corpora) already scans wide;
+    *    (a generated multi-file corpus) already scans wide;
     *  - table name ∈ `spark.graft.scan.parallelizeTables` (default:
     *    `documents`): the exchange pays only where the pre-exchange
     *    per-row work is heavy — the text corpus's tokenize/sketch/
@@ -70,7 +72,7 @@ object Core {
     *    the relational tables' scan segments are cheap projections and
     *    the embeddings family runs many small bounded jobs (Lloyd
     *    rounds, probe builds) where an extra exchange per job is pure
-    *    overhead. MEASURED both ways at sf0.1/local[32] (full 171-query
+    *    overhead. MEASURED both ways at sf0.1 on 32 cores (full 171-query
     *    bench, quiet floor-probe windows): ungated, the heavy text
     *    queries won 5.5/4.6/2.7/2.6 s (dedup_incremental,
     *    pipeline_dedup, dedup_cluster_cc, txt_langid_ngram) but the
@@ -132,8 +134,8 @@ object Core {
     * Every `shared` relation is also registered so [[releaseShared]]
     * can drop them after the consuming action: a persisted plan that is
     * never unpersisted outlives its query, and a session composing many
-    * queries (a library user, the Verify/Bench harnesses, a Profile
-    * sweep) would otherwise accumulate dead cached relations until
+    * queries (a library user, Verify, Bench, the perfbench harness)
+    * would otherwise accumulate dead cached relations until
     * memory pressure degrades every later plan.
     */
   def shared(df: DataFrame): DataFrame = {
@@ -147,7 +149,7 @@ object Core {
 
   /** Unpersist every relation [[shared]] has registered since the last
     * release — the per-query cache scope. Call after the action that
-    * consumes a query's result (Verify's write, Bench/Profile's sink);
+    * consumes a query's result (Verify's write, Bench's sink);
     * between queries the cache manager is then empty of graft-created
     * entries. Unpersisting an already-unpersisted plan is a no-op, so
     * utilities that manage their own lifecycle (ccFixpoint's round
@@ -219,15 +221,31 @@ object Core {
   val isoMinSql: String => String = c => s"strftime($c, '%Y-%m-%dT%H:%M')"
   val kSql: String = "CAST(json_extract_string(props, '$.k') AS INTEGER)"
 
+  /** The local session the command-line mains (Verify, Bench, Smoke)
+    * run on: `local[N]` with N shuffle partitions, N from
+    * `SPARK_GRAFT_CPUS`, else the host's available processors. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Fingerprint of a testdata corpus: a hash over the (name, size)
     * pairs of the dir's parquet files. The driver REGENERATES
     * /root/testdata between rounds (observed round 7: events.ts
     * changed physical type and the dedup family's density moved);
-    * every timing history (bench medians, scale sweeps) keys on this
-    * tag so numbers measured against data that no longer exists can't
-    * poison tripwires or growth gates. File sizes are a content proxy:
-    * deterministic generation ⇒ same bytes ⇒ same sizes, and any
-    * content change at these row counts moves parquet sizes. */
+    * Bench's timing history keys on this tag so numbers measured
+    * against data that no longer exists can't poison its tripwire.
+    * File sizes are a content proxy: deterministic generation ⇒ same
+    * bytes ⇒ same sizes, and any content change at these row counts
+    * moves parquet sizes. */
   def corpusTag(dir: String): String = {
     try {
       val entries = new java.io.File(dir).listFiles()
@@ -255,7 +273,7 @@ object Core {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(fs.getBytes("UTF-8"))
       md.take(4).map(b => f"$b%02x").mkString
-    } catch { case _: Throwable =>
+    } catch { case NonFatal(_) =>
       // NEVER-EQUAL failure value (ADVICE r7): a constant "unknown"
       // silently re-enabled cross-corpus median matching between any
       // two failure cases; a per-call unique tag instead finds no

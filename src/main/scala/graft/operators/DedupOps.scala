@@ -85,7 +85,7 @@ object DedupOps {
       .filter(col("rn") <= v).select("source", "tok"))
   }
 
-  /** Capped source overlap at an explicit V — the spec/Scale entry
+  /** Capped source overlap at an explicit V — the spec entry
     * point ([[queries]] txt_source_overlap_topv pins
     * [[SourceOverlapTopV]]). */
   private[graft] def sourceJaccardTopV(s: SparkSession, dir: String,
@@ -1393,18 +1393,19 @@ object DedupOps {
     * at sf0.1 / sf1wide / sf10wide; 8 = measured max + 2, and with
     * corpus diameter growing ~log in corpus size (11 → 14 propagate
     * rounds per 100x) and >= 2.2 rounds of progress per pair, the +2
-    * margin absorbs more than another 100x decade. The census stays
-    * the standing regression gate — a corpus whose star graph outruns
-    * StarCcPairs writes an ok:false row instead of shipping an
-    * under-merged manifest. Hash parity with DuckDB does NOT rest on
-    * the bound: the pipeline_dedup / pipeline_full oracles mirror the
-    * SAME star-reduced edge set through the SAME (P,S) schedule
-    * (ccCteGlobal), so both engines compute identical labels at any
-    * pair count; PipelineOpsSpec asserts the bounded labels match
+    * margin absorbs more than another 100x decade. The census is no
+    * standing gate (its harness is retired, docs/SCALE.md): a corpus
+    * whose star graph outruns StarCcPairs ships the bounded, under-
+    * merged manifest, identically in both engines. Hash parity with
+    * DuckDB does NOT rest on the bound: the pipeline_dedup /
+    * pipeline_full oracles mirror the SAME star-reduced edge set
+    * through the SAME (P,S) schedule (ccCteGlobal), so both engines
+    * compute identical labels at any pair count; PipelineOpsSpec
+    * asserts the bounded labels match
     * [[ccFixpointWithRounds]]' schedule-independent fixpoint on the
     * gate corpus, so the bounded contract answer IS the
-    * true-component answer — and with the census green, on the swept
-    * corpora too.
+    * true-component answer — and, as the census measured, on the
+    * swept corpora too.
     *
     * RE-SIZED 8 → 17 by the round-12 ADVERSARIAL census
     * (`fixpointadv`): 500k nodes in 16-node chains with ids scattered
@@ -1428,9 +1429,8 @@ object DedupOps {
     * joins — but MEASURED on all three census corpora, jumps = 2
     * converges in exactly the same round count as jumps = 1 (the min
     * hook leaves the label forest at depth <= 2, so one jump already
-    * flattens it and a second jump is an identity pass). Keep 1; the
-    * census records the value so a future schedule change re-measures
-    * instead of assuming. */
+    * flattens it and a second jump is an identity pass). Keep 1; a
+    * future schedule change re-measures instead of assuming. */
   val StarCcJumps = 1
 
   /** Block count for the combination-keyed global candidate join
@@ -1789,61 +1789,6 @@ object DedupOps {
     starsSym.unionByName(repEdges)
   }
 
-  /** Cardinality of [[simhashPairsGlobal]] WITHOUT materializing the
-    * listing: same-sketch groups contribute C(k,2) distance-0 pairs
-    * and each near sketch-VALUE pair (A, B) expands to |A|·|B| member
-    * pairs — so the count needs only the group-size relation and the
-    * rep-level combo join, never the expanded output. The Scale
-    * harness records it next to the listing's wall time: the listing
-    * is OUTPUT-BOUND by design (its cardinality is itself Σk² on a
-    * duplicate-heavy corpus), so its growth gate normalizes measured
-    * seconds by this measured output growth instead of pretending the
-    * output is linear. */
-  private[graft] def globalPairCount(s: SparkSession, dir: String): Long = {
-    val sk = shared(simhash64Sketches(s, dir))
-    val groups = shared(sk.groupBy("simhash")
-      .agg(count(lit(1)).cast(LongType).as("k")))
-    // k·(k-1) is even, so halve AFTER the (long-typed) sum — `/` in
-    // Spark SQL is true division and would silently go double
-    val same = groups
-      .agg(coalesce(sum(col("k") * (col("k") - lit(1))), lit(0L)).as("p"))
-      .head().getLong(0) / 2
-    val cross = sketchValuePairsGlobal(s, sk)
-      .join(groups.select(col("simhash").as("a_sh"), col("k").as("ka")),
-        "a_sh")
-      .join(groups.select(col("simhash").as("b_sh"), col("k").as("kb")),
-        "b_sh")
-      .agg(coalesce(sum(col("ka") * col("kb")), lit(0L)).as("p"))
-      .head().getLong(0)
-    same + cross
-  }
-
-  /** UNDIRECTED-edge cardinality of the star-reduced graph the global
-    * CC consumers join: member->rep stars plus rep-level near pairs,
-    * each edge counted ONCE ([[simhashEdgesGlobal]] materializes both
-    * directions, so the symmetric relation it returns has exactly 2x
-    * this many rows — ADVICE round 11) — and WITHOUT the member
-    * expansion that makes [[globalPairCount]] quadratic in group
-    * sizes. The Scale harness records it per sweep corpus: the
-    * manifests' per-decade timing bands normalize by THIS measured
-    * input growth (their work model is linear in nodes + edges, and
-    * on the fixed-vocabulary synthetic corpora edge density grows
-    * faster than the corpus — legitimate work, not a plan flaw); the
-    * bands read growth RATIOS, so the directed-vs-undirected constant
-    * factor cancels. */
-  private[graft] def globalEdgeCount(s: SparkSession, dir: String): Long = {
-    val sk = shared(simhash64Sketches(s, dir))
-    val reps = sketchReps(sk)
-    val stars = sk.hint("shuffle_hash").join(reps, "simhash")
-      .filter(col("doc_id") =!= col("rep_id"))
-      .count()
-    val repPairs = comboJoin(reps
-        .select(col("rep_id").as("doc_id"), col("simhash")),
-      Simhash64Bits, Simhash64HammingMax, Simhash64Blocks, _ < _)
-      .count()
-    stars + repPairs
-  }
-
   /** BOUNDED global near-dup report: each document's top-K nearest
     * neighbors by sketch Hamming distance (ties by neighbor id) among
     * all docs within Hamming <= [[Simhash64HammingMax]] of it,
@@ -1880,8 +1825,8 @@ object DedupOps {
     simhashTopKGlobalOf(simhash64Sketches(s, dir), k)
 
   /** The operator core over an explicit (doc_id, simhash) relation —
-    * factored (round 13) so the prescribed-degree hub census
-    * ([[graft.ScaleData.hubSketchesDf]]) and its brute-force spec can
+    * factored (round 13) so the prescribed-degree hub corpus (test
+    * fixture `ScaleData.hubSketchesDf`) and its brute-force spec can
     * drive the IDENTICAL plan with a synthetic sketch graph: a true
     * 10k-near-value hub cannot arise from document text (near-dup text
     * collapses to equal/near sketch VALUES — that is the sketch's
@@ -1958,10 +1903,8 @@ object DedupOps {
   private[graft] def simhash64Pairs(s: SparkSession, dir: String): DataFrame =
     bandedJoinToks(s, dir, Simhash64Bits, Simhash64HammingMax, _ < _)
 
-  /** Symmetric near-dup edges (n, m): both directions in one pass.
-    * graft-visible so the Scale harness can feed the same edge set to
-    * [[ccFixpointWithRounds]] for the sf1 convergence measurement. */
-  private[graft] def simhashEdges(s: SparkSession, dir: String): DataFrame =
+  /** Symmetric near-dup edges (n, m): both directions in one pass. */
+  private def simhashEdges(s: SparkSession, dir: String): DataFrame =
     simhashJoin(s, dir, _ =!= _)
       .select(col("a_id").as("n"), col("b_id").as("m"))
 
@@ -2107,10 +2050,11 @@ object DedupOps {
     * itself), so early-exit labels equal the oracle's full
     * [[StarCcPairs]]-pair CTE whenever the oracle converges within its
     * pairs, and when a corpus needs MORE than `pairs` segments both
-    * engines compute the identical bounded schedule (the census gate,
-    * not hash parity, is what catches that under-merge). Contract
-    * callers run corpus-distributed (labels-only — never text) jobs
-    * during query construction and carry a documented LazinessSpec
+    * engines compute the identical bounded schedule (hash parity
+    * cannot catch that under-merge; the fixpoint census measured it).
+    * Contract callers run corpus-distributed (labels-only — never
+    * text) jobs during query construction and carry a documented
+    * LazinessSpec
     * exemption; at cluster scale the materialized per-segment state is
     * what GraphX/Pregel persists per superstep. Plan-pin specs pass
     * truncate = false for a pure lazy tree. */
@@ -2445,8 +2389,7 @@ object DedupOps {
   /** [[ccDoubled]] iterated to fixpoint, returning (labels, pairs run
     * including the final no-change pair that certifies convergence) —
     * the census twin of [[ccFixpointWithRounds]] for the (P,S)
-    * schedule: the Scale harness records the measured pair count per
-    * sweep corpus, and the standing gate checks it against
+    * schedule: the specs check the measured pair count against
     * [[StarCcPairs]]. Shares [[ccPsLoop]] with the contract path, so
     * the census measures exactly the schedule the manifests run. */
   def ccDoubledFixpointWithPairs(nodes: DataFrame, edges: DataFrame,
@@ -2485,13 +2428,13 @@ object DedupOps {
     * FAILS CLOSED on non-convergence (round-12 self-review #1): the
     * guarantee above holds only AT fixpoint, and unlike the bounded
     * contract manifests (whose oracle mirrors the same bounded
-    * schedule, and whose census gates the bound) nothing external
+    * schedule, and whose bound a census sized) nothing external
     * gates this utility — so a supernode graph that outruns
     * `maxPairs` throws instead of persisting an under-merged labeling
-    * into streaming state forever. The default (32, the census
-    * harness's own ceiling) is far above every measured geometry
-    * (uniform corpora 5–7 pairs, the adversarial 500k shuffled-id
-    * census 15); a caller hitting it has a genuinely pathological
+    * into streaming state forever. The default (32, the same ceiling
+    * as [[ccDoubledFixpointWithPairs]]) is far above every measured
+    * geometry (uniform corpora 5–7 pairs, the adversarial 500k
+    * shuffled-id census 15); a caller hitting it has a genuinely pathological
     * delta and should raise the cap consciously.
     *
     * Inputs are DEFENDED, not assumed, disjoint (self-review #2): a
@@ -2535,12 +2478,11 @@ object DedupOps {
     * for every new batch doc plus every standing doc whose cluster id
     * was rewritten — instead of re-emitting the corpus labeling. A
     * deployment MERGEs these rows into a doc_id-keyed label state
-    * table (Delta/Iceberg MERGE; the Scale harness folds them into a
-    * localCheckpoint the same way); old-labels-minus-changed UNION
-    * these rows is EXACTLY [[ccIncrementalUpdate]]'s output (asserted
-    * in DedupOpsSpec and re-asserted against a full rebuild at 5M docs
-    * by the `ccincups` sweeps), so per-fold label I/O is bounded by
-    * the TOUCHED subgraph (≾ 2·|delta edges| + |batch|), never the
+    * table (Delta/Iceberg MERGE); old-labels-minus-changed
+    * UNION these rows is EXACTLY [[ccIncrementalUpdate]]'s output
+    * (asserted in DedupOpsSpec; once re-asserted against a full
+    * rebuild at 5M docs, docs/SCALE.md), so per-fold label I/O is
+    * bounded by the TOUCHED subgraph (≾ 2·|delta edges| + |batch|), never the
     * corpus. The relabel probe is a BROADCAST of the
     * touched-subgraph-bounded superMap over ONE map-side scan of the
     * standing labels — the full-rewrite form's two corpus-exchange
@@ -2894,8 +2836,8 @@ object DedupOps {
 
   /** [[ccFixpoint]] plus the number of propagate rounds it ran
     * (including the final no-change round that certifies convergence) —
-    * the number the Scale harness records at sf1 and DedupOpsSpec
-    * asserts equals diameter + 1 on known chains.
+    * the number DedupOpsSpec asserts equals diameter + 1 on known
+    * chains.
     *
     * Each round's labels are `localCheckpoint`ed, NOT persisted:
     * persist caches the DATA, but round i+1's LOGICAL plan still

@@ -181,14 +181,14 @@ object RelationalOps {
     profileTableWith(s, dir, c => approx_count_distinct(c, rsd = 0.02))
 
   /** [[profileTableWith]]'s shape over `documents` — the CORPUS-SCALED
-    * profile. `orders` is a fixed dimension ScaleData never grows, so
-    * profile_table had no 10× datapoint (round-8 verdict watch item
-    * #3); this one sweeps at sf1 in both regimes, exact vs approx, and
-    * docs/SCALE.md records the Expand-elimination delta the
-    * profileTableApprox scaladoc promises. The exact multi-distinct
-    * plans as ONE Expand — rows × 5 profiled columns, including the
-    * full text strings — which is precisely the term the HLL swap
-    * removes at scale. */
+    * profile. `orders` is a fixed dimension the scale corpora never
+    * grew, so profile_table had no 10× datapoint (round-8 verdict
+    * watch item #3); this one was swept at sf1 in both regimes, exact
+    * vs approx, and the scale ledger records the Expand-elimination
+    * delta the profileTableApprox scaladoc promises. The exact
+    * multi-distinct plans as ONE Expand — rows × 5 profiled columns,
+    * including the full text strings — which is precisely the term
+    * the HLL swap removes at scale. */
   private def profileDocsWith(s: SparkSession, dir: String,
       distinctAgg: Column => Column): DataFrame =
     profileWith(table(s, dir, "documents"), Seq(
@@ -198,8 +198,8 @@ object RelationalOps {
       "source" -> strProfile("source", distinctAgg),
       "text" -> strProfile("text", distinctAgg)))
 
-  /** HLL variant of the documents profile — the Scale sweep's
-    * Expand-free comparator. */
+  /** HLL variant of the documents profile — the Expand-free
+    * comparator ProfilingOpsSpec checks against the exact profile. */
   def profileDocsApprox(s: SparkSession, dir: String): DataFrame =
     profileDocsWith(s, dir, c => approx_count_distinct(c, rsd = 0.02))
 
@@ -1045,7 +1045,7 @@ object RelationalOps {
     },
 
     // The corpus-scaled profile (documents): same single-scan stack as
-    // profile_table, over the one table ScaleData grows — see
+    // profile_table, over the one table corpora grow in — see
     // [[profileDocsWith]] for the Expand-vs-HLL scale story.
     "profile_docs" -> { (s, dir) =>
       profileDocsWith(s, dir, c => countDistinct(c))

@@ -72,8 +72,8 @@ object SimilarityOps {
     * [[AutoPlaneConfigs]] recipe: the smallest menu k holding
     * n ≤ k²·[[SemDedupOcc]], i.e. k ≈ √(n/occ), which holds
     * assignment (n·k) and pairing (n²/k) both at ~n^1.5 — the
-    * `dedup_semdedup_scaledk` scaling the Scale harness measured
-    * (55–66 s at 200k vectors where fixed k could not run). The menu
+    * `dedup_semdedup_scaledk` scaling measured at 55–66 s on 200k
+    * vectors where fixed k could not run (docs/SCALE.md). The menu
     * covers 204.8M vectors (k = 3200 at occupancy 20) — two decades of
     * headroom past the largest MEASURED decade (emb1000x, 2M vectors
     * at k = 320, round 14 — the decade that closed the r13 weak item:
@@ -537,9 +537,9 @@ object SimilarityOps {
   }
 
   /** Eagerly-decided variant of [[annLshAuto]] exposing the chosen
-    * plane count — specs, plan debugging and the Scale evidence run
-    * only (it runs the bounded count at build time; the contract query
-    * uses the lazy guarded-union form above). */
+    * plane count — specs and plan debugging only (it runs the bounded
+    * count at build time; the contract query uses the lazy
+    * guarded-union form above). */
   private[graft] def annLshAutoChoice(s: SparkSession,
       dir: String): (Int, DataFrame) = {
     val cap = (AutoOccupancy.toLong << AutoPlaneConfigs.last).toInt + 1
@@ -949,7 +949,7 @@ object SimilarityOps {
     * is THE scale knob: pair work is Σ(occupancy)² ≈ n²/k, so fixed k
     * is quadratic-in-n (the contract toy at bounded scale), k ∝ √n
     * holds the whole operator at ~n^1.5 (assignment n·k = n^1.5,
-    * pairing n²/√n = n^1.5 — the sizing the Scale harness sweeps as
+    * pairing n²/√n = n^1.5 — the sizing docs/SCALE.md records as
     * `dedup_semdedup_scaledk`), and a production index holds pairing
     * linear with k ∝ n at the price of hierarchical assignment. */
   private[graft] def semDedup(s: SparkSession, dir: String,
@@ -1000,8 +1000,8 @@ object SimilarityOps {
   /** [[semDedup]] with the cluster count DERIVED from the corpus — the
     * contract `dedup_semdedup` since round 13 (round-12 verdict #2:
     * the fixed-k form was the repo's one remaining quadratic-in-n
-    * contract query; the scale-safe k ∝ √n sizing lived only in the
-    * Scale harness). Result-identical to [[semDedup]] at the routed k
+    * contract query; the scale-safe k ∝ √n sizing was only ever
+    * measured, never shipped). Result-identical to [[semDedup]] at the routed k
     * (asserted in SimilarityOpsSpec); at the Verify/bench corpus sizes
     * the rule lands on the contract k = [[IvfK]], so the DuckDB oracle
     * replays the same fixed-k algebra it always has (the
@@ -1084,8 +1084,7 @@ object SimilarityOps {
   def ivfKnnAuto(s: SparkSession, dir: String): DataFrame =
     ivfKnn(s, dir, routedK(s, dir))
 
-  /** [[semDedupAuto]] also exposing the chosen k — specs and the
-    * Scale evidence runs. */
+  /** [[semDedupAuto]] also exposing the chosen k, for the specs. */
   private[graft] def semDedupAutoChoice(s: SparkSession,
       dir: String): (Int, DataFrame) = {
     val k = routedK(s, dir)
@@ -1224,16 +1223,6 @@ object SimilarityOps {
     adcTopK(codes, dt, Seq("lcid"))
   }
 
-  /** Mean recall@[[AnnTopK]] of an [[annLsh]] configuration against
-    * brute-force exact top-k, over the bounded [[KnnEvalProbes]] probe
-    * prefix of an arbitrary embeddings-shaped relation — the
-    * sim_ann_recall measurement factored so the spec and the Scale
-    * harness can point it at the CLUSTERED corpus
-    * ([[graft.ScaleData.clusteredDf]]): the shipped corpus's neighbors
-    * are near-orthogonal (recall ≈ 0.13 is the theory-correct answer
-    * there), so the claim that planes/probes tune recall up on
-    * locality-bearing vectors needs this harness to be a measurement
-    * instead of Goemans–Williamson prose (round-8 verdict ask #1). */
   /** Brute-force exact cosine top-[[AnnTopK]] (a_id, b_id) over the
     * bounded [[KnnEvalProbes]] probe prefix — the ONE ground-truth
     * scaffold every recall measurement here compares against (factored
@@ -1266,6 +1255,15 @@ object SimilarityOps {
         .cast(DoubleType) / AnnTopK).as("recall"))
       .agg(avg(col("recall"))).head().getDouble(0)
 
+  /** Mean recall@[[AnnTopK]] of an [[annLsh]] configuration against
+    * brute-force exact top-k, over the bounded [[KnnEvalProbes]] probe
+    * prefix of an arbitrary embeddings-shaped relation — the
+    * sim_ann_recall measurement factored so the specs can point it at
+    * a CLUSTERED corpus: the shipped corpus's neighbors are
+    * near-orthogonal (recall ≈ 0.13 is the theory-correct answer
+    * there), so the claim that planes/probes tune recall up on
+    * locality-bearing vectors needs a measurement instead of
+    * Goemans–Williamson prose (round-8 verdict ask #1). */
   private[graft] def annRecallMean(s: SparkSession, emb: DataFrame,
       nPlanes: Int = Planes, multiprobe: Boolean = true,
       probePlanes: Int = 0): Double = {
@@ -1277,51 +1275,23 @@ object SimilarityOps {
     recallOf(exactTopK(e), ann)
   }
 
-  /** Mean recall@[[AnnTopK]] of [[ivfpqTopK]] at a given nprobe
-    * against brute-force exact cosine top-k, over the bounded
-    * [[KnnEvalProbes]] probe prefix — the IVF-PQ twin of
-    * [[annRecallMean]], pointed at the clustered corpus by the Scale
-    * harness so the nprobe lever has a scale datapoint (round-9
-    * verdict ask #6). ADC ranks by quantized inner product while the
-    * exact side ranks by cosine; on the planted equal-norm clusters
-    * the two orders agree, so recall measures the INDEX (routing +
-    * residual quantization), not a norm artifact. */
-  private[graft] def ivfpqRecallMean(s: SparkSession, emb: DataFrame,
-      nprobe: Int = IvfNprobe, ivfK: Int = IvfK, pqK: Int = PqK)
-      : Double = {
-    val e = vecsOf(s, emb)
-    recallOf(exactTopK(e), ivfpqTopK(s, dir = "", source = Some(emb),
-      nprobe = nprobe, ivfK = ivfK, pqK = pqK))
-  }
-
   /** Mean recall@[[AnnTopK]] of IVF routing + EXACT rerank (IVFADC+R,
     * Jégou et al.'s own production refinement): candidates = every
     * vector in the query's nprobe nearest coarse lists, ranked by
     * exact cosine. Because the in-candidate ranking is exact, this
     * recall EQUALS the routing recall — the quantity nprobe directly
     * buys (a true neighbor is recalled iff its list is probed) —
-    * isolating the routing lever from ADC code resolution, which the
-    * pure-ADC [[ivfpqRecallMean]] measures (and which is the binding
-    * ceiling on the planted clustered corpus: within a tight cluster
-    * the exact-top-3 cosine spread is far below the 4×16-centroid
-    * quantization error, so ADC recall sits ~0.08 regardless of
-    * nprobe while THIS measurement climbs — the SCALE.md round-10
-    * story). Scale shape: coarse assignment is n×k with centroids as
+    * isolating the routing lever from ADC code resolution (the
+    * binding ceiling on the planted clustered corpus: within a tight
+    * cluster the exact-top-3 cosine spread is far below the
+    * 4×16-centroid quantization error, so ADC recall sat ~0.08
+    * regardless of nprobe while THIS measurement climbed, round 10).
+    * Scale shape: coarse assignment is n×k with centroids as
     * literals, the rerank join is (list)-keyed with the bounded probe
     * side broadcast — candidates per query = nprobe × n/k, the IVF
     * contract. */
   private[graft] def ivfRerankRecallMean(s: SparkSession, emb: DataFrame,
-      nprobe: Int = IvfNprobe, ivfK: Int = IvfK): Double =
-    ivfRerankRecallSweep(s, emb, Seq(nprobe), ivfK).head._2
-
-  /** [[ivfRerankRecallMean]] over a WHOLE nprobe schedule with the
-    * nprobe-invariant heavy work — the coarse k-means training, the
-    * ranked-list assignment, and the brute-force exact top-k — done
-    * ONCE per (corpus, ivfK) instead of once per sweep point (the
-    * Scale harness was re-running both ~12× per sweep; self-review
-    * round 10). Returns (nprobe, recall) pairs. */
-  private[graft] def ivfRerankRecallSweep(s: SparkSession, emb: DataFrame,
-      nprobes: Seq[Int], ivfK: Int = IvfK): Seq[(Int, Double)] = {
+      nprobe: Int = IvfNprobe, ivfK: Int = IvfK): Double = {
     val e = vecsOf(s, emb)
     val coarse = kmeansCentroids(e, ivfK, IvfIters)
       .collect().sortBy(_.getLong(0))
@@ -1330,39 +1300,32 @@ object SimilarityOps {
     // relation previously carried the FULL k-length ranked struct
     // array per vector — the round-3 wide-cache trap, invisible until
     // k grew: at the continuous-√n k = 1414 on 2M vectors that is
-    // ~45 GB of (negccos, cid) structs, and the k=1414 harness attempt
-    // exhausted the host's 68 GB free disk in cache+shuffle spill (the
-    // r14 ok:false emb_recall ledger row). Every consumer reads only a
-    // PREFIX — lists take rk[1], probes take rk[1..nprobe] — so the
-    // slice to the schedule's max nprobe happens in the SAME
-    // projection and the cache stays (maxNp × 16 B)/vector no matter
-    // the menu k. Ranking algebra untouched: a prefix of the sorted
-    // array is the same top-maxNp the full array yields.
-    val maxNp = nprobes.max
+    // ~45 GB of (negccos, cid) structs, which exhausted 68 GB of free
+    // disk in cache+shuffle spill. Every consumer reads only a PREFIX
+    // — lists take rk[1], probes take rk[1..nprobe] — so the slice to
+    // nprobe happens in the SAME projection and the cache stays
+    // (nprobe × 16 B)/vector no matter the menu k. Ranking algebra
+    // untouched: a prefix of the sorted array is the same top-nprobe
+    // the full array yields.
     val ranked = shared(e.select(col("vec_id"), col("v"), col("norm"))
-      .withColumn("rk", slice(coarseRankArr(coarse), 1, maxNp)))
+      .withColumn("rk", slice(coarseRankArr(coarse), 1, nprobe)))
     val lists = ranked.select(col("vec_id").as("b_id"),
       col("v").as("b_v"), col("norm").as("b_norm"),
       element_at(col("rk"), 1).getField("cid").as("lcid"))
-    val exact = shared(exactTopK(e))
+    val probes = ranked.filter(col("vec_id") < KnnEvalProbes)
+      .select(col("vec_id").as("a_id"), col("v").as("a_v"),
+        col("norm").as("a_norm"), explode(col("rk")).as("p"))
+      .select(col("a_id"), col("a_v"), col("a_norm"),
+        col("p.cid").as("lcid"))
     val byQ = Window.partitionBy("a_id")
       .orderBy(col("cos").desc, col("b_id"))
-    val recs = nprobes.map { nprobe =>
-      val probes = ranked.filter(col("vec_id") < KnnEvalProbes)
-        .select(col("vec_id").as("a_id"), col("v").as("a_v"),
-          col("norm").as("a_norm"),
-          explode(slice(col("rk"), 1, nprobe)).as("p"))
-        .select(col("a_id"), col("a_v"), col("a_norm"),
-          col("p.cid").as("lcid"))
-      val reranked = lists.join(broadcast(probes), "lcid")
-        .filter(col("b_id") =!= col("a_id"))
-        .withColumn("cos", cosine)
-        .withColumn("rkq", row_number().over(byQ))
-        .filter(col("rkq") <= AnnTopK)
-        .select(col("a_id"), col("b_id"))
-      nprobe -> recallOf(exact, reranked)
-    }
-    recs
+    val reranked = lists.join(broadcast(probes), "lcid")
+      .filter(col("b_id") =!= col("a_id"))
+      .withColumn("cos", cosine)
+      .withColumn("rkq", row_number().over(byQ))
+      .filter(col("rkq") <= AnnTopK)
+      .select(col("a_id"), col("b_id"))
+    recallOf(exactTopK(e), reranked)
   }
 
   /** sample_contrastive_pairs core over any (vec_id, label) relation —
@@ -1609,12 +1572,12 @@ object SimilarityOps {
     // ±1-bit multiprobe needs ≥ 7 of 8 agreements:
     // 0.60⁸ + 8·0.60⁷·0.40 ≈ 0.10. On locality-BEARING vectors the
     // lever is now MEASURED, not predicted (round-9): the planted
-    // clustered corpus (ScaleData.clusteredDf, pairwise cos ≈ 0.94)
-    // runs the identical planes/probe algebra to recall@3 = 0.93 full
-    // multiprobe / 0.91 qd-3 / 0.86 qd-2 / 0.51 single-probe
-    // (CurationOpsSpec pins ≥ 0.6 + probe monotonicity next to this
-    // corpus's 0.03–0.5 band, and docs/SCALE.md records the sweep at
-    // 2,000 vectors; Scale `annrecall` mode regenerates it) —
+    // clustered test corpus (ScaleData.clusteredDf, pairwise
+    // cos ≈ 0.94) runs the identical planes/probe algebra to
+    // recall@3 = 0.93 full multiprobe / 0.91 qd-3 / 0.86 qd-2 / 0.51
+    // single-probe (CurationOpsSpec pins ≥ 0.6 + probe monotonicity
+    // next to this corpus's 0.03–0.5 band; docs/SCALE.md records the
+    // sweep at 2,000 vectors) —
     // hyperplane LSH is an angular-locality method and this operator
     // is how a deployment finds out whether its vectors have that
     // locality (a silently-broken index OR an accidentally-exhaustive

@@ -732,8 +732,8 @@ class DedupOpsSpec extends AnyFunSuite {
     // been exercised on degree-benign sketch graphs. ScaleData's hub
     // generator (one template doc + token-edit variants) realizes a
     // heavy-tailed sketch-degree geometry — the (1 + degree)·(K+1)
-    // pool-window input — at in-test size here; the Scale `topkhub`
-    // census runs the same generator at 200k docs.
+    // pool-window input — at in-test size here; the same generator
+    // ran at 200k docs in the topkhub census (docs/SCALE.md).
     val dir = java.nio.file.Files.createTempDirectory("graft_hub").toString
     ScaleData.hubDocsDf(spark, TestSpark.sfDir, nDocs = 1500,
         nVariants = 700, nSources = 10, variant = 11)

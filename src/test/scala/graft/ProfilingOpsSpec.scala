@@ -89,7 +89,7 @@ class ProfilingOpsSpec extends AnyFunSuite {
     check("source", identity)
     check("text", identity)
     // the scaled-table profile carries the same Expand-vs-HLL plan
-    // contrast as profile_table — this pair is what Scale sweeps at 10x
+    // contrast as profile_table
     val exact = SparkEntry.queries("profile_docs")(spark, dir)
     val approx = graft.operators.RelationalOps.profileDocsApprox(spark, dir)
     assert(exact.queryExecution.executedPlan.toString.contains("Expand"))

@@ -174,8 +174,9 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // corpus: the family count sees 525k vectors and the returned
     // plan is the IVF path — same output schema as the LSH regime,
     // so downstream consumers never see the switch. (Plan-built and
-    // schema-checked, not executed: a 525k-vector IVF run is the
-    // Scale harness's job — emb1000x measured it at recall 1.0.)
+    // schema-checked, not executed: a 525k-vector IVF run is too big
+    // for a spec — the 2M-vector emb1000x census measured recall 1.0,
+    // docs/SCALE.md.)
     import spark.implicits._
     val big = spark.range(525000).select(col("id").as("vec_id"),
       array(lit(0.1f), lit(0.2f), lit(0.3f), lit(0.4f)).as("embedding"),

@@ -9,11 +9,13 @@ than --max-ratio between runs. Run it after `sbt "runMain graft.Bench"`
 on unchanged code; a failure means a plan is load/cache-state-sensitive
 and must be pinned structurally before the round ships.
 
-It also adjudicates the DRIVER TOTAL against the corpus-tagged history
-(round-7 verdict #5): five same-build runs spanned 140-185 s in one
-evening from host-load bands alone, so a single driver run is not a
-shippable figure. The guard prints the median of the last 3 full
-same-corpus totals as the SHIPPED figure and fails when the latest
+It also adjudicates the DRIVER TOTAL against the history of the same
+corpus and host shape (round-7 verdict #5): five same-build runs spanned
+140-185 s in one evening from host-load bands alone, so a single driver
+run is not a shippable figure. Only rows that record the corpus tag,
+the session core count (`cpus`) and the JVM heap (`heap_bytes`) of the
+latest such row are read. The guard prints the median of the last 3
+full matching totals as the SHIPPED figure and fails when the latest
 full run's total exceeds --total-ratio x that median — the signal to
 re-run rather than ship a load-band outlier. Runs marked
 "partial":true (Bench --only=...) never enter total medians.
@@ -29,21 +31,31 @@ import statistics
 import sys
 
 
+HOST_KEY = ("corpus", "cpus", "heap_bytes")
+
+
 def load_runs(path):
+    """(at, bench) rows of the history measured on the same corpus tag,
+    session core count and JVM heap as its latest row that records all
+    three — the same keying as Bench's in-run reader. Rows lacking any
+    of the three keys, and corrupt lines, are dropped."""
     runs = []
     try:
         with open(path) as f:
             for line in f:
-                line = line.strip()
-                if not line:
+                try:
+                    rec = json.loads(line)
+                except ValueError:
                     continue
-                rec = json.loads(line)
-                bench = rec.get("bench", rec)
-                if "queries" in bench:
+                bench = rec.get("bench", rec) if isinstance(rec, dict) else {}
+                if "queries" in bench and all(k in bench for k in HOST_KEY):
                     runs.append((rec.get("at", 0), bench))
     except FileNotFoundError:
         sys.exit(f"bench_guard: no history at {path}; run graft.Bench first")
-    return runs
+    if not runs:
+        return runs
+    key = [runs[-1][1][k] for k in HOST_KEY]
+    return [r for r in runs if [r[1][k] for k in HOST_KEY] == key]
 
 
 def main():
@@ -86,23 +98,20 @@ def main():
                         "query (default: informational)")
     args = p.parse_args()
 
-    # Load the FULL history, THEN filter to the latest run's corpus,
-    # THEN take the last N (ADVICE round 7: a lookback cap applied
-    # before the corpus filter silently dropped older same-corpus runs
+    # Load the FULL history, THEN filter to the latest run's corpus and
+    # host shape, THEN take the last N (ADVICE round 7: a lookback cap
+    # applied before the filter silently dropped older matching runs
     # under interleaved corpora — the file is small JSONL, reading all
     # of it costs nothing). Cross-corpus ratios measure the data
-    # change, not plan stability (the driver regenerates testdata
-    # between rounds); untagged pre-tagging records only compare with
-    # other untagged ones.
-    all_runs = load_runs(args.history)
-    if not all_runs:
-        sys.exit("bench_guard: history is empty; run graft.Bench first")
-    cur = all_runs[-1][1].get("corpus")
-    same_corpus = [r for r in all_runs if r[1].get("corpus") == cur]
-    runs = same_corpus[-args.last:]
+    # change, and cross-host ratios the machine, not plan stability.
+    same_host = load_runs(args.history)
+    if not same_host:
+        sys.exit("bench_guard: no history row records corpus, cpus and "
+                 "heap_bytes; run graft.Bench first")
+    runs = same_host[-args.last:]
     if len(runs) < 2:
-        sys.exit("bench_guard: need at least 2 same-corpus bench runs "
-                 "in history")
+        sys.exit("bench_guard: need at least 2 same-corpus, same-host "
+                 "bench runs in history")
 
     names = set()
     for _, b in runs:
@@ -127,7 +136,7 @@ def main():
     # total describes a subset). The shipped figure is the median of
     # the last 3 full same-corpus totals; a latest run far above that
     # median is a load-band outlier to re-run, not a figure to ship.
-    full = [(at, b) for at, b in same_corpus if not b.get("partial")]
+    full = [(at, b) for at, b in same_host if not b.get("partial")]
     total_fail = None
     if full:
         last3 = [b.get("value") for _, b in full[-3:]]
@@ -148,8 +157,8 @@ def main():
     # in a +27% band "query_drift"; at that size a 2x excursion under
     # load is scheduler/JIT noise, not a plan regression). Informational
     # only — never fails the guard.
-    latest_b = same_corpus[-1][1]
-    prior = [b for _, b in same_corpus[:-1]][-7:]
+    latest_b = same_host[-1][1]
+    prior = [b for _, b in same_host[:-1]][-7:]
     med_q = {}
     for name in {n for b in prior for n in b.get("queries", {})}:
         ts = [b["queries"][name] for b in prior
@@ -164,7 +173,7 @@ def main():
          if (r > max(2.2, 1.8 * max(band, 1.0)) if med_q[n] < 3.0
              else r > max(1.75, 1.4 * max(band, 1.0)))],
         key=lambda x: -x[1])[:5]
-    prior_full = [b for _, b in same_corpus[:-1] if not b.get("partial")]
+    prior_full = [b for _, b in same_host[:-1] if not b.get("partial")]
     hist3 = [b.get("value") for b in prior_full[-3:]]
     hmed = statistics.median(hist3) if hist3 else -1.0
     tratio = latest_b.get("value", -1.0) / hmed if hmed > 0 else -1.0
