@@ -407,8 +407,13 @@ object Bench {
     val r1 = (x: Double) => math.round(x * 10) / 10.0
     val floorJson =
       s""""floor":{"spin_ms":${r1(floorSpinMs)},"stage_ms":${r1(floorStageMs)}}"""
+    // classes compiled in this JVM: with no cache eviction, the number
+    // of distinct generated classes the run needed (build.sbt sizes
+    // spark.sql.codegen.cache.maxEntries from it)
+    val classes =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errors,"reruns":$rr,$floorJson,"corpus":"$corpus","cpus":$cpus,"heap_bytes":$heapBytes$partial,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errors,"reruns":$rr,$floorJson,"corpus":"$corpus","cpus":$cpus,"heap_bytes":$heapBytes,"codegen_classes":$classes$partial,"sf":"$sfDir"}"""
     println(line)
     // The per-round artifact keeps only the last ~2000 chars of stdout,
     // and the full per-query line (~5 KB at 169 queries) has never fit:
@@ -421,6 +426,7 @@ object Bench {
     val headline =
       s"""{"metric":"total","value":${math.round(total * 1000) / 1000.0},""" +
         s""""unit":"sec","n_queries":${timedFinal.size},"errors":$errors,""" +
+        s""""codegen_classes":$classes,""" +
         s""""corpus":"$corpus"$partial,"sf":"$sfDir",""" +
         s""""queries_full":"docs/bench_history.jsonl"}"""
     println(headline)

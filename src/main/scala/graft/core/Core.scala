@@ -137,12 +137,21 @@ object Core {
     * queries (a library user, Verify, Bench, the perfbench harness)
     * would otherwise accumulate dead cached relations until
     * memory pressure degrades every later plan.
+    *
+    * A plan the cache manager already holds is returned as is: a second
+    * `persist` only logs "Asked to cache already cached data", and a
+    * second registration would queue the same entry twice for release.
     */
-  def shared(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    sharedRegistry.add(p)
-    p
-  }
+  def shared(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      sharedRegistry.add(p)
+      p
+    }
+
+  /** Relations [[shared]] has registered and not yet released. */
+  private[graft] def sharedPending: Int = sharedRegistry.size
 
   private val sharedRegistry =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -162,6 +171,21 @@ object Core {
       df.unpersist(blocking = false)
       df = sharedRegistry.poll()
     }
+  }
+
+  /** `min(rows of df, cap)`, the eager bounded probe the auto-routers
+    * decide on. Each partition stops reading at `cap` rows: one job
+    * over the plan's own partitions, no exchange. `df.limit(cap)
+    * .count()` gives the same number, but Spark names each generated
+    * limit's counter from a JVM-global sequence, so every such probe
+    * compiled a class no earlier probe had compiled. */
+  def boundedCount(df: DataFrame, cap: Long): Long = {
+    val perPartition = df.select().queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L
+      while (n < cap && it.hasNext) { it.next(); n += 1 }
+      Iterator.single(n)
+    }
+    math.min(perPartition.fold(0L)(_ + _), cap)
   }
 
   /** Run `body` with a session conf pinned to `value`, restoring the
@@ -192,9 +216,6 @@ object Core {
     * associative (shuffle-order independent, unlike double sums).
     */
   def cents(c: Column): Column = round(c * 100).cast(LongType)
-
-  /** One deterministic division back to a display double. */
-  def centsToDouble(c: Column): Column = c / 100.0
 
   /** events-as-weather-observations: `props.k` is the WMO-style code
     * (0..99), `value` the temperature reading, `ts` the observation time.

@@ -357,8 +357,14 @@ object DedupOps {
     * corpus-scaled). */
   private def dfSkewOf(s: SparkSession, dir: String,
       sampleDocs: Int): Option[Double] = {
-    val r = table(s, dir, "documents")
-      .select("text").limit(sampleDocs)
+    // the sample is a top-level `head` (CollectLimitExec, which is not
+    // code-generated) rather than a `limit` inside the plan: Spark names
+    // each generated limit's counter from a JVM-global sequence, so a
+    // mid-plan limit compiled a class no earlier call had compiled
+    val docs = table(s, dir, "documents").select("text")
+    val r = s.createDataFrame(
+        java.util.Arrays.asList(docs.head(sampleDocs).toSeq: _*),
+        docs.schema)
       .select(explode(array_distinct(split(lower(col("text")), " ")))
         .as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("df"))

@@ -513,7 +513,7 @@ object SimilarityOps {
       topK: Int = AnnTopK, source: Option[DataFrame] = None): DataFrame = {
     // ONE bounded count decides FAMILY and PLANE COUNT (rounds 15/18):
     // capped one row past the largest √n menu boundary (204,800,001 —
-    // the same bound [[routedK]] reads; `limit` terminates the scan
+    // the same bound [[routedK]] reads; [[boundedCount]] stops the scan
     // there no matter the corpus), it either picks the occupancy-routed
     // plane count within the LSH regime or hands off to the routed
     // IVF-rerank path ([[annFamilyFor]]). Eager-bounded-count routing
@@ -525,7 +525,7 @@ object SimilarityOps {
     val emb = source.getOrElse(table(s, dir, "embeddings"))
     val lastK = SemDedupKConfigs.last
     val kCap = (lastK.toLong * lastK * SemDedupOcc).toInt + 1
-    annFamilyFor(emb.limit(kCap).count()) match {
+    annFamilyFor(boundedCount(emb, kCap)) match {
       case Right(k) =>
         // same determinism rules (9-dp rounding, id tiebreaks), same
         // output shape: `bucket` = the query's own nearest coarse
@@ -543,7 +543,7 @@ object SimilarityOps {
   private[graft] def annLshAutoChoice(s: SparkSession,
       dir: String): (Int, DataFrame) = {
     val cap = (AutoOccupancy.toLong << AutoPlaneConfigs.last).toInt + 1
-    val n = table(s, dir, "embeddings").limit(cap).count()
+    val n = boundedCount(table(s, dir, "embeddings"), cap)
     val p = autoPlanesFor(n)
     (p, annLsh(s, dir, nPlanes = p))
   }
@@ -908,9 +908,7 @@ object SimilarityOps {
     val emb = source.getOrElse(table(s, dir, "embeddings"))
     val lastK = SemDedupKConfigs.last
     val kCap = lastK.toLong * lastK * SemDedupOcc
-    val cap = math.min(math.max(flatMax, kCap) + 1L,
-      Int.MaxValue.toLong - 1L).toInt
-    val n = emb.limit(cap).count()
+    val n = boundedCount(emb, math.max(flatMax, kCap) + 1L)
     if (n <= flatMax) pqTopK(s, dir, Some(emb))
     else ivfpqTopK(s, dir, Some(emb), ivfK = semDedupKFor(n))
   }
@@ -994,7 +992,7 @@ object SimilarityOps {
   private def routedK(s: SparkSession, dir: String): Int = {
     val lastK = SemDedupKConfigs.last
     val cap = (lastK.toLong * lastK * SemDedupOcc).toInt + 1
-    semDedupKFor(table(s, dir, "embeddings").limit(cap).count())
+    semDedupKFor(boundedCount(table(s, dir, "embeddings"), cap))
   }
 
   /** [[semDedup]] with the cluster count DERIVED from the corpus — the
@@ -1143,9 +1141,7 @@ object SimilarityOps {
     // chain per consumer — while past the cap the encode's single
     // pass streams sv uncached (the 20M regime, where the cache IS
     // the wall).
-    val svCap = math.min(PqTrainVectors + 1L, Int.MaxValue.toLong - 1L)
-    val withinCap =
-      e.select(col("vec_id")).limit(svCap.toInt).count() <= PqTrainVectors
+    val withinCap = boundedCount(e, PqTrainVectors + 1L) <= PqTrainVectors
     val tv = shared(sv.filter(col("vec_id") < PqTrainVectors))
     val codesSrc = if (withinCap) tv else sv
     // residual-PQ Lloyd rounds, each a map-side assign + one bounded

@@ -435,14 +435,10 @@ object TextOps {
     // cached at all: the funnel cache drops `grams` and the gram
     // branch is its own column-pruned rescan.
     val docs = table(s, dir, "documents").select("doc_id", "text")
-    // Long-safe probe (ADVICE r16 / r16 verdict nit): `(fuseMaxDocs
-    // + 1).toInt` silently overflowed to a negative limit for any gate
-    // >= Int.MaxValue — the one knob the 100-TB story says to raise.
-    // A gate past Int.MaxValue−1 can't be probed by limit+count at
-    // all, and a corpus that large is deep in the rescan regime
-    // anyway, so skip the probe instead of truncating it.
+    // a gate at or past Int.MaxValue keeps the rescan regime without
+    // a probe: a corpus that large is deep in that regime anyway
     val fused = fuseMaxDocs < Int.MaxValue.toLong &&
-      docs.limit((fuseMaxDocs + 1).toInt).count() <= fuseMaxDocs
+      boundedCount(docs, fuseMaxDocs + 1) <= fuseMaxDocs
     val (cmNarrow, grams) =
       if (fused) {
         val cm = shared(curateMapSide(docs)
