@@ -1052,13 +1052,16 @@ object DedupOps {
   /** Build the pre-computed corpus-side inverted index the
     * `dedup_incremental` scaladoc promises for 100 TB: the corpus token
     * relation (lang, tok, __salt, c_id, c_sz), written ONCE, bucketed +
-    * sorted by the SALTED candidate-join key (lang, tok, __salt). Every
-    * subsequent batch ingest sort-merge-joins its exploded delta
-    * against bucket-aligned index files — the corpus never shuffles
-    * again (asserted on the plan in BucketedJoinSpec). `c_sz` (the
-    * doc's distinct-token count) is denormalized into the index so the
-    * Jaccard denominator needs no corpus-side aggregation at ingest
-    * time either.
+    * sorted by the SALTED candidate-join key (lang, tok, __salt), one
+    * file per bucket (the rows are hash-partitioned on the bucket key
+    * into `buckets` partitions first, so each writer task holds exactly
+    * one bucket). Every subsequent ingest joins its exploded delta
+    * against it without shuffling the corpus: an index under Spark's
+    * `autoBroadcastJoinThreshold` is broadcast to the delta, a larger
+    * one is merge-joined on bucket-aligned reads (both plans asserted
+    * in BucketedJoinSpec). `c_sz` (the doc's distinct-token count) is
+    * denormalized into the index so the Jaccard denominator needs no
+    * corpus-side aggregation at ingest time either.
     *
     * The salt is the skew defense bucketing alone lacks, learned the
     * measured way (docs/SCALE.md round 7: the unsalted index ran 534.8 s
@@ -1083,6 +1086,7 @@ object DedupOps {
       .select(col("lang"), explode(col("toks")).as("tok"),
         col("doc_id").as("c_id"), size(col("toks")).as("c_sz"))
       .withColumn("__salt", pmod(hash(col("c_id")), lit(salt)))
+      .repartition(buckets, col("lang"), col("tok"), col("__salt"))
       .write.bucketBy(buckets, "lang", "tok", "__salt")
       .sortBy("lang", "tok", "__salt")
       .mode("overwrite").saveAsTable(tableName)
@@ -1091,13 +1095,12 @@ object DedupOps {
     * bucketed index ([[buildIncrementalIndex]]): result-identical to
     * the contract query (asserted in BucketedJoinSpec), but the only
     * exchanges in the plan belong to the DELTA and its candidate
-    * aggregations — the corpus-side scan is bucket-aligned, exchange-
-    * free. The merge hint pins the bucketed SMJ so table stats can
-    * never flip the corpus side into a broadcast (driver-bound at
-    * scale) and AQE cannot re-shape the aligned read. The contract's
-    * `doc_id` order is applied here, on the batch path only: the
-    * per-batch core stays unordered, so a stream pays no range
-    * exchange per micro-batch. */
+    * aggregations — the corpus side is never shuffled: broadcast while
+    * the index is under `autoBroadcastJoinThreshold`, a bucket-aligned
+    * merge-join read above it (see [[dedupAgainstIndex]]). The
+    * contract's `doc_id` order is applied here, on the batch path
+    * only: the per-batch core stays unordered, so a stream pays no
+    * range exchange per micro-batch. */
   def dedupIncrementalIndexed(s: SparkSession, dir: String,
       indexTable: String): DataFrame =
     dedupAgainstIndex(s,
@@ -1123,7 +1126,15 @@ object DedupOps {
     * join back to the batch is needed. Inside a streaming
     * `foreachBatch` the batch is the stateful watermark-dedup plan, and
     * a second read would re-run that dedup and re-commit its state
-    * store on every micro-batch. */
+    * store on every micro-batch.
+    *
+    * The join strategy is the planner's, from the index's size: an
+    * index under `autoBroadcastJoinThreshold` is broadcast (it is the
+    * build side of the LEFT join), so the delta is never shuffled and
+    * both aggregations run where the delta already sits — in a stream,
+    * inside the state-store stage, whose output is hash-partitioned on
+    * `doc_id`. A larger index keeps the bucket-aligned merge join, where
+    * only the salted delta shuffles. */
   private[graft] def dedupAgainstIndex(s: SparkSession,
       batchDocs: DataFrame, indexTable: String,
       threshold: Double = 0.6): DataFrame = {
@@ -1136,8 +1147,8 @@ object DedupOps {
     // bucketed layout at build time), so every (batch-occ, corpus-occ)
     // pair still meets exactly once, but a hot token's probe work and
     // merge-run buffering spread over salt× more bucketed keys. Cost:
-    // salt× the DELTA's shuffle volume — the side that is tiny
-    // relative to the corpus the index layout keeps exchange-free.
+    // salt× the DELTA's probe rows (and, under the merge join, its
+    // shuffle volume) — the side that is tiny relative to the corpus.
     val delta = batchDocs.select(col("doc_id"), col("source"),
         col("lang"), explode_outer(col("toks")).as("tok"),
         size(col("toks")).as("b_sz"))
@@ -1145,7 +1156,7 @@ object DedupOps {
         explode(array((0 until IncrementalIndexSalt).map(lit): _*)))
     val jaccard = col("inter").cast(DoubleType) /
       (col("b_sz") + col("c_sz") - col("inter"))
-    decisions(delta.hint("merge")
+    decisions(delta
       .join(s.table(indexTable), Seq("lang", "tok", "__salt"), "left")
       .groupBy("doc_id", "source", "c_id", "b_sz", "c_sz")
       .agg(count(lit(1)).as("inter"))
@@ -1207,9 +1218,10 @@ object DedupOps {
     * [[dedupAgainstIndex]]. Decisions depend only on (doc, index) —
     * never on batch-mates — which is what makes per-batch streaming
     * decisions ≡ one batch run by construction (asserted on data in
-    * StreamingOpsSpec). Plan shape: the batch side shuffles on
-    * (band, bbits); the corpus side reads bucket-aligned (merge-hint
-    * pinned, exchange-free at every corpus scale); duplicate
+    * StreamingOpsSpec). Plan shape: the corpus side is never
+    * shuffled — broadcast under `autoBroadcastJoinThreshold`, read
+    * bucket-aligned above it while the batch side shuffles on (band,
+    * bbits), the same rule as [[dedupAgainstIndex]]; duplicate
     * multi-band collisions collapse in the min-aggregation, so no
     * first-band arithmetic is needed on this path. Like
     * [[dedupAgainstIndex]] it reads `batchDocs` once — the band join is
@@ -1218,7 +1230,6 @@ object DedupOps {
   private[graft] def dedupAgainstSimhashIndex(s: SparkSession,
       batchDocs: DataFrame, indexTable: String): DataFrame =
     decisions(simhash64BandRows(sketchOf(batchDocs, Simhash64Bits, "source"))
-      .hint("merge")
       .join(s.table(indexTable), Seq("band", "bbits"), "left")
       .groupBy("doc_id", "source")
       .agg(min(when(bit_count(col("simhash").bitwiseXOR(col("c_sh")))

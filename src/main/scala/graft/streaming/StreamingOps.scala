@@ -66,9 +66,14 @@ object StreamingOps {
     * (DedupOps.buildIncrementalIndex) via the SAME decision core as the
     * batch operator (DedupOps.dedupAgainstIndex) — so per-batch
     * decisions provably match the batch run on the same data
-    * (asserted in StreamingOpsSpec), and the corpus side stays
-    * exchange-free on every batch: only the delta explodes and
-    * shuffles, the 100 TB ingest shape. `onBatch` receives each
+    * (asserted in StreamingOpsSpec), and the corpus side is never
+    * shuffled. An index under `autoBroadcastJoinThreshold` is broadcast,
+    * and the micro-batch, already hash-partitioned on `doc_id` by the
+    * watermark dedup, is decided inside the state-store stage: a batch
+    * runs 3 stages (index broadcast, source exchange, dedup + decide)
+    * and no exchange after the dedup (StreamingOpsSpec pins both). A
+    * larger index keeps the bucket-aligned merge join, where only the
+    * delta explodes and shuffles. `onBatch` receives each
     * micro-batch's decision rows (doc_id, source, dup_of, is_new), one
     * per document and unordered: a global sort would cost every batch
     * a range exchange and a sampling job.

@@ -2,11 +2,19 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Obs
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery,
+  StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MemoryStream-driven tests for watermark late-drop, session windows,
@@ -28,6 +36,50 @@ class StreamingOpsSpec extends AnyFunSuite {
       .stateOperators(0)
     assert(op.numRowsUpdated == updated, op.json)
     assert(op.numRowsTotal == total, op.json)
+  }
+
+  /** The contract's arriving documents (src10+) at one event time. */
+  private def arrivingDocs(): Array[StreamingOps.IncomingDoc] = {
+    val t0 = Timestamp.valueOf("2026-08-12 10:00:00")
+    graft.core.Core.table(spark, TestSpark.sfDir, "documents")
+      .withColumn("src_idx", substring(col("source"), 4, 10).cast("int"))
+      .filter(col("src_idx") >=
+        graft.operators.DedupOps.IncrementalCorpusSrcs)
+      .select("doc_id", "lang", "source", "text")
+      .collect()
+      .map(r => StreamingOps.IncomingDoc(r.getLong(0), r.getString(1),
+        r.getString(2), r.getString(3), t0))
+  }
+
+  /** Counts the stages each micro-batch runs, keyed by (query id, batch
+    * id): the stream sets both as job properties, and a broadcast's job
+    * inherits them from the batch that plans it. */
+  private class BatchStages extends SparkListener {
+    val byBatch =
+      new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    private val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      Option(e.properties).foreach { p =>
+        for (q <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          byBatch.merge((q, b.toLong), 1, _ + _)
+      }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(
+          _.getProperty("spark.job.description") == "fence"))
+        fenceSeen.countDown()
+    /** Stage counts per batch of query `q`, once every event before
+      * this call has reached the listener (the bus delivers in order,
+      * so a job started now is seen after them). */
+    def of(q: StreamingQuery): Map[Long, Int] = {
+      val sc = spark.sparkContext
+      sc.setJobDescription("fence")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      byBatch.asScala.collect { case ((id, b), n) if id == q.id.toString =>
+        b -> n }.toMap
+    }
   }
 
   test("watermarked tumbling window drops late data (append mode)") {
@@ -114,15 +166,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     // the contract's arriving-batch split (src10+), streamed in two
     // micro-batches with an event-time column
-    val t0 = Timestamp.valueOf("2026-08-12 10:00:00")
-    val batchDocs = graft.core.Core.table(spark, dir, "documents")
-      .withColumn("src_idx", substring(col("source"), 4, 10).cast("int"))
-      .filter(col("src_idx") >=
-        graft.operators.DedupOps.IncrementalCorpusSrcs)
-      .select("doc_id", "lang", "source", "text")
-      .collect()
-      .map(r => StreamingOps.IncomingDoc(r.getLong(0), r.getString(1),
-        r.getString(2), r.getString(3), t0))
+    val batchDocs = arrivingDocs()
     assert(batchDocs.length > 10)
     val (first, second) = batchDocs.splitAt(batchDocs.length / 2)
 
@@ -145,7 +189,6 @@ class StreamingOpsSpec extends AnyFunSuite {
     assertStateOnce(q, updated = second.length, total = batchDocs.length)
     q.stop()
 
-    import scala.jdk.CollectionConverters._
     val streamed = perBatch.values.asScala.flatten.toSeq
     // every doc decided exactly once across batches (redelivery
     // suppressed by dropDuplicatesWithinWatermark)
@@ -160,6 +203,137 @@ class StreamingOpsSpec extends AnyFunSuite {
     // non-degenerate: the corpus flags some arrivals as dups
     assert(batch.exists(r => r(3) == false))
     spark.sql("DROP TABLE IF EXISTS dedup_idx_stream")
+  }
+
+  test("an ingest micro-batch is decided inside the state-store stage: " +
+    "no exchange after the dedup, at most 3 stages") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    spark.sql("DROP TABLE IF EXISTS dedup_idx_shape")
+    graft.operators.DedupOps.buildIncrementalIndex(spark, TestSpark.sfDir,
+      "dedup_idx_shape")
+    val (first, second) = arrivingDocs().splitAt(10)
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlan]()
+    val stages = new BatchStages
+    spark.sparkContext.addSparkListener(stages)
+    try {
+      val in = MemoryStream[StreamingOps.IncomingDoc]
+      val q = StreamingOps.incrementalDedup(in.toDF(), "30 minutes",
+          "dedup_idx_shape") { (df, id) =>
+          df.collect()
+          plans.put(id, df.queryExecution.executedPlan)
+        }
+        .start()
+      in.addData(first.toIndexedSeq)
+      q.processAllAvailable()
+      in.addData((second.take(10) :+ first.head).toIndexedSeq)
+      q.processAllAvailable()
+      q.stop()
+      val dataBatches = q.recentProgress.filter(_.numInputRows > 0)
+        .map(_.batchId).toSeq
+      assert(dataBatches.length == 2, q.recentProgress.map(_.json).toSeq)
+
+      // The batch arrives hash-partitioned on doc_id by the watermark
+      // dedup; with the index broadcast, both aggregations run there.
+      // (A stream plans its batches without AQE, so the plan is final.)
+      for ((id, plan) <- plans.asScala) {
+        assert(plan.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+          s"batch $id:\n$plan")
+        assert(!plan.exists(_.isInstanceOf[ShuffleExchangeExec]),
+          s"batch $id shuffles after the dedup:\n$plan")
+      }
+      // index broadcast, source -> state exchange, dedup + decide
+      val perBatch = stages.of(q)
+      for (b <- dataBatches)
+        assert(perBatch.get(b).exists(n => n >= 1 && n <= 3),
+          s"batch $b ran ${perBatch.get(b)} stages: $perBatch")
+      assert(perBatch.values.forall(_ <= 3), perBatch)
+    } finally spark.sparkContext.removeSparkListener(stages)
+    spark.sql("DROP TABLE IF EXISTS dedup_idx_shape")
+  }
+
+  test("incremental dedup restarted after a sink failure replays the " +
+    "failed batch with identical decisions and decides every doc once") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    // checkpoint files commit through FileSystem.rename, not the
+    // FileContext manager that forks a readlink per file (build.sbt)
+    assert(spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
+      .exists(_.endsWith(".FileSystemBasedCheckpointFileManager")))
+    val dir = TestSpark.sfDir
+    spark.sql("DROP TABLE IF EXISTS dedup_idx_restart")
+    graft.operators.DedupOps.buildIncrementalIndex(spark, dir,
+      "dedup_idx_restart")
+    val arriving = arrivingDocs()
+    val third = arriving.length / 3
+    val batches = Seq(arriving.take(third),
+      arriving.slice(third, 2 * third),
+      // the last batch redelivers a doc of the first: decided once
+      arriving.drop(2 * third) :+ arriving.head)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+
+    val decided =
+      new java.util.concurrent.ConcurrentHashMap[Long, Set[Seq[Any]]]()
+    // the sink fails on the batch that carries the second batch's docs
+    // (its id is not fixed: a watermark advance may run a no-data batch)
+    val failOnDoc = batches(1).head.doc_id
+    val failed = new java.util.concurrent.atomic.AtomicReference(
+      Option.empty[(Long, Set[Seq[Any]])])
+    val in = MemoryStream[StreamingOps.IncomingDoc]
+    def start(failing: Boolean): StreamingQuery =
+      StreamingOps.incrementalDedup(in.toDF(), "30 minutes",
+          "dedup_idx_restart") { (df, id) =>
+          val rows = df.collect().map(_.toSeq).toSet
+          // after collect the state store has committed this batch;
+          // throwing now leaves the batch itself uncommitted
+          if (failing && rows.exists(_.head == failOnDoc)) {
+            failed.set(Some(id -> rows))
+            throw new IllegalStateException(s"sink failed on batch $id")
+          }
+          decided.put(id, rows)
+        }
+        .option("checkpointLocation", ckpt)
+        .start()
+
+    val q1 = start(failing = true)
+    in.addData(batches(0).toIndexedSeq)
+    q1.processAllAvailable()
+    in.addData(batches(1).toIndexedSeq)
+    intercept[StreamingQueryException](q1.processAllAvailable())
+    assert(!q1.isActive)
+    val (failedId, failedRows) = failed.get.get
+    assert(failedRows.size == batches(1).length)
+    // the offsets of the failed batch are logged, its commit is not,
+    // and its state version (batch id + 1) is on disk in every
+    // partition
+    assert(new java.io.File(s"$ckpt/offsets/$failedId").exists())
+    assert(!new java.io.File(s"$ckpt/commits/$failedId").exists())
+    val deltas = new java.io.File(s"$ckpt/state/0").listFiles()
+      .filter(_.getName.forall(_.isDigit))
+      .map(p => new java.io.File(p, s"${failedId + 1}.delta"))
+    assert(deltas.nonEmpty && deltas.forall(_.exists()), deltas.toSeq)
+
+    // restart on the same checkpoint and source: the failed batch
+    // replays, overwriting its state delta files
+    val q2 = start(failing = false)
+    q2.processAllAvailable()
+    assert(decided.get(failedId) == failedRows)
+    assertStateOnce(q2, updated = batches(1).length,
+      total = batches(0).length + batches(1).length)
+    in.addData(batches(2).toIndexedSeq)
+    q2.processAllAvailable()
+    assertStateOnce(q2, updated = batches(2).length - 1,
+      total = arriving.length)
+    q2.stop()
+
+    val streamed = decided.values.asScala.flatten.toSeq
+    assert(streamed.map(_.head).distinct.length == streamed.length)
+    assert(streamed.length == arriving.length)
+    val batch = graft.operators.DedupOps
+      .dedupIncrementalIndexed(spark, dir, "dedup_idx_restart")
+      .collect().map(_.toSeq).toSeq
+    assert(streamed.toSet == batch.toSet)
+    spark.sql("DROP TABLE IF EXISTS dedup_idx_restart")
   }
 
   test("streaming SimHash dedup over the banded sketch index matches " +
@@ -208,7 +382,6 @@ class StreamingOpsSpec extends AnyFunSuite {
     assertStateOnce(q, updated = second.length, total = arriving.length)
     q.stop()
 
-    import scala.jdk.CollectionConverters._
     val streamed = perBatch.values.asScala.flatten.toSeq
     assert(streamed.map(_.head).distinct.length == streamed.length)
     assert(streamed.length == arriving.length)
@@ -635,7 +808,6 @@ class StreamingOpsSpec extends AnyFunSuite {
     // batch id: the stateful dedup op interleaves NO-DATA batches
     // (watermark-advance ticks whose fold is the identity), so batch
     // ids are not 1:1 with addData calls.
-    import scala.jdk.CollectionConverters._
     val observed = perBatch.values.asScala.toSet
     assert(observed.contains(rebuild(after1)),
       "no batch produced the after-batch-1 rebuild labeling")
