@@ -161,8 +161,8 @@ object Core {
     * consumes a query's result (Verify's write, Bench's sink);
     * between queries the cache manager is then empty of graft-created
     * entries. Unpersisting an already-unpersisted plan is a no-op, so
-    * utilities that manage their own lifecycle (ccFixpoint's round
-    * labels) compose safely. Non-blocking: eviction proceeds while the
+    * utilities that manage their own lifecycle (the CC loop's
+    * per-segment intermediates) compose safely. Non-blocking: eviction proceeds while the
     * next query plans.
     */
   def releaseShared(): Unit = {

@@ -3,7 +3,7 @@ package graft.operators
 import graft.core.Core._
 import graft.functions.TextHash
 import graft.functions.TextHash._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -857,7 +857,7 @@ object DedupOps {
     // neighbors (CcRounds unrolled rounds; exact for components of
     // diameter <= CcRounds, and this corpus's near-dup clusters are
     // dense so they converge much earlier — asserted in DedupOpsSpec by
-    // extra-round idempotence; ccFixpoint covers unbounded chains). The
+    // extra-round idempotence; ccPsLoop covers unbounded chains). The
     // decision output a real pipeline needs: doc -> canonical cluster,
     // one row per doc, no pair listing. Each round is two equi-joins +
     // a min agg on the (sparse) edge list — linear in |E| per round,
@@ -917,7 +917,7 @@ object DedupOps {
       val ordered = Window.partitionBy("cluster")
         .orderBy(col("quality").desc, col("doc_id"))
       val nodes = table(s, dir, "documents").select("doc_id")
-      ccDoubled(nodes, simhashEdgesGlobal(s, dir), StarCcPairs)
+      ccPsLoop(nodes, simhashEdgesGlobal(s, dir), StarCcPairs)._1
         .join(q, "doc_id")
         .withColumn("is_kept", row_number().over(ordered) === 1)
         .withColumn("canon", first(col("doc_id")).over(ordered))
@@ -1382,12 +1382,12 @@ object DedupOps {
 
   /** Unrolled propagation rounds in the contract CC query — exact for
     * component diameter <= CcRounds. Bounded by the oracle contract
-    * (DuckDB mirrors the same unrolled CTE chain); [[ccFixpoint]] is
+    * (DuckDB mirrors the same unrolled CTE chain); [[ccPsLoop]] is
     * the unbounded-diameter path. */
   val CcRounds = 5
 
   /** (propagate, shortcut) PAIR bound for CC over the STAR-REDUCED
-    * global edge set ([[simhashEdgesGlobal]]) — the [[ccDoubled]]
+    * global edge set ([[simhashEdgesGlobal]]) — the [[ccPsLoop]]
     * schedule. The round-11 `fixpointstar` census first measured plain
     * min-label propagation needing 11 / 10 / 14 rounds at sf0.1 /
     * sf1wide / sf10wide (cross-source near-dup CHAINS run long even
@@ -1405,7 +1405,7 @@ object DedupOps {
     * is a constant factor (~2.2x fewer rounds, 17 pairs vs 37 plain
     * rounds at 64 nodes) — so the honest claim is "half the edge
     * joins at equal diameter coverage", not O(log d). On the real
-    * sweep corpora the census ([[ccDoubledFixpointWithPairs]],
+    * sweep corpora the census (the loop's fixpoint segment count,
     * `cc_fixpoint_star_ps` rows) measured 5 / 5 / 6 pairs to fixpoint
     * at sf0.1 / sf1wide / sf10wide; 8 = measured max + 2, and with
     * corpus diameter growing ~log in corpus size (11 → 14 propagate
@@ -1418,9 +1418,9 @@ object DedupOps {
     * pipeline_full oracles mirror the SAME star-reduced edge set
     * through the SAME (P,S) schedule (ccCteGlobal), so both engines
     * compute identical labels at any pair count; PipelineOpsSpec
-    * asserts the bounded labels match
-    * [[ccFixpointWithRounds]]' schedule-independent fixpoint on the
-    * gate corpus, so the bounded contract answer IS the
+    * asserts the bounded labels match the plain-propagation
+    * fixpoint (a schedule-independent reference in its test sources) on
+    * the gate corpus, so the bounded contract answer IS the
     * true-component answer — and, as the census measured, on the
     * swept corpora too.
     *
@@ -1435,15 +1435,15 @@ object DedupOps {
     * crawl's ids are assignment-order and CAN form such chains.
     * Raising the cap is FREE at contract scale since round 12's
     * early-exit loop ([[ccPsLoop]]): every corpus runs to its own
-    * certified fixpoint (6 segments on the contract corpus) and the
-    * bound is only the safety cap and the oracle CTE's unroll depth
-    * (DuckDB at sf0.01 — cheap). */
+    * certified fixpoint (7 segments for `pipeline_dedup` at sf0.01)
+    * and the bound is only the safety cap and the oracle CTE's unroll
+    * depth (DuckDB at sf0.01 — cheap). */
   val StarCcPairs = 17
 
-  /** Shortcut (pointer-jump) rounds per propagate round in
-    * [[ccDoubled]]. Jumps never touch the edge relation, so extra
-    * jumps would trade the corpus-scaled edge join for cheap label
-    * joins — but MEASURED on all three census corpora, jumps = 2
+  /** Shortcut (pointer-jump) rounds per propagate round, in [[ccPsLoop]]
+    * and in its SQL mirror (`ccPairsSql`) alike. Jumps never touch the
+    * edge relation, so extra jumps would trade the corpus-scaled edge
+    * join for cheap label joins — but MEASURED on all three census corpora, jumps = 2
     * converges in exactly the same round count as jumps = 1 (the min
     * hook leaves the label forest at depth <= 2, so one jump already
     * flattens it and a second jump is an identity pass). Keep 1; a
@@ -1614,17 +1614,7 @@ object DedupOps {
     val combos: IndexedSeq[IndexedSeq[Int]] =
       (0 until blocks).combinations(blocks - hammingMax)
         .map(_.toIndexedSeq).toIndexedSeq
-    /** (doc_id, simhash) -> one row per combination key. Persisted:
-      * the self-join reads it from both sides. */
-    /** One packed key per combination, in combo order — combo i's key
-      * at position i (1-based i+1 under element_at). The PRE-EXTRACTED
-      * form a standing index STORES (round 15): position replaces the
-      * `combo` column, so a probe posexplodes stored longs instead of
-      * re-slicing the sketch per fold. */
-    def keyArr(sh: Column): Column = array(combos.map { cb =>
-      cb.foldLeft(lit(0L))((acc, j) =>
-        shiftleft(acc, widths(j)) + blockBits(sh, j))
-    }: _*)
+    /** (doc_id, simhash) -> one row per combination key. */
     def explodeKeys(sketch: DataFrame): DataFrame = {
       val comboStructs = array(combos.zipWithIndex.map { case (cb, i) =>
         // pack the selected blocks' bits into one long key (<= 32 bits)
@@ -1770,7 +1760,7 @@ object DedupOps {
     * group sizes. Connected components are IDENTICAL to the all-pairs
     * edge set's (any member path a~b becomes a <= L+2 path through the
     * reps), which is all the CC consumers read — run them with
-    * [[ccDoubled]] at [[StarCcPairs]]. At sf10wide this replaced
+    * [[ccPsLoop]] at [[StarCcPairs]]. At sf10wide this replaced
     * ~600M doc-level edges
     * with 0.5M star + 17M rep edges and turned an
     * AGGREGATE_OUT_OF_MEMORY into a linear pass (docs/SCALE.md round
@@ -1925,11 +1915,6 @@ object DedupOps {
     simhashJoin(s, dir, _ =!= _)
       .select(col("a_id").as("n"), col("b_id").as("m"))
 
-  /** Bounded-diameter connected components over the SimHash edge set
-    * (see the `dedup_cluster_cc` entry in [[queries]]). The symmetric
-    * edge list comes from ONE pass of the bucket join (filter a≠b
-    * instead of a&lt;b then union-swap), so the sketch/bucket subplan is
-    * referenced once per propagation round, not twice. */
   /** One synchronous min-label-propagation pass over a self-looped
     * symmetric edge relation `selfEdges(n, m)` (every node carries its
     * (v, v) loop): new_label(v) = min over (v, m) edges of old_label(m)
@@ -1938,7 +1923,8 @@ object DedupOps {
     * unrolled chain stays a linear plan (no per-round branch doubling,
     * no per-round cache barrier). One equi-join + one min agg — linear
     * in |E|, no arrays, exact associative integer work. */
-  private def ccRound(labels: DataFrame, selfEdges: DataFrame): DataFrame =
+  private[graft] def ccRound(labels: DataFrame, selfEdges: DataFrame)
+      : DataFrame =
     selfEdges
       // build side = the node-sized label relation, pinned: a broadcast
       // of labels is corpus-sized at scale (one row per doc), and the
@@ -1952,10 +1938,16 @@ object DedupOps {
 
   /** Symmetric edges plus a (v, v) loop per node — the propagation
     * relation [[ccRound]] consumes. */
-  private def withSelfLoops(nodes: DataFrame, edges: DataFrame): DataFrame =
+  private[graft] def withSelfLoops(nodes: DataFrame, edges: DataFrame)
+      : DataFrame =
     edges.unionByName(
       nodes.select(col("doc_id").as("n"), col("doc_id").as("m")))
 
+  /** Bounded-diameter connected components over the SimHash edge set
+    * (see the `dedup_cluster_cc` entry in [[queries]]). The symmetric
+    * edge list comes from ONE pass of the bucket join (filter a≠b
+    * instead of a&lt;b then union-swap), so the sketch/bucket subplan is
+    * referenced once per propagation round, not twice. */
   def dedupClusterCC(s: SparkSession, dir: String,
       rounds: Int = CcRounds): DataFrame = {
     // The (self-looped) edge list is referenced once per round: without
@@ -1968,13 +1960,8 @@ object DedupOps {
     // k rounds are exact for components of diameter <= k (the min label
     // travels one hop per round); components of larger diameter
     // under-merge. For corpora whose duplicate chains may exceed
-    // CcRounds, [[ccFixpoint]] iterates to convergence — the unrolled
-    // form here is the oracle-checkable contract configuration.
-    // (Pointer-jumping/doubling variants were evaluated and rejected:
-    // jumping adds nothing in the worst case — adversarial id layouts
-    // keep every pointer inside already-covered territory — and edge
-    // doubling squares the edge set on dense near-dup clusters, which
-    // is exactly what this corpus has.)
+    // CcRounds, [[ccPsLoop]] runs to a certified fixpoint — the
+    // unrolled form here is the oracle-checkable contract configuration.
     val nodes = table(s, dir, "documents").select("doc_id")
     ccUnrolled(nodes, simhashEdges(s, dir), rounds).orderBy("doc_id")
   }
@@ -1985,7 +1972,7 @@ object DedupOps {
     * synthetic edges keep the plan string un-truncated). Pure lazy:
     * at [[CcRounds]] the chain is short enough that nested-plan
     * analysis cost never shows, and the lazy shape keeps the plan-pin
-    * specs byte-stable. Deep chains belong to [[ccDoubled]]. */
+    * specs byte-stable. Deep chains belong to [[ccPsLoop]]. */
   private[graft] def ccUnrolled(nodes: DataFrame, edges: DataFrame,
       rounds: Int): DataFrame = {
     // hash-partition the cached edges on the join key ONCE, with an
@@ -2032,187 +2019,108 @@ object DedupOps {
         col("cluster") === col("c"))
       .select(col("doc_id"), col("cc").as("cluster"))
 
-  /** Min-label CC with shortcutting: `pairs` rounds of (propagate
-    * [[ccRound]], shortcut [[ccShortcut]] ×`jumps`) — hooking +
-    * shortcutting, the FastSV schedule (Zhang, Azad & Buluç 2020;
-    * Shiloach–Vishkin 1982). On a monotone-id label chain each pair
-    * doubles covered distance (measured: a 64-path converges in 7
-    * pairs); on adversarial shuffled-id chains the jump target is the
-    * ball MINIMUM rather than the ball edge, and the measured gain is
-    * a ~2.2x constant factor in rounds (see [[StarCcPairs]]). The win
-    * that matters at 100 TB is unconditional either way: the shortcut
-    * never touches the edge relation, so the schedule halves the
-    * corpus-scaled EDGE-join rounds needed for the same diameter
-    * coverage. The edge relation is partitioned and cached ONCE
-    * ([[ccUnrolled]]'s shape); each pair shuffles only node-sized
-    * label relations (2 longs/doc).
+  /** Loop rows per partition in [[ccPsLoop]]: 2M rows of 2–3 longs is
+    * about 50 MB, inside the "fewer, larger partitions" range. */
+  private val CcRowsPerPart = 2000000L
+
+  /** [[ccPsLoop]]'s partition count for `rows` loop rows: one partition
+    * per [[CcRowsPerPart]] rows, at least 1 and at most the session's
+    * `defaultParts`. The loop's unit of work is a label join over
+    * max(|E| + n, n) rows of 2–3 longs; at contract scale that is a few
+    * MB, yet every segment ran at the session's 32 shuffle partitions —
+    * ~50 stages × 32 tasks of sub-ms work per manifest, measured as the
+    * dominant cost of the pipeline family (pipeline_full 14.7 s warm at
+    * 32 parts vs 4.5 s at 4, OPTIMIZATION_r17.md). At deployment row
+    * counts the rule saturates to `defaultParts`. */
+  private[graft] def ccLoopParts(rows: Long, defaultParts: Int): Int =
+    math.max(1L, math.min(defaultParts.toLong,
+      (rows + CcRowsPerPart - 1) / CcRowsPerPart)).toInt
+
+  /** Min-label connected components with shortcutting, run eagerly to a
+    * certified fixpoint or to `maxPairs` segments — the one CC loop
+    * behind `pipeline_dedup`, `pipeline_full` and
+    * [[ccIncrementalUpdate]]. Each (P,S) segment is one propagate
+    * ([[ccRound]]) and [[StarCcJumps]] shortcuts ([[ccShortcut]]):
+    * hooking + shortcutting, the FastSV schedule (Zhang, Azad & Buluç
+    * 2020; Shiloach–Vishkin 1982). On a monotone-id chain each segment
+    * doubles covered distance (a 64-path converges in 7 segments); on
+    * adversarial shuffled-id chains the jump target is the ball MINIMUM
+    * rather than the ball edge, and the gain is a ~2.2x constant factor
+    * in rounds (see [[StarCcPairs]]). Either way the shortcut never
+    * touches the edge relation, so the schedule halves the edge-join
+    * rounds needed for the same diameter coverage. The edge relation is
+    * hash-partitioned on `m` and checkpointed ONCE; each segment
+    * shuffles only node-sized label relations (2 longs/doc).
     *
-    * `truncate` (the contract default) runs the chain as an EAGER
-    * fixpoint-certified loop (see [[ccPsLoop]]) capped at `pairs`
-    * segments, with AQE disabled for the duration of the loop's jobs:
-    * every segment is a fixed-shape label join whose strategy is
-    * already pinned (explicit repartition + shuffle_hash hints), so
-    * adaptive re-optimization buys nothing, and per-segment AQE
-    * re-planning was the measured dominant cost of the sf0.1 manifests
-    * (round-11 verdict: most of pipeline_full's 16 s was driver work
-    * between stages, not executor time). Earlier rounds ran a LAZY
-    * per-pair localCheckpoint chain under AQE; round 12 replaced it
-    * with the eager loop, which also EARLY-EXITS at the certified
-    * fixpoint — the contract corpus converges in 6 (P,S) segments, not
-    * the bound's 8 (the judge's "measured 5+1 pairs" ask).
+    * Each segment is ONE job: the propagate output is lazily
+    * local-checkpointed (the shortcut reads it twice, and
+    * un-materialized it would execute the edge join twice), and the
+    * segment's output is `localCheckpoint`ed, which truncates lineage
+    * so every segment's plan is constant-size — the GraphX/Pregel
+    * per-superstep persist. The segments run with
+    * AQE off in a CLONED session (body comment): each is a fixed-shape
+    * label join whose strategy the explicit repartition and
+    * shuffle_hash hints already pin, and per-segment AQE re-planning
+    * was the measured dominant cost of the sf0.1 manifests (most of
+    * pipeline_full's 16 s was driver work between stages).
     *
-    * Oracle parity is schedule-exact in ALL cases: post-fixpoint
-    * (P,S) pairs are the identity (propagate's min over an unchanged
-    * neighborhood reproduces the label; the jump of a fixed point is
-    * itself), so early-exit labels equal the oracle's full
+    * The convergence certificate rides each segment's checkpoint job
+    * as observed metrics — row count and label sum — so it costs no
+    * job of its own. Labels are per-node NON-INCREASING under both
+    * steps (propagate's min includes the node's own label via the
+    * self-loop; the jump is monotone, label(label(v)) <= label(v)), so
+    * the exact sum strictly decreases unless no label changed, and an
+    * unchanged sum certifies the true fixpoint (after one no-change
+    * segment every later segment is the identity). Returns (labels,
+    * segments run INCLUDING the certifying no-change segment,
+    * converged).
+    *
+    * Oracle parity is schedule-exact: post-fixpoint segments are the
+    * identity, so early-exit labels equal the oracle's full
     * [[StarCcPairs]]-pair CTE whenever the oracle converges within its
-    * pairs, and when a corpus needs MORE than `pairs` segments both
-    * engines compute the identical bounded schedule (hash parity
-    * cannot catch that under-merge; the fixpoint census measured it).
-    * Contract callers run corpus-distributed (labels-only — never
-    * text) jobs during query construction and carry a documented
-    * LazinessSpec
-    * exemption; at cluster scale the materialized per-segment state is
-    * what GraphX/Pregel persists per superstep. Plan-pin specs pass
-    * truncate = false for a pure lazy tree. */
-  private[graft] def ccDoubled(nodes: DataFrame, edges: DataFrame,
-      pairs: Int, truncate: Boolean = true,
-      jumps: Int = StarCcJumps): DataFrame =
-    if (truncate) ccPsLoop(nodes, edges, pairs, jumps, certEvery = 1)._1
-    else {
-      val selfEdges = shared(withSelfLoops(nodes, edges)
-        .repartition(SkewJoin.defaultParts(nodes.sparkSession), col("m")))
-      var labels = nodes.select(col("doc_id"), col("doc_id").as("cluster"))
-      for (_ <- 1 to pairs) {
-        // persist each shortcut INPUT: the pointer jump references it
-        // TWICE (both sides of the self-join), and without the cache
-        // the first jump would execute the corpus-scaled edge join
-        // twice — measured in the final plan as a duplicated (not
-        // reused) post-join exchange. Node-sized (2 longs/doc), freed
-        // by the caller's releaseShared scope.
-        labels = ccRound(labels, selfEdges)
-        for (_ <- 1 to jumps)
-          labels = ccShortcut(shared(labels))
-      }
-      labels
-    }
-
-  /** The eager (P,S) loop behind [[ccDoubled]] and
-    * [[ccDoubledFixpointWithPairs]]: per segment, one propagate
-    * ([[ccRound]]) + `jumps` shortcuts ([[ccShortcut]]), each output
-    * eagerly `localCheckpoint`ed (the shortcut references its input
-    * twice — un-materialized it would execute the corpus-scaled edge
-    * join twice; and checkpointing truncates lineage so every
-    * segment's analyzed plan is constant-size, the GraphX/Pregel
-    * per-superstep persist). Runs with AQE disabled (see
-    * [[ccDoubled]]'s scaladoc — fixed-shape pinned label joins, the
-    * per-segment re-planning was the measured driver cost) in a
-    * CLONED session since round 14, so the flip is invisible to
-    * concurrent queries on the caller's session (see the body
-    * comment).
-    *
-    * Convergence check is one node-sized aggregate per segment, no
-    * join: labels are per-node NON-INCREASING under both steps
-    * (propagate's min includes the node's own label via the self-loop;
-    * the jump is monotone — label(label(v)) <= label(v)), so
-    * sum(cluster) strictly decreases unless NO label changed, and an
-    * unchanged sum certifies the true fixpoint (one full (P,S) segment
-    * with no change makes every later segment the identity). Returns
-    * (labels, segments run INCLUDING the final no-change segment that
-    * certifies convergence) — the same counting contract the round-11
-    * census rows recorded with the join-based check. */
-  /** Diagnostic counters for the folded certificate (round 18): which
-    * path produced each certificate — the observed metrics riding the
-    * checkpoint job, or the explicit fallback aggregate. Spec-read
-    * only; both paths compute the identical decimal sum. */
-  private[graft] val ccCertObserved =
-    new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ccCertFallback =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def ccPsLoop(nodes: DataFrame, edges: DataFrame,
-      maxPairs: Int, jumps: Int, certEvery: Int = 1)
-      : (DataFrame, Int, Boolean) = {
+    * pairs, and a corpus that needs MORE than `maxPairs` segments gets
+    * the identical bounded schedule in both engines (hash parity cannot
+    * catch that under-merge; PipelineOpsSpec pins convergence on the
+    * gate corpus). The contract callers run these labels-only jobs
+    * (never text) during query construction and carry a documented
+    * LazinessSpec exemption. */
+  private[graft] def ccPsLoop(nodes: DataFrame, edges: DataFrame,
+      maxPairs: Int): (DataFrame, Int, Boolean) = {
     val origin = nodes.sparkSession
-    // Materialize both loop inputs under the CALLER's session/conf
-    // (explicit repartition counts — AQE-stable), then run the
-    // fixed-shape segments in a CLONED session with AQE off (round 14,
-    // r13 verdict #7 / ADVICE r12): the previous `withConf` flipped
-    // `spark.sql.adaptive.enabled` SESSION-GLOBALLY for the loop's
-    // duration — from the stream-execution thread under
-    // clusterMaintenanceStream — so any concurrent query on the same
-    // SparkSession silently ran with AQE off, and racing restores
-    // could leave the session flipped. The clone shares the
-    // SparkContext and block manager (localCheckpoints and frees cross
-    // the boundary untouched) but owns its conf, so the flip is
-    // invisible outside the loop — asserted by a concurrent-poll spec
-    // in StreamingOpsSpec. Handoff mechanics: the two checkpointed
-    // inputs cross via GLOBAL temp views, which preserves their
-    // LogicalRDD output partitioning (a createDataFrame re-wrap would
-    // lose it and re-shuffle `e` every segment). The clone's AQE conf
-    // is restored before the result escapes, so downstream operators a
-    // caller chains onto the returned labels plan under identical conf
-    // values whichever session executes them.
-    val e0big = withSelfLoops(nodes, edges)
-      .repartition(SkewJoin.defaultParts(origin), col("m"))
-      .localCheckpoint()
+    // Materialize both loop inputs under the CALLER's session/conf,
+    // then run the fixed-shape segments in a CLONED session with AQE
+    // off (round 14): flipping `spark.sql.adaptive.enabled` on the
+    // caller's session — from the stream-execution thread under
+    // clusterMaintenanceStream — let any concurrent query on it run
+    // with AQE off, and racing restores could leave it flipped. The
+    // clone shares the SparkContext and block manager (localCheckpoints
+    // and frees cross the boundary untouched) but owns its conf, so
+    // the flip is invisible outside the loop — asserted by a
+    // concurrent-poll spec in StreamingOpsSpec. The two checkpointed
+    // inputs cross via GLOBAL temp views.
+    val eIn = withSelfLoops(nodes, edges).localCheckpoint()
     val l0 = nodes.select(col("doc_id"), col("doc_id").as("cluster"))
       .localCheckpoint()
-    // SCALE-ADAPTIVE loop parallelism (optimization round 17, guide
-    // §2.2 "fewer, larger partitions" / §1.2 step 1): the loop's unit
-    // of work is a label join over ≤ max(|E|, n) rows of 2–3 longs —
-    // at contract scale a few hundred thousand rows, i.e. a few MB,
-    // yet every segment's joins, checkpoints and certificate ran at
-    // the session's shuffle.partitions (32): ~50 stages × 32 tasks of
-    // sub-ms work per manifest, measured as the dominant cost of the
-    // whole pipeline family (pipeline_full 14.7 s warm at 32 parts vs
-    // 4.5 s at 4 — OPTIMIZATION_r17.md). Both loop inputs are already
-    // eagerly checkpointed, so their EXACT row counts are one cheap
-    // block-counting job each (this loop is the documented
-    // LazinessSpec-exempt eager path); size partitions to the data:
-    // one partition per `spark.graft.cc.rowsPerPartition` (2M rows ≈
-    // 50 MB of label/edge rows, guide §2.2's range), capped at the
-    // session's configured parallelism — at deployment row counts the
-    // formula saturates to defaultParts and the plan is unchanged;
-    // only the regime where 32 tasks chase kilobytes gets smaller.
-    val rowsPerPart = origin.conf
-      .getOption("spark.graft.cc.rowsPerPartition")
-      .map(_.toLong).getOrElse(2000000L)
-    val dp = SkewJoin.defaultParts(origin)
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (vE, vL) = (s"graft_cc_e_$tag", s"graft_cc_l_$tag")
     val gdb = origin.conf.get("spark.sql.globalTempDatabase", "global_temp")
-    // The try starts HERE (ADVICE r17): a failure in the count jobs,
-    // the parts-repartition, the view creation or the clone's conf
-    // copy must still release the UUID-named global views and the two
-    // eager checkpoint blocks — previously only the loop body was
-    // covered and an early failure leaked both. `eCur` tracks
-    // whichever edge checkpoint is live; double-unpersist on the
-    // success path is a no-op. The conf restore is guarded on the
-    // clone actually existing.
-    var eCur = e0big
+    // whichever edge checkpoint is live; the finally frees it and l0
+    // on every path, so a failure anywhere below leaks neither
+    var eLive = eIn
     var scopedOpt: Option[SparkSession] = None
+    var segments = 0
+    var ok = false
     try {
-      val loopRows = math.max(e0big.count(), l0.count())
-      val parts = math.max(1L, math.min(dp.toLong,
-        (loopRows + rowsPerPart - 1) / rowsPerPart)).toInt
-      // re-lay the edge relation only when the derived count is SMALLER
-      // (one extra node-sized exchange, amortized over every segment's
-      // propagate); at scale parts == dp and e0big is used as-is
-      val e0 =
-        if (parts < dp) {
-          val r = e0big.repartition(parts, col("m")).localCheckpoint()
-          freeLocalCheckpoint(e0big)
-          r
-        } else e0big
-      eCur = e0
+      val (eRows, nRows) = (eIn.count(), l0.count())
+      val parts = ccLoopParts(math.max(eRows, nRows),
+        SkewJoin.defaultParts(origin))
       // GLOBAL temp views cross the session boundary (plain temp views
       // are per-session, and SparkSession.cloneSession is private[sql]);
       // UUID-named, dropped in the finally. newSession() + a runtime-conf
       // copy is the public-API clone: every modifiable conf the caller
       // has set (shuffle partitions, timezone, AQE) carries over, then
-      // only the clone's AQE flips.
-      e0.createOrReplaceGlobalTempView(vE)
+      // only the clone's AQE and shuffle partitions change.
+      eIn.createOrReplaceGlobalTempView(vE)
       l0.createOrReplaceGlobalTempView(vL)
       val scoped = origin.newSession()
       scopedOpt = Some(scoped)
@@ -2223,156 +2131,84 @@ object DedupOps {
         if (scoped.conf.isModifiable(k)) scoped.conf.set(k, v)
       }
       scoped.conf.set("spark.sql.adaptive.enabled", "false")
-      // the loop's OWN shuffles (label joins, certificate aggregates)
-      // follow the derived count; the clone scopes it, so the caller's
-      // session — and everything chained onto the returned labels —
-      // keeps its configured parallelism
       scoped.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      val e = scoped.table(s"$gdb.$vE")
+      // The edge layout every segment's propagate reads: shuffled ONCE
+      // on `m`, to the count the row count sets ([[ccLoopParts]]), and
+      // checkpointed in the clone. With AQE off the checkpoint records
+      // that hash partitioning; under AQE it records
+      // UnknownPartitioning, and every segment would re-shuffle the
+      // edges. Every relation the segments read carries a row-count estimate
+      // ([[withRowCountStats]]); the inherited ones multiply per
+      // segment, and at one partition a single-partition input past
+      // `spark.sql.maxSinglePartitionBytes` is re-shuffled — the edges
+      // included.
+      val e = withRowCountStats(scoped.table(s"$gdb.$vE")
+        .repartition(parts, col("m")).localCheckpoint(), eRows)
+      eLive = e
+      freeLocalCheckpoint(eIn)
       var labels = scoped.table(s"$gdb.$vL")
-      // Certificate sum in DECIMAL(38,0), not LONG (ADVICE r12): labels
-      // are per-node non-increasing, so the EXACT sum strictly decreases
-      // unless no label changed — but a long sum over arbitrary 64-bit
-      // doc ids can wrap, and a wrapped collision would falsely certify
-      // convergence (ccIncrementalUpdate's fail-closed guarantee rests
-      // on this certificate). decimal(38,0) holds n·2^63 exactly to
-      // n ≈ 1.08e19 docs; past that Spark yields NULL, which fails LOUD
-      // below instead of comparing equal. Empty node sets are a genuine
-      // (trivially converged) zero, distinguished from overflow by the
-      // row count in the same one-row aggregate.
-      def labelSum(l: DataFrame): java.math.BigDecimal = {
-        val r = l.agg(count(lit(1)).as("n"),
-          sum(col("cluster").cast(DecimalType(38, 0))).as("s")).head()
+      // Certificate sum in DECIMAL(38,0), not LONG: a long sum over
+      // arbitrary 64-bit doc ids can wrap, and a wrapped collision would
+      // falsely certify convergence (ccIncrementalUpdate's fail-closed
+      // guarantee rests on this certificate). decimal(38,0) holds
+      // n·2^63 exactly to n ≈ 1.08e19 docs; past that Spark yields
+      // NULL, which fails LOUD below instead of comparing equal. Empty
+      // node sets are a genuine (trivially converged) zero, told apart
+      // from overflow by the row count in the same aggregate.
+      val cert = Seq(count(lit(1)).as("n"),
+        sum(col("cluster").cast(DecimalType(38, 0))).as("s"))
+      def certOf(r: Row): java.math.BigDecimal =
         if (r.getLong(0) == 0L) java.math.BigDecimal.ZERO
-        else {
-          val d = r.getDecimal(1)
-          if (d == null) throw new IllegalStateException(
+        else Option(r.getDecimal(1)).getOrElse(
+          throw new IllegalStateException(
             "ccPsLoop: label-sum certificate overflowed decimal(38,0) " +
               "— corpus beyond the 1e19-doc id-sum bound; the fixpoint " +
-              "certificate cannot be trusted")
-          d
-        }
-      }
-      var prevSum = labelSum(labels)
+              "certificate cannot be trusted"))
+      var prevSum = certOf(labels.agg(cert.head, cert.tail: _*).head())
       var converged = false
-      var i = 0
-      // FOLD the certificate into the checkpoint's own job (round 18,
-      // VERDICT r17 #3 "fold the certificate aggregate into the
-      // propagate join"): the decimal sum + row count ride the
-      // segment-end materialization as OBSERVED metrics
-      // (CollectMetrics is a pass-through node — checkpointed rows are
-      // untouched), so the former separate per-segment aggregate job —
-      // one more driver roundtrip and one more node-sized scan per
-      // superstep, at any scale — disappears. Metrics arrive on the
-      // listener bus asynchronously; we poll briefly, and if this
-      // build ever stops reporting observed metrics for the checkpoint
-      // action we fall back to the explicit aggregate (identical
-      // expression, identical decimal semantics — just the old
-      // schedule) and stop observing for the rest of the loop.
-      var observeWorks = scoped.conf
-        .getOption("spark.graft.cc.observeCert").forall(_.toBoolean)
-      def certFromRow(r: org.apache.spark.sql.Row): java.math.BigDecimal =
-        if (r.getLong(0) == 0L) java.math.BigDecimal.ZERO
-        else {
-          val d = r.getDecimal(1)
-          if (d == null) throw new IllegalStateException(
-            "ccPsLoop: label-sum certificate overflowed decimal(38,0) " +
-              "— corpus beyond the 1e19-doc id-sum bound; the fixpoint " +
-              "certificate cannot be trusted")
-          d
-        }
-      while (!converged && i < maxPairs) {
-        // ONE eager job per segment (optimization round 17): the
-        // shortcut reads its input twice, so each intermediate must be
-        // materialized-once — but a LAZY persist gives that too, and
-        // unlike the former per-step localCheckpoint it doesn't cost a
-        // job of its own: the segment-end checkpoint's single job
-        // computes the whole (P, S×jumps) chain through the cache
-        // marks. Lineage still truncates once per segment (the
-        // checkpoint), so per-segment plans stay constant-size; the
-        // intermediates' cache blocks have no reader after the
-        // checkpoint materializes and are dropped immediately.
+      while (!converged && segments < maxPairs) {
+        // Each shortcut reads its input twice. A LAZY local checkpoint
+        // gives both reads one RDD, computed once inside the segment's
+        // job; a persisted Dataset does not: the self-join re-instances
+        // the right side's plan, and over the hash-partitioned edge
+        // checkpoint the re-instanced plan no longer matches the cache
+        // entry, so the propagate would run twice. Every label relation
+        // has one row per node.
         var step = ccRound(labels, e)
         val intermediates = scala.collection.mutable.Buffer.empty[DataFrame]
-        for (_ <- 1 to jumps) {
-          val p = step.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        for (_ <- 1 to StarCcJumps) {
+          val p = withRowCountStats(step.localCheckpoint(eager = false),
+            nRows)
           intermediates += p
           step = ccShortcut(p)
         }
-        val needCert = (i + 1) % certEvery == 0 || (i + 1) >= maxPairs
-        val certName = s"cc_cert_${tag}_$i"
-        val toCheckpoint =
-          if (needCert && observeWorks)
-            step.observe(certName, count(lit(1)).as("n"),
-              sum(col("cluster").cast(DecimalType(38, 0))).as("s"))
-          else step
-        step = toCheckpoint.localCheckpoint()
-        intermediates.foreach(_.unpersist(blocking = false))
-        i += 1
-        // CERTIFICATE CADENCE (round 14, r13 verdict #3 — measured
-        // and REJECTED for the contract paths, kept as a parameter):
-        // the sum aggregate runs every `certEvery`-th segment (always
-        // at the cap, so fail-closed callers still throw on genuine
-        // non-convergence). Soundness is cadence-independent — labels
-        // are per-node non-increasing, so sum(i−c) == sum(i) certifies
-        // every segment in between changed nothing — but cadence 2
-        // detects convergence only at matching PARITY: the contract
-        // corpus's fixpoint lands such that cadence 2 ran TWO extra
-        // (P,S) segments while saving only ~4 sub-0.1 s certificate
-        // aggregates — a net LOSS, so every caller stays at
-        // certEvery = 1 and the census-recorded pair counts remain the
-        // true fixpoint the StarCcPairs bound is gated against.
-        if (needCert) {
-          // SYNCHRONOUS metrics read: the checkpoint action has
-          // completed, so CollectMetricsExec's accumulator already
-          // holds the row — queryExecution.observedMetrics reads it
-          // directly, with NO listener-bus dependency (the
-          // Observation/Await form was measured at ~+2 s per segment
-          // of pure bus-lag wait at sf0.1 and rejected)
-          val row =
-            if (observeWorks)
-              toCheckpoint.queryExecution.observedMetrics.get(certName)
-            else None
-          val s2 = row match {
-            case Some(r) => ccCertObserved.incrementAndGet(); certFromRow(r)
-            case None =>
-              observeWorks = false
-              ccCertFallback.incrementAndGet()
-              labelSum(step)
-          }
-          converged = s2.compareTo(prevSum) == 0
-          prevSum = s2
-        }
+        val (next, observed) = checkpointObserving(step, cert)
+        // no reader once the checkpoint has materialized the segment
+        intermediates.foreach(freeLocalCheckpoint)
+        segments += 1
+        val s2 = certOf(observed)
+        converged = s2.compareTo(prevSum) == 0
+        prevSum = s2
         // previous segment's labels: last read was ccRound above
         freeLocalCheckpoint(labels)
-        labels = step
+        labels = withRowCountStats(next, observed.getLong(0))
       }
-      // the edge relation's last read is the final segment's
-      // propagate; the seed labels were superseded by the first
-      // segment's output (both freed via their ORIGIN handles — the
-      // clone's view wrappers are not LogicalRDD roots)
-      freeLocalCheckpoint(e0)
-      if (i > 0) freeLocalCheckpoint(l0)
-      (labels, i, converged)
-    } catch {
-      case t: Throwable =>
-        // release the eager inputs on ANY failure path (double
-        // unpersist of an already-freed handle is a no-op); per-segment
-        // intermediates degrade to ContextCleaner reclaim
-        freeLocalCheckpoint(eCur)
-        freeLocalCheckpoint(l0)
-        throw t
+      ok = true
+      (labels, segments, converged)
     } finally {
+      // the edge relation's last read is the final segment's propagate;
+      // the seed labels were superseded by the first segment's output
+      // unless no segment ran, and are freed via the ORIGIN handle (the
+      // clone's view wrapper is not a LogicalRDD root)
+      freeLocalCheckpoint(eLive)
+      if (!ok || segments > 0) freeLocalCheckpoint(l0)
       scopedOpt.foreach { scoped =>
         // the returned labels Dataset belongs to the clone: restore its
-        // AQE to the caller's current value so anything a caller chains
-        // onto the result plans under identical conf values
+        // AQE and shuffle partitions to the caller's current values so
+        // anything a caller chains onto the result (cluster window,
+        // final sort) plans under identical conf values
         scoped.conf.set("spark.sql.adaptive.enabled",
           origin.conf.get("spark.sql.adaptive.enabled", "true"))
-        // same contract for the derived loop parallelism: the caller's
-        // downstream operators (cluster window, final sort) must plan at
-        // the session's configured count, not the loop's
         origin.conf.getOption("spark.sql.shuffle.partitions") match {
           case Some(v) => scoped.conf.set("spark.sql.shuffle.partitions", v)
           case None => scoped.conf.unset("spark.sql.shuffle.partitions")
@@ -2383,6 +2219,56 @@ object DedupOps {
       origin.catalog.dropGlobalTempView(vE)
       origin.catalog.dropGlobalTempView(vL)
     }
+  }
+
+  /** `localCheckpoint` `df` and read the aggregates `metrics` off that
+    * same job as observed metrics: one job, no second pass over the
+    * rows. The read is synchronous — the checkpoint action has
+    * completed, so CollectMetricsExec's accumulator already holds the
+    * row (an Observation waits on the listener bus, measured at ~2 s
+    * per [[ccPsLoop]] segment at sf0.1). Throws if the row is missing. */
+  private[graft] def checkpointObserving(df: DataFrame,
+      metrics: Seq[Column]): (DataFrame, Row) = {
+    val name = "graft_obs_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    val observed = df.observe(name, metrics.head, metrics.tail: _*)
+    val ck = observed.localCheckpoint()
+    val row = observed.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(
+        s"observed metrics $name did not arrive with the checkpoint job"))
+    (ck, row)
+  }
+
+  /** `localCheckpoint` `df` with a size estimate from its own row
+    * count (observed on the checkpoint job, see [[withRowCountStats]]). */
+  private[graft] def checkpointSized(df: DataFrame): DataFrame = {
+    val (ck, observed) = checkpointObserving(df, Seq(count(lit(1))))
+    withRowCountStats(ck, observed.getLong(0))
+  }
+
+  /** The local checkpoint `ck`, holding `rows` rows, with a size
+    * estimate of `rows` times Spark's per-row width for its schema. A
+    * local checkpoint otherwise keeps the estimate of the plan it was
+    * computed from, and a join's default estimate is the product of
+    * its inputs', so relations re-derived through joins iteration
+    * after iteration — the CC loop's labels, the state that
+    * [[graft.streaming.StreamingOps.clusterMaintainStep]] folds — would
+    * multiply their estimate every iteration. The estimate matters to
+    * the plan: a single-partition input is shuffled anyway once its
+    * estimate passes `spark.sql.maxSinglePartitionBytes`. */
+  private[graft] def withRowCountStats(ck: DataFrame, rows: Long)
+      : DataFrame = {
+    val session =
+      ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val lr = ck.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      sizeInBytes = org.apache.spark.sql.catalyst.plans.logical
+        .statsEstimation.EstimationUtils.getOutputSize(lr.output, rows),
+      rowCount = Some(BigInt(rows)))
+    new org.apache.spark.sql.classic.Dataset[Row](session,
+      lr.copy()(session, Some(stats), None),
+      org.apache.spark.sql.Encoders.row(ck.schema))
   }
 
   /** Release a `localCheckpoint`ed relation's storage blocks (ADVICE
@@ -2403,18 +2289,6 @@ object DedupOps {
       case _ => ()
     }
 
-  /** [[ccDoubled]] iterated to fixpoint, returning (labels, pairs run
-    * including the final no-change pair that certifies convergence) —
-    * the census twin of [[ccFixpointWithRounds]] for the (P,S)
-    * schedule: the specs check the measured pair count against
-    * [[StarCcPairs]]. Shares [[ccPsLoop]] with the contract path, so
-    * the census measures exactly the schedule the manifests run. */
-  def ccDoubledFixpointWithPairs(nodes: DataFrame, edges: DataFrame,
-      maxPairs: Int = 32, jumps: Int = StarCcJumps): (DataFrame, Int) = {
-    val (labels, pairs, _) = ccPsLoop(nodes, edges, maxPairs, jumps)
-    (labels, pairs)
-  }
-
   /** INCREMENTAL connected-component maintenance — the operator a
     * daily-ingest 100 TB pipeline runs instead of a full
     * `pipeline_dedup` rebuild (round-11 verdict #5): fold a batch's
@@ -2424,7 +2298,7 @@ object DedupOps {
     *
     *  - `oldLabels` (doc_id, cluster): a CONVERGED labeling of the
     *    standing corpus (each cluster value = the component's min
-    *    doc_id — what [[ccDoubled]] produces at fixpoint);
+    *    doc_id — what [[ccPsLoop]] produces at fixpoint);
     *  - `deltaNodes` (doc_id): the arriving batch;
     *  - `deltaEdges` (n, m) SYMMETRIC: every new edge — batch-internal
     *    and batch<->corpus; endpoints may be any batch or corpus doc.
@@ -2432,37 +2306,39 @@ object DedupOps {
     * The corpus graph never re-enters: each old cluster CONTRACTS to
     * one supernode (its label), delta endpoints map through the label
     * relation (identity for batch docs), and the (P,S) loop runs over
-    * the supernode graph — |clusters touched| + |batch| nodes and
-    * delta-scaled edges, NOT corpus-scaled. Contraction preserves
-    * components, and because every supernode id is its component's
-    * min doc_id, min-label propagation over the contracted graph
-    * lands every merged component on the SAME min doc_id a full
-    * rebuild computes — incremental ≡ rebuild at fixpoint, asserted
-    * on a bridging-batch corpus in DedupOpsSpec. One corpus-scaled
-    * equi-join at the end maps old labels to their supernode's final
-    * label.
+    * the TOUCHED supernode graph — delta-scaled nodes and edges, NOT
+    * corpus-scaled. Contraction preserves components, and because
+    * every supernode id is its component's min doc_id, min-label
+    * propagation over the contracted graph lands every merged
+    * component on the SAME min doc_id a full rebuild computes —
+    * incremental ≡ rebuild at fixpoint, asserted on a bridging-batch
+    * corpus in DedupOpsSpec. One corpus-sized left join at the end
+    * maps old labels to their supernode's final label.
     *
     * FAILS CLOSED on non-convergence (round-12 self-review #1): the
     * guarantee above holds only AT fixpoint, and unlike the bounded
     * contract manifests (whose oracle mirrors the same bounded
-    * schedule, and whose bound a census sized) nothing external
-    * gates this utility — so a supernode graph that outruns
-    * `maxPairs` throws instead of persisting an under-merged labeling
-    * into streaming state forever. The default (32, the same ceiling
-    * as [[ccDoubledFixpointWithPairs]]) is far above every measured
-    * geometry (uniform corpora 5–7 pairs, the adversarial 500k
-    * shuffled-id census 15); a caller hitting it has a genuinely pathological
-    * delta and should raise the cap consciously.
+    * schedule) nothing external gates this utility — so a supernode
+    * graph that outruns `maxPairs` throws instead of persisting an
+    * under-merged labeling into streaming state forever. The default
+    * 32 is far above every measured geometry (uniform corpora 5–7
+    * pairs, the adversarial 500k shuffled-id census 15); a caller
+    * hitting it has a genuinely pathological delta and should raise
+    * the cap consciously.
     *
     * Inputs are DEFENDED, not assumed, disjoint (self-review #2): a
     * doc present in BOTH `oldLabels` and `deltaNodes` (a redelivery
     * past the streaming watermark, a foreachBatch retry) would
     * otherwise emit two conflicting label rows — its supernode is its
     * old cluster via the edge contraction, while the delta branch
-    * would also emit it as its OWN supernode. Known docs are
-    * anti-joined out of the node set (their redelivered EDGES still
-    * fold — contraction reroutes them to the existing supernodes,
-    * which is exactly right).
+    * would also emit it as its OWN supernode. Known docs are dropped
+    * from the node set (their redelivered EDGES still fold —
+    * contraction reroutes them to the existing supernodes, which is
+    * exactly right). The known-doc defence is a broadcast-probe SCAN
+    * of the standing labels (semi against the broadcast batch ids,
+    * then the batch anti-joins the bounded hit set), not a
+    * corpus-exchange anti join — `deltaNodes` is a batch, bounded by
+    * contract.
     *
     * CONCURRENCY (ADVICE r12, closed round 14): the internal (P,S)
     * loop runs its AQE-off jobs in a CLONED session ([[ccPsLoop]]'s
@@ -2474,65 +2350,6 @@ object DedupOps {
     * safe to run alongside concurrent query activity. */
   def ccIncrementalUpdate(oldLabels: DataFrame, deltaNodes: DataFrame,
       deltaEdges: DataFrame, maxPairs: Int = 32): DataFrame = {
-    val (newNodes, superMap) =
-      ccIncrementalSuperMap(oldLabels, deltaNodes, deltaEdges, maxPairs)
-    // one corpus-sized left join rewrites affected labels; untouched
-    // rows (sn null) keep their cluster — total by construction
-    oldLabels
-      .join(superMap.hint("shuffle_hash"),
-        col("cluster") === col("sn"), "left")
-      .select(col("doc_id"), coalesce(col("sc"), col("cluster")).as("cluster"))
-      .unionByName(newNodes
-        .join(superMap.hint("shuffle_hash"),
-          col("doc_id") === col("sn"), "left")
-        .select(col("doc_id"),
-          coalesce(col("sc"), col("doc_id")).as("cluster")))
-  }
-
-  /** STATE-TABLE UPSERT variant of [[ccIncrementalUpdate]] (round 14,
-    * r13 verdict #4 — the deployment form SCALE.md round 13 named):
-    * returns ONLY the label rows the fold CHANGES — (doc_id, cluster)
-    * for every new batch doc plus every standing doc whose cluster id
-    * was rewritten — instead of re-emitting the corpus labeling. A
-    * deployment MERGEs these rows into a doc_id-keyed label state
-    * table (Delta/Iceberg MERGE); old-labels-minus-changed
-    * UNION these rows is EXACTLY [[ccIncrementalUpdate]]'s output
-    * (asserted in DedupOpsSpec; once re-asserted against a full
-    * rebuild at 5M docs, docs/SCALE.md), so per-fold label I/O is
-    * bounded by the TOUCHED subgraph (≾ 2·|delta edges| + |batch|), never the
-    * corpus. The relabel probe is a BROADCAST of the
-    * touched-subgraph-bounded superMap over ONE map-side scan of the
-    * standing labels — the full-rewrite form's two corpus-exchange
-    * shuffle_hash joins and its corpus-sized output are exactly the
-    * linear passes SCALE.md round 13 measured as the fold's remaining
-    * cost. */
-  def ccIncrementalUpsert(oldLabels: DataFrame, deltaNodes: DataFrame,
-      deltaEdges: DataFrame, maxPairs: Int = 32): DataFrame = {
-    val (newNodes, superMap) =
-      ccIncrementalSuperMap(oldLabels, deltaNodes, deltaEdges, maxPairs)
-    val changed = oldLabels
-      .join(broadcast(superMap), col("cluster") === col("sn"))
-      .filter(col("sc") =!= col("cluster"))
-      .select(col("doc_id"), col("sc").as("cluster"))
-    changed.unionByName(newNodes
-      .join(broadcast(superMap), col("doc_id") === col("sn"), "left")
-      .select(col("doc_id"),
-        coalesce(col("sc"), col("doc_id")).as("cluster")))
-  }
-
-  /** Shared front half of [[ccIncrementalUpdate]] /
-    * [[ccIncrementalUpsert]]: endpoint contraction, touched-subgraph
-    * (P,S) fixpoint, fail-closed convergence. Returns (newNodes,
-    * superMap): the batch docs genuinely new to the corpus, and the
-    * map from each TOUCHED supernode id (an old cluster id or a batch
-    * doc id) to its final label — both touched-subgraph-bounded. The
-    * known-doc defence runs as a broadcast-probe SCAN of the standing
-    * labels (semi against the broadcast batch ids, then the batch
-    * anti-joins the bounded hit set) rather than a corpus-exchange
-    * anti join — `deltaNodes` is a batch, bounded by contract. */
-  private def ccIncrementalSuperMap(oldLabels: DataFrame,
-      deltaNodes: DataFrame, deltaEdges: DataFrame, maxPairs: Int)
-      : (DataFrame, DataFrame) = {
     val labelOf = oldLabels
       .select(col("doc_id").as("x"), col("cluster").as("cx"))
     val batchIds = deltaNodes.select("doc_id").distinct()
@@ -2541,15 +2358,13 @@ object DedupOps {
     val newNodes = batchIds
       .join(broadcast(knownIds), Seq("doc_id"), "left_anti")
     // contract endpoints: corpus doc -> its cluster supernode, batch
-    // doc -> itself. ROUND 14: the round-13 form joined the delta
-    // against the corpus-sized label relation with two SHJ-pinned
-    // joins — two corpus EXCHANGES per fold, the dominant slice of
-    // the measured 14.8 s sf10wide update phase once the output went
-    // delta-sized. The delta's distinct endpoint set is bounded by
+    // doc -> itself. The delta's distinct endpoint set is bounded by
     // 2·|delta edges|, so the label lookup is a broadcast-probe SCAN:
     // semi-join the standing labels against the broadcast endpoints
     // (one map-side pass, no exchange), then broadcast the bounded
-    // endpoint-label map back over the delta. The delta relation is
+    // endpoint-label map back over the delta (round 14: two
+    // corpus-exchange joins here were the dominant slice of the
+    // measured sf10wide update phase). The delta relation is
     // persisted (`shared`) because the endpoint set and the
     // contraction both read it — unpersisted, the candidate probe
     // would execute twice.
@@ -2567,21 +2382,18 @@ object DedupOps {
         coalesce(col("cm"), col("m")).as("m"))
       .filter(col("n") =!= col("m")))
     // The (P,S) loop runs over the TOUCHED subgraph only — supernodes
-    // that appear as a contracted delta-edge endpoint (round-13: the
-    // first sf10wide decade measurement caught the loop running over
-    // EVERY old cluster id, which made the whole fold corpus-scaled —
-    // 12.6 s vs the 37.3 s rebuild, only 3x, because each segment's
-    // label relation carried ~|clusters| rows). An UNTOUCHED supernode
-    // is exact to skip: min-label propagation over the contracted
-    // graph can only merge components connected by a delta edge, so a
-    // supernode with no delta edge is its own component and its label
-    // is itself — precisely what the coalesce fallbacks below emit.
-    // Batch docs with no edges likewise stay their own cluster.
+    // that appear as a contracted delta-edge endpoint (round 13: the
+    // loop over EVERY old cluster id made the whole fold corpus-scaled,
+    // 12.6 s vs the 37.3 s rebuild at sf10wide). An UNTOUCHED
+    // supernode is exact to skip: min-label propagation over the
+    // contracted graph can only merge components connected by a delta
+    // edge, so a supernode with no delta edge is its own component and
+    // its label is itself — precisely what the coalesce fallbacks below
+    // emit. Batch docs with no edges likewise stay their own cluster.
     val touched = contracted.select(col("n").as("doc_id"))
       .unionByName(contracted.select(col("m").as("doc_id")))
       .distinct()
-    val (superLabels, _, converged) =
-      ccPsLoop(touched, contracted, maxPairs, StarCcJumps, certEvery = 1)
+    val (superLabels, _, converged) = ccPsLoop(touched, contracted, maxPairs)
     if (!converged) throw new IllegalStateException(
       s"ccIncrementalUpdate: supernode graph did not converge within " +
         s"$maxPairs (P,S) pairs — raising maxPairs is required before " +
@@ -2589,48 +2401,42 @@ object DedupOps {
         s"geometries need <= 15)")
     val superMap = superLabels
       .select(col("doc_id").as("sn"), col("cluster").as("sc"))
-    (newNodes, superMap)
+    // one corpus-sized left join rewrites affected labels; untouched
+    // rows (sn null) keep their cluster — total by construction
+    oldLabels
+      .join(superMap.hint("shuffle_hash"),
+        col("cluster") === col("sn"), "left")
+      .select(col("doc_id"), coalesce(col("sc"), col("cluster")).as("cluster"))
+      .unionByName(newNodes
+        .join(superMap.hint("shuffle_hash"),
+          col("doc_id") === col("sn"), "left")
+        .select(col("doc_id"),
+          coalesce(col("sc"), col("doc_id")).as("cluster")))
   }
 
   /** The sketch-level DELTA edge set for an arriving batch against a
     * standing corpus — what [[ccIncrementalUpdate]] consumes in the
     * SimHash pipeline: batch star edges (members -> batch sketch
     * reps, plus batch-rep near pairs, via [[edgesFromSketches]]) and
-    * batch-rep x corpus-rep near pairs via the two-relation
-    * combination-key join ([[comboJoin2]] — only the delta explodes;
-    * the corpus side is the pre-buildable sketch-rep index). Nothing
-    * here is corpus x corpus. Components of (corpus edges UNION this)
+    * batch-rep x corpus-rep near pairs. Nothing here is corpus x
+    * corpus: the corpus side is one rep per distinct sketch value,
+    * scanned map-side against the broadcast batch combo keys
+    * ([[comboProbeIndex]]). Components of (corpus edges UNION this)
     * equal the full-graph components: a batch doc b within Hamming of
-    * a corpus doc c reaches c's component through b's rep ->
-    * c's rep (sketch-value Hamming equals doc Hamming). */
+    * a corpus doc c reaches c's component through b's rep -> c's rep
+    * (sketch-value Hamming equals doc Hamming, and rep choice does not
+    * affect components — a rep is Hamming-0 from its members). */
   def incrementalSimhashDelta(corpusSk: DataFrame, batchSk: DataFrame)
-      : DataFrame =
-    incrementalSimhashDeltaIndexed(sketchReps(corpusSk), batchSk)
-
-  /** [[incrementalSimhashDelta]] with the corpus sketch-rep index as
-    * STANDING STATE instead of re-derived from the corpus sketches on
-    * every fold (round 14, r13 verdict #4): a deployment keeps the
-    * (simhash, rep_id) index as a state table maintained by
-    * [[sketchRepUpsert]], so the fold never runs the corpus-exchange
-    * groupBy that SCALE.md round 13 measured inside `update_sec`. The
-    * batch side of the combination-key candidate join is BROADCAST
-    * (a batch's exploded combo keys are batch-bounded — ~16 light
-    * rows per distinct batch sketch), so the standing index is
-    * scanned ONCE map-side with no corpus exchange; a deployment
-    * whose batches outgrow the broadcast threshold reads the index
-    * bucketed by combo key instead (same plan one tier up). Rep
-    * choice does not affect components (a rep is Hamming-0 from its
-    * members), so labels stay rebuild-exact for ANY valid index. */
-  def incrementalSimhashDeltaIndexed(corpusReps: DataFrame,
-      batchSk: DataFrame): DataFrame = {
+      : DataFrame = {
     // symmetrize in ONE pass (explode of both directions) — the
-    // union-with-swap form referenced `cross` twice, and the whole
-    // batch×index candidate probe re-executed for the second branch
+    // union-with-swap form referenced the probe twice, and the whole
+    // batch×corpus candidate probe re-executed for the second branch
     // (measured ~2× the fold's delta phase at sf10wide, round 14)
     val sym = comboProbeIndex(
         sketchReps(batchSk).select(col("rep_id").as("doc_id"),
           col("simhash")),
-        corpusReps.select(col("rep_id").as("doc_id"), col("simhash")),
+        sketchReps(corpusSk).select(col("rep_id").as("doc_id"),
+          col("simhash")),
         Simhash64Bits, Simhash64HammingMax, Simhash64Blocks)
       .select(explode(array(
         struct(col("a_id").as("n"), col("b_id").as("m")),
@@ -2639,49 +2445,10 @@ object DedupOps {
     edgesFromSketches(batchSk).unionByName(sym)
   }
 
-  /** One representative per distinct sketch value — the STANDING
-    * sketch-rep index a deployment maintains between folds (the
-    * `dedup_incremental_indexed` convention): build once over the
-    * corpus sketches, then per fold append only [[sketchRepUpsert]]'s
-    * rows.
-    *
-    * REPARTITIONED EXPLICITLY (round 14): the rep groupBy's exchange
-    * input is tiny in bytes (two longs per distinct sketch — ~40 MB at
-    * 5M docs), so AQE coalesces it to 1-2 partitions, and a state
-    * build that materializes THAT layout serializes every later
-    * fold's probe scan — the first ccincups1000 fold measured
-    * delta_sec 166 s of a 209 s fold with the index's 40M exploded
-    * combo keys and ~10^8 candidate popcounts walking 1-2 tasks (the
-    * round-4 coalesce trap, resurfacing on standing state instead of
-    * a join boundary). The explicit count pins the layout at the
-    * session's parallelism; a real deployment writes this index
-    * bucketed by simhash at ≥ cluster-cores buckets for the same
-    * reason. */
-  def sketchRepIndex(corpusSk: DataFrame): DataFrame =
-    sketchReps(corpusSk).repartition(
-      SkewJoin.defaultParts(corpusSk.sparkSession), col("simhash"))
-
-  /** The rep-index UPSERT rows for a fold: the batch's reps whose
-    * sketch VALUE is new to the standing index — batch-bounded state
-    * I/O. Known values keep their standing rep (exact: components are
-    * invariant to which Hamming-0 member represents a value, so the
-    * fold's labels match a rebuild regardless — the `ccincups` sweeps
-    * assert it at scale). The probe is one map-side scan of the index
-    * against the broadcast batch values; the anti join then runs
-    * against the bounded hit set, never the index. */
-  def sketchRepUpsert(corpusReps: DataFrame, batchSk: DataFrame)
-      : DataFrame = {
-    val bReps = sketchReps(batchSk)
-    val known = corpusReps.select("simhash")
-      .join(broadcast(bReps.select("simhash")), Seq("simhash"),
-        "left_semi")
-    bReps.join(broadcast(known), Seq("simhash"), "left_anti")
-  }
-
   /** Batch-side-BROADCAST combination-key candidate join: `left` (the
-    * batch's sketch reps, bounded) probes `right` (the standing
-    * corpus rep index) with the batch's exploded combo keys broadcast,
-    * so the index side is scanned map-side — zero corpus exchange, no
+    * batch's sketch reps, bounded) probes `right` (the corpus reps)
+    * with the batch's exploded combo keys broadcast, so the corpus
+    * side is scanned map-side — zero corpus exchange on the probe, no
     * salt needed (broadcast joins cannot skew a partition). Candidate
     * semantics identical to [[comboJoin2]]. */
   private def comboProbeIndex(left: DataFrame, right: DataFrame,
@@ -2691,206 +2458,6 @@ object DedupOps {
       sch.side(sch.explodeKeys(right), "b")
         .join(broadcast(sch.side(sch.explodeKeys(left), "a")),
           Seq("combo", "kbits")))
-  }
-
-  private def combo64 =
-    ComboScheme(Simhash64Bits, Simhash64HammingMax, Simhash64Blocks)
-
-  /** LABELED sketch-rep index — the round-15 standing state the
-    * incremental fold probes (r14 verdict #1, closing the delta-probe
-    * weak item): one row per distinct corpus sketch VALUE carrying
-    * (a) its rep doc, (b) the rep's CURRENT cluster label, and (c) the
-    * Manku combination keys PRE-EXTRACTED into a position-ordered long
-    * array. Both additions kill a measured per-fold cost: the stored
-    * keys mean a fold's probe posexplodes 20 stored longs per index
-    * row instead of re-packing them from the sketch, and — the big
-    * one — the stored LABEL lets the probe emit delta edges
-    * PRE-CONTRACTED (batch rep -> standing CLUSTER id) so the
-    * first-agreeing-combination dedup expression (~2·60 block
-    * extractions per collision row over ~10^8 collisions at the 5M
-    * decade — 166-203 s of the r14 fold, docs/SCALE.md round 14) is
-    * replaced by a map-side-combining DISTINCT on (batch_rep, cluster)
-    * pairs, and the 24.9M-edge delta materialization collapses to the
-    * distinct pairs the supernode loop actually consumes.
-    *
-    * Layout pinned exactly like [[sketchRepIndex]] (the r14 AQE
-    * byte-coalesce lesson): explicit repartition by simhash at session
-    * parallelism; a deployment writes it bucketed by simhash at
-    * >= cluster cores. Maintenance between folds is batch-bounded:
-    * [[sketchRepLabelUpsert]] emits exactly the new-value rows plus
-    * the relabeled-rep rows, keyed by simhash for a state-table
-    * MERGE. `labels` must be the same converged labeling the fold's
-    * [[ccIncrementalUpsert]] call receives (cluster = component min
-    * doc_id — what [[ccFixpoint]]/[[ccIncrementalUpdate]] emit). */
-  def sketchRepLabelIndex(corpusSk: DataFrame, labels: DataFrame)
-      : DataFrame =
-    sketchReps(corpusSk)
-      // build-time corpus join (amortized standing state, never paid
-      // by a fold); hinted so table stats cannot broadcast the
-      // corpus-sized label relation at scale
-      .join(labels.hint("shuffle_hash")
-        .select(col("doc_id").as("rep_id"), col("cluster")),
-        Seq("rep_id"))
-      .select(col("simhash"), col("rep_id"), col("cluster"),
-        combo64.keyArr(col("simhash")).as("keys"))
-      .repartition(SkewJoin.defaultParts(corpusSk.sparkSession),
-        col("simhash"))
-
-  /** [[incrementalSimhashDeltaIndexed]] over the LABELED index, with
-    * corpus endpoints PRE-CONTRACTED to their standing cluster ids —
-    * the round-15 delta probe. Semantics: a batch rep b within
-    * [[Simhash64HammingMax]] of a standing rep r yields the edge
-    * (b, cluster(r)) — exactly the edge [[ccIncrementalSuperMap]]'s
-    * endpoint contraction would produce from (b, r), since r's
-    * supernode IS its cluster label; contraction there is the identity
-    * on these endpoints (a cluster id is its component's min doc_id,
-    * which labels ITSELF in any converged min-label labeling), so
-    * folding these edges through [[ccIncrementalUpsert]] is
-    * rebuild-exact for the same reason the unlabeled path is
-    * (asserted in DedupOpsSpec and at 5M docs by the ccincups sweeps).
-    *
-    * Plan shape: the index is scanned ONCE map-side (batch combo keys
-    * broadcast, stored key arrays posexploded — no corpus exchange),
-    * each collision row pays ONE popcount, and the only aggregation is
-    * the distinct on (batch_rep, cluster) — whose partial hash-agg
-    * collapses the ~10^8 collision rows to the touched-pair set
-    * map-side BEFORE the exchange. No per-pair first-agreeing-
-    * combination dedup: multiplicity is irrelevant under DISTINCT,
-    * which is the whole point of contracting early. Batch-internal
-    * edges ([[edgesFromSketches]]) are unchanged — they carry the
-    * member->rep stars the labeling needs doc-level. */
-  def incrementalSimhashDeltaLabeled(labeledIdx: DataFrame,
-      batchSk: DataFrame): DataFrame = {
-    val sch = combo64
-    val bx = sch.explodeKeys(sketchReps(batchSk)
-        .select(col("rep_id").as("doc_id"), col("simhash")))
-      .select(col("combo"), col("kbits"), col("doc_id").as("b_id"),
-        col("simhash").as("b_sh"))
-    val contracted = labeledIdx
-      .select(col("cluster"), col("simhash").as("c_sh"),
-        posexplode(col("keys")).as(Seq("combo", "kbits")))
-      .join(broadcast(bx), Seq("combo", "kbits"))
-      .filter(bit_count(col("c_sh").bitwiseXOR(col("b_sh")))
-        .cast(IntegerType) <= Simhash64HammingMax)
-      .select(col("b_id").as("n"), col("cluster").as("m"))
-      .distinct()
-    val sym = contracted
-      .select(explode(array(
-        struct(col("n"), col("m")),
-        struct(col("m").as("n"), col("n").as("m")))).as("e"))
-      .select(col("e.n").as("n"), col("e.m").as("m"))
-    edgesFromSketches(batchSk).unionByName(sym)
-  }
-
-  /** The labeled index's MERGE rows for a fold (keyed by simhash,
-    * batch-bounded — the state-I/O twin of [[ccIncrementalUpsert]]'s
-    * label rows): (1) the batch's NEW sketch values, rep = min batch
-    * doc carrying the value, label = that doc's fold label; (2) the
-    * standing rows whose rep was RELABELED by this fold (its doc_id
-    * appears in `labelUpserts` — every relabeled standing doc does,
-    * by [[ccIncrementalUpsert]]'s contract). Both probes run against
-    * the BROADCAST fold outputs, so the index is scanned map-side and
-    * the output is bounded by |batch| + |touched reps|, never the
-    * index. Old-index-minus-these-keys UNION these rows is the next
-    * fold's index (asserted across a two-fold sequence in
-    * DedupOpsSpec); a deployment MERGEs on simhash. */
-  def sketchRepLabelUpsert(labeledIdx: DataFrame, batchSk: DataFrame,
-      labelUpserts: DataFrame): DataFrame = {
-    val newReps = sketchRepUpsert(
-      labeledIdx.select("simhash", "rep_id"), batchSk)
-    // LEFT join + fail-loud (ADVICE r15): every NEW sketch value's rep
-    // is a batch doc, and every batch doc carries a label upsert row
-    // under the disjoint-id/redelivery contract — an inner join would
-    // silently DROP the index row on a contract violation and
-    // permanently desync the standing index, where the convention
-    // elsewhere (denseAdcArr's sentinel lookup) is to fail the job.
-    // The guard is a FILTER predicate, not a projection (ADVICE r16):
-    // a projection-embedded raise_error vanished for any consumer
-    // whose plan pruned the `cluster` column (e.g. a count()), while a
-    // filter condition is evaluated by EVERY consumer. It cannot be
-    // pushed below the join (it references the left-outer's
-    // null-extended side) and EliminateOuterJoin's null-input probe
-    // treats throwing predicates as not-null-filtering, so the outer
-    // join survives (both asserted in DedupOpsSpec).
-    val newRows = newReps
-      .join(broadcast(labelUpserts
-        .select(col("doc_id").as("rep_id"), col("cluster"))),
-        Seq("rep_id"), "left")
-      .filter(when(col("cluster").isNull, raise_error(concat(
-        lit("sketchRepLabelUpsert: new sketch rep "), col("rep_id"),
-        lit(" has no label upsert row — the fold's batch/label " +
-          "contract is violated; refusing to desync the index")))
-        .cast(BooleanType))
-        .otherwise(lit(true)))
-      .select(col("simhash"), col("rep_id"), col("cluster"),
-        combo64.keyArr(col("simhash")).as("keys"))
-    val relabeled = labeledIdx
-      .join(broadcast(labelUpserts
-        .select(col("doc_id").as("rep_id"), col("cluster").as("nc"))),
-        Seq("rep_id"))
-      .filter(col("nc") =!= col("cluster"))
-      .select(col("simhash"), col("rep_id"), col("nc").as("cluster"),
-        col("keys"))
-    newRows.unionByName(relabeled)
-  }
-
-  /** Exact connected components over an ARBITRARY symmetric edge
-    * relation, iterated to fixpoint — the production path when
-    * duplicate-chain diameter is unbounded (the contract query's
-    * unrolled [[dedupClusterCC]] is exact only to diameter
-    * [[CcRounds]]). `nodes` is one row per node id; `edges(n, m)` must
-    * contain both directions of each edge. Each iteration is one
-    * propagate pass plus one driver-side convergence check (a count —
-    * this is a utility with a loop, deliberately outside the lazy
-    * oracle contract); iterations = component diameter in the worst
-    * case, and each one joins only the cached edge relation, so total
-    * work is O(d·|E|) with the corpus read once. Labels decrease
-    * monotonically, so "no label changed" certifies the true CC
-    * fixpoint regardless of diameter. */
-  def ccFixpoint(nodes: DataFrame, edges: DataFrame,
-      maxRounds: Int = 64): DataFrame =
-    ccFixpointWithRounds(nodes, edges, maxRounds)._1
-
-  /** [[ccFixpoint]] plus the number of propagate rounds it ran
-    * (including the final no-change round that certifies convergence) —
-    * the number DedupOpsSpec asserts equals diameter + 1 on known
-    * chains.
-    *
-    * Each round's labels are `localCheckpoint`ed, NOT persisted:
-    * persist caches the DATA, but round i+1's LOGICAL plan still
-    * nests round i's entire lineage (including the full candidate-join
-    * derivation of `edges`, re-referenced every round), so analysis
-    * time and plan strings grow O(rounds²) and an open-ended loop dies
-    * on plan bloat long before data size matters — measured in the
-    * round-11 census: 697 s for 12 rounds over a 5k-doc graph, then a
-    * listener-thread heap OOM at 50k docs. `localCheckpoint` truncates
-    * the plan to the materialized partitions (the GraphX/Pregel
-    * iterative-lineage lesson), making every round's plan
-    * constant-size. Eager (the default) so the convergence count never
-    * recomputes a round. The per-round label checkpoints are a few MB
-    * each and are freed with the JVM's block manager; the bounded
-    * contract path ([[ccUnrolled]]) keeps its pure lazy shape — at
-    * [[CcRounds]] the nesting is fixed and oracle-mirrored. */
-  def ccFixpointWithRounds(nodes: DataFrame, edges: DataFrame,
-      maxRounds: Int = 64): (DataFrame, Int) = {
-    val e = withSelfLoops(nodes, edges)
-      .repartition(SkewJoin.defaultParts(nodes.sparkSession), col("m"))
-      .localCheckpoint()
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("cluster"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxRounds) {
-      val next = ccRound(labels, e).localCheckpoint()
-      val changed = next.join(labels.withColumnRenamed("cluster", "prev"),
-        "doc_id")
-        .filter(col("cluster") =!= col("prev"))
-        .count()
-      converged = changed == 0
-      labels = next
-      i += 1
-    }
-    (labels, i)
   }
 
   private lazy val dedupNearOracle: String =
@@ -2949,7 +2516,7 @@ object DedupOps {
         .stripMargin
     }.mkString(",\n")
     // k unrolled (propagate, shortcut ×StarCcJumps) rounds — the exact
-    // SQL mirror of [[ccDoubled]]: h&lt;i&gt;_0 is the propagate round
+    // SQL mirror of [[ccPsLoop]]: h&lt;i&gt;_0 is the propagate round
     // (identical to ccRoundsSql's l&lt;i&gt;), each h&lt;i&gt;_&lt;j&gt; a
     // pointer jump label(label(v)) — an inner self-join, total because
     // every label value is a doc_id with its own row — and l&lt;i&gt;

@@ -2009,8 +2009,8 @@ object TextOps {
       val nodes = table(s, dir, "documents").select("doc_id")
       // GLOBAL edges since round 10: the manifest's dedup leg matches
       // pipeline_dedup's corpus-wide scoping (verdict #1)
-      val ded = DedupOps.ccDoubled(nodes,
-          DedupOps.simhashEdgesGlobal(s, dir), DedupOps.StarCcPairs)
+      val ded = DedupOps.ccPsLoop(nodes,
+          DedupOps.simhashEdgesGlobal(s, dir), DedupOps.StarCcPairs)._1
         .join(q, "doc_id")
         .withColumn("dedup_keep", row_number().over(ordered) === 1)
         .withColumn("canon", first(col("doc_id")).over(ordered))

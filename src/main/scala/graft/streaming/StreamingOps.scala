@@ -151,7 +151,11 @@ object StreamingOps {
     * are `localCheckpoint`ed: one row per doc of 2–3 longs, never
     * text, and no batch re-derives its predecessors' lineage; at
     * cluster scale the same state is a checkpointed/Delta table
-    * keyed by doc_id. Returns (sketches ∪ batch, updated labels). */
+    * keyed by doc_id. Each carries a size estimate from its own row
+    * count ([[graft.operators.DedupOps.checkpointSized]]): the
+    * estimate a plain checkpoint inherits from the fold's joins
+    * multiplied every fold. Returns (sketches ∪ batch, updated
+    * labels). */
   def clusterMaintainStep(corpusSk: DataFrame, labels: DataFrame,
       batch: DataFrame): (DataFrame, DataFrame) = {
     // defend the state against re-folds the watermark dedup missed
@@ -164,10 +168,11 @@ object StreamingOps {
       .localCheckpoint()
     val delta = graft.operators.DedupOps
       .incrementalSimhashDelta(corpusSk, bSk)
-    val newLabels = graft.operators.DedupOps.ccIncrementalUpdate(
-        labels, bSk.select("doc_id"), delta)
-      .localCheckpoint()
-    (corpusSk.unionByName(bSk).localCheckpoint(), newLabels)
+    val newLabels = graft.operators.DedupOps.checkpointSized(
+      graft.operators.DedupOps.ccIncrementalUpdate(
+        labels, bSk.select("doc_id"), delta))
+    (graft.operators.DedupOps.checkpointSized(corpusSk.unionByName(bSk)),
+      newLabels)
   }
 
   /** STREAMING CLUSTER MAINTENANCE: the ingest twin of a full

@@ -342,11 +342,11 @@ class DedupOpsSpec extends AnyFunSuite {
     val path = (0L to 8L)
     val nodes = path.toDF("doc_id")
     val edges = chainEdges(path).toDF("n", "m")
-    val bounded = DedupOps.ccFixpoint(nodes, edges, maxRounds = 3)
+    val bounded = CcReference.ccFixpoint(nodes, edges, maxRounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bounded(8L) != 0L,
       "3 bounded rounds unexpectedly merged a diameter-8 chain")
-    val (exactDf, rounds) = DedupOps.ccFixpointWithRounds(nodes, edges)
+    val (exactDf, rounds) = CcReference.ccFixpointWithRounds(nodes, edges)
     val exact = exactDf
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(exact.values.forall(_ == 0L),
@@ -367,7 +367,7 @@ class DedupOpsSpec extends AnyFunSuite {
       }._1
       val es = chains.flatMap(chainEdges)
       val ns = chains.flatten.toDF("doc_id")
-      val got = DedupOps.ccFixpoint(ns, es.toDF("n", "m"))
+      val got = CcReference.ccFixpoint(ns, es.toDF("n", "m"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val want = chains.flatMap(c => c.map(_ -> c.min)).toMap
       assert(got == want, s"fixpoint != union-find on chains $chains")
@@ -390,9 +390,9 @@ class DedupOpsSpec extends AnyFunSuite {
     val nodes = (0L until n).toDF("doc_id")
     val edges = (0L until n - 1).flatMap(i =>
       Seq((i, i + 1), (i + 1, i))).toDF("n", "m")
-    val (labels, pairs) =
-      DedupOps.ccDoubledFixpointWithPairs(nodes, edges)
+    val (labels, pairs, converged) = DedupOps.ccPsLoop(nodes, edges, 32)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(converged, s"no certified fixpoint within 32 pairs")
     assert(got.forall(_._2 == 0L), "doubled CC under-merged the chain")
     assert(pairs <= 8,
       s"expected ~log2(63)+cert pairs on a monotone 64-chain, got $pairs")
@@ -419,7 +419,7 @@ class DedupOpsSpec extends AnyFunSuite {
     val nodes = (0L until 64L).toDF("doc_id")
     val edges = (0L until 63L).flatMap(i =>
       Seq((i, i + 1), (i + 1, i))).toDF("n", "m")
-    val (labels, pairs) = DedupOps.ccDoubledFixpointWithPairs(nodes, edges)
+    val (labels, pairs, _) = DedupOps.ccPsLoop(nodes, edges, 32)
     labels.collect()
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     // retained: the returned labels' checkpoint (1) plus any unpersist
@@ -435,29 +435,31 @@ class DedupOpsSpec extends AnyFunSuite {
       "saturates to the session count, and restores the caller's conf " +
       "(optimization r17)") {
     import spark.implicits._
+    // the rule at both ends: one partition per 2M loop rows, at least
+    // one, never more than the session's count
+    assert(DedupOps.ccLoopParts(190L, 32) == 1)
+    assert(DedupOps.ccLoopParts(0L, 32) == 1)
+    assert(DedupOps.ccLoopParts(2000001L, 32) == 2)
+    assert(DedupOps.ccLoopParts(32L * 2000000L, 32) == 32)
+    assert(DedupOps.ccLoopParts(32L * 2000000L + 1L, 32) == 32)
+    assert(DedupOps.ccLoopParts(Long.MaxValue / 2, 32) == 32)
     val nodes = (0L until 64L).toDF("doc_id")
     val edges = (0L until 63L).flatMap(i =>
       Seq((i, i + 1), (i + 1, i))).toDF("n", "m")
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    // ~190 loop rows, 2M-row default budget -> the loop runs at ONE
-    // partition instead of the session's count
-    val small = DedupOps.ccDoubled(nodes, edges, 17)
+    // ~190 loop rows -> the loop runs at ONE partition instead of the
+    // session's count
+    val (small, _, _) = DedupOps.ccPsLoop(nodes, edges, 17)
     assert(small.rdd.getNumPartitions == 1,
       s"a 190-row loop should derive 1 partition, " +
         s"got ${small.rdd.getNumPartitions}")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == before,
       "ccPsLoop leaked its derived partition count into the session")
-    // a 1-row budget saturates the formula at the configured count —
-    // the deployment regime, where the plan is unchanged
-    val wide = graft.core.Core.withConf(spark,
-        "spark.graft.cc.rowsPerPartition", "1") {
-      DedupOps.ccDoubled(nodes, edges, 17)
-    }
-    assert(wide.rdd.getNumPartitions == before.toInt,
-      s"row counts past the budget must saturate to the session count")
-    // labels are partitioning-independent: identical either way
+    // labels are partitioning-independent: the plain-propagation
+    // reference at the session's count agrees
     assert(small.orderBy("doc_id").collect()
-      .sameElements(wide.orderBy("doc_id").collect()),
+      .sameElements(CcReference.ccFixpoint(nodes, edges)
+        .orderBy("doc_id").collect()),
       "loop parallelism changed the CC labels")
     graft.core.Core.releaseShared()
   }
@@ -465,26 +467,34 @@ class DedupOpsSpec extends AnyFunSuite {
   test("ccPsLoop folds the certificate into the checkpoint job and " +
       "certifies the same fixpoint (optimization r18)") {
     import spark.implicits._
+    // the certificate is read off the checkpoint job as observed
+    // metrics, and the loop throws if they are missing: pin that this
+    // Spark build reports them, for an empty and a non-empty relation
+    val cert = Seq(count(lit(1)).as("n"), sum(col("doc_id")).as("s"))
+    val (e0, r0) = DedupOps.checkpointObserving(
+      Seq.empty[Long].toDF("doc_id"), cert)
+    assert(r0.getLong(0) == 0L && r0.isNullAt(1))
+    val (e5, r5) = DedupOps.checkpointObserving(
+      (1L to 5L).toDF("doc_id"), cert)
+    assert(r5.getLong(0) == 5L && r5.getLong(1) == 15L)
+    assert(e5.count() == 5L)
+    DedupOps.freeLocalCheckpoint(e0)
+    DedupOps.freeLocalCheckpoint(e5)
+    // the certificate fires exactly at the fixpoint: the run that
+    // certifies after `pairs` segments is NOT certified one segment
+    // earlier, and its labels are the component minimum
     val nodes = (0L until 64L).toDF("doc_id")
     val edges = (0L until 63L).flatMap(i =>
       Seq((i, i + 1), (i + 1, i))).toDF("n", "m")
-    val o0 = DedupOps.ccCertObserved.get()
-    val f0 = DedupOps.ccCertFallback.get()
-    val (labels, pairs) = DedupOps.ccDoubledFixpointWithPairs(nodes, edges)
+    val (labels, pairs, converged) = DedupOps.ccPsLoop(nodes, edges, 32)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(got.forall(_._2 == 0L), "folded certificate changed the labels")
+    assert(converged && got.forall(_._2 == 0L),
+      "folded certificate changed the labels")
     assert(pairs <= 8, s"fixpoint detection drifted: $pairs segments")
-    val obs = DedupOps.ccCertObserved.get() - o0
-    val fb = DedupOps.ccCertFallback.get() - f0
-    assert(obs + fb >= pairs,
-      s"every segment must be certified: observed=$obs fallback=$fb " +
-        s"pairs=$pairs")
-    // the metrics ride the checkpoint job on this Spark build; if a
-    // future build stops reporting them the loop degrades loudly here
-    // (and quietly at runtime, to the explicit-aggregate schedule)
-    assert(obs > 0,
-      s"observed-metrics certificate never fired (fallback=$fb) — the " +
-        "fold is dead code on this build; revert to the aggregate")
+    val (_, early, earlyConverged) =
+      DedupOps.ccPsLoop(nodes, edges, pairs - 1)
+    assert(early == pairs - 1 && !earlyConverged,
+      s"certified a fixpoint before segment $pairs")
     graft.core.Core.releaseShared()
   }
 
@@ -651,30 +661,56 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(!got.exists(p => p._1 == 0L && p._2 == 3L))
   }
 
-  test("eager early-exit CC loop == full lazy bounded schedule") {
-    // the round-12 contract path exits at the certified fixpoint; its
-    // labels must equal the SAME-pair-count lazy schedule (the form
-    // the DuckDB oracle unrolls) — post-fixpoint pairs are the
-    // identity, so early exit is invisible in the answer. pairs = 6,
-    // NOT StarCcPairs: the lazy comparison side doubles its analyzed
-    // label subtree per pair (the ccDoubled scaladoc's 2^pairs plan
-    // bloat — the very reason the contract path truncates), so the
-    // 17-pair lazy tree does not finish analysis; a 17-node chain
-    // converges within 6 (P,S) pairs and exercises the identity.
+  test("eager CC loop == a driver-side simulation of the bounded (P,S) " +
+    "schedule, below and at the fixpoint") {
+    // the early-exit loop must compute exactly the bounded schedule the
+    // DuckDB oracle unrolls (ccPairsSql): at a cap BELOW the fixpoint
+    // the labels are the same under-merged state, and at the fixpoint
+    // post-fixpoint pairs are the identity, so early exit is invisible
+    // in the answer. The reference is plain Scala over the edge list:
+    // per pair, a min over each node's closed neighbourhood, then
+    // StarCcJumps pointer jumps label(label(v)).
     import spark.implicits._
-    val pairs = 6
-    val nodes = (0L to 16L).toDF("doc_id")
-    val edges = (0L until 16L).flatMap(i =>
-      Seq((i, i + 1), (i + 1, i))).toDF("n", "m")
-    val eager = DedupOps.ccDoubled(nodes, edges, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def simulate(ids: Seq[Long], es: Seq[(Long, Long)],
+        pairs: Int): Map[Long, Long] = {
+      val nbrs = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      var l = ids.map(v => v -> v).toMap
+      for (_ <- 1 to pairs) {
+        l = ids.map(v => v -> (v +: nbrs.getOrElse(v, Nil)).map(l).min).toMap
+        for (_ <- 1 to DedupOps.StarCcJumps)
+          l = l.map { case (v, c) => v -> l(c) }
+      }
+      l
+    }
+    def chainEdges(ids: Seq[Long]): Seq[(Long, Long)] =
+      ids.zip(ids.tail).flatMap { case (a, b) => Seq(a -> b, b -> a) }
+    // a monotone 40-chain and two shuffled-id chains (the adversarial
+    // geometry) in one graph, plus an isolated node
+    val rnd = new scala.util.Random(7)
+    val mono = (0L until 40L)
+    val shuffled = rnd.shuffle((100L until 160L).toList)
+    val chains = Seq(mono, shuffled.take(25), shuffled.drop(25))
+    val ids = chains.flatten :+ 500L
+    val es = chains.flatMap(chainEdges)
+    val nodes = ids.toDF("doc_id")
+    val edges = es.toDF("n", "m")
+    val componentMin = chains.flatMap(c => c.map(_ -> c.min)).toMap +
+      (500L -> 500L)
+    for (cap <- Seq(1, 2, 3)) {
+      val (df, segments, converged) = DedupOps.ccPsLoop(nodes, edges, cap)
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = simulate(ids, es, cap)
+      assert(segments == cap && !converged, s"cap $cap: $segments segments")
+      assert(want != componentMin, s"cap $cap must stay under-merged")
+      assert(got == want, s"cap $cap: loop $got != simulation $want")
+    }
+    val (df, segments, converged) = DedupOps.ccPsLoop(nodes, edges, 32)
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(converged && segments < 32)
+    assert(got == simulate(ids, es, segments))
+    assert(got == simulate(ids, es, 32), "post-fixpoint pairs moved labels")
+    assert(got == componentMin)
     graft.core.Core.releaseShared()
-    val lazyFull = DedupOps.ccDoubled(nodes, edges, pairs,
-        truncate = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.core.Core.releaseShared()
-    assert(eager == lazyFull)
-    assert(eager.values.forall(_ == 0L), "the 17-chain must fully merge")
   }
 
   test("comboJoin2 emits exactly the cross pairs of the self-join") {
@@ -805,14 +841,14 @@ class DedupOpsSpec extends AnyFunSuite {
     val corpusNodes = ((0L to 4L) ++ (10L to 14L)).toDF("doc_id")
     val corpusEdges = sym((0L until 4L).map(i => (i, i + 1)) ++
       (10L until 14L).map(i => (i, i + 1))).toDF("n", "m")
-    val oldLabels = DedupOps.ccFixpoint(corpusNodes, corpusEdges)
+    val oldLabels = CcReference.ccFixpoint(corpusNodes, corpusEdges)
     val batchNodes = Seq(100L, 101L, 102L, 103L).toDF("doc_id")
     val deltaEdges = sym(Seq((100L, 4L), (100L, 10L), (101L, 102L)))
       .toDF("n", "m")
     val got = DedupOps.ccIncrementalUpdate(oldLabels, batchNodes,
         deltaEdges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = DedupOps.ccFixpoint(
+    val full = CcReference.ccFixpoint(
         corpusNodes.unionByName(batchNodes),
         corpusEdges.unionByName(deltaEdges))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -872,7 +908,7 @@ class DedupOpsSpec extends AnyFunSuite {
       val corpusIds = ids.filterNot(batchSet)
       val corpusEdges = es.filter(e => !batchSet(e._1) && !batchSet(e._2))
       val deltaEdges = es.filter(e => batchSet(e._1) || batchSet(e._2))
-      val oldLabels = DedupOps.ccFixpoint(corpusIds.toDF("doc_id"),
+      val oldLabels = CcReference.ccFixpoint(corpusIds.toDF("doc_id"),
         corpusEdges.toDF("n", "m"))
       val got = DedupOps.ccIncrementalUpdate(oldLabels,
           batchSet.toSeq.toDF("doc_id"), deltaEdges.toDF("n", "m"),
@@ -894,175 +930,6 @@ class DedupOpsSpec extends AnyFunSuite {
     graft.core.Core.releaseShared()
   }
 
-  test("incremental CC UPSERT: merged view == full-rewrite output, " +
-    "rows bounded by the touched subgraph") {
-    // the state-table deployment form (round 14): ccIncrementalUpsert
-    // returns ONLY changed/new label rows; old-minus-upserted UNION
-    // upserts must equal ccIncrementalUpdate's full rewrite, and no
-    // untouched doc may appear in the upsert set
-    def sym(es: Seq[(Long, Long)]) = es.flatMap(e => Seq(e, e.swap))
-    val corpusNodes = ((0L to 4L) ++ (10L to 14L) ++ (30L to 33L))
-      .toDF("doc_id")
-    val corpusEdges = sym((0L until 4L).map(i => (i, i + 1)) ++
-      (10L until 14L).map(i => (i, i + 1)) ++
-      (30L until 33L).map(i => (i, i + 1))).toDF("n", "m")
-    val oldLabels = DedupOps.ccFixpoint(corpusNodes, corpusEdges)
-    val batchNodes = Seq(100L, 101L, 102L, 103L).toDF("doc_id")
-    val deltaEdges = sym(Seq((100L, 4L), (100L, 10L), (101L, 102L)))
-      .toDF("n", "m")
-    val ups = DedupOps.ccIncrementalUpsert(oldLabels, batchNodes,
-        deltaEdges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = DedupOps.ccIncrementalUpdate(oldLabels, batchNodes,
-        deltaEdges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val old = oldLabels.collect().map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    assert((old -- ups.keys) ++ ups == full,
-      s"merged view $ups over $old != full rewrite $full")
-    // boundedness: docs 30-33 are untouched (no delta edge reaches
-    // their cluster) — they must NOT be re-emitted; docs 10-14 DID
-    // merge (label 10 -> 0) and must be; unchanged members of the
-    // surviving cluster (0-4 keep label 0) must not be
-    assert(!(30L to 33L).exists(ups.contains))
-    assert((10L to 14L).forall(d => ups.get(d).contains(0L)))
-    assert(!(0L to 4L).exists(ups.contains))
-    assert(ups(100L) == 0L && ups(101L) == 101L && ups(102L) == 101L &&
-      ups(103L) == 103L)
-    graft.core.Core.releaseShared()
-  }
-
-  test("indexed delta + rep upsert: standing-index fold == re-derived " +
-    "fold == full rebuild on the gate corpus") {
-    // the standing-rep-index path (round 14): probing a pre-built
-    // (simhash, rep_id) index with the batch broadcast must produce
-    // the same components as re-deriving reps per fold, and the rep
-    // upsert must add exactly the batch's NEW sketch values
-    val sk = DedupOps.simhash64Sketches(spark, TestSpark.sfDir)
-    val corpusSk = sk.filter(col("doc_id") % 2 === 0)
-    val batchSk = sk.filter(col("doc_id") % 2 === 1)
-    val reps = DedupOps.sketchRepIndex(corpusSk).localCheckpoint()
-    val oldLabels = DedupOps.ccFixpoint(corpusSk.select("doc_id"),
-      DedupOps.edgesFromSketches(corpusSk)).localCheckpoint()
-    val ups = DedupOps.ccIncrementalUpsert(oldLabels,
-        batchSk.select("doc_id"),
-        DedupOps.incrementalSimhashDeltaIndexed(reps, batchSk),
-        maxPairs = 32)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val old = oldLabels.collect().map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    val full = DedupOps.ccFixpoint(sk.select("doc_id"),
-        DedupOps.edgesFromSketches(sk))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((old -- ups.keys) ++ ups == full)
-    // rep upsert rows = batch sketch values absent from the index,
-    // rep = min batch doc carrying the value
-    val gotReps = DedupOps.sketchRepUpsert(reps, batchSk)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val corpusVals = corpusSk.select("simhash").collect()
-      .map(_.getLong(0)).toSet
-    val wantReps = batchSk.select("simhash", "doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .filterNot(p => corpusVals(p._1))
-      .groupBy(_._1).map { case (sh, ms) => (sh, ms.map(_._2).min) }
-      .toSet
-    assert(gotReps == wantReps)
-    graft.core.Core.releaseShared()
-  }
-
-  test("LABELED index fold: pre-contracted delta == unlabeled delta " +
-    "fold == full rebuild; index upserts maintain the state across " +
-    "two folds") {
-    // the round-15 delta probe (r14 verdict #1): the labeled index
-    // emits (batch_rep, cluster) edges directly — folding them must
-    // land byte-identical labels to the unlabeled-index path and the
-    // full rebuild, and sketchRepLabelUpsert must be exactly the MERGE
-    // rows that keep the index correct for the NEXT fold
-    val sk = DedupOps.simhash64Sketches(spark, TestSpark.sfDir)
-    val corpusSk = sk.filter(col("doc_id") % 3 === 0)
-    val batch1Sk = sk.filter(col("doc_id") % 3 === 1)
-    val batch2Sk = sk.filter(col("doc_id") % 3 === 2)
-    val labels0 = DedupOps.ccFixpoint(corpusSk.select("doc_id"),
-      DedupOps.edgesFromSketches(corpusSk)).localCheckpoint()
-    val idx0 = DedupOps.sketchRepLabelIndex(corpusSk, labels0)
-      .localCheckpoint()
-    // fold 1: labeled path == unlabeled path == incremental reference
-    val ups1 = DedupOps.ccIncrementalUpsert(labels0,
-        batch1Sk.select("doc_id"),
-        DedupOps.incrementalSimhashDeltaLabeled(idx0, batch1Sk),
-        maxPairs = 32)
-      .localCheckpoint()
-    val ups1Ref = DedupOps.ccIncrementalUpsert(labels0,
-        batch1Sk.select("doc_id"),
-        DedupOps.incrementalSimhashDeltaIndexed(
-          idx0.select("simhash", "rep_id"), batch1Sk),
-        maxPairs = 32)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ups1M = ups1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ups1M == ups1Ref,
-      s"labeled-index fold $ups1M != unlabeled-index fold $ups1Ref")
-    // merge fold-1 state: labels and index
-    val labels1 = labels0
-      .join(ups1.select("doc_id"), Seq("doc_id"), "left_anti")
-      .unionByName(ups1).localCheckpoint()
-    val idxUps1 = DedupOps.sketchRepLabelUpsert(idx0, batch1Sk, ups1)
-      .localCheckpoint()
-    val idx1 = idx0
-      .join(idxUps1.select("simhash"), Seq("simhash"), "left_anti")
-      .unionByName(idxUps1).localCheckpoint()
-    // the merged index must agree with a from-scratch labeled index
-    // over the fold-1 corpus on (simhash, cluster, keys). rep_id may
-    // legitimately differ — known values keep their STANDING rep while
-    // a rebuild picks the global min-doc — but same-value docs are
-    // Hamming-0, so they share a component and the CLUSTER (the column
-    // the round-15 probe actually reads) is rep-choice-invariant.
-    val wantIdx1 = DedupOps.sketchRepLabelIndex(
-        corpusSk.unionByName(batch1Sk), labels1)
-      .collect().map(r => (r.getLong(0), r.getLong(2),
-        r.getSeq[Long](3))).toSet
-    val gotIdx1 = idx1.collect().map(r => (r.getLong(0), r.getLong(2),
-      r.getSeq[Long](3))).toSet
-    assert(gotIdx1 == wantIdx1, "merged index != rebuilt index after fold 1")
-    // fold 2 probes the MAINTAINED state — equivalence vs full rebuild
-    val ups2 = DedupOps.ccIncrementalUpsert(labels1,
-        batch2Sk.select("doc_id"),
-        DedupOps.incrementalSimhashDeltaLabeled(idx1, batch2Sk),
-        maxPairs = 32)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val merged = labels1.collect().map(r => r.getLong(0) -> r.getLong(1))
-      .toMap -- ups2.keys
-    val full = DedupOps.ccFixpoint(sk.select("doc_id"),
-        DedupOps.edgesFromSketches(sk))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(merged ++ ups2 == full,
-      "two labeled-index folds != full rebuild")
-    graft.core.Core.releaseShared()
-  }
-
-  test("labeled-index delta probe plan: batch side broadcast, no " +
-    "sort-merge join, no cartesian — the index scans map-side") {
-    // the scale contract of the round-15 probe: the standing index is
-    // read ONCE map-side against the broadcast batch combo keys; a
-    // stats flip to SMJ (an index exchange per fold) or a cartesian
-    // would be the corpus-exchange regression the labeled index exists
-    // to prevent
-    val sk = DedupOps.simhash64Sketches(spark, TestSpark.sfDir)
-    val corpusSk = sk.filter(col("doc_id") % 2 === 0)
-    val batchSk = sk.filter(col("doc_id") % 2 === 1)
-    val labels = DedupOps.ccFixpoint(corpusSk.select("doc_id"),
-      DedupOps.edgesFromSketches(corpusSk)).localCheckpoint()
-    val idx = DedupOps.sketchRepLabelIndex(corpusSk, labels)
-      .localCheckpoint()
-    val plan = DedupOps.incrementalSimhashDeltaLabeled(idx, batchSk)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      "index probe lost its broadcast join")
-    assert(!plan.contains("SortMergeJoin"),
-      "a sort-merge join appeared in the fold's delta plan")
-    assert(!plan.contains("CartesianProduct"))
-    graft.core.Core.releaseShared()
-  }
-
   test("incremental SimHash delta edges reach every cross-corpus " +
     "component a full rebuild finds") {
     // end-to-end on the gate corpus: split docs into 'corpus' (even
@@ -1072,70 +939,17 @@ class DedupOpsSpec extends AnyFunSuite {
     val sk = DedupOps.simhash64Sketches(spark, TestSpark.sfDir)
     val corpusSk = sk.filter(col("doc_id") % 2 === 0)
     val batchSk = sk.filter(col("doc_id") % 2 === 1)
-    val oldLabels = DedupOps.ccFixpoint(corpusSk.select("doc_id"),
+    val oldLabels = CcReference.ccFixpoint(corpusSk.select("doc_id"),
       DedupOps.edgesFromSketches(corpusSk))
     val got = DedupOps.ccIncrementalUpdate(oldLabels,
         batchSk.select("doc_id"),
         DedupOps.incrementalSimhashDelta(corpusSk, batchSk),
         maxPairs = 32)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = DedupOps.ccFixpoint(sk.select("doc_id"),
+    val full = CcReference.ccFixpoint(sk.select("doc_id"),
         DedupOps.edgesFromSketches(sk))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == full)
-    graft.core.Core.releaseShared()
-  }
-  test("sketchRepLabelUpsert fails loudly when a new sketch rep has no " +
-    "label upsert row (round-16 ADVICE: no silent index desync)") {
-    // under the fold contract every NEW sketch value's rep is a batch
-    // doc and every batch doc carries a label upsert row; a violation
-    // (e.g. a caller passing a filtered/partial upsert relation) used
-    // to silently DROP the index row via the inner join — now the job
-    // must fail instead of permanently desyncing the standing index.
-    val sk = DedupOps.simhash64Sketches(spark, TestSpark.sfDir)
-    val corpusSk = sk.filter(col("doc_id") % 3 === 0)
-    val batchSk = sk.filter(col("doc_id") % 3 === 1)
-    val labels0 = DedupOps.ccFixpoint(corpusSk.select("doc_id"),
-      DedupOps.edgesFromSketches(corpusSk)).localCheckpoint()
-    val idx0 = DedupOps.sketchRepLabelIndex(corpusSk, labels0)
-      .localCheckpoint()
-    val fullUps = DedupOps.ccIncrementalUpsert(labels0,
-        batchSk.select("doc_id"),
-        DedupOps.incrementalSimhashDeltaLabeled(idx0, batchSk),
-        maxPairs = 32)
-      .localCheckpoint()
-    // the healthy fold still works end-to-end — INCLUDING through a
-    // count(), which prunes every column: the guard is a filter
-    // predicate now (ADVICE r16), so plan-side column pruning cannot
-    // skip it, and a throwing predicate must not make the optimizer's
-    // null-input probe collapse the left-outer join on healthy data
-    val healthy = DedupOps.sketchRepLabelUpsert(idx0, batchSk, fullUps)
-    assert(healthy.count() ==
-      healthy.select("cluster").collect().length.toLong)
-    // drop ONE batch doc's upsert row that is a new-value rep: the
-    // contract violation must surface as a job failure, not a missing
-    // index row
-    val newRepIds = DedupOps.sketchRepUpsert(
-        idx0.select("simhash", "rep_id"), batchSk)
-      .select("rep_id").collect().map(_.getLong(0))
-    assert(newRepIds.nonEmpty, "test needs at least one new sketch value")
-    val brokenUps = fullUps.filter(col("doc_id") =!= newRepIds.min)
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    val e = intercept[Exception] {
-      DedupOps.sketchRepLabelUpsert(idx0, batchSk, brokenUps)
-        .select("cluster").collect()
-    }
-    assert(msgs(e).exists(_.contains("no label upsert row")),
-      s"expected the fail-loud contract message, got: ${msgs(e)}")
-    // and the ADVICE-r16 case: a consumer that prunes `cluster` away
-    // entirely (count()) must STILL hit the guard
-    val e2 = intercept[Exception] {
-      DedupOps.sketchRepLabelUpsert(idx0, batchSk, brokenUps).count()
-    }
-    assert(msgs(e2).exists(_.contains("no label upsert row")),
-      s"expected the fail-loud contract message via count(), got: ${msgs(e2)}")
     graft.core.Core.releaseShared()
   }
 }

@@ -24,16 +24,15 @@ class LazinessSpec extends AnyFunSuite {
     // PqM·PqK sub-centroids per Lloyd round) — same bounded-state
     // collect pattern; its fully-lazy form measured 2,671 broadcast
     // exchanges from multiplicative plan duplication
-    // pipeline_dedup / pipeline_full: their global CC chain (ccDoubled
-    // -> ccPsLoop since round 12) runs EAGERLY at build — per-segment
-    // localCheckpoints + a fixpoint-certifying label-sum per segment,
+    // pipeline_dedup / pipeline_full: their global CC loop (ccPsLoop)
+    // runs EAGERLY at build — per-segment localCheckpoints, each
+    // carrying the fixpoint-certifying label sum as observed metrics,
     // AQE off for the loop's fixed-shape label joins. The build-time
     // jobs are labels-only (2 longs per doc, never text); the eager
     // loop replaced the lazy-truncated AQE chain whose per-segment
     // driver re-planning was the measured dominant manifest cost
     // (docs/PLANS.md round 12), and early-exits at the corpus's own
-    // measured fixpoint (6 segments on the contract corpus vs the
-    // 17-pair cap).
+    // measured fixpoint (7 segments at sf0.01 vs the 17-pair cap).
     // dedup_semdedup / sim_ann_ivf_rerank (round 13): the √n k-routing
     // decides its menu entry from ONE bounded count at build
     // (SimilarityOps.routedK — never reads past 204,800,001 rows). Same

@@ -497,9 +497,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     // quality-desc/doc_id-asc pick the standalone operator ranks by
     val nodes = graft.core.Core.table(spark, dir, "documents")
       .select("doc_id")
-    val clusters = graft.operators.DedupOps.ccDoubled(nodes,
+    val clusters = graft.operators.DedupOps.ccPsLoop(nodes,
         graft.operators.DedupOps.simhashEdgesGlobal(spark, dir),
-        graft.operators.DedupOps.StarCcPairs)
+        graft.operators.DedupOps.StarCcPairs)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val quality = SparkEntry.queries("txt_quality_score")(spark, dir)
       .select("doc_id", "quality")
@@ -543,20 +543,21 @@ class PipelineOpsSpec extends AnyFunSuite {
     val nodes = graft.core.Core.table(spark, dir, "documents")
       .select("doc_id")
     val edges = graft.operators.DedupOps.simhashEdgesGlobal(spark, dir)
-    val unrolled = graft.operators.DedupOps.ccDoubled(nodes, edges,
-        graft.operators.DedupOps.StarCcPairs)
+    val (labels, pairs, converged) = graft.operators.DedupOps.ccPsLoop(
+      nodes, edges, graft.operators.DedupOps.StarCcPairs)
+    val unrolled = labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (fix, _) = graft.operators.DedupOps
+    val (fix, _) = CcReference
       .ccFixpointWithRounds(nodes, edges)
     val fixed = fix.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(unrolled == fixed,
       s"${graft.operators.DedupOps.StarCcPairs} (P,S) pairs differ " +
         "from the plain-propagation fixpoint — bump StarCcPairs")
     // and the doubled schedule's own fixpoint must sit within the
-    // contract bound (pairs includes the certifying no-change pass)
-    val (_, pairs) = graft.operators.DedupOps
-      .ccDoubledFixpointWithPairs(nodes, edges)
-    assert(pairs - 1 <= graft.operators.DedupOps.StarCcPairs)
+    // contract bound: the loop certified it (pairs includes the
+    // certifying no-change pass)
+    assert(converged && pairs <= graft.operators.DedupOps.StarCcPairs,
+      s"no certified fixpoint within the bound: $pairs segments")
   }
 
   test("fingerprint is order-aware") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -168,42 +170,72 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("doubled CC pairs reuse the cached edge partitioning and " +
     "compute each propagate exactly once") {
-    // the (propagate, shortcut) schedule must keep ccUnrolled's
-    // partition-once/join-many contract at 100 TB: the corpus-scaled
-    // edge relation is shuffled ONCE (the explicit REPARTITION_BY_NUM
-    // exchange — plan_id identifies the physical exchange OBJECT, so
-    // reprints of the one cached exchange share an id while a genuine
-    // re-shuffle would mint a new one), and the pointer jump's two
-    // references to the propagate output read its persisted relation
-    // instead of executing the edge join twice (the un-persisted form
-    // measurably duplicated the join + its post-agg exchange).
-    // truncate = false keeps the chain one lazy plan so the census
-    // sees every pair; collect() first so the AQE final plan is real.
+    // the eager (P,S) loop keeps ccUnrolled's partition-once/join-many
+    // contract at 100 TB: the self-looped edge relation (|E| + n rows)
+    // is shuffled ONCE, into the layout every segment's propagate
+    // reads, and each segment is ONE job — the shortcut's two reads of
+    // the propagate output hit its persisted relation instead of
+    // running the edge join twice, and the certificate rides the
+    // checkpoint job. Counted by a listener at two segment caps on a
+    // chain that needs more segments than either: a stage that writes
+    // |E| + n shuffle records shuffles the edges (label shuffles write
+    // at most n), the extra segments must add one job each, and at
+    // most one label-sized shuffle each (a second propagate would add
+    // its own).
     import spark.implicits._
-    val nodes = (0L to 30L).toDF("doc_id")
-    val edges = (0L until 30L).flatMap(i =>
+    val n = 64L
+    val nodes = (0L until n).toDF("doc_id")
+    val edges = (0L until n - 1).flatMap(i =>
       Seq((i, i + 1), (i + 1, i))).toDF("n", "m")
-    def finalPlan(pairs: Int): String = {
-      val df = graft.operators.DedupOps
-        .ccDoubled(nodes, edges, pairs, truncate = false)
-      df.collect()
-      df.queryExecution.executedPlan.toString
+    val edgeRows = 2 * (n - 1) + n
+    class Counts extends SparkListener {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val edgeShuffles = new java.util.concurrent.atomic.AtomicInteger(0)
+      val records = new java.util.concurrent.atomic.AtomicLong(0)
+      val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "fence"))
+          fenceSeen.countDown()
+        else jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach { m =>
+          records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+          if (m.shuffleWriteMetrics.recordsWritten == edgeRows)
+            edgeShuffles.incrementAndGet()
+        }
     }
-    graft.core.Core.releaseShared()
-    val p3 = finalPlan(3)
-    graft.core.Core.releaseShared()
-    val edgeExchangeIds =
-      "REPARTITION_BY_NUM, \\[plan_id=(\\d+)\\]".r
-        .findAllMatchIn(p3).map(_.group(1)).toSet
-    assert(edgeExchangeIds.size == 1,
-      s"expected the edge relation shuffled exactly once across 3 " +
-        s"(P,S) pairs; found exchanges $edgeExchangeIds")
-    // every propagate output is persisted: its node-sized relation
-    // appears as an InMemoryRelation (the shortcut reads the cache,
-    // never re-executes the edge join)
-    assert(p3.contains("InMemoryRelation [doc_id"),
-      "propagate output is not persisted — the shortcut would " +
-        "execute the edge join twice per pair")
+    def run(cap: Int): (Int, Int, Int, Long) = {
+      val c = new Counts
+      val sc = spark.sparkContext
+      sc.addSparkListener(c)
+      val (labels, segments, _) =
+        try graft.operators.DedupOps.ccPsLoop(nodes, edges, cap)
+        finally {
+          // the bus delivers in order: once the fence job is seen,
+          // every event of the loop's jobs has been seen too
+          sc.setJobDescription("fence")
+          try sc.parallelize(Seq(1), 1).count()
+          finally sc.setJobDescription(null)
+          assert(c.fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          sc.removeSparkListener(c)
+        }
+      graft.operators.DedupOps.freeLocalCheckpoint(labels)
+      graft.core.Core.releaseShared()
+      (segments, c.jobs.get(), c.edgeShuffles.get(), c.records.get())
+    }
+    val (s2, jobs2, edge2, rec2) = run(2)
+    val (s5, jobs5, edge5, rec5) = run(5)
+    assert(s2 == 2 && s5 == 5, s"segments $s2 / $s5")
+    assert(edge2 == 1 && edge5 == 1,
+      s"expected the edge relation shuffled exactly once per loop; " +
+        s"got $edge2 at 2 segments and $edge5 at 5")
+    assert(jobs5 - jobs2 == 3,
+      s"expected one job per segment: $jobs2 jobs at 2 segments, " +
+        s"$jobs5 at 5")
+    assert(rec5 - rec2 <= 3 * n,
+      s"3 extra segments shuffled ${rec5 - rec2} records, more than " +
+        s"one label relation ($n rows) each")
   }
 
   test("partition-keyed writes prune partitions at the scan") {

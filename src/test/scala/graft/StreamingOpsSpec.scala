@@ -764,7 +764,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val corpus = docsAll.filter(col("doc_id") % 2 === 0)
     val corpusSk = graft.operators.DedupOps.simhash64SketchesOf(corpus)
       .localCheckpoint()
-    val labels0 = graft.operators.DedupOps.ccFixpoint(
+    val labels0 = CcReference.ccFixpoint(
         corpusSk.select("doc_id"),
         graft.operators.DedupOps.edgesFromSketches(corpusSk))
       .localCheckpoint()
@@ -793,7 +793,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     def rebuild(ids: Set[Long]): Map[Long, Long] = {
       val sk = graft.operators.DedupOps.simhash64SketchesOf(
         docsAll.filter(col("doc_id").isInCollection(ids)))
-      val m = graft.operators.DedupOps.ccFixpoint(sk.select("doc_id"),
+      val m = CcReference.ccFixpoint(sk.select("doc_id"),
           graft.operators.DedupOps.edgesFromSketches(sk))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       graft.core.Core.releaseShared()
@@ -828,6 +828,51 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(corpusSk.count() == corpusIds.size)
   }
 
+  test("cluster maintenance over 6 folds: labels == fixpoint rebuild " +
+    "after every fold, state estimates stay at rows × row width") {
+    // Each fold checkpoints a left-join ∪ join plan, and a join's
+    // default estimate is the product of its inputs': a checkpoint that
+    // kept its origin plan's estimate multiplied it fold after fold
+    // (4.5e56 bytes for the 110 label rows after the first fold). The
+    // folded state must carry an estimate from its own row count.
+    val docsAll = graft.core.Core.table(spark, TestSpark.sfDir, "documents")
+      .select("doc_id", "lang", "source", "text")
+    def idsIn(lo: Long, hi: Long) =
+      docsAll.filter(col("doc_id") >= lo && col("doc_id") < hi)
+    var sk = graft.operators.DedupOps.simhash64SketchesOf(idsIn(0L, 100L))
+      .localCheckpoint()
+    var labels = CcReference.ccFixpoint(sk.select("doc_id"),
+        graft.operators.DedupOps.edgesFromSketches(sk))
+      .localCheckpoint()
+    // 2 longs a row plus Spark's 8-byte row overhead
+    val rowWidth = 24L
+    for (fold <- 0 until 6) {
+      val lo = 100L + 10L * fold
+      val (nsk, nlabels) = StreamingOps.clusterMaintainStep(sk, labels,
+        idsIn(lo, lo + 10L))
+      graft.core.Core.releaseShared()
+      val all = graft.operators.DedupOps.simhash64SketchesOf(
+        idsIn(0L, lo + 10L))
+      val rebuilt = CcReference.ccFixpoint(all.select("doc_id"),
+          graft.operators.DedupOps.edgesFromSketches(all))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = nlabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == rebuilt, s"fold $fold: labels != rebuild")
+      for ((name, state) <- Seq("labels" -> nlabels, "sketches" -> nsk)) {
+        val rows = state.count()
+        assert(rows == lo + 10L, s"fold $fold: $rows $name rows")
+        val est = state.queryExecution.optimizedPlan.stats.sizeInBytes
+        assert(est <= BigInt(2 * rows * rowWidth),
+          s"fold $fold: $name estimate $est bytes for $rows rows")
+      }
+      graft.core.Core.releaseShared()
+      graft.operators.DedupOps.freeLocalCheckpoint(sk)
+      graft.operators.DedupOps.freeLocalCheckpoint(labels)
+      sk = nsk
+      labels = nlabels
+    }
+  }
+
   test("cluster maintenance never flips AQE on the caller's session " +
     "(concurrent-query isolation, r13 verdict #7)") {
     import spark.implicits._
@@ -842,7 +887,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "source", "text")
     val corpusSk = graft.operators.DedupOps.simhash64SketchesOf(corpus)
       .localCheckpoint()
-    val labels0 = graft.operators.DedupOps.ccFixpoint(
+    val labels0 = CcReference.ccFixpoint(
         corpusSk.select("doc_id"),
         graft.operators.DedupOps.edgesFromSketches(corpusSk))
       .localCheckpoint()
@@ -902,7 +947,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(java.lang.Long.bitCount(shs(10L) ^ shs(20L)) >
       graft.operators.DedupOps.Simhash64HammingMax,
       "fixture texts must not be near-dups of each other")
-    val labels0 = graft.operators.DedupOps.ccFixpoint(
+    val labels0 = CcReference.ccFixpoint(
       corpusSk.select("doc_id"),
       graft.operators.DedupOps.edgesFromSketches(corpusSk))
     val batch = Seq((1L, "en", "src9", t1))
