@@ -35,10 +35,11 @@ object DedupOps {
     * ([[buildIncrementalIndex]]): each corpus token occurrence lands in
     * ONE of this many salt sub-keys (by hash(c_id)), so a hot token's
     * posting chain is physically split across `salt` bucketed keys and
-    * the per-ingest candidate join's Σk² probe output spreads over
-    * `salt`× more merge-join runs. Probe and build MUST agree on this
-    * value (the probe replicates its delta across exactly these salt
-    * values); it is a single constant so they cannot diverge. Same
+    * the per-ingest merge join's Σk² output spreads over `salt`× more
+    * merge-join runs. The merge branch of [[dedupAgainstIndex]] and the
+    * build MUST agree on this value (the merge branch replicates its
+    * delta across exactly these salt values); it is a single constant
+    * so they cannot diverge. The probe branch ignores the salt. Same
     * default spread factor as [[SkewJoin.saltedCandidateJoin]]. */
   val IncrementalIndexSalt = 8
 
@@ -121,8 +122,9 @@ object DedupOps {
   private def tokSets(s: SparkSession, dir: String): DataFrame =
     tokSetsOf(table(s, dir, "documents"))
 
-  /** [[tokSets]] over an explicit documents-shaped relation — lets
-    * [[dedupNearAuto]] feed each branch a guarded source. */
+  /** [[tokSets]] over an explicit documents-shaped relation: the
+    * operators that take an optional `source` in place of the
+    * `documents` table read it through here. */
   private def tokSetsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"), distinctToks.as("toks"))
 
@@ -1055,11 +1057,12 @@ object DedupOps {
     * sorted by the SALTED candidate-join key (lang, tok, __salt), one
     * file per bucket (the rows are hash-partitioned on the bucket key
     * into `buckets` partitions first, so each writer task holds exactly
-    * one bucket). Every subsequent ingest joins its exploded delta
-    * against it without shuffling the corpus: an index under Spark's
-    * `autoBroadcastJoinThreshold` is broadcast to the delta, a larger
-    * one is merge-joined on bucket-aligned reads (both plans asserted
-    * in BucketedJoinSpec). `c_sz` (the doc's distinct-token count) is
+    * one bucket). No later ingest shuffles the corpus: an index under
+    * Spark's `autoBroadcastJoinThreshold` is read once per snapshot into
+    * a broadcast probe table ([[IngestIndex]]) that each batch probes in
+    * a projection, and a larger one is merge-joined against the exploded
+    * delta on bucket-aligned reads (both branches asserted in
+    * BucketedJoinSpec). `c_sz` (the doc's distinct-token count) is
     * denormalized into the index so the Jaccard denominator needs no
     * corpus-side aggregation at ingest time either.
     *
@@ -1093,21 +1096,22 @@ object DedupOps {
 
   /** [[queries]]' `dedup_incremental` semantics over a pre-built
     * bucketed index ([[buildIncrementalIndex]]): result-identical to
-    * the contract query (asserted in BucketedJoinSpec), but the only
-    * exchanges in the plan belong to the DELTA and its candidate
-    * aggregations — the corpus side is never shuffled: broadcast while
-    * the index is under `autoBroadcastJoinThreshold`, a bucket-aligned
-    * merge-join read above it (see [[dedupAgainstIndex]]). The
-    * contract's `doc_id` order is applied here, on the batch path
-    * only: the per-batch core stays unordered, so a stream pays no
-    * range exchange per micro-batch. */
+    * the contract query (asserted in BucketedJoinSpec), and the corpus
+    * side is never shuffled (see [[dedupAgainstIndex]]): while the index
+    * is under `autoBroadcastJoinThreshold` it is probed through a
+    * broadcast table, built by one collect job when this DataFrame is
+    * built, and the plan has no join and no exchange before the sort;
+    * above it, a bucket-aligned merge-join read where only the DELTA and
+    * its candidate aggregations shuffle. The contract's `doc_id` order
+    * is applied here, on the batch path only: the per-batch core stays
+    * unordered, so a stream pays no range exchange per micro-batch. */
   def dedupIncrementalIndexed(s: SparkSession, dir: String,
       indexTable: String): DataFrame =
     dedupAgainstIndex(s,
       incrementalDocs(s, dir)
         .filter(col("src_idx") >= IncrementalCorpusSrcs)
         .select("doc_id", "lang", "source", "toks"),
-      indexTable)
+      new IngestIndex(s, indexTable))
       .orderBy("doc_id")
 
   /** The per-batch decision core of [[dedupIncrementalIndexed]]:
@@ -1120,48 +1124,57 @@ object DedupOps {
     * only on (doc, corpus index), never on its batch-mates. One row per
     * doc, in no particular order.
     *
-    * `batchDocs` is read ONCE: every doc reaches the decision through
-    * the LEFT candidate join itself (explode_outer keeps a doc with no
-    * tokens, the outer join keeps a doc with no candidates), so no
-    * join back to the batch is needed. Inside a streaming
-    * `foreachBatch` the batch is the stateful watermark-dedup plan, and
-    * a second read would re-run that dedup and re-commit its state
-    * store on every micro-batch.
-    *
-    * The join strategy is the planner's, from the index's size: an
-    * index under `autoBroadcastJoinThreshold` is broadcast (it is the
-    * build side of the LEFT join), so the delta is never shuffled and
-    * both aggregations run where the delta already sits — in a stream,
-    * inside the state-store stage, whose output is hash-partitioned on
-    * `doc_id`. A larger index keeps the bucket-aligned merge join, where
-    * only the salted delta shuffles. */
+    * `batchDocs` is read ONCE, and its `toks` are distinct. The branch
+    * is chosen by the index's size, the statistic the planner's
+    * broadcast rule reads ([[IngestIndex]]):
+    *  - probe: an index under `autoBroadcastJoinThreshold` was read
+    *    once per snapshot into a broadcast [[IndexProbe]], and each doc
+    *    is decided by one projection over (lang, toks) — no join, no
+    *    aggregation, no exchange, and no read of the index. In a stream
+    *    the projection runs inside the state-store stage, so a batch
+    *    runs 2 stages (source exchange, dedup + decide) in 1 job;
+    *  - merge: a larger index is merge-joined on bucket-aligned reads,
+    *    where only the salted delta shuffles. Every doc reaches the
+    *    decision through the LEFT candidate join itself (explode_outer
+    *    keeps a doc with no tokens, the outer join keeps a doc with no
+    *    candidates), so no join back to the batch is needed.
+    * Inside a streaming `foreachBatch` the batch is the stateful
+    * watermark-dedup plan, and a second read would re-run that dedup
+    * and re-commit its state store on every micro-batch. Both branches
+    * return the same rows (BucketedJoinSpec's edge cases). */
   private[graft] def dedupAgainstIndex(s: SparkSession,
-      batchDocs: DataFrame, indexTable: String,
-      threshold: Double = 0.6): DataFrame = {
-    // b_sz rides along map-side (tokens are distinct, so size(toks)
-    // IS the contract's per-doc exploded-token count): the delta needs
-    // no size aggregation, mirroring the denormalized c_sz. The delta
-    // — the SMALL side of an incremental ingest by definition — then
-    // replicates across all [[IncrementalIndexSalt]] salt values: each
-    // corpus occurrence carries exactly one __salt (baked into the
-    // bucketed layout at build time), so every (batch-occ, corpus-occ)
-    // pair still meets exactly once, but a hot token's probe work and
-    // merge-run buffering spread over salt× more bucketed keys. Cost:
-    // salt× the DELTA's probe rows (and, under the merge join, its
-    // shuffle volume) — the side that is tiny relative to the corpus.
-    val delta = batchDocs.select(col("doc_id"), col("source"),
-        col("lang"), explode_outer(col("toks")).as("tok"),
-        size(col("toks")).as("b_sz"))
-      .withColumn("__salt",
-        explode(array((0 until IncrementalIndexSalt).map(lit): _*)))
-    val jaccard = col("inter").cast(DoubleType) /
-      (col("b_sz") + col("c_sz") - col("inter"))
-    decisions(delta
-      .join(s.table(indexTable), Seq("lang", "tok", "__salt"), "left")
-      .groupBy("doc_id", "source", "c_id", "b_sz", "c_sz")
-      .agg(count(lit(1)).as("inter"))
-      .groupBy("doc_id", "source")
-      .agg(min(when(jaccard >= threshold, col("c_id"))).as("dup_of")))
+      batchDocs: DataFrame, index: IngestIndex,
+      threshold: Double = 0.6): DataFrame = index.probe() match {
+    case Some(probe) =>
+      val dupOf = udf((lang: String, toks: Seq[String]) =>
+        probe.value.dupOf(lang, toks, threshold))
+      decisions(batchDocs.select(col("doc_id"), col("source"),
+        dupOf(col("lang"), col("toks")).as("dup_of")))
+    case None =>
+      // b_sz rides along map-side (tokens are distinct, so size(toks)
+      // IS the contract's per-doc exploded-token count): the delta needs
+      // no size aggregation, mirroring the denormalized c_sz. The delta
+      // — the SMALL side of an incremental ingest by definition — then
+      // replicates across all [[IncrementalIndexSalt]] salt values: each
+      // corpus occurrence carries exactly one __salt (baked into the
+      // bucketed layout at build time), so every (batch-occ, corpus-occ)
+      // pair still meets exactly once, but a hot token's merge-run
+      // buffering spreads over salt× more bucketed keys. Cost: salt× the
+      // DELTA's rows and shuffle volume — the side that is tiny relative
+      // to the corpus.
+      val delta = batchDocs.select(col("doc_id"), col("source"),
+          col("lang"), explode_outer(col("toks")).as("tok"),
+          size(col("toks")).as("b_sz"))
+        .withColumn("__salt",
+          explode(array((0 until IncrementalIndexSalt).map(lit): _*)))
+      val jaccard = col("inter").cast(DoubleType) /
+        (col("b_sz") + col("c_sz") - col("inter"))
+      decisions(delta
+        .join(s.table(index.table), Seq("lang", "tok", "__salt"), "left")
+        .groupBy("doc_id", "source", "c_id", "b_sz", "c_sz")
+        .agg(count(lit(1)).as("inter"))
+        .groupBy("doc_id", "source")
+        .agg(min(when(jaccard >= threshold, col("c_id"))).as("dup_of")))
   }
 
   /** (doc_id, source, dup_of) → the decision rows both per-batch cores
@@ -1221,7 +1234,8 @@ object DedupOps {
     * StreamingOpsSpec). Plan shape: the corpus side is never
     * shuffled — broadcast under `autoBroadcastJoinThreshold`, read
     * bucket-aligned above it while the batch side shuffles on (band,
-    * bbits), the same rule as [[dedupAgainstIndex]]; duplicate
+    * bbits). Unlike [[dedupAgainstIndex]]'s probe branch, the
+    * broadcast re-reads the index in every batch; duplicate
     * multi-band collisions collapse in the min-aggregation, so no
     * first-band arithmetic is needed on this path. Like
     * [[dedupAgainstIndex]] it reads `batchDocs` once — the band join is
@@ -2066,7 +2080,8 @@ object DedupOps {
     *
     * The convergence certificate rides each segment's checkpoint job
     * as observed metrics — row count and label sum — so it costs no
-    * job of its own. Labels are per-node NON-INCREASING under both
+    * job of its own; the input row counts and the seed certificate
+    * ride the two input checkpoint jobs the same way. Labels are per-node NON-INCREASING under both
     * steps (propagate's min includes the node's own label via the
     * self-loop; the jump is monotone, label(label(v)) <= label(v)), so
     * the exact sum strictly decreases unless no label changed, and an
@@ -2098,9 +2113,30 @@ object DedupOps {
     // the flip is invisible outside the loop — asserted by a
     // concurrent-poll spec in StreamingOpsSpec. The two checkpointed
     // inputs cross via GLOBAL temp views.
-    val eIn = withSelfLoops(nodes, edges).localCheckpoint()
-    val l0 = nodes.select(col("doc_id"), col("doc_id").as("cluster"))
-      .localCheckpoint()
+    //
+    // Certificate sum in DECIMAL(38,0), not LONG: a long sum over
+    // arbitrary 64-bit doc ids can wrap, and a wrapped collision would
+    // falsely certify convergence (ccIncrementalUpdate's fail-closed
+    // guarantee rests on this certificate). decimal(38,0) holds
+    // n·2^63 exactly to n ≈ 1.08e19 docs; past that Spark yields
+    // NULL, which fails LOUD below instead of comparing equal. Empty
+    // node sets are a genuine (trivially converged) zero, told apart
+    // from overflow by the row count in the same aggregate.
+    val cert = Seq(count(lit(1)).as("n"),
+      sum(col("cluster").cast(DecimalType(38, 0))).as("s"))
+    def certOf(r: Row): java.math.BigDecimal =
+      if (r.getLong(0) == 0L) java.math.BigDecimal.ZERO
+      else Option(r.getDecimal(1)).getOrElse(
+        throw new IllegalStateException(
+          "ccPsLoop: label-sum certificate overflowed decimal(38,0) " +
+            "— corpus beyond the 1e19-doc id-sum bound; the fixpoint " +
+            "certificate cannot be trusted"))
+    // the row counts and the seed labels' certificate ride the two
+    // input checkpoint jobs: the seed's cluster column is doc_id
+    val (eIn, eObs) =
+      checkpointObserving(withSelfLoops(nodes, edges), Seq(count(lit(1))))
+    val (l0, l0Obs) = checkpointObserving(
+      nodes.select(col("doc_id"), col("doc_id").as("cluster")), cert)
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (vE, vL) = (s"graft_cc_e_$tag", s"graft_cc_l_$tag")
     val gdb = origin.conf.get("spark.sql.globalTempDatabase", "global_temp")
@@ -2111,7 +2147,7 @@ object DedupOps {
     var segments = 0
     var ok = false
     try {
-      val (eRows, nRows) = (eIn.count(), l0.count())
+      val (eRows, nRows) = (eObs.getLong(0), l0Obs.getLong(0))
       val parts = ccLoopParts(math.max(eRows, nRows),
         SkewJoin.defaultParts(origin))
       // GLOBAL temp views cross the session boundary (plain temp views
@@ -2147,24 +2183,7 @@ object DedupOps {
       eLive = e
       freeLocalCheckpoint(eIn)
       var labels = scoped.table(s"$gdb.$vL")
-      // Certificate sum in DECIMAL(38,0), not LONG: a long sum over
-      // arbitrary 64-bit doc ids can wrap, and a wrapped collision would
-      // falsely certify convergence (ccIncrementalUpdate's fail-closed
-      // guarantee rests on this certificate). decimal(38,0) holds
-      // n·2^63 exactly to n ≈ 1.08e19 docs; past that Spark yields
-      // NULL, which fails LOUD below instead of comparing equal. Empty
-      // node sets are a genuine (trivially converged) zero, told apart
-      // from overflow by the row count in the same aggregate.
-      val cert = Seq(count(lit(1)).as("n"),
-        sum(col("cluster").cast(DecimalType(38, 0))).as("s"))
-      def certOf(r: Row): java.math.BigDecimal =
-        if (r.getLong(0) == 0L) java.math.BigDecimal.ZERO
-        else Option(r.getDecimal(1)).getOrElse(
-          throw new IllegalStateException(
-            "ccPsLoop: label-sum certificate overflowed decimal(38,0) " +
-              "— corpus beyond the 1e19-doc id-sum bound; the fixpoint " +
-              "certificate cannot be trusted"))
-      var prevSum = certOf(labels.agg(cert.head, cert.tail: _*).head())
+      var prevSum = certOf(l0Obs)
       var converged = false
       while (!converged && segments < maxPairs) {
         // Each shortcut reads its input twice. A LAZY local checkpoint

@@ -162,8 +162,9 @@ object SimilarityOps {
   private def vecs(s: SparkSession, dir: String): DataFrame =
     vecsOf(s, table(s, dir, "embeddings"))
 
-  /** [[vecs]] over an explicit embeddings-shaped relation — lets
-    * [[annLshAuto]] feed each branch a guarded source. */
+  /** [[vecs]] over an explicit embeddings-shaped relation: the
+    * operators that take an optional `source` in place of the
+    * `embeddings` table read it through here. */
   private def vecsOf(s: SparkSession, emb: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(s)
     shared(emb

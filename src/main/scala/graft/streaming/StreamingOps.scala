@@ -67,12 +67,17 @@ object StreamingOps {
     * batch operator (DedupOps.dedupAgainstIndex) — so per-batch
     * decisions provably match the batch run on the same data
     * (asserted in StreamingOpsSpec), and the corpus side is never
-    * shuffled. An index under `autoBroadcastJoinThreshold` is broadcast,
-    * and the micro-batch, already hash-partitioned on `doc_id` by the
-    * watermark dedup, is decided inside the state-store stage: a batch
-    * runs 3 stages (index broadcast, source exchange, dedup + decide)
-    * and no exchange after the dedup (StreamingOpsSpec pins both). A
-    * larger index keeps the bucket-aligned merge join, where only the
+    * shuffled. The stream holds one [[graft.operators.IngestIndex]],
+    * loaded here, before the stream starts; it must therefore exist
+    * when this is called. An index under `autoBroadcastJoinThreshold`
+    * is read by one collect job into a broadcast probe table, and read
+    * again only when its file set changes (a rebuilt index is picked up
+    * by the next batch). The micro-batch, already hash-partitioned on
+    * `doc_id` by the watermark dedup, is decided by a projection inside
+    * the state-store stage: a batch runs 1 job of 2 stages (source
+    * exchange, dedup + decide), with no join, no exchange after the
+    * dedup and no read of the index (StreamingOpsSpec pins all three).
+    * A larger index keeps the bucket-aligned merge join, where only the
     * delta explodes and shuffles. `onBatch` receives each
     * micro-batch's decision rows (doc_id, source, dup_of, is_new), one
     * per document and unordered: a global sort would cost every batch
@@ -83,13 +88,15 @@ object StreamingOps {
     * read of it (a self-join, a second action) re-runs that dedup and
     * re-commits its state store — doubling the state rows updated and
     * the commit time of every batch. The decision core is written to
-    * that rule (one LEFT candidate join, no join back to the batch),
-    * and so is [[simhashDedupStream]]; StreamingOpsSpec checks it on
-    * the stream's own progress (numRowsUpdated == new documents). */
+    * that rule (one projection, or one LEFT candidate join, and no join
+    * back to the batch), and so is [[simhashDedupStream]];
+    * StreamingOpsSpec checks it on the stream's own progress
+    * (numRowsUpdated == new documents). */
   def incrementalDedup(docs: DataFrame, watermark: String,
       indexTable: String)(
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val s = docs.sparkSession
+    val index = new graft.operators.IngestIndex(s, indexTable)
     docs.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("doc_id")
       .writeStream
@@ -97,7 +104,7 @@ object StreamingOps {
         val decisions = graft.operators.DedupOps.dedupAgainstIndex(s,
           b.select(col("doc_id"), col("lang"), col("source"),
             array_distinct(split(lower(col("text")), " ")).as("toks")),
-          indexTable)
+          index)
         onBatch(decisions, id)
       }
   }

@@ -63,12 +63,12 @@ class BucketedJoinSpec extends AnyFunSuite {
     finally spark.conf.set(BroadcastThreshold, before)
   }
 
-  /** Runs `body` once per candidate-join branch of the indexed
-    * incremental dedup: the default plan, where the small index is
-    * broadcast, and the merge join that an index above the threshold
-    * gets (forced here with -1). */
-  private def forEachJoinBranch(body: String => Unit): Unit = {
-    body("broadcast")
+  /** Runs `body` once per branch of the indexed incremental dedup:
+    * "probe", where the small index is read into a broadcast probe
+    * table, and "merge", the merge join that an index above the
+    * threshold gets (forced here with -1). */
+  private def forEachBranch(body: String => Unit): Unit = {
+    body("probe")
     withBroadcastThreshold("-1")(body("merge"))
   }
 
@@ -137,10 +137,11 @@ class BucketedJoinSpec extends AnyFunSuite {
     graft.operators.DedupOps.buildIncrementalIndex(spark, TestSpark.sfDir,
       "dedup_idx_bc")
     val (plan, matches) = indexedVsContract(TestSpark.sfDir, "dedup_idx_bc")
-    // the index is the build side of the LEFT candidate join
-    assert(plan.contains("BroadcastHashJoin") &&
-      plan.contains("LeftOuter, BuildRight") &&
-      !plan.contains("SortMergeJoin"), plan)
+    // the index was read once into a broadcast probe table: the plan
+    // decides each doc in a projection, with no join and no read of the
+    // index's files, and nothing shuffles on the candidate key
+    assert(!plan.contains("Join"), plan)
+    assert(!plan.contains("dedup_idx_bc"), plan)
     assert(!plan.contains("Exchange hashpartitioning(lang"), plan)
     assert(matches)
     spark.sql("DROP TABLE IF EXISTS dedup_idx_bc")
@@ -156,18 +157,61 @@ class BucketedJoinSpec extends AnyFunSuite {
       (2L, "en", "src1", "a slow green turtle walks home"),
       (3L, "de", "src2", "der schnelle braune fuchs"),
       (4L, "en", "src3", null))
-    val cases = Seq(
-      "null text, unindexed lang, empty text" -> (corpus ++ Seq(
+    // each case: its documents, and the dup_of it must decide for some
+    // of its arriving docs (None = new)
+    val cases = Seq[(String, Seq[(Long, String, String, String)],
+        Map[Long, Option[Long]])](
+      ("null text, unindexed lang, empty text", corpus ++ Seq(
         (10L, "en", "src10", "the quick brown fox jumps"),
         (11L, "en", "src11", null),
         (12L, "xx", "src12", "the quick brown fox jumps"),
         (13L, "en", "src13", "a slow green turtle walks"),
-        (14L, "en", "src14", ""))),
-      "nothing matches" -> (corpus ++ Seq(
+        (14L, "en", "src14", "")),
+        Map(10L -> Some(1L), 11L -> None, 12L -> None, 13L -> Some(2L),
+          14L -> None)),
+      ("nothing matches", corpus ++ Seq(
         (20L, "en", "src10", "entirely unrelated words here"),
-        (21L, "de", "src11", "ganz andere woerter"))),
-      "empty batch" -> corpus)
-    for ((name, docs) <- cases) {
+        (21L, "de", "src11", "ganz andere woerter")),
+        Map(20L -> None, 21L -> None)),
+      ("empty batch", corpus, Map.empty[Long, Option[Long]]),
+      // a null lang matches nothing, not even a null-lang corpus doc of
+      // the same text; the empty text is the single token "" and
+      // matches a corpus doc that is "" too
+      ("null lang, empty text against an empty corpus doc", corpus ++ Seq(
+        (0L, null, "src4", "the quick brown fox jumps"),
+        (6L, "en", "src5", ""),
+        (30L, null, "src10", "the quick brown fox jumps"),
+        (31L, "de", "src11", "der schnelle braune fuchs"),
+        (32L, "en", "src12", "")),
+        Map(30L -> None, 31L -> Some(3L), 32L -> Some(6L))),
+      ("unicode-heavy tokens", corpus ++ Seq(
+        (7L, "ja", "src6", "東京 の 天気 は 晴れ 😀"),
+        (8L, "fr", "src7", "naïve café über straße ǅemal"),
+        (40L, "ja", "src10", "東京 の 天気 は 晴れ 😀"),
+        (41L, "fr", "src11", "NAÏVE CAFÉ ÜBER STRASSE ǅemal"),
+        (42L, "fr", "src12", "Naïve Café Über Straße ǅEMAL"),
+        (43L, "ja", "src13", "大阪 の 天気 は 雨 😀")),
+        // 41: "strasse" is not "straße", 4/6 >= 0.6; 43: 4/8 < 0.6
+        Map(40L -> Some(7L), 41L -> Some(8L), 42L -> Some(8L),
+          43L -> None)),
+      ("a batch of all-identical texts", corpus ++
+        (50L to 55L).map(id =>
+          (id, "en", s"src${id - 40}", "a slow green turtle walks home")),
+        (50L to 55L).map(_ -> Some(2L)).toMap),
+      // 3 shared of 4 and 4 distinct tokens: 3 / 5 == 0.6 qualifies
+      ("a Jaccard of exactly 0.6", corpus ++ Seq(
+        (9L, "en", "src8", "alpha beta gamma delta"),
+        (60L, "en", "src10", "alpha beta gamma epsilon"),
+        (61L, "en", "src11", "alpha beta zeta epsilon")),
+        Map(60L -> Some(9L), 61L -> None)),
+      // both corpus docs qualify (8: 5/6, 9: 5/5): the lower c_id wins,
+      // not the closer match
+      ("two qualifying candidates", corpus ++ Seq(
+        (8L, "en", "src8", "one two three four five six"),
+        (9L, "en", "src9", "one two three four five"),
+        (70L, "en", "src10", "one two three four five")),
+        Map(70L -> Some(8L))))
+    for ((name, docs, expect) <- cases) {
       val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
       docs.toDF("doc_id", "lang", "source", "text")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -178,18 +222,23 @@ class BucketedJoinSpec extends AnyFunSuite {
         .collect().map(_.toSeq).toSeq
       Core.releaseShared()
       val arriving = docs.filter(_._3.drop(3).toInt >= 10).map(_._1)
-      forEachJoinBranch { branch =>
+      val byBranch = scala.collection.mutable.Map.empty[String, Seq[Seq[Any]]]
+      forEachBranch { branch =>
         val df = graft.operators.DedupOps
           .dedupIncrementalIndexed(spark, dir, "dedup_idx_edge")
-        val join = if (branch == "broadcast") "BroadcastHashJoin"
-          else "SortMergeJoin"
-        assert(df.queryExecution.executedPlan.toString.contains(join),
-          s"$name, $branch")
+        val plan = df.queryExecution.executedPlan.toString
+        if (branch == "probe") assert(!plan.contains("Join"), s"$name:\n$plan")
+        else assert(plan.contains("SortMergeJoin"), s"$name:\n$plan")
         val indexed = df.collect().map(_.toSeq).toSeq
         assert(indexed.map(_.head) == arriving.sorted,
           s"$name, $branch: $indexed")
         assert(indexed == contract, s"$name, $branch: $indexed vs $contract")
+        byBranch(branch) = indexed
       }
+      assert(byBranch("probe") == byBranch("merge"), name)
+      val decided = contract.map(r => r.head -> Option(r(2))).toMap
+      for ((id, dup) <- expect)
+        assert(decided(id) == dup, s"$name: doc $id decided ${decided(id)}")
     }
     spark.sql("DROP TABLE IF EXISTS dedup_idx_edge")
   }

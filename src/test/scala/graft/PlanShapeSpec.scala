@@ -238,6 +238,56 @@ class PlanShapeSpec extends AnyFunSuite {
         s"one label relation ($n rows) each")
   }
 
+  test("pipeline_dedup's CC loop reads its input row counts and seed " +
+    "certificate off its input checkpoints: 27 jobs at sf0.001") {
+    // the loop's two input checkpoint jobs carry the edge and node row
+    // counts and the seed labels' certificate as observed metrics. A
+    // separate count per input (2 jobs each under the caller's AQE: a
+    // stage job, then the result) and a seed aggregate ran 5 more jobs
+    // (32 in all). Counted over build + collect of a second run, with
+    // the shared caches released first, so that neither the first
+    // read of a file in this JVM nor an earlier query's cache moves
+    // the count.
+    SparkEntry.queries("pipeline_dedup")(spark, dir).collect()
+    graft.core.Core.releaseShared()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "fence"))
+          fenceSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val manifest =
+      try SparkEntry.queries("pipeline_dedup")(spark, dir).collect()
+      finally {
+        sc.setJobDescription("fence")
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setJobDescription(null)
+        assert(fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get == 27, s"pipeline_dedup ran ${jobs.get} jobs")
+    // the same segments and the same labels: the loop on the query's
+    // own inputs certifies after 4 segments, and the manifest's clusters
+    // are the plain-propagation fixpoint
+    val nodes = graft.core.Core.table(spark, dir, "documents")
+      .select("doc_id")
+    val edges = graft.operators.DedupOps.simhashEdgesGlobal(spark, dir)
+    val (labels, segments, converged) = graft.operators.DedupOps
+      .ccPsLoop(nodes, edges, graft.operators.DedupOps.StarCcPairs)
+    assert(segments == 4 && converged, s"$segments segments")
+    graft.operators.DedupOps.freeLocalCheckpoint(labels)
+    val reference = CcReference.ccFixpoint(nodes, edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(manifest.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      reference)
+    graft.core.Core.releaseShared()
+  }
+
   test("partition-keyed writes prune partitions at the scan") {
     // the storage-layout lever every 100 TB corpus uses: write sharded
     // by the filter key, and a key predicate must become a partition

@@ -6,11 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Obs
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery,
@@ -51,34 +52,63 @@ class StreamingOpsSpec extends AnyFunSuite {
         r.getString(2), r.getString(3), t0))
   }
 
-  /** Counts the stages each micro-batch runs, keyed by (query id, batch
-    * id): the stream sets both as job properties, and a broadcast's job
-    * inherits them from the batch that plans it. */
-  private class BatchStages extends SparkListener {
-    val byBatch =
-      new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+  /** Counts the stages and the jobs each micro-batch runs, keyed by
+    * (query id, batch id): the stream sets both as job properties, and
+    * a job a batch starts (a broadcast's, a collect's) inherits them.
+    * Also keeps each SQL execution's physical plan, to tell which jobs
+    * read a given table. */
+  private class BatchCounts extends SparkListener {
+    private type ByBatch =
+      java.util.concurrent.ConcurrentHashMap[(String, Long), Int]
+    private val stages, jobs = new ByBatch
+    private val plans =
+      new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    private val jobExecutions =
+      new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     private val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    private def tally(into: ByBatch, p: java.util.Properties): Unit =
+      for (p <- Option(p); q <- Option(p.getProperty("sql.streaming.queryId"));
+           b <- Option(p.getProperty("streaming.sql.batchId")))
+        into.merge((q, b.toLong), 1, _ + _)
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      Option(e.properties).foreach { p =>
-        for (q <- Option(p.getProperty("sql.streaming.queryId"));
-             b <- Option(p.getProperty("streaming.sql.batchId")))
-          byBatch.merge((q, b.toLong), 1, _ + _)
-      }
+      tally(stages, e.properties)
     override def onJobStart(e: SparkListenerJobStart): Unit =
       if (Option(e.properties).exists(
           _.getProperty("spark.job.description") == "fence"))
         fenceSeen.countDown()
-    /** Stage counts per batch of query `q`, once every event before
-      * this call has reached the listener (the bus delivers in order,
-      * so a job started now is seen after them). */
-    def of(q: StreamingQuery): Map[Long, Int] = {
+      else {
+        tally(jobs, e.properties)
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobExecutions.add(id.toLong))
+      }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        plans.put(x.executionId, x.physicalPlanDescription)
+      case _ => ()
+    }
+    /** Waits until every event before this call has reached the
+      * listener (the bus delivers in order, so a job started now is
+      * seen after them). */
+    private def fence(): Unit = {
       val sc = spark.sparkContext
       sc.setJobDescription("fence")
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setJobDescription(null)
       assert(fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      byBatch.asScala.collect { case ((id, b), n) if id == q.id.toString =>
-        b -> n }.toMap
+    }
+    /** (stages, jobs) per batch of query `q`. */
+    def of(q: StreamingQuery): (Map[Long, Int], Map[Long, Int]) = {
+      fence()
+      def mine(m: ByBatch) = m.asScala.collect {
+        case ((id, b), n) if id == q.id.toString => b -> n }.toMap
+      (mine(stages), mine(jobs))
+    }
+    /** Jobs whose SQL execution's plan names `table`. */
+    def jobsReading(table: String): Int = {
+      fence()
+      jobExecutions.asScala.count(id =>
+        Option(plans.get(id)).exists(_.contains(table)))
     }
   }
 
@@ -206,7 +236,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("an ingest micro-batch is decided inside the state-store stage: " +
-    "no exchange after the dedup, at most 3 stages") {
+    "no join, no exchange and no index read, 2 stages in 1 job") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     spark.sql("DROP TABLE IF EXISTS dedup_idx_shape")
@@ -214,8 +244,8 @@ class StreamingOpsSpec extends AnyFunSuite {
       "dedup_idx_shape")
     val (first, second) = arrivingDocs().splitAt(10)
     val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlan]()
-    val stages = new BatchStages
-    spark.sparkContext.addSparkListener(stages)
+    val counts = new BatchCounts
+    spark.sparkContext.addSparkListener(counts)
     try {
       val in = MemoryStream[StreamingOps.IncomingDoc]
       val q = StreamingOps.incrementalDedup(in.toDF(), "30 minutes",
@@ -228,28 +258,87 @@ class StreamingOpsSpec extends AnyFunSuite {
       q.processAllAvailable()
       in.addData((second.take(10) :+ first.head).toIndexedSeq)
       q.processAllAvailable()
+      in.addData(second.slice(10, 20).toIndexedSeq)
+      q.processAllAvailable()
       q.stop()
       val dataBatches = q.recentProgress.filter(_.numInputRows > 0)
         .map(_.batchId).toSeq
-      assert(dataBatches.length == 2, q.recentProgress.map(_.json).toSeq)
+      assert(dataBatches.length == 3, q.recentProgress.map(_.json).toSeq)
 
       // The batch arrives hash-partitioned on doc_id by the watermark
-      // dedup; with the index broadcast, both aggregations run there.
-      // (A stream plans its batches without AQE, so the plan is final.)
+      // dedup, and the index was read into a broadcast probe table
+      // before the stream started: each doc is decided by a projection
+      // there. (A stream plans its batches without AQE, so the plan is
+      // final.)
       for ((id, plan) <- plans.asScala) {
-        assert(plan.exists(_.isInstanceOf[BroadcastHashJoinExec]),
-          s"batch $id:\n$plan")
+        assert(!plan.exists(_.isInstanceOf[BaseJoinExec]),
+          s"batch $id joins:\n$plan")
         assert(!plan.exists(_.isInstanceOf[ShuffleExchangeExec]),
           s"batch $id shuffles after the dedup:\n$plan")
+        assert(!plan.exists(_.isInstanceOf[FileSourceScanExec]),
+          s"batch $id reads the index:\n$plan")
       }
-      // index broadcast, source -> state exchange, dedup + decide
-      val perBatch = stages.of(q)
-      for (b <- dataBatches)
-        assert(perBatch.get(b).exists(n => n >= 1 && n <= 3),
-          s"batch $b ran ${perBatch.get(b)} stages: $perBatch")
-      assert(perBatch.values.forall(_ <= 3), perBatch)
-    } finally spark.sparkContext.removeSparkListener(stages)
+      // source -> state exchange, dedup + decide: one job
+      val (stages, jobs) = counts.of(q)
+      for (b <- dataBatches) {
+        assert(stages.get(b).exists(n => n >= 1 && n <= 2),
+          s"batch $b ran ${stages.get(b)} stages: $stages")
+        assert(jobs.get(b).contains(1), s"batch $b ran ${jobs.get(b)} " +
+          s"jobs: $jobs")
+      }
+      assert(stages.values.forall(_ <= 2), stages)
+      // the probe table's one collect, across all three batches
+      assert(counts.jobsReading("dedup_idx_shape") == 1)
+    } finally spark.sparkContext.removeSparkListener(counts)
     spark.sql("DROP TABLE IF EXISTS dedup_idx_shape")
+  }
+
+  test("a running ingest stream picks up an index rebuilt between two " +
+    "micro-batches") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    spark.sql("DROP TABLE IF EXISTS dedup_idx_rebuilt")
+    graft.operators.DedupOps.buildIncrementalIndex(spark, TestSpark.sfDir,
+      "dedup_idx_rebuilt")
+    // the rebuilt index's corpus: only sources src0..src4
+    val half = java.nio.file.Files.createTempDirectory("graft_rebuilt")
+      .toString
+    graft.core.Core.table(spark, TestSpark.sfDir, "documents")
+      .filter(substring(col("source"), 4, 10).cast("int") < 5)
+      .write.parquet(s"$half/documents.parquet")
+    val arriving = arrivingDocs()
+    val (first, second) = arriving.splitAt(arriving.length / 2)
+    // the second batch as the batch decision core sees it, run against
+    // whatever `dedup_idx_rebuilt` holds when called
+    def batchRun(): Set[Seq[Any]] = graft.operators.DedupOps
+      .dedupAgainstIndex(spark, second.toSeq.toDF()
+        .select(col("doc_id"), col("lang"), col("source"),
+          array_distinct(split(lower(col("text")), " ")).as("toks")),
+        new graft.operators.IngestIndex(spark, "dedup_idx_rebuilt"))
+      .collect().map(_.toSeq).toSet
+
+    val perBatch =
+      new java.util.concurrent.ConcurrentHashMap[Long, Set[Seq[Any]]]()
+    val in = MemoryStream[StreamingOps.IncomingDoc]
+    val q = StreamingOps.incrementalDedup(in.toDF(), "30 minutes",
+        "dedup_idx_rebuilt") { (df, id) =>
+        perBatch.put(id, df.collect().map(_.toSeq).toSet)
+      }
+      .start()
+    in.addData(first.toIndexedSeq)
+    q.processAllAvailable()
+    val before = batchRun()
+    graft.operators.DedupOps.buildIncrementalIndex(spark, half,
+      "dedup_idx_rebuilt")
+    val after = batchRun()
+    // non-degenerate: the smaller corpus changes some decisions
+    assert(before != after)
+    in.addData(second.toIndexedSeq)
+    q.processAllAvailable()
+    q.stop()
+    val secondId = q.recentProgress.filter(_.numInputRows > 0).last.batchId
+    assert(perBatch.get(secondId) == after)
+    spark.sql("DROP TABLE IF EXISTS dedup_idx_rebuilt")
   }
 
   test("incremental dedup restarted after a sink failure replays the " +
