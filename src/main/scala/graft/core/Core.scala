@@ -39,7 +39,8 @@ object Core {
       case _ => raw
     }
     else raw
-    scanParallel(s, normalized, path, name)
+    if (ScanFloorTables(name)) scanFloor(s, dir, name, normalized)
+    else normalized
   }
 
   /** Scan-parallelism floor for small low-split inputs (optimization
@@ -51,34 +52,9 @@ object Core {
     * single-file, single-row-group tables run their whole pre-exchange
     * segment on ONE task; a row-group-bounded file cannot be split by
     * `spark.sql.files.maxPartitionBytes`, so the fix must be an explicit
-    * round-robin exchange after the read). The exchange is gated on the
-    * DRIVER-SIDE file stat, so it exists only where it pays:
-    *
-    *  - total bytes >= `spark.graft.scan.parallelizeMinBytes` (64 KB
-    *    default): dimension tables below it broadcast anyway, and an
-    *    exchange there is pure stage overhead;
-    *  - total bytes <= `spark.graft.scan.parallelizeMaxBytes` (32 MB
-    *    default): above it the natural splits already spread the scan,
-    *    and repartitioning a large input is exactly the shuffle this
-    *    engine spends its plans avoiding — at 100 TB the gate NEVER
-    *    fires (inputs arrive as many >= 128 MB files) and the plan is
-    *    byte-identical to the ungated read;
-    *  - leaf file count < defaultParallelism / 2: a many-file directory
-    *    (a generated multi-file corpus) already scans wide;
-    *  - table name ∈ `spark.graft.scan.parallelizeTables` (default:
-    *    `documents`): the exchange pays only where the pre-exchange
-    *    per-row work is heavy — the text corpus's tokenize/sketch/
-    *    winnow/quality chains burn whole seconds single-threaded, while
-    *    the relational tables' scan segments are cheap projections and
-    *    the embeddings family runs many small bounded jobs (Lloyd
-    *    rounds, probe builds) where an extra exchange per job is pure
-    *    overhead. MEASURED both ways at sf0.1 on 32 cores (full 171-query
-    *    bench, quiet floor-probe windows): ungated, the heavy text
-    *    queries won 5.5/4.6/2.7/2.6 s (dedup_incremental,
-    *    pipeline_dedup, dedup_cluster_cc, txt_langid_ngram) but the
-    *    sub-1.5 s basket paid +29 s in aggregate and the embeddings
-    *    family +8 s — net +11 s; gated to `documents` the wins stay and
-    *    the tax goes (OPTIMIZATION_r17.md).
+    * round-robin exchange after the read). [[table]] applies it to the
+    * tables in [[ScanFloorTables]]; [[scanFloorFires]] gates it on the
+    * driver-side file stat, so the exchange exists only where it pays.
     *
     * Round-robin (`repartition(n)`) rather than a key: even spread with
     * no key-skew risk, and deterministic under retries because Spark
@@ -88,37 +64,64 @@ object Core {
     * Lazy: the file stat is bounded driver IO at plan build (the
     * corpusTag convention), no job runs (LazinessSpec).
     */
-  private def scanParallel(s: SparkSession, df: DataFrame, path: String,
-      name: String): DataFrame = {
-    // conf parsing sits OUTSIDE the fallback catch (ADVICE r17): a
-    // malformed value (parallelizeMinBytes="64k") must fail loud, not
-    // silently disable the optimization
-    val conf = s.conf
-    val tables = conf.getOption("spark.graft.scan.parallelizeTables")
-      .getOrElse("documents").split(",").map(_.trim).toSet
-    if (!tables.contains(name)) return df
-    val minB = conf.getOption("spark.graft.scan.parallelizeMinBytes")
-      .map(_.toLong).getOrElse(64L * 1024)
-    val maxB = conf.getOption("spark.graft.scan.parallelizeMaxBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
+  private[graft] def scanFloor(s: SparkSession, dir: String, name: String,
+      df: DataFrame): DataFrame = {
     val n = s.sparkContext.defaultParallelism
     try {
-      def leaves(f: java.io.File): Seq[java.io.File] =
-        if (f.isFile) Seq(f)
-        else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-          .toSeq.flatMap(leaves)
-      // only parquet leaves count toward the gates (ADVICE r17):
-      // sidecars (_SUCCESS, .crc) are not scannable bytes
-      val ls = leaves(new java.io.File(path))
+      // only parquet leaves count toward the gate: sidecars (_SUCCESS,
+      // .crc) are not scannable bytes
+      val ls = leaves(new java.io.File(s"$dir/$name.parquet"))
         .filter(_.getName.endsWith(".parquet"))
-      val total = ls.map(_.length).sum
-      if (n > 1 && total >= minB && total <= maxB && ls.size < n / 2)
-        df.repartition(n)
+      if (scanFloorFires(ls.map(_.length).sum, ls.size, n)) df.repartition(n)
       else df
     } catch {
-      case scala.util.control.NonFatal(_) => df // stat failure ⇒ plain read
+      case NonFatal(_) => df // stat failure ⇒ plain read
     }
   }
+
+  /** The tables [[table]] reads through [[scanFloor]]. The exchange
+    * pays only where the pre-exchange per-row work is heavy — the text
+    * corpus's tokenize/sketch/winnow/quality chains burn whole seconds
+    * single-threaded, while the relational tables' scan segments are
+    * cheap projections and the embeddings family runs many small
+    * bounded jobs (Lloyd rounds, probe builds) where an extra exchange
+    * per job is pure overhead. MEASURED both ways at sf0.1 on 32 cores
+    * (full 171-query bench): ungated, the heavy text queries won
+    * 5.5/4.6/2.7/2.6 s (dedup_incremental, pipeline_dedup,
+    * dedup_cluster_cc, txt_langid_ngram) but the sub-1.5 s basket paid
+    * +29 s in aggregate and the embeddings family +8 s — net +11 s;
+    * gated to `documents` the wins stay and the tax goes
+    * (OPTIMIZATION_r17.md). `profile_table` applies the floor to its
+    * one `orders` read itself. */
+  val ScanFloorTables: Set[String] = Set("documents")
+
+  /** Below this many parquet bytes a table gets no scan exchange:
+    * dimension tables this small broadcast anyway, and an exchange
+    * there is pure stage overhead. */
+  val ScanFloorMinBytes: Long = 64L * 1024
+
+  /** Above this many parquet bytes a table gets no scan exchange: the
+    * natural splits already spread the scan, and repartitioning a large
+    * input is exactly the shuffle this engine spends its plans avoiding
+    * — at 100 TB the gate NEVER fires (inputs arrive as many >= 128 MB
+    * files) and the plan is identical to the ungated read. */
+  val ScanFloorMaxBytes: Long = 32L * 1024 * 1024
+
+  /** Whether [[scanFloor]] inserts its exchange for a table of `bytes`
+    * parquet bytes in `files` parquet files on a session of `cores`
+    * cores: the bytes lie in [[ScanFloorMinBytes]] ..
+    * [[ScanFloorMaxBytes]], and there are fewer files than half the
+    * cores (a many-file directory already scans wide). */
+  def scanFloorFires(bytes: Long, files: Int, cores: Int): Boolean =
+    cores > 1 && bytes >= ScanFloorMinBytes && bytes <= ScanFloorMaxBytes &&
+      files < cores / 2
+
+  /** The files under `f`, depth first in name order (`f` itself if it
+    * is a file). */
+  private def leaves(f: java.io.File): Seq[java.io.File] =
+    if (f.isFile) Seq(f)
+    else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
+      .sortBy(_.getName).toSeq.flatMap(leaves)
 
   /** Mark a multiply-referenced subplan as compute-once. Catalyst does
     * not common-subexpression-eliminate repeated subplans, so an
@@ -188,28 +191,6 @@ object Core {
     math.min(perPartition.fold(0L)(_ + _), cap)
   }
 
-  /** Run `body` with a session conf pinned to `value`, restoring the
-    * previous setting (or unsetting) afterwards — the scope for
-    * build-time job sequences that want a non-default conf without
-    * leaking it into the session (e.g. the global CC chain disables
-    * AQE for its fixed-shape label-join segments: every segment's
-    * strategy is already pinned by explicit repartition + shuffle_hash
-    * hints, so adaptive re-optimization buys nothing and its per-stage
-    * driver re-planning was the measured dominant cost of the chain —
-    * docs/PLANS.md round 12). Not re-entrancy-safe across threads: the
-    * conf is session-global while `body` runs, which is the existing
-    * single-driver execution model of the contract harnesses. */
-  def withConf[T](s: SparkSession, key: String, value: String)
-      (body: => T): T = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** Exact money arithmetic: double -> integer cents. Test values carry
     * <= 2 decimals, so x*100 is within ~1e-10 of an integer and rounding
     * is unambiguous in both Spark and DuckDB; summing longs is exact and
@@ -274,10 +255,6 @@ object Core {
       // an empty/missing dir must not hash to a CONSTANT: two broken
       // dirs would share a tag and their histories would cross-match
       if (entries.isEmpty) throw new IllegalStateException(s"no parquet in $dir")
-      def leaves(f: java.io.File): Seq[java.io.File] =
-        if (f.isFile) Seq(f)
-        else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-          .sortBy(_.getName).toSeq.flatMap(leaves)
       val fs = entries.map { e =>
         if (e.isFile) s"${e.getName}:${e.length}" // driver-written flat files:
           // digest unchanged since round 7 so the tagged history stays valid;

@@ -148,16 +148,12 @@ object DedupOps {
     "CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) " +
       "/ len(list_distinct(a.toks || b.toks))"
 
-  /** doc_id -> base token hash rows (distinct tokens, mod P).
-    * The fold-based token hash evaluates once per DISTINCT token (tiny
-    * dictionary), then broadcast-joins back onto the (doc, token) rows —
-    * not once per occurrence. Same values as hashing in place, so the
-    * DuckDB oracle (which hashes in place) is unaffected. */
-  private def docTokHash(s: SparkSession, dir: String): DataFrame =
-    docTokHashOf(tokSets(s, dir))
-
-  /** [[docTokHash]] over an explicit (doc_id, toks) relation — the
-    * micro-batch entry point for the streaming sketch twin. */
+  /** doc_id -> base token hash rows (distinct tokens, mod P) over an
+    * explicit (doc_id, toks) relation. The fold-based token hash
+    * evaluates once per DISTINCT token (tiny dictionary), then
+    * broadcast-joins back onto the (doc, token) rows — not once per
+    * occurrence. Same values as hashing in place, so the DuckDB oracle
+    * (which hashes in place) is unaffected. */
   private def docTokHashOf(tokSets: DataFrame): DataFrame = {
     // NOT shared, measured (round 12): persisting the exploded token
     // relation so the vocab-dim subtree and the join probe tokenize
@@ -319,44 +315,13 @@ object DedupOps {
       .orderBy("a_id", "b_id")
   }
 
-  /** Near-dup pairs with the count-join vs prefix-join choice CODIFIED
-    * (the BENCH_NOTES round-3 prose rule as code).
-    *
-    * Decision rule: prefix filtering (AllPairs/PPJoin) pays exactly
-    * when token document frequency is SKEWED — rare tokens then anchor
-    * selective prefixes and the candidate join shrinks superlinearly.
-    * On a dense corpus where every token is ubiquitous (df uniform and
-    * high) the prefix keeps a constant fraction of every doc, pruning
-    * little, and the plain count-join avoids the df-ranking window,
-    * candidate distinct and verify passes it would pay for nothing.
-    *
-    * The statistic: median(df) / max(df) over a bounded corpus sample
-    * (`sampleDocs` docs, default 2048) — a plan-choice statistic in the
-    * spirit of AQE's runtime stats, never corpus-scaled. Zipf-like
-    * vocabularies score near 0, uniform ones near 1; below `skewBelow`
-    * the prefix branch is chosen. Both branches emit the IDENTICAL
-    * result set (same oracle SQL; asserted in DedupOpsSpec on a uniform
-    * AND a skewed corpus), so the choice is pure planning.
-    *
-    * EAGER since round 18 (formerly a lazy guarded union whose one-row
-    * stat relation guarded each branch's leaf and AQE empty-relation
-    * propagation collapsed the dead branch): the dead branch never ran
-    * data, but its FULL plan — the df-ranking window, salted candidate
-    * join, distinct and verify passes — rode every execution through
-    * planning, the formatted dumps (dedup_near_auto 924 lines) and the
-    * codegen set. The eager bounded stat is the [[SimilarityOps.routedK]]
-    * convention, and the LazinessSpec exemption carries the rationale.
-    */
-  /** The df-skew statistic, evaluated EAGERLY as one bounded job
-    * (optimization round 18): median(df)/max(df) over a `sampleDocs`
-    * corpus sample — None when the sample is empty (routes to the
-    * count branch, whose result is empty there anyway). The former
-    * lazy guarded-union consumers carried BOTH branches' full plans
-    * through every execution (dedup_near_auto 924 / txt_containment
-    * 866 formatted lines — both VERDICT r17 #1 targets); the routing
-    * is now the [[SimilarityOps.routedK]] eager bounded-stat
-    * convention (LazinessSpec-exempted: a 2048-doc sample, never
-    * corpus-scaled). */
+  /** The df-skew statistic of [[dedupNearAuto]] and
+    * [[txtContainmentAuto]], evaluated EAGERLY as one bounded job:
+    * median(df)/max(df) over a `sampleDocs` corpus sample — None when
+    * the sample is empty. The [[SimilarityOps.routedK]] eager
+    * bounded-stat convention (LazinessSpec-exempted: a 2048-doc sample,
+    * never corpus-scaled), so a query's plan holds only the branch it
+    * runs. */
   private def dfSkewOf(s: SparkSession, dir: String,
       sampleDocs: Int): Option[Double] = {
     // the sample is a top-level `head` (CollectLimitExec, which is not
@@ -378,14 +343,31 @@ object DedupOps {
     else Some(r.getDouble(0) / r.getDouble(1))
   }
 
+  /** Near-dup pairs with the count-join vs prefix-join choice CODIFIED
+    * (the BENCH_NOTES round-3 prose rule as code).
+    *
+    * Decision rule: prefix filtering (AllPairs/PPJoin) pays exactly
+    * when token document frequency is SKEWED — rare tokens then anchor
+    * selective prefixes and the candidate join shrinks superlinearly.
+    * On a dense corpus where every token is ubiquitous (df uniform and
+    * high) the prefix keeps a constant fraction of every doc, pruning
+    * little, and the plain count-join avoids the df-ranking window,
+    * candidate distinct and verify passes it would pay for nothing.
+    *
+    * The statistic: median(df) / max(df) over a bounded corpus sample
+    * (`sampleDocs` docs, default 2048) — a plan-choice statistic in the
+    * spirit of AQE's runtime stats, never corpus-scaled. Zipf-like
+    * vocabularies score near 0, uniform ones near 1; below `skewBelow`
+    * the prefix branch is chosen. Both branches emit the IDENTICAL
+    * result set (same oracle SQL; asserted in DedupOpsSpec on a uniform
+    * AND a skewed corpus), so the choice is pure planning, made eagerly
+    * by [[dfSkewOf]]. */
   def dedupNearAuto(s: SparkSession, dir: String, sampleDocs: Int = 2048,
       skewBelow: Double = 0.2): DataFrame = {
     // the skewed-df regime is exactly where the PPJoin rank bound
     // prunes superlinearly, so that regime routes to the prefix branch;
     // an empty corpus sample routes to the count branch, whose result
-    // is empty there anyway. Both branches emit the identical result
-    // set (asserted in DedupOpsSpec on a uniform AND a skewed corpus),
-    // so the choice is pure planning — made eagerly since round 18.
+    // is empty there anyway.
     if (dfSkewOf(s, dir, sampleDocs).exists(_ < skewBelow))
       dedupNearPrefix(s, dir, positional = true)
     else dedupNearRelational(s, dir)
@@ -503,11 +485,10 @@ object DedupOps {
     * relational formulation is kept below as the spec's reference).
     * No explode, no dictionary exchange, no 62-column aggregate
     * exchange — the sketch relation is now as cheap as a column. */
-  private def sketchOf(docs: DataFrame, bits: Int,
-      carry: String*): DataFrame = {
+  private def sketchOf(docs: DataFrame, bits: Int): DataFrame = {
     graft.plans.TokSketch.register(docs.sparkSession)
-    docs.select((col("doc_id") +: carry.map(col)) :+
-      graft.plans.TokSketch.simhashOf(distinctToks, bits).as("simhash"): _*)
+    docs.select(col("doc_id"),
+      graft.plans.TokSketch.simhashOf(distinctToks, bits).as("simhash"))
   }
 
   /** LEGACY relational sketch derivation (explode + distinct-token
@@ -534,12 +515,6 @@ object DedupOps {
     * / [[minhashSigLegacyOf]] — spec-only, see above. */
   private[graft] def docTokHashLegacyOf(docs: DataFrame): DataFrame =
     docTokHashOf(tokSetsOf(docs))
-
-  /** 62-bit production sketch over an explicit documents-shaped
-    * relation — the same map-side fold [[simhash64Sketches]] runs on
-    * the corpus, applied to ONE MICRO-BATCH by the streaming twin. */
-  private[graft] def simhash64SketchesOf(docs: DataFrame): DataFrame =
-    sketchOf(docs, Simhash64Bits)
 
   /** 16-permutation MinHash signature per doc (columns m0..m15) — one
     * map-side [[graft.plans.TokSketch]] projection since round 18
@@ -1094,35 +1069,16 @@ object DedupOps {
       .sortBy("lang", "tok", "__salt")
       .mode("overwrite").saveAsTable(tableName)
 
-  /** [[queries]]' `dedup_incremental` semantics over a pre-built
-    * bucketed index ([[buildIncrementalIndex]]): result-identical to
-    * the contract query (asserted in BucketedJoinSpec), and the corpus
-    * side is never shuffled (see [[dedupAgainstIndex]]): while the index
-    * is under `autoBroadcastJoinThreshold` it is probed through a
-    * broadcast table, built by one collect job when this DataFrame is
-    * built, and the plan has no join and no exchange before the sort;
-    * above it, a bucket-aligned merge-join read where only the DELTA and
-    * its candidate aggregations shuffle. The contract's `doc_id` order
-    * is applied here, on the batch path only: the per-batch core stays
-    * unordered, so a stream pays no range exchange per micro-batch. */
-  def dedupIncrementalIndexed(s: SparkSession, dir: String,
-      indexTable: String): DataFrame =
-    dedupAgainstIndex(s,
-      incrementalDocs(s, dir)
-        .filter(col("src_idx") >= IncrementalCorpusSrcs)
-        .select("doc_id", "lang", "source", "toks"),
-      new IngestIndex(s, indexTable))
-      .orderBy("doc_id")
-
-  /** The per-batch decision core of [[dedupIncrementalIndexed]]:
-    * `batchDocs` is any (doc_id, lang, source, toks) relation — the
-    * parquet-read delta in the batch operator, ONE MICRO-BATCH in the
-    * streaming twin (streaming/StreamingOps.incrementalDedup). Keeping
-    * the decision logic in one function is what makes "per-batch
-    * decisions match the batch operator" true by construction (and
-    * asserted on data in StreamingOpsSpec): a doc's decision depends
-    * only on (doc, corpus index), never on its batch-mates. One row per
-    * doc, in no particular order.
+  /** The per-batch decision core of the ingest stream
+    * (streaming/StreamingOps.incrementalDedup) against a pre-built
+    * index ([[buildIncrementalIndex]]): `batchDocs` is any (doc_id,
+    * lang, source, toks) relation — ONE MICRO-BATCH in the stream, the
+    * whole `dedup_incremental` delta in the specs that compare the two.
+    * A doc's decision depends only on (doc, corpus index), never on its
+    * batch-mates, so per-batch decisions match one run over the whole
+    * delta by construction (asserted on data in StreamingOpsSpec and
+    * BucketedJoinSpec). Emits (doc_id, source, dup_of, is_new), one row
+    * per doc, in no particular order.
     *
     * `batchDocs` is read ONCE, and its `toks` are distinct. The branch
     * is chosen by the index's size, the statistic the planner's
@@ -1144,111 +1100,42 @@ object DedupOps {
     * return the same rows (BucketedJoinSpec's edge cases). */
   private[graft] def dedupAgainstIndex(s: SparkSession,
       batchDocs: DataFrame, index: IngestIndex,
-      threshold: Double = 0.6): DataFrame = index.probe() match {
-    case Some(probe) =>
-      val dupOf = udf((lang: String, toks: Seq[String]) =>
-        probe.value.dupOf(lang, toks, threshold))
-      decisions(batchDocs.select(col("doc_id"), col("source"),
-        dupOf(col("lang"), col("toks")).as("dup_of")))
-    case None =>
-      // b_sz rides along map-side (tokens are distinct, so size(toks)
-      // IS the contract's per-doc exploded-token count): the delta needs
-      // no size aggregation, mirroring the denormalized c_sz. The delta
-      // — the SMALL side of an incremental ingest by definition — then
-      // replicates across all [[IncrementalIndexSalt]] salt values: each
-      // corpus occurrence carries exactly one __salt (baked into the
-      // bucketed layout at build time), so every (batch-occ, corpus-occ)
-      // pair still meets exactly once, but a hot token's merge-run
-      // buffering spreads over salt× more bucketed keys. Cost: salt× the
-      // DELTA's rows and shuffle volume — the side that is tiny relative
-      // to the corpus.
-      val delta = batchDocs.select(col("doc_id"), col("source"),
-          col("lang"), explode_outer(col("toks")).as("tok"),
-          size(col("toks")).as("b_sz"))
-        .withColumn("__salt",
-          explode(array((0 until IncrementalIndexSalt).map(lit): _*)))
-      val jaccard = col("inter").cast(DoubleType) /
-        (col("b_sz") + col("c_sz") - col("inter"))
-      decisions(delta
-        .join(s.table(index.table), Seq("lang", "tok", "__salt"), "left")
-        .groupBy("doc_id", "source", "c_id", "b_sz", "c_sz")
-        .agg(count(lit(1)).as("inter"))
-        .groupBy("doc_id", "source")
-        .agg(min(when(jaccard >= threshold, col("c_id"))).as("dup_of")))
-  }
-
-  /** (doc_id, source, dup_of) → the decision rows both per-batch cores
-    * emit: (doc_id, source, dup_of, is_new). */
-  private def decisions(dupOf: DataFrame): DataFrame =
-    dupOf.select(col("doc_id"), col("source"), col("dup_of"),
+      threshold: Double = 0.6): DataFrame = {
+    val decided = index.probe() match {
+      case Some(probe) =>
+        val dupOf = udf((lang: String, toks: Seq[String]) =>
+          probe.value.dupOf(lang, toks, threshold))
+        batchDocs.select(col("doc_id"), col("source"),
+          dupOf(col("lang"), col("toks")).as("dup_of"))
+      case None =>
+        // b_sz rides along map-side (tokens are distinct, so size(toks)
+        // IS the contract's per-doc exploded-token count): the delta needs
+        // no size aggregation, mirroring the denormalized c_sz. The delta
+        // — the SMALL side of an incremental ingest by definition — then
+        // replicates across all [[IncrementalIndexSalt]] salt values: each
+        // corpus occurrence carries exactly one __salt (baked into the
+        // bucketed layout at build time), so every (batch-occ, corpus-occ)
+        // pair still meets exactly once, but a hot token's merge-run
+        // buffering spreads over salt× more bucketed keys. Cost: salt× the
+        // DELTA's rows and shuffle volume — the side that is tiny relative
+        // to the corpus.
+        val delta = batchDocs.select(col("doc_id"), col("source"),
+            col("lang"), explode_outer(col("toks")).as("tok"),
+            size(col("toks")).as("b_sz"))
+          .withColumn("__salt",
+            explode(array((0 until IncrementalIndexSalt).map(lit): _*)))
+        val jaccard = col("inter").cast(DoubleType) /
+          (col("b_sz") + col("c_sz") - col("inter"))
+        delta
+          .join(s.table(index.table), Seq("lang", "tok", "__salt"), "left")
+          .groupBy("doc_id", "source", "c_id", "b_sz", "c_sz")
+          .agg(count(lit(1)).as("inter"))
+          .groupBy("doc_id", "source")
+          .agg(min(when(jaccard >= threshold, col("c_id"))).as("dup_of"))
+    }
+    decided.select(col("doc_id"), col("source"), col("dup_of"),
       col("dup_of").isNull.as("is_new"))
-
-  /** (band, bbits) LSH bucket rows of a 62-bit sketch relation — the
-    * [[bandedJoin]] pigeonhole tiling ([[Simhash64HammingMax]]+1 = 4
-    * bands of 16 bits) as a standalone projection, shared by the
-    * sketch-index build and the per-batch probe so both sides bucket
-    * identically by construction. Every column of `sketch` rides along
-    * on each of a doc's band rows. */
-  private def simhash64BandRows(sketch: DataFrame): DataFrame = {
-    val nBands = Simhash64HammingMax + 1
-    val width = (Simhash64Bits + nBands - 1) / nBands
-    val mask = (1L << width) - 1
-    val bandStructs = array((0 until nBands).map { j =>
-      struct(lit(j).as("band"),
-        shiftright(col("simhash"), j * width).bitwiseAND(lit(mask))
-          .as("bbits"))
-    }: _*)
-    sketch.select(col("*"), inline(bandStructs))
   }
-
-  /** One-time GLOBAL SimHash sketch index over the corpus — the
-    * banded (band, bbits) bucket rows of [[simhash64Sketches]], laid
-    * out BUCKETED on the band key so every later probe (a batch
-    * delta, a streaming micro-batch) reads the corpus side
-    * exchange-free: the `pipeline_dedup` ingest companion. A recurring
-    * 100 TB ingest builds this once and amortizes it; only sketches
-    * ride in it (16 bytes/row × 4 bands), never text. */
-  def buildSimhashIndex(s: SparkSession, dir: String,
-      tableName: String, buckets: Int = 8,
-      docs: Option[DataFrame] = None): Unit =
-    simhash64BandRows(docs.map(simhash64SketchesOf)
-        .getOrElse(simhash64Sketches(s, dir)))
-      .select(col("band"), col("bbits"), col("doc_id").as("c_id"),
-        col("simhash").as("c_sh"))
-      .write.bucketBy(buckets, "band", "bbits")
-      .sortBy("band", "bbits")
-      .mode("overwrite").saveAsTable(tableName)
-
-  /** The per-batch decision core of the streaming SimHash dedup
-    * (streaming/StreamingOps.simhashDedupStream): decide every doc of
-    * `batchDocs` against the PRE-BUILT sketch index
-    * ([[buildSimhashIndex]]) — a doc is a near-dup iff some corpus
-    * sketch shares an LSH band AND lies within Hamming
-    * [[Simhash64HammingMax]] (band-sharing is pigeonhole-complete at
-    * this radius, so the candidate rule is EXACT, not approximate,
-    * over the sketches). dup_of = the minimum qualifying corpus
-    * doc_id, the same canonical-argmin convention as
-    * [[dedupAgainstIndex]]. Decisions depend only on (doc, index) —
-    * never on batch-mates — which is what makes per-batch streaming
-    * decisions ≡ one batch run by construction (asserted on data in
-    * StreamingOpsSpec). Plan shape: the corpus side is never
-    * shuffled — broadcast under `autoBroadcastJoinThreshold`, read
-    * bucket-aligned above it while the batch side shuffles on (band,
-    * bbits). Unlike [[dedupAgainstIndex]]'s probe branch, the
-    * broadcast re-reads the index in every batch; duplicate
-    * multi-band collisions collapse in the min-aggregation, so no
-    * first-band arithmetic is needed on this path. Like
-    * [[dedupAgainstIndex]] it reads `batchDocs` once — the band join is
-    * a LEFT join (a doc always has 4 band rows, a null sketch included)
-    * — and emits one row per doc, in no particular order. */
-  private[graft] def dedupAgainstSimhashIndex(s: SparkSession,
-      batchDocs: DataFrame, indexTable: String): DataFrame =
-    decisions(simhash64BandRows(sketchOf(batchDocs, Simhash64Bits, "source"))
-      .join(s.table(indexTable), Seq("band", "bbits"), "left")
-      .groupBy("doc_id", "source")
-      .agg(min(when(bit_count(col("simhash").bitwiseXOR(col("c_sh")))
-        .cast(IntegerType) <= Simhash64HammingMax, col("c_id")))
-        .as("dup_of")))
 
   /** Directional token containment |A∩B|/|A| >= `threshold` within
     * `source` blocks as a plain relational count-join over the one
@@ -1298,22 +1185,18 @@ object DedupOps {
   }
 
   /** Directional containment with the count-join vs prefix-join choice
-    * CODIFIED, exactly like [[dedupNearAuto]]: the same one-row lazy
-    * df-skew statistic guards each branch's documents scan, AQE's
-    * empty-relation propagation collapses the dead branch before its
-    * corpus scan schedules, and both branches emit the IDENTICAL result
-    * set (same oracle SQL — asserted in DedupOpsSpec on a dense AND a
-    * skewed corpus). docs/SCALE.md measured why this routing matters:
-    * on the DENSE 10x corpus the count-join grew 73x (388.6 s) while
+    * CODIFIED, exactly like [[dedupNearAuto]]: the same eager bounded
+    * df-skew statistic ([[dfSkewOf]]) picks one branch, so the plan
+    * holds only that branch, and both branches emit the IDENTICAL
+    * result set (same oracle SQL — asserted in DedupOpsSpec on a dense
+    * AND a skewed corpus). docs/SCALE.md measured why this routing
+    * matters: on the DENSE 10x corpus the count-join grew 73x (388.6 s) while
     * the prefix variant's candidate work stays anchored to rare-token
     * prefixes — on a df-skewed real corpus the operator must make that
     * measured-right choice itself. */
   def txtContainmentAuto(s: SparkSession, dir: String,
       threshold: Double = 0.9, sampleDocs: Int = 2048,
       skewBelow: Double = 0.2): DataFrame =
-    // eager bounded-stat routing since round 18 — see [[dfSkewOf]];
-    // branches are result-identical (asserted in DedupOpsSpec on a
-    // dense AND a skewed corpus), the choice is pure planning
     if (dfSkewOf(s, dir, sampleDocs).exists(_ < skewBelow))
       txtContainmentPrefix(s, dir, threshold)
     else txtContainmentCount(s, dir, threshold)
@@ -2052,9 +1935,9 @@ object DedupOps {
 
   /** Min-label connected components with shortcutting, run eagerly to a
     * certified fixpoint or to `maxPairs` segments — the one CC loop
-    * behind `pipeline_dedup`, `pipeline_full` and
-    * [[ccIncrementalUpdate]]. Each (P,S) segment is one propagate
-    * ([[ccRound]]) and [[StarCcJumps]] shortcuts ([[ccShortcut]]):
+    * behind `pipeline_dedup` and `pipeline_full`. Each (P,S) segment
+    * is one propagate ([[ccRound]]) and [[StarCcJumps]] shortcuts
+    * ([[ccShortcut]]):
     * hooking + shortcutting, the FastSV schedule (Zhang, Azad & Buluç
     * 2020; Shiloach–Vishkin 1982). On a monotone-id chain each segment
     * doubles covered distance (a 64-path converges in 7 segments); on
@@ -2104,22 +1987,20 @@ object DedupOps {
     val origin = nodes.sparkSession
     // Materialize both loop inputs under the CALLER's session/conf,
     // then run the fixed-shape segments in a CLONED session with AQE
-    // off (round 14): flipping `spark.sql.adaptive.enabled` on the
-    // caller's session — from the stream-execution thread under
-    // clusterMaintenanceStream — let any concurrent query on it run
-    // with AQE off, and racing restores could leave it flipped. The
-    // clone shares the SparkContext and block manager (localCheckpoints
-    // and frees cross the boundary untouched) but owns its conf, so
-    // the flip is invisible outside the loop — asserted by a
-    // concurrent-poll spec in StreamingOpsSpec. The two checkpointed
+    // off: flipping `spark.sql.adaptive.enabled` on the caller's
+    // session would let any concurrent query on it run with AQE off,
+    // and racing restores could leave it flipped. The clone shares the
+    // SparkContext and block manager (localCheckpoints and frees cross
+    // the boundary untouched) but owns its conf, so the flip is
+    // invisible outside the loop — asserted by a concurrent-poll spec
+    // over `pipeline_dedup` in DedupOpsSpec. The two checkpointed
     // inputs cross via GLOBAL temp views.
     //
     // Certificate sum in DECIMAL(38,0), not LONG: a long sum over
     // arbitrary 64-bit doc ids can wrap, and a wrapped collision would
-    // falsely certify convergence (ccIncrementalUpdate's fail-closed
-    // guarantee rests on this certificate). decimal(38,0) holds
-    // n·2^63 exactly to n ≈ 1.08e19 docs; past that Spark yields
-    // NULL, which fails LOUD below instead of comparing equal. Empty
+    // falsely certify convergence. decimal(38,0) holds n·2^63 exactly
+    // to n ≈ 1.08e19 docs; past that Spark yields NULL, which fails
+    // LOUD below instead of comparing equal. Empty
     // node sets are a genuine (trivially converged) zero, told apart
     // from overflow by the row count in the same aggregate.
     val cert = Seq(count(lit(1)).as("n"),
@@ -2258,21 +2139,13 @@ object DedupOps {
     (ck, row)
   }
 
-  /** `localCheckpoint` `df` with a size estimate from its own row
-    * count (observed on the checkpoint job, see [[withRowCountStats]]). */
-  private[graft] def checkpointSized(df: DataFrame): DataFrame = {
-    val (ck, observed) = checkpointObserving(df, Seq(count(lit(1))))
-    withRowCountStats(ck, observed.getLong(0))
-  }
-
   /** The local checkpoint `ck`, holding `rows` rows, with a size
     * estimate of `rows` times Spark's per-row width for its schema. A
     * local checkpoint otherwise keeps the estimate of the plan it was
     * computed from, and a join's default estimate is the product of
     * its inputs', so relations re-derived through joins iteration
-    * after iteration — the CC loop's labels, the state that
-    * [[graft.streaming.StreamingOps.clusterMaintainStep]] folds — would
-    * multiply their estimate every iteration. The estimate matters to
+    * after iteration — the CC loop's labels — would multiply their
+    * estimate every iteration. The estimate matters to
     * the plan: a single-partition input is shuffled anyway once its
     * estimate passes `spark.sql.maxSinglePartitionBytes`. */
   private[graft] def withRowCountStats(ck: DataFrame, rows: Long)
@@ -2307,177 +2180,6 @@ object DedupOps {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
-
-  /** INCREMENTAL connected-component maintenance — the operator a
-    * daily-ingest 100 TB pipeline runs instead of a full
-    * `pipeline_dedup` rebuild (round-11 verdict #5): fold a batch's
-    * new edges into an existing labeling, including the case
-    * [[graft.streaming.StreamingOps]]'s per-doc decision stream cannot
-    * see — a bridging batch doc MERGING two existing clusters.
-    *
-    *  - `oldLabels` (doc_id, cluster): a CONVERGED labeling of the
-    *    standing corpus (each cluster value = the component's min
-    *    doc_id — what [[ccPsLoop]] produces at fixpoint);
-    *  - `deltaNodes` (doc_id): the arriving batch;
-    *  - `deltaEdges` (n, m) SYMMETRIC: every new edge — batch-internal
-    *    and batch<->corpus; endpoints may be any batch or corpus doc.
-    *
-    * The corpus graph never re-enters: each old cluster CONTRACTS to
-    * one supernode (its label), delta endpoints map through the label
-    * relation (identity for batch docs), and the (P,S) loop runs over
-    * the TOUCHED supernode graph — delta-scaled nodes and edges, NOT
-    * corpus-scaled. Contraction preserves components, and because
-    * every supernode id is its component's min doc_id, min-label
-    * propagation over the contracted graph lands every merged
-    * component on the SAME min doc_id a full rebuild computes —
-    * incremental ≡ rebuild at fixpoint, asserted on a bridging-batch
-    * corpus in DedupOpsSpec. One corpus-sized left join at the end
-    * maps old labels to their supernode's final label.
-    *
-    * FAILS CLOSED on non-convergence (round-12 self-review #1): the
-    * guarantee above holds only AT fixpoint, and unlike the bounded
-    * contract manifests (whose oracle mirrors the same bounded
-    * schedule) nothing external gates this utility — so a supernode
-    * graph that outruns `maxPairs` throws instead of persisting an
-    * under-merged labeling into streaming state forever. The default
-    * 32 is far above every measured geometry (uniform corpora 5–7
-    * pairs, the adversarial 500k shuffled-id census 15); a caller
-    * hitting it has a genuinely pathological delta and should raise
-    * the cap consciously.
-    *
-    * Inputs are DEFENDED, not assumed, disjoint (self-review #2): a
-    * doc present in BOTH `oldLabels` and `deltaNodes` (a redelivery
-    * past the streaming watermark, a foreachBatch retry) would
-    * otherwise emit two conflicting label rows — its supernode is its
-    * old cluster via the edge contraction, while the delta branch
-    * would also emit it as its OWN supernode. Known docs are dropped
-    * from the node set (their redelivered EDGES still fold —
-    * contraction reroutes them to the existing supernodes, which is
-    * exactly right). The known-doc defence is a broadcast-probe SCAN
-    * of the standing labels (semi against the broadcast batch ids,
-    * then the batch anti-joins the bounded hit set), not a
-    * corpus-exchange anti join — `deltaNodes` is a batch, bounded by
-    * contract.
-    *
-    * CONCURRENCY (ADVICE r12, closed round 14): the internal (P,S)
-    * loop runs its AQE-off jobs in a CLONED session ([[ccPsLoop]]'s
-    * body comment), so a concurrent batch query or a second stream
-    * sharing the caller's SparkSession never observes the flip —
-    * asserted by a concurrent-poll spec in StreamingOpsSpec. This
-    * operator (and [[graft.streaming.StreamingOps
-    * .clusterMaintenanceStream]], which calls it per micro-batch) is
-    * safe to run alongside concurrent query activity. */
-  def ccIncrementalUpdate(oldLabels: DataFrame, deltaNodes: DataFrame,
-      deltaEdges: DataFrame, maxPairs: Int = 32): DataFrame = {
-    val labelOf = oldLabels
-      .select(col("doc_id").as("x"), col("cluster").as("cx"))
-    val batchIds = deltaNodes.select("doc_id").distinct()
-    val knownIds = labelOf.select(col("x").as("doc_id"))
-      .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
-    val newNodes = batchIds
-      .join(broadcast(knownIds), Seq("doc_id"), "left_anti")
-    // contract endpoints: corpus doc -> its cluster supernode, batch
-    // doc -> itself. The delta's distinct endpoint set is bounded by
-    // 2·|delta edges|, so the label lookup is a broadcast-probe SCAN:
-    // semi-join the standing labels against the broadcast endpoints
-    // (one map-side pass, no exchange), then broadcast the bounded
-    // endpoint-label map back over the delta (round 14: two
-    // corpus-exchange joins here were the dominant slice of the
-    // measured sf10wide update phase). The delta relation is
-    // persisted (`shared`) because the endpoint set and the
-    // contraction both read it — unpersisted, the candidate probe
-    // would execute twice.
-    val de = shared(deltaEdges)
-    val endpoints = de.select(col("n").as("x"))
-      .unionByName(de.select(col("m").as("x"))).distinct()
-    val epLabels = shared(labelOf
-      .join(broadcast(endpoints), Seq("x"), "left_semi"))
-    val contracted = shared(de
-      .join(broadcast(epLabels.select(col("x").as("n"),
-        col("cx").as("cn"))), Seq("n"), "left")
-      .join(broadcast(epLabels.select(col("x").as("m"),
-        col("cx").as("cm"))), Seq("m"), "left")
-      .select(coalesce(col("cn"), col("n")).as("n"),
-        coalesce(col("cm"), col("m")).as("m"))
-      .filter(col("n") =!= col("m")))
-    // The (P,S) loop runs over the TOUCHED subgraph only — supernodes
-    // that appear as a contracted delta-edge endpoint (round 13: the
-    // loop over EVERY old cluster id made the whole fold corpus-scaled,
-    // 12.6 s vs the 37.3 s rebuild at sf10wide). An UNTOUCHED
-    // supernode is exact to skip: min-label propagation over the
-    // contracted graph can only merge components connected by a delta
-    // edge, so a supernode with no delta edge is its own component and
-    // its label is itself — precisely what the coalesce fallbacks below
-    // emit. Batch docs with no edges likewise stay their own cluster.
-    val touched = contracted.select(col("n").as("doc_id"))
-      .unionByName(contracted.select(col("m").as("doc_id")))
-      .distinct()
-    val (superLabels, _, converged) = ccPsLoop(touched, contracted, maxPairs)
-    if (!converged) throw new IllegalStateException(
-      s"ccIncrementalUpdate: supernode graph did not converge within " +
-        s"$maxPairs (P,S) pairs — raising maxPairs is required before " +
-        "this labeling can be trusted (see scaladoc; measured " +
-        s"geometries need <= 15)")
-    val superMap = superLabels
-      .select(col("doc_id").as("sn"), col("cluster").as("sc"))
-    // one corpus-sized left join rewrites affected labels; untouched
-    // rows (sn null) keep their cluster — total by construction
-    oldLabels
-      .join(superMap.hint("shuffle_hash"),
-        col("cluster") === col("sn"), "left")
-      .select(col("doc_id"), coalesce(col("sc"), col("cluster")).as("cluster"))
-      .unionByName(newNodes
-        .join(superMap.hint("shuffle_hash"),
-          col("doc_id") === col("sn"), "left")
-        .select(col("doc_id"),
-          coalesce(col("sc"), col("doc_id")).as("cluster")))
-  }
-
-  /** The sketch-level DELTA edge set for an arriving batch against a
-    * standing corpus — what [[ccIncrementalUpdate]] consumes in the
-    * SimHash pipeline: batch star edges (members -> batch sketch
-    * reps, plus batch-rep near pairs, via [[edgesFromSketches]]) and
-    * batch-rep x corpus-rep near pairs. Nothing here is corpus x
-    * corpus: the corpus side is one rep per distinct sketch value,
-    * scanned map-side against the broadcast batch combo keys
-    * ([[comboProbeIndex]]). Components of (corpus edges UNION this)
-    * equal the full-graph components: a batch doc b within Hamming of
-    * a corpus doc c reaches c's component through b's rep -> c's rep
-    * (sketch-value Hamming equals doc Hamming, and rep choice does not
-    * affect components — a rep is Hamming-0 from its members). */
-  def incrementalSimhashDelta(corpusSk: DataFrame, batchSk: DataFrame)
-      : DataFrame = {
-    // symmetrize in ONE pass (explode of both directions) — the
-    // union-with-swap form referenced the probe twice, and the whole
-    // batch×corpus candidate probe re-executed for the second branch
-    // (measured ~2× the fold's delta phase at sf10wide, round 14)
-    val sym = comboProbeIndex(
-        sketchReps(batchSk).select(col("rep_id").as("doc_id"),
-          col("simhash")),
-        sketchReps(corpusSk).select(col("rep_id").as("doc_id"),
-          col("simhash")),
-        Simhash64Bits, Simhash64HammingMax, Simhash64Blocks)
-      .select(explode(array(
-        struct(col("a_id").as("n"), col("b_id").as("m")),
-        struct(col("b_id").as("n"), col("a_id").as("m")))).as("e"))
-      .select(col("e.n").as("n"), col("e.m").as("m"))
-    edgesFromSketches(batchSk).unionByName(sym)
-  }
-
-  /** Batch-side-BROADCAST combination-key candidate join: `left` (the
-    * batch's sketch reps, bounded) probes `right` (the corpus reps)
-    * with the batch's exploded combo keys broadcast, so the corpus
-    * side is scanned map-side — zero corpus exchange on the probe, no
-    * salt needed (broadcast joins cannot skew a partition). Candidate
-    * semantics identical to [[comboJoin2]]. */
-  private def comboProbeIndex(left: DataFrame, right: DataFrame,
-      bits: Int, hammingMax: Int, blocks: Int): DataFrame = {
-    val sch = ComboScheme(bits, hammingMax, blocks)
-    sch.verify(
-      sch.side(sch.explodeKeys(right), "b")
-        .join(broadcast(sch.side(sch.explodeKeys(left), "a")),
-          Seq("combo", "kbits")))
-  }
 
   private lazy val dedupNearOracle: String =
     s"""WITH t AS ($tokSetsSql)

@@ -104,34 +104,26 @@ object RelationalOps {
     * distinct-count aggregator. With `countDistinct` (the contract
     * query) the multi-distinct agg plans as ONE Expand — rows ×
     * profiled columns — which is exact but multiplies the scan; with
-    * `approx_count_distinct` ([[profileTableApprox]], the shape the
-    * operator scaladoc prescribes at 100 TB) the HLL sketches merge
-    * in an ordinary single-pass hash aggregate and the Expand
-    * disappears (plan-shape + ±2% accuracy asserted in
-    * ProfilingOpsSpec). Everything else — null counts, min/max
-    * rendering — is identical between the two forms. */
-  private def profileTableWith(s: SparkSession, dir: String,
+    * `approx_count_distinct` (the shape the operator scaladoc
+    * prescribes at 100 TB) the HLL sketches merge in an ordinary
+    * single-pass hash aggregate and the Expand disappears (plan-shape
+    * + ±2% accuracy asserted in ProfilingOpsSpec). Everything else —
+    * null counts, min/max rendering — is identical between the two
+    * forms. */
+  private[graft] def profileTableWith(s: SparkSession, dir: String,
       distinctAgg: Column => Column): DataFrame = {
     val priceCents = cents(col("o_totalprice"))
-    // Opt this ONE orders read into the scan-parallelism floor
-    // (Core.scanParallel — conf-scoped to this build, measured r17):
-    // the exact profile's multi-distinct plans as an Expand of rows ×
-    // profiled columns BELOW the first exchange, so the single-split
-    // orders scan multiplied 6× on one task while the session idled
-    // (the generic orders consumers measured the exchange as a net
-    // tax, which is why `orders` is not in the session default —
-    // OPTIMIZATION_r17.md). Same byte gates as every scanParallel
-    // site: at deployment input sizes the conf is a no-op.
-    // APPEND `orders` to the caller's allow-list rather than replacing
-    // it (ADVICE r17): a deployment that removed `documents` from the
-    // conf must not get it silently re-enabled here
-    val curTables = s.conf
-      .getOption("spark.graft.scan.parallelizeTables")
-      .getOrElse("documents")
-    val orders = graft.core.Core.withConf(s,
-      "spark.graft.scan.parallelizeTables", s"$curTables,orders") {
-      table(s, dir, "orders")
-    }
+    // This ONE orders read takes the scan-parallelism floor
+    // (Core.scanFloor, measured r17): the exact profile's
+    // multi-distinct plans as an Expand of rows × profiled columns
+    // BELOW the first exchange, so the single-split orders scan
+    // multiplied 6× on one task while the session idled (the generic
+    // orders consumers measured the exchange as a net tax, which is why
+    // `orders` is not in Core.ScanFloorTables — OPTIMIZATION_r17.md).
+    // Same byte gates as every floored read: at deployment input sizes
+    // it is a no-op.
+    val orders = graft.core.Core.scanFloor(s, dir, "orders",
+      table(s, dir, "orders"))
     profileWith(orders, Seq(
       "o_orderkey" -> longProfile("o_orderkey", distinctAgg),
       "o_custkey" -> longProfile("o_custkey", distinctAgg),
@@ -175,21 +167,16 @@ object RelationalOps {
       distinctAgg: Column => Column): Seq[Column] = Seq(
     nNullsOf(c), distinctAgg(col(c)), min(col(c)), max(col(c)))
 
-  /** The 100 TB profile pass: HLL distinct counts instead of exact —
-    * no Expand, one ordinary aggregate scan. See [[profileTableWith]]. */
-  def profileTableApprox(s: SparkSession, dir: String): DataFrame =
-    profileTableWith(s, dir, c => approx_count_distinct(c, rsd = 0.02))
-
   /** [[profileTableWith]]'s shape over `documents` — the CORPUS-SCALED
     * profile. `orders` is a fixed dimension the scale corpora never
     * grew, so profile_table had no 10× datapoint (round-8 verdict
     * watch item #3); this one was swept at sf1 in both regimes, exact
     * vs approx, and the scale ledger records the Expand-elimination
-    * delta the profileTableApprox scaladoc promises. The exact
-    * multi-distinct plans as ONE Expand — rows × 5 profiled columns,
-    * including the full text strings — which is precisely the term
-    * the HLL swap removes at scale. */
-  private def profileDocsWith(s: SparkSession, dir: String,
+    * delta the HLL aggregator buys. The exact multi-distinct plans as
+    * ONE Expand — rows × 5 profiled columns, including the full text
+    * strings — which is precisely the term the HLL swap removes at
+    * scale. */
+  private[graft] def profileDocsWith(s: SparkSession, dir: String,
       distinctAgg: Column => Column): DataFrame =
     profileWith(table(s, dir, "documents"), Seq(
       "doc_id" -> longProfile("doc_id", distinctAgg),
@@ -197,11 +184,6 @@ object RelationalOps {
       "n_chars" -> longProfile("n_chars", distinctAgg),
       "source" -> strProfile("source", distinctAgg),
       "text" -> strProfile("text", distinctAgg)))
-
-  /** HLL variant of the documents profile — the Expand-free
-    * comparator ProfilingOpsSpec checks against the exact profile. */
-  def profileDocsApprox(s: SparkSession, dir: String): DataFrame =
-    profileDocsWith(s, dir, c => approx_count_distinct(c, rsd = 0.02))
 
   def queries: Map[String, Q] = Map(
     // Multi-table equi join: orders ⋈ customer ⋈ nation ⋈ region,
@@ -861,8 +843,8 @@ object RelationalOps {
     },
 
     // Tumbling-window aggregate keyed by event_type — the batch-checkable
-    // shape of a streaming 10-minute windowed groupBy (the streaming form
-    // itself is StreamingOps.tumblingCounts, MemoryStream-tested).
+    // shape of a streaming 10-minute windowed groupBy (Spark's
+    // `window` over a watermarked stream gives the same windows).
     "stream_tumbling" -> { (s, dir) =>
       table(s, dir, "events")
         .groupBy(window(col("ts"), "10 minutes").as("w"), col("event_type"))

@@ -500,16 +500,8 @@ object SimilarityOps {
     * (optimization round 18): the family count is exact everywhere the
     * LSH regime can hold (its cap sits far above the plane menu's
     * 524,288-vector ceiling), so `annFamilyFor`'s `Left(planes)` IS the
-    * occupancy-routed plane choice — the former lazy guarded union
-    * (one annLsh branch per menu entry, dead branches collapsed by AQE
-    * empty-relation propagation) re-derived with a second in-plan
-    * count what the family count had already measured, and carried
-    * 5× the physical plan (1,256 formatted lines, the largest dump in
-    * the repo) plus four dead branches' codegen through every
-    * bench/Verify execution. Result-identical: each guarded branch was
-    * asserted ≡ annLsh at its plane count (SimilarityOpsSpec), and the
-    * regimes tiled exactly [[autoPlanesFor]] — the one live branch was
-    * always annLsh(autoPlanesFor(n)). Same oracle SQL. */
+    * occupancy-routed plane choice, and the plan holds only the one
+    * branch that runs: annLsh(autoPlanesFor(n)). Same oracle SQL. */
   def annLshAuto(s: SparkSession, dir: String,
       topK: Int = AnnTopK, source: Option[DataFrame] = None): DataFrame = {
     // ONE bounded count decides FAMILY and PLANE COUNT (rounds 15/18):
@@ -537,10 +529,8 @@ object SimilarityOps {
     }
   }
 
-  /** Eagerly-decided variant of [[annLshAuto]] exposing the chosen
-    * plane count — specs and plan debugging only (it runs the bounded
-    * count at build time; the contract query uses the lazy
-    * guarded-union form above). */
+  /** The LSH regime of [[annLshAuto]], exposing the plane count its
+    * bounded count picks — specs and plan debugging only. */
   private[graft] def annLshAutoChoice(s: SparkSession,
       dir: String): (Int, DataFrame) = {
     val cap = (AutoOccupancy.toLong << AutoPlaneConfigs.last).toInt + 1
@@ -921,7 +911,7 @@ object SimilarityOps {
     * index and its measurement (factored round 10). */
   private def coarseRankArr(
       coarse: Array[(Long, Array[Double], Double)]): Column =
-    sort_array(array(coarse.map { case (cid, cv, cn) =>
+    sort_array(array(coarse.toSeq.map { case (cid, cv, cn) =>
       struct((lit(0.0) - round(dot(col("v"), typedLit(cv.toSeq))
         / (col("norm") * cn), 9)).as("negccos"), lit(cid).as("cid"))
     }: _*))

@@ -340,10 +340,9 @@ object TextOps {
   val IpRe = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
 
   /** Map-side curation columns over any (doc_id, text) relation — the
-    * flag chain `pipeline_curate` ships and the streaming twin
-    * (`StreamingOps.curateStream`) applies UNCHANGED to a stream (it
-    * is a stateless projection): Gopher word-count/stopword rules and
-    * the repetition filter as a first-failing `map_drop` reason, the
+    * flag chain `pipeline_curate` ships, a stateless projection: Gopher
+    * word-count/stopword rules and the repetition filter as a
+    * first-failing `map_drop` reason, the
     * doc's distinct decontamination grams, and both assignment hashes.
     * Every expression is verbatim the standalone operator's, so
     * composed and per-operator outputs provably agree. */
@@ -788,56 +787,15 @@ object TextOps {
     (Seq(w0) ++ rounds ++ Seq(sel)).mkString(",\n")
   }
 
-  /** Exact BPE segmentation from the merge RULES: rebuild the word's
-    * spaced symbol string and apply the trained merges in order —
-    * chained literal replaces, map-side, codegen-resident. This is
-    * what a real tokenizer does with UNSEEN words: whatever trained
-    * merges apply, apply; the rest stays characters. */
-  private[graft] def bpeSegment(wordCol: Column,
-      rules: Seq[(String, String)]): Column = {
-    val chars = filter(split(wordCol, ""), c => length(c) > 0)
-    val seq0 = concat(lit(" "), array_join(chars, "  "), lit(" "))
-    rules.foldLeft(seq0) { case (acc, (x, y)) =>
-      call_function("replace", acc, lit(s" $x  $y "), lit(s" $x$y "))
-    }
-  }
-
-  /** RULE-based BPE encode over any documents relation — the
-    * streaming / unseen-input path: every word (in-vocabulary or not)
-    * segments by the trained merge rules, so no document can vanish
-    * through a vocabulary join and n_words is always the true
-    * pre-segmentation token count. (The round-9 self-review found the
-    * vocab-JOIN encode dropping OOV words on streaming input — the
-    * same vanish-through-inner-join class as the driftPsi sentinel
-    * fix.) On the training corpus this is provably identical to the
-    * memoized [[bpeEncodeOf]] fast path (asserted in BpeSpec); the
-    * merge table is bounded (BpeRounds rows), so collecting it into
-    * literals is the same bounded-state pattern as training itself. */
-  private[graft] def bpeEncodeByRules(docs: DataFrame,
-      mergesDf: DataFrame): DataFrame = {
-    val rules = mergesDf.orderBy("round").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    docs
-      .select(col("doc_id"),
-        explode(split(lower(col("text")), " ")).as("word"))
-      .withColumn("n_sub",
-        size(split(trim(bpeSegment(col("word"), rules)), "  ")))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_sub")).as("n_subwords"))
-      .orderBy("doc_id")
-  }
-
   /** Apply a trained BPE vocabulary (the `words` relation of
     * [[bpeTrainOf]]) to a SAME-CORPUS documents relation: one
     * broadcast join of the per-word subword counts against the
     * exploded token stream — the memoized fast path (every word is in
     * the training vocabulary by construction, so the inner join is
-    * total). For input that may contain unseen words — streaming
-    * arrival in particular — use [[bpeEncodeByRules]]: an inner
-    * vocabulary join would silently DROP an OOV word (and a doc of
-    * only OOV words entirely). Fast-path ≡ rule-path on the training
-    * corpus is asserted in BpeSpec. */
+    * total). It is not an encoder for unseen input: the inner
+    * vocabulary join would silently DROP an out-of-vocabulary word
+    * (and a doc of only such words entirely). BpeSpec checks it against
+    * a rule-based encode on the training corpus. */
   private[graft] def bpeEncodeOf(docs: DataFrame,
       words: DataFrame): DataFrame = {
     val vocab = words.select(col("word"),

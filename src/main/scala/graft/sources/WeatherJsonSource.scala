@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.util
-import scala.collection.JavaConverters._
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow

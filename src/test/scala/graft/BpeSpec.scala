@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-checked BPE semantics (graft.operators.TextOps.bpeTrainOf):
@@ -8,6 +10,37 @@ import org.scalatest.funsuite.AnyFunSuite
   * the DuckDB oracle alone can't localize when they break. */
 class BpeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Exact BPE segmentation from the merge RULES: rebuild the word's
+    * spaced symbol string and apply the trained merges in order as
+    * chained literal replaces. Whatever trained merges apply, apply;
+    * the rest stays characters, so an unseen word segments too. */
+  private def bpeSegment(wordCol: Column,
+      rules: Seq[(String, String)]): Column = {
+    val chars = filter(split(wordCol, ""), c => length(c) > 0)
+    val seq0 = concat(lit(" "), array_join(chars, "  "), lit(" "))
+    rules.foldLeft(seq0) { case (acc, (x, y)) =>
+      call_function("replace", acc, lit(s" $x  $y "), lit(s" $x$y "))
+    }
+  }
+
+  /** The rule-based reference encode: every word segments by the
+    * trained merge rules, with no vocabulary join, so n_words is always
+    * the true pre-segmentation token count. */
+  private def bpeEncodeByRules(docs: DataFrame,
+      mergesDf: DataFrame): DataFrame = {
+    val rules = mergesDf.orderBy("round").collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
+    docs
+      .select(col("doc_id"),
+        explode(split(lower(col("text")), " ")).as("word"))
+      .withColumn("n_sub",
+        size(split(trim(bpeSegment(col("word"), rules)), "  ")))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_words"),
+        sum(col("n_sub")).as("n_subwords"))
+      .orderBy("doc_id")
+  }
 
   test("merge sequence matches the hand-computed BPE on a tiny corpus") {
     import spark.implicits._
@@ -49,14 +82,13 @@ class BpeSpec extends AnyFunSuite {
     // merge rules; bpeEncodeOf memoizes it through the trained words
     // relation. On the training corpus (where every word is in-vocab
     // by construction) the two must be IDENTICAL — the equality that
-    // licenses the fast path for the contract query while the
-    // streaming path uses rules (OOV-safe).
+    // licenses the fast path for the contract query.
     val dir = TestSpark.sfDir
     val docs = graft.core.Core.table(spark, dir, "documents")
     val (words, merges) = graft.operators.TextOps.bpeTrainOf(docs)
     val fast = graft.operators.TextOps.bpeEncodeOf(docs, words)
       .collect().map(_.toSeq).toSeq
-    val ruled = graft.operators.TextOps.bpeEncodeByRules(docs, merges)
+    val ruled = bpeEncodeByRules(docs, merges)
       .collect().map(_.toSeq).toSeq
     assert(fast == ruled)
   }
@@ -197,9 +229,9 @@ class BpeSpec extends AnyFunSuite {
     val seqRules = graft.operators.TextOps.bpeTrainOf(docs)._2
     val batRules = graft.operators.TextOps.bpeTrainBatchedOf(docs,
       totalMerges = graft.operators.TextOps.BpeRounds, batchK = 1)._2
-    val a = graft.operators.TextOps.bpeEncodeByRules(docs, seqRules)
+    val a = bpeEncodeByRules(docs, seqRules)
       .collect().map(_.toSeq).toSeq
-    val b = graft.operators.TextOps.bpeEncodeByRules(docs, batRules)
+    val b = bpeEncodeByRules(docs, batRules)
       .collect().map(_.toSeq).toSeq
     assert(a == b && a.nonEmpty)
   }

@@ -77,7 +77,7 @@ class BucketedJoinSpec extends AnyFunSuite {
   private def indexedVsContract(dir: String,
       index: String): (String, Boolean) = {
     val indexed =
-      graft.operators.DedupOps.dedupIncrementalIndexed(spark, dir, index)
+      IngestReference.dedupIncrementalIndexed(spark, dir, index)
     val plan = indexed.queryExecution.executedPlan.toString
     val contract = SparkEntry.queries("dedup_incremental")(spark, dir)
       .collect().map(_.toSeq).toSeq
@@ -224,7 +224,7 @@ class BucketedJoinSpec extends AnyFunSuite {
       val arriving = docs.filter(_._3.drop(3).toInt >= 10).map(_._1)
       val byBranch = scala.collection.mutable.Map.empty[String, Seq[Seq[Any]]]
       forEachBranch { branch =>
-        val df = graft.operators.DedupOps
+        val df = IngestReference
           .dedupIncrementalIndexed(spark, dir, "dedup_idx_edge")
         val plan = df.queryExecution.executedPlan.toString
         if (branch == "probe") assert(!plan.contains("Join"), s"$name:\n$plan")

@@ -830,126 +830,41 @@ class DedupOpsSpec extends AnyFunSuite {
     graft.core.Core.releaseShared()
   }
 
-  test("incremental CC update == full rebuild when a batch bridges two " +
-    "existing clusters") {
-    // corpus: two chain components {0..4} and {10..14}; batch doc 100
-    // BRIDGES them (edges to 4 and 10), batch docs 101-102 form their
-    // own new pair, 103 is isolated. The incremental update must land
-    // every merged doc on the full-rebuild fixpoint label (the global
-    // min doc id), without ever touching corpus x corpus edges.
-    def sym(es: Seq[(Long, Long)]) = es.flatMap(e => Seq(e, e.swap))
-    val corpusNodes = ((0L to 4L) ++ (10L to 14L)).toDF("doc_id")
-    val corpusEdges = sym((0L until 4L).map(i => (i, i + 1)) ++
-      (10L until 14L).map(i => (i, i + 1))).toDF("n", "m")
-    val oldLabels = CcReference.ccFixpoint(corpusNodes, corpusEdges)
-    val batchNodes = Seq(100L, 101L, 102L, 103L).toDF("doc_id")
-    val deltaEdges = sym(Seq((100L, 4L), (100L, 10L), (101L, 102L)))
-      .toDF("n", "m")
-    val got = DedupOps.ccIncrementalUpdate(oldLabels, batchNodes,
-        deltaEdges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = CcReference.ccFixpoint(
-        corpusNodes.unionByName(batchNodes),
-        corpusEdges.unionByName(deltaEdges))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == full, s"incremental $got != rebuild $full")
-    // the bridge actually merged: both old clusters now share label 0
-    assert(got(14L) == 0L && got(100L) == 0L)
-    // the new pair is its own cluster; the isolated doc keeps itself
-    assert(got(102L) == 101L && got(103L) == 103L)
-    graft.core.Core.releaseShared()
-  }
-
-  test("incremental CC update: degenerate deltas (no edges, edge-less " +
-    "batch docs, empty batch)") {
-    // the round-13 touched-subgraph restriction must keep the totality
-    // guarantees: an EMPTY delta edge set leaves every old label
-    // unchanged and labels every batch doc as itself (both via the
-    // coalesce fallbacks — no supernode ever enters the loop)
-    import spark.implicits._
-    val oldLabels = Seq((0L, 0L), (1L, 0L), (7L, 7L)).toDF("doc_id", "cluster")
-    val noEdges = Seq.empty[(Long, Long)].toDF("n", "m")
-    val got1 = DedupOps.ccIncrementalUpdate(oldLabels,
-        Seq(20L, 21L).toDF("doc_id"), noEdges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got1 == Map(0L -> 0L, 1L -> 0L, 7L -> 7L, 20L -> 20L, 21L -> 21L))
-    // empty batch, edges only BETWEEN existing clusters (a late edge
-    // discovery): clusters 0 and 7 merge, no batch rows appear
-    val got2 = DedupOps.ccIncrementalUpdate(oldLabels,
-        Seq.empty[Long].toDF("doc_id"),
-        Seq((0L, 7L), (7L, 0L)).toDF("n", "m"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got2 == Map(0L -> 0L, 1L -> 0L, 7L -> 0L))
-    // a batch doc with edges PLUS one without: only the touched
-    // subgraph loops, the isolated doc still gets its own label row
-    val got3 = DedupOps.ccIncrementalUpdate(oldLabels,
-        Seq(20L, 21L).toDF("doc_id"),
-        Seq((20L, 7L), (7L, 20L)).toDF("n", "m"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got3 == Map(0L -> 0L, 1L -> 0L, 7L -> 7L, 20L -> 7L, 21L -> 21L))
-    graft.core.Core.releaseShared()
-  }
-
-  test("incremental CC update == union-find on random graphs and splits") {
-    // randomized regression net over the contraction argument: random
-    // sparse shuffled-id graphs, random corpus/batch node splits
-    // (batch edges = every edge touching a batch node — the ingest
-    // contract), incremental result must equal min-id union-find over
-    // the full graph
-    val rnd = new scala.util.Random(101)
-    (1 to 3).foreach { _ =>
-      val n = 30 + rnd.nextInt(30)
-      val ids = rnd.shuffle((0L until 2L * n).toList).take(n)
-      val es = (0 until n).flatMap { _ =>
-        val a = ids(rnd.nextInt(n)); val b = ids(rnd.nextInt(n))
-        if (a == b) Nil else Seq((a, b), (b, a))
+  test("the CC loop never flips AQE on the caller's session while " +
+    "pipeline_dedup builds and collects") {
+    // ccPsLoop runs its segments with AQE off in a CLONED session; a
+    // concurrent observer of THIS session's conf must never see the
+    // flip. Poll every ms across the whole build and collect.
+    val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val flips = new java.util.concurrent.atomic.AtomicInteger(0)
+    val polls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() => {
+      while (!done.get()) {
+        polls.incrementAndGet()
+        if (spark.conf.get("spark.sql.adaptive.enabled") != "true")
+          flips.incrementAndGet()
+        Thread.sleep(1)
       }
-      val batchSet = ids.filter(_ => rnd.nextBoolean()).toSet
-      val corpusIds = ids.filterNot(batchSet)
-      val corpusEdges = es.filter(e => !batchSet(e._1) && !batchSet(e._2))
-      val deltaEdges = es.filter(e => batchSet(e._1) || batchSet(e._2))
-      val oldLabels = CcReference.ccFixpoint(corpusIds.toDF("doc_id"),
-        corpusEdges.toDF("n", "m"))
-      val got = DedupOps.ccIncrementalUpdate(oldLabels,
-          batchSet.toSeq.toDF("doc_id"), deltaEdges.toDF("n", "m"),
-          maxPairs = 32)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
-      def find(x: Long): Long = {
-        var r = x; while (parent(r) != r) r = parent(r); r
+    })
+    poller.setDaemon(true)
+    poller.start()
+    try {
+      val rows = SparkEntry.queries("pipeline_dedup")(spark, TestSpark.sfDir)
+        .collect()
+      assert(rows.nonEmpty)
+    } finally {
+      done.set(true)
+      poller.join(2000)
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
+        case None => spark.conf.unset("spark.sql.adaptive.enabled")
       }
-      for ((a, b) <- es) {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = ids.groupBy(find).flatMap { case (_, ms) =>
-        val m = ms.min; ms.map(_ -> m)
-      }.toMap
-      assert(got == want, s"incremental != union-find on ids $ids")
+      graft.core.Core.releaseShared()
     }
-    graft.core.Core.releaseShared()
-  }
-
-  test("incremental SimHash delta edges reach every cross-corpus " +
-    "component a full rebuild finds") {
-    // end-to-end on the gate corpus: split docs into 'corpus' (even
-    // doc_id) and 'batch' (odd), compute old labels over corpus-only
-    // star edges, fold in incrementalSimhashDelta — final components
-    // must equal the full-graph fixpoint over ALL docs' edges
-    val sk = DedupOps.simhash64Sketches(spark, TestSpark.sfDir)
-    val corpusSk = sk.filter(col("doc_id") % 2 === 0)
-    val batchSk = sk.filter(col("doc_id") % 2 === 1)
-    val oldLabels = CcReference.ccFixpoint(corpusSk.select("doc_id"),
-      DedupOps.edgesFromSketches(corpusSk))
-    val got = DedupOps.ccIncrementalUpdate(oldLabels,
-        batchSk.select("doc_id"),
-        DedupOps.incrementalSimhashDelta(corpusSk, batchSk),
-        maxPairs = 32)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = CcReference.ccFixpoint(sk.select("doc_id"),
-        DedupOps.edgesFromSketches(sk))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == full)
-    graft.core.Core.releaseShared()
+    assert(polls.get() > 50, s"poller only sampled ${polls.get()} times")
+    assert(flips.get() == 0,
+      s"caller session observed AQE off ${flips.get()}/${polls.get()} polls")
   }
 }

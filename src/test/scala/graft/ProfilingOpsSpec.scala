@@ -45,7 +45,8 @@ class ProfilingOpsSpec extends AnyFunSuite {
 
   test("profileTableApprox: same profile minus the Expand, distincts within 5%") {
     val exact = SparkEntry.queries("profile_table")(spark, dir)
-    val approx = graft.operators.RelationalOps.profileTableApprox(spark, dir)
+    val approx = graft.operators.RelationalOps.profileTableWith(spark, dir,
+      c => approx_count_distinct(c, rsd = 0.02))
     // the exact form pays the multi-distinct Expand; the HLL form must
     // NOT — that plan difference IS the 100 TB argument
     assert(exact.queryExecution.executedPlan.toString.contains("Expand"))
@@ -91,7 +92,8 @@ class ProfilingOpsSpec extends AnyFunSuite {
     // the scaled-table profile carries the same Expand-vs-HLL plan
     // contrast as profile_table
     val exact = SparkEntry.queries("profile_docs")(spark, dir)
-    val approx = graft.operators.RelationalOps.profileDocsApprox(spark, dir)
+    val approx = graft.operators.RelationalOps.profileDocsWith(spark, dir,
+      c => approx_count_distinct(c, rsd = 0.02))
     assert(exact.queryExecution.executedPlan.toString.contains("Expand"))
     assert(!approx.queryExecution.executedPlan.toString.contains("Expand"))
     val a = approx.collect().map(r => r.getString(1) -> r.getLong(3)).toMap
