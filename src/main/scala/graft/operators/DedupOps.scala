@@ -315,72 +315,65 @@ object DedupOps {
       .orderBy("a_id", "b_id")
   }
 
+  /** Documents in the df-skew sample ([[dfSkewOf]]): a plan-choice
+    * statistic in the spirit of AQE's runtime stats, never
+    * corpus-scaled. */
+  val DfSkewSampleDocs = 2048
+
+  /** Below this df skew the prefix join pays ([[prefixJoinPays]]):
+    * Zipf-like vocabularies score near 0, uniform ones near 1 (the
+    * contract corpora's sample reads 0.94-0.98). */
+  val DfSkewPrefixBelow = 0.2
+
   /** The df-skew statistic of [[dedupNearAuto]] and
-    * [[txtContainmentAuto]], evaluated EAGERLY as one bounded job:
-    * median(df)/max(df) over a `sampleDocs` corpus sample — None when
-    * the sample is empty. The [[SimilarityOps.routedK]] eager
-    * bounded-stat convention (LazinessSpec-exempted: a 2048-doc sample,
-    * never corpus-scaled), so a query's plan holds only the branch it
-    * runs. */
-  private def dfSkewOf(s: SparkSession, dir: String,
-      sampleDocs: Int): Option[Double] = {
+    * [[txtContainmentAuto]]: median(df)/max(df) over the distinct
+    * lower-cased space-split tokens of the first [[DfSkewSampleDocs]]
+    * documents, None when the sample holds no token (an empty table, or
+    * only null texts). Its one bounded job is the sample's `head`,
+    * which also tokenizes; the document frequencies, the median and the
+    * max fold on the driver. The median is the lower one, at rank
+    * ⌈n/2⌉ of the n sorted frequencies: the value
+    * `percentile_approx(df, 0.5, 10000)` returns while its summary is
+    * exact, below 5,000 distinct sample tokens (past that the SQL form
+    * may answer a neighbouring rank). Evaluated eagerly, so a query's
+    * plan holds only the branch it runs. */
+  private[graft] def dfSkewOf(s: SparkSession, dir: String)
+      : Option[Double] = {
     // the sample is a top-level `head` (CollectLimitExec, which is not
     // code-generated) rather than a `limit` inside the plan: Spark names
     // each generated limit's counter from a JVM-global sequence, so a
     // mid-plan limit compiled a class no earlier call had compiled
-    val docs = table(s, dir, "documents").select("text")
-    val r = s.createDataFrame(
-        java.util.Arrays.asList(docs.head(sampleDocs).toSeq: _*),
-        docs.schema)
-      .select(explode(array_distinct(split(lower(col("text")), " ")))
-        .as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("df"))
-      .agg(expr("percentile_approx(df, 0.5, 10000)")
-        .cast(DoubleType).as("med"),
-        max(col("df")).cast(DoubleType).as("mx"))
-      .head()
-    if (r.isNullAt(0) || r.isNullAt(1)) None
-    else Some(r.getDouble(0) / r.getDouble(1))
+    val df = table(s, dir, "documents")
+      .select(array_distinct(split(lower(col("text")), " ")))
+      .head(DfSkewSampleDocs)
+      .filterNot(_.isNullAt(0)).flatMap(_.getSeq[String](0))
+      .groupMapReduce(identity)(_ => 1L)(_ + _).values.toArray.sorted
+    if (df.isEmpty) None
+    else Some(df((df.length - 1) / 2).toDouble / df.last)
   }
+
+  /** The df-skew rule of [[dedupNearAuto]] and [[txtContainmentAuto]]:
+    * prefix filtering (AllPairs/PPJoin) pays exactly when token document
+    * frequency is SKEWED — rare tokens then anchor selective prefixes
+    * and the candidate join shrinks superlinearly. On a dense corpus
+    * where every token is ubiquitous (df uniform and high) the prefix
+    * keeps a constant fraction of every doc, pruning little, and the
+    * plain count-join avoids the df-ranking window, candidate distinct
+    * and verify passes it would pay for nothing. An empty sample routes
+    * to the count join, whose result is empty there anyway. */
+  private[graft] def prefixJoinPays(skew: Option[Double]): Boolean =
+    skew.exists(_ < DfSkewPrefixBelow)
 
   /** Near-dup pairs with the count-join vs prefix-join choice CODIFIED
-    * (the BENCH_NOTES round-3 prose rule as code).
-    *
-    * Decision rule: prefix filtering (AllPairs/PPJoin) pays exactly
-    * when token document frequency is SKEWED — rare tokens then anchor
-    * selective prefixes and the candidate join shrinks superlinearly.
-    * On a dense corpus where every token is ubiquitous (df uniform and
-    * high) the prefix keeps a constant fraction of every doc, pruning
-    * little, and the plain count-join avoids the df-ranking window,
-    * candidate distinct and verify passes it would pay for nothing.
-    *
-    * The statistic: median(df) / max(df) over a bounded corpus sample
-    * (`sampleDocs` docs, default 2048) — a plan-choice statistic in the
-    * spirit of AQE's runtime stats, never corpus-scaled. Zipf-like
-    * vocabularies score near 0, uniform ones near 1; below `skewBelow`
-    * the prefix branch is chosen. Both branches emit the IDENTICAL
-    * result set (same oracle SQL; asserted in DedupOpsSpec on a uniform
-    * AND a skewed corpus), so the choice is pure planning, made eagerly
-    * by [[dfSkewOf]]. */
-  def dedupNearAuto(s: SparkSession, dir: String, sampleDocs: Int = 2048,
-      skewBelow: Double = 0.2): DataFrame = {
-    // the skewed-df regime is exactly where the PPJoin rank bound
-    // prunes superlinearly, so that regime routes to the prefix branch;
-    // an empty corpus sample routes to the count branch, whose result
-    // is empty there anyway.
-    if (dfSkewOf(s, dir, sampleDocs).exists(_ < skewBelow))
+    * (the BENCH_NOTES round-3 prose rule as code): [[prefixJoinPays]]
+    * over [[dfSkewOf]], decided eagerly. Both branches emit the
+    * IDENTICAL result set (same oracle SQL; asserted in DedupOpsSpec on
+    * a uniform AND a skewed corpus, and in RandomizedParitySpec on
+    * adversarial ones), so the choice is pure planning. */
+  def dedupNearAuto(s: SparkSession, dir: String): DataFrame =
+    if (prefixJoinPays(dfSkewOf(s, dir)))
       dedupNearPrefix(s, dir, positional = true)
     else dedupNearRelational(s, dir)
-  }
-
-  /** [[dedupNearAuto]] also exposing which branch the skew statistic
-    * picks — specs and plan debugging. */
-  private[graft] def dedupNearAutoChoice(s: SparkSession, dir: String,
-      sampleDocs: Int = 2048,
-      skewBelow: Double = 0.2): (String, DataFrame) =
-    if (dfSkewOf(s, dir, sampleDocs).exists(_ < skewBelow))
-      ("prefix", dedupNearPrefix(s, dir, positional = true))
-    else ("count", dedupNearRelational(s, dir))
 
   /** Bitmask fast path for dedup_near: dictionary-encode each token set
     * into ONE long and compute Jaccard as bit_count(a&b)/bit_count(a|b)
@@ -591,10 +584,9 @@ object DedupOps {
     // Adaptive plan choice: a bounded-sample df-skew statistic picks
     // count-join (dense vocabularies — this corpus) or prefix-join
     // (skewed df), result-identical either way, so the oracle is the
-    // same SQL as dedup_near. The choice is deferred INTO the plan
-    // (AQE empty-relation guards — zero jobs at build, LazinessSpec);
-    // see [[dedupNearAuto]], exercised on both corpus shapes in
-    // DedupOpsSpec.
+    // same SQL as dedup_near. The statistic is read eagerly at build,
+    // so the plan holds only the chosen branch; see [[dedupNearAuto]],
+    // exercised on both corpus shapes in DedupOpsSpec.
     "dedup_near_auto" -> { (s, dir) => dedupNearAuto(s, dir) },
 
     // Near-dup pairs on bigram shingles (order-sensitive n-gram
@@ -909,7 +901,7 @@ object DedupOps {
     // blocks: catches subset/boilerplate duplication (doc A nearly
     // contained in B) that symmetric Jaccard misses — e.g. a page vs
     // the page plus navigation chrome. AUTO-ROUTED like dedup_near_auto
-    // (round-5 verdict #2): the same lazy df-skew guard picks the plain
+    // (round-5 verdict #2): the same eager df-skew rule picks the plain
     // count-join on dense corpora (this one — the output IS ~n² rows,
     // pruning can't help) or the A-side prefix variant on skewed-df
     // corpora, where SCALE.md measured the count-join at 73x DENSE
@@ -1185,30 +1177,18 @@ object DedupOps {
   }
 
   /** Directional containment with the count-join vs prefix-join choice
-    * CODIFIED, exactly like [[dedupNearAuto]]: the same eager bounded
-    * df-skew statistic ([[dfSkewOf]]) picks one branch, so the plan
-    * holds only that branch, and both branches emit the IDENTICAL
-    * result set (same oracle SQL — asserted in DedupOpsSpec on a dense
-    * AND a skewed corpus). docs/SCALE.md measured why this routing
-    * matters: on the DENSE 10x corpus the count-join grew 73x (388.6 s) while
-    * the prefix variant's candidate work stays anchored to rare-token
-    * prefixes — on a df-skewed real corpus the operator must make that
-    * measured-right choice itself. */
-  def txtContainmentAuto(s: SparkSession, dir: String,
-      threshold: Double = 0.9, sampleDocs: Int = 2048,
-      skewBelow: Double = 0.2): DataFrame =
-    if (dfSkewOf(s, dir, sampleDocs).exists(_ < skewBelow))
-      txtContainmentPrefix(s, dir, threshold)
-    else txtContainmentCount(s, dir, threshold)
-
-  /** [[txtContainmentAuto]] also exposing which branch the skew
-    * statistic picks — specs and plan debugging. */
-  private[graft] def txtContainmentAutoChoice(s: SparkSession, dir: String,
-      threshold: Double = 0.9, sampleDocs: Int = 2048,
-      skewBelow: Double = 0.2): (String, DataFrame) =
-    if (dfSkewOf(s, dir, sampleDocs).exists(_ < skewBelow))
-      ("prefix", txtContainmentPrefix(s, dir, threshold))
-    else ("count", txtContainmentCount(s, dir, threshold))
+    * CODIFIED, exactly like [[dedupNearAuto]]: [[prefixJoinPays]] over
+    * [[dfSkewOf]] picks one branch, so the plan holds only that branch,
+    * and both branches emit the IDENTICAL result set at the builders'
+    * threshold 0.9 (same oracle SQL — asserted in DedupOpsSpec on a
+    * dense AND a skewed corpus). docs/SCALE.md measured why this
+    * routing matters: on the DENSE 10x corpus the count-join grew 73x
+    * (388.6 s) while the prefix variant's candidate work stays anchored
+    * to rare-token prefixes — on a df-skewed real corpus the operator
+    * must make that measured-right choice itself. */
+  def txtContainmentAuto(s: SparkSession, dir: String): DataFrame =
+    if (prefixJoinPays(dfSkewOf(s, dir))) txtContainmentPrefix(s, dir)
+    else txtContainmentCount(s, dir)
 
   /** Directional token containment |A∩B|/|A| >= `threshold` within
     * `source` blocks, with an A-side prefix filter: order tokens
@@ -1496,9 +1476,8 @@ object DedupOps {
     * surviving pair exactly once WITHOUT an aggregation. Returns
     * (a_id, b_id, a_sh, b_sh, hamming); both sketches ride along so
     * callers can expand sketch-level pairs to member pairs. */
-  /** The Manku combination-key scheme's bit geometry, shared by the
-    * self-join ([[comboJoin]]) and the two-relation form
-    * ([[comboJoin2]] — the incremental batch×corpus pass). */
+  /** The Manku combination-key scheme's bit geometry of the
+    * self-join [[comboJoin]]. */
   private case class ComboScheme(bits: Int, hammingMax: Int, blocks: Int) {
     require(blocks > hammingMax, "need more blocks than differing bits")
     private val base = bits / blocks
@@ -1555,25 +1534,6 @@ object DedupOps {
       SkewJoin.saltedCandidateJoin(sch.side(d, "a"), sch.side(d, "b"),
           Seq("combo", "kbits"), leftSaltBy = col("a_id"))
         .filter(pred(col("a_id"), col("b_id"))))
-  }
-
-  /** Two-relation combination-key join — the INCREMENTAL candidate
-    * pass: `left` (the arriving batch's sketches) against `right`
-    * (the standing corpus's sketch index), emitting each (left,
-    * right) pair within `hammingMax` exactly once. The corpus side is
-    * exploded to its combo keys exactly as [[comboJoin]] would — at
-    * 100 TB that relation is a PRE-BUILT index read from storage, and
-    * only the delta explodes per ingest (the same asymmetry as
-    * [[buildIncrementalIndex]]). Identical pigeonhole-exactness and
-    * first-agreeing-combination dedup as the self-join. */
-  private[graft] def comboJoin2(left: DataFrame, right: DataFrame,
-      bits: Int, hammingMax: Int, blocks: Int): DataFrame = {
-    val sch = ComboScheme(bits, hammingMax, blocks)
-    sch.verify(
-      SkewJoin.saltedCandidateJoin(
-        sch.side(sch.explodeKeys(left), "a"),
-        sch.side(sch.explodeKeys(right), "b"),
-        Seq("combo", "kbits"), leftSaltBy = col("a_id")))
   }
 
   /** One representative per DISTINCT sketch value: (simhash, rep_id =

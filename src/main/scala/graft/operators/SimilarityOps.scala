@@ -97,6 +97,17 @@ object SimilarityOps {
     SemDedupKConfigs.find(k => n <= k.toLong * k * SemDedupOcc)
       .getOrElse(SemDedupKConfigs.last)
 
+  /** The one statistic every embeddings router reads ([[annLshAuto]],
+    * [[pqTopKAuto]], [[routedK]]): the row count, capped one row past
+    * the largest √n menu boundary (k_max²·occ + 1 = 204,800,001), so
+    * [[boundedCount]] stops the scan there no matter the corpus. Exact
+    * wherever a rule's answer still depends on it: every family and
+    * menu boundary sits at or below the cap. */
+  private[graft] def embeddingsCount(emb: DataFrame): Long = {
+    val kMax = SemDedupKConfigs.last.toLong
+    boundedCount(emb, kMax * kMax * SemDedupOcc + 1)
+  }
+
   /** multimodal_align_filter cosine threshold: the corpus's median
     * vector-to-label-centroid alignment (≈0.15), so both keep and drop
     * decisions appear on the synthetic corpus (production CLIP-score
@@ -496,29 +507,21 @@ object SimilarityOps {
     * the occupancy rule above, codified the way [[DedupOps.dedupNearAuto]]
     * codifies the df-skew rule — and, past the plane menu's ceiling,
     * the FAMILY handoff to routed IVF-rerank ([[annFamilyFor]],
-    * round 15). BOTH decisions ride the same ONE eager bounded count
-    * (optimization round 18): the family count is exact everywhere the
-    * LSH regime can hold (its cap sits far above the plane menu's
-    * 524,288-vector ceiling), so `annFamilyFor`'s `Left(planes)` IS the
-    * occupancy-routed plane choice, and the plan holds only the one
-    * branch that runs: annLsh(autoPlanesFor(n)). Same oracle SQL. */
+    * round 15). BOTH decisions ride the same ONE eager bounded count,
+    * [[embeddingsCount]]: it is exact everywhere the LSH regime can hold
+    * (its cap sits far above the plane menu's 524,288-vector ceiling),
+    * so `annFamilyFor`'s `Left(planes)` IS the occupancy-routed plane
+    * choice, and the plan holds only the one branch that runs:
+    * annLsh(autoPlanesFor(n)). Same oracle SQL. */
   def annLshAuto(s: SparkSession, dir: String,
       topK: Int = AnnTopK, source: Option[DataFrame] = None): DataFrame = {
-    // ONE bounded count decides FAMILY and PLANE COUNT (rounds 15/18):
-    // capped one row past the largest √n menu boundary (204,800,001 —
-    // the same bound [[routedK]] reads; [[boundedCount]] stops the scan
-    // there no matter the corpus), it either picks the occupancy-routed
-    // plane count within the LSH regime or hands off to the routed
-    // IVF-rerank path ([[annFamilyFor]]). Eager-bounded-count routing
-    // is the [[routedK]] convention (LazinessSpec-exempt on the same
-    // grounds: bounded state, never corpus-scaled results); a lazy IVF
-    // arm would carry a dead Lloyd training chain — the measured
-    // +2 s/query dead-branch planning cost that made dedup_semdedup's
-    // routing eager in round 13.
+    // Eager-bounded-count routing is the [[routedK]] convention
+    // (LazinessSpec-exempt on the same grounds: bounded state, never
+    // corpus-scaled results); a lazy IVF arm would carry a dead Lloyd
+    // training chain — the measured +2 s/query dead-branch planning
+    // cost that made dedup_semdedup's routing eager in round 13.
     val emb = source.getOrElse(table(s, dir, "embeddings"))
-    val lastK = SemDedupKConfigs.last
-    val kCap = (lastK.toLong * lastK * SemDedupOcc).toInt + 1
-    annFamilyFor(boundedCount(emb, kCap)) match {
+    annFamilyFor(embeddingsCount(emb)) match {
       case Right(k) =>
         // same determinism rules (9-dp rounding, id tiebreaks), same
         // output shape: `bucket` = the query's own nearest coarse
@@ -527,16 +530,6 @@ object SimilarityOps {
       case Left(p) =>
         annLsh(s, dir, nPlanes = p, topK = topK, source = source)
     }
-  }
-
-  /** The LSH regime of [[annLshAuto]], exposing the plane count its
-    * bounded count picks — specs and plan debugging only. */
-  private[graft] def annLshAutoChoice(s: SparkSession,
-      dir: String): (Int, DataFrame) = {
-    val cap = (AutoOccupancy.toLong << AutoPlaneConfigs.last).toInt + 1
-    val n = boundedCount(table(s, dir, "embeddings"), cap)
-    val p = autoPlanesFor(n)
-    (p, annLsh(s, dir, nPlanes = p))
   }
 
   private def pairs(s: SparkSession, dir: String,
@@ -874,34 +867,35 @@ object SimilarityOps {
   private[graft] val PqFlatMaxVectors: Long = 20000000L
 
   /** The PQ FAMILY decision, as a pure function: flat all-pairs ADC
-    * (Left) within [[PqFlatMaxVectors]], IVF-PQ at the √n-routed
-    * coarse list count (Right) past it. */
-  private[graft] def pqFamilyFor(n: Long): Either[Unit, Int] =
-    if (n <= PqFlatMaxVectors) Left(()) else Right(semDedupKFor(n))
+    * (Left) within `flatMax` vectors, IVF-PQ at the √n-routed coarse
+    * list count (Right) past it. `flatMax` is [[PqFlatMaxVectors]]
+    * everywhere but one spec: [[ivfpqTopK]] trains eagerly, so no
+    * executable spec can reach the IVF-PQ branch through a corpus of
+    * more than 20M rows, and SimilarityOpsSpec lowers the boundary
+    * instead. It must stay below [[embeddingsCount]]'s cap. */
+  private[graft] def pqFamilyFor(n: Long,
+      flatMax: Long = PqFlatMaxVectors): Either[Unit, Int] =
+    if (n <= flatMax) Left(()) else Right(semDedupKFor(n))
 
   /** [[pqTopK]] with the FAMILY derived from a corpus statistic — the
     * `sim_pq_topk` contract query since round 17 (the [[annLshAuto]]
     * handoff convention, r16 verdict #3: the ≥10⁸-vector deployment
     * guidance was prose in SCALE.md, now it's the plan the query
-    * builds). ONE eager bounded count (the [[routedK]] convention —
-    * capped one row past the larger of the family boundary and the
-    * √n menu's ceiling, so the scan is bounded no matter the corpus)
-    * either keeps the flat-PQ regime — built EXACTLY as before, so
-    * the contract-scale plan and the DuckDB oracle replay are
-    * untouched — or hands off to [[ivfpqTopK]] at the routed list
-    * count with the same output schema (a_id, rank, b_id, adc_micro).
-    * `flatMax` is parameterized so specs can force the boundary
-    * regime on an executable corpus; contract callers use the
-    * measured default. */
+    * builds). [[pqFamilyFor]] over the one eager bounded count
+    * [[embeddingsCount]] (the [[routedK]] convention) either keeps the
+    * flat-PQ regime — built EXACTLY as before, so the contract-scale
+    * plan and the DuckDB oracle replay are untouched — or hands off to
+    * [[ivfpqTopK]] at the routed list count with the same output
+    * schema (a_id, rank, b_id, adc_micro). `flatMax`: see
+    * [[pqFamilyFor]]. */
   private[graft] def pqTopKAuto(s: SparkSession, dir: String,
       source: Option[DataFrame] = None,
       flatMax: Long = PqFlatMaxVectors): DataFrame = {
     val emb = source.getOrElse(table(s, dir, "embeddings"))
-    val lastK = SemDedupKConfigs.last
-    val kCap = lastK.toLong * lastK * SemDedupOcc
-    val n = boundedCount(emb, math.max(flatMax, kCap) + 1L)
-    if (n <= flatMax) pqTopK(s, dir, Some(emb))
-    else ivfpqTopK(s, dir, Some(emb), ivfK = semDedupKFor(n))
+    pqFamilyFor(embeddingsCount(emb), flatMax) match {
+      case Left(()) => pqTopK(s, dir, Some(emb))
+      case Right(k) => ivfpqTopK(s, dir, Some(emb), ivfK = k)
+    }
   }
 
   /** Per-vector coarse-list ranking as ONE map-side expression over
@@ -966,25 +960,17 @@ object SimilarityOps {
       .orderBy("vec_id")
   }
 
-  /** The routed k, decided by ONE bounded count at build time: the
-    * scan never reads more than one row past the largest menu boundary
-    * (k_max²·occ + 1 = 204,800,001 rows) no matter the corpus. EAGER by
-    * measured design, NOT the [[annLshAuto]] lazy guarded union: each
-    * k branch here carries a FULL Lloyd training chain — the most
-    * plan-heavy subtree in the library — and the 4-branch lazy union
-    * measured +2.2 s (`dedup_semdedup`) / +2.0 s (`sim_ann_ivf_rerank`
-    * vs `sim_ivf_knn`) per query at sf0.1 purely from dead-branch
-    * planning, where annLsh's branches are one map-side projection
-    * each (its lazy union stays). The count is the same bounded stat
-    * the lazy guard would read, evaluated once — the MLlib
-    * iterative-estimator pattern `sim_ivfpq_topk` already carries,
-    * LazinessSpec-exempted on the same grounds (bounded state, never
-    * corpus-scaled results). */
-  private def routedK(s: SparkSession, dir: String): Int = {
-    val lastK = SemDedupKConfigs.last
-    val cap = (lastK.toLong * lastK * SemDedupOcc).toInt + 1
-    semDedupKFor(boundedCount(table(s, dir, "embeddings"), cap))
-  }
+  /** The routed k: [[semDedupKFor]] over the one eager bounded count
+    * [[embeddingsCount]], decided at build time. EAGER by measured
+    * design: each k branch here carries a FULL Lloyd training chain —
+    * the most plan-heavy subtree in the library — and a 4-branch lazy
+    * guarded union measured +2.2 s (`dedup_semdedup`) / +2.0 s
+    * (`sim_ann_ivf_rerank` vs `sim_ivf_knn`) per query at sf0.1 purely
+    * from dead-branch planning. The MLlib iterative-estimator pattern
+    * `sim_ivfpq_topk` already carries, LazinessSpec-exempted on the
+    * same grounds (bounded state, never corpus-scaled results). */
+  private def routedK(s: SparkSession, dir: String): Int =
+    semDedupKFor(embeddingsCount(table(s, dir, "embeddings")))
 
   /** [[semDedup]] with the cluster count DERIVED from the corpus — the
     * contract `dedup_semdedup` since round 13 (round-12 verdict #2:
@@ -1072,13 +1058,6 @@ object SimilarityOps {
     * (SimilarityOpsSpec); eager bounded-count routing ([[routedK]]). */
   def ivfKnnAuto(s: SparkSession, dir: String): DataFrame =
     ivfKnn(s, dir, routedK(s, dir))
-
-  /** [[semDedupAuto]] also exposing the chosen k, for the specs. */
-  private[graft] def semDedupAutoChoice(s: SparkSession,
-      dir: String): (Int, DataFrame) = {
-    val k = routedK(s, dir)
-    (k, semDedup(s, dir, k))
-  }
 
   private[graft] def ivfpqTopK(s: SparkSession, dir: String,
       source: Option[DataFrame] = None, nprobe: Int = IvfNprobe,
@@ -1410,9 +1389,9 @@ object SimilarityOps {
     // The oracle replays the margin-ranked probe set. See [[annLsh]].
     "sim_ann_lsh_qd" -> { (s, dir) => annLsh(s, dir, probePlanes = 3) },
 
-    // Plane count derived from the corpus (occupancy rule): a bounded
-    // one-row count stat routes between the discrete plane configs via
-    // the same lazy guarded-union pattern as dedup_near_auto — at the
+    // Plane count derived from the corpus (occupancy rule): one eager
+    // bounded count routes between the discrete plane configs (and past
+    // the menu's ceiling to IVF-rerank) — at the
     // sf0.01/sf0.1 corpus sizes the rule lands on the contract's 8
     // planes (same oracle); at sf1's 8,000 vectors it picks 10. See
     // [[annLshAuto]].

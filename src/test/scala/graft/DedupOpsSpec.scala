@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{DedupOps, RelationalOps}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -290,41 +291,30 @@ class DedupOpsSpec extends AnyFunSuite {
 
   test("txtContainmentAuto: df-skew rule picks count on dense, prefix on " +
     "skewed; branches result-identical on both corpora") {
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     // Dense contract corpus: uniform vocabulary df, skew ~ 1 — the
     // count-join branch is optimal (output is ~n² rows; pruning can't
-    // beat the output lower bound).
-    val (denseBranch, denseDf) =
-      DedupOps.txtContainmentAutoChoice(spark, TestSpark.sfDir)
-    assert(denseBranch == "count", s"dense corpus chose $denseBranch")
-    val denseRows = denseDf.collect().map(_.toSeq).toSeq
+    // beat the output lower bound). The rule picks it, and the router's
+    // plan is that branch's plan.
+    val sf = TestSpark.sfDir
+    assert(!DedupOps.prefixJoinPays(DedupOps.dfSkewOf(spark, sf)))
+    val dense = DedupOps.txtContainmentAuto(spark, sf)
+    assert(dense.sameSemantics(DedupOps.txtContainmentCount(spark, sf)))
+    assert(!dense.sameSemantics(DedupOps.txtContainmentPrefix(spark, sf)))
+    val denseRows = rows(dense)
     assert(denseRows.nonEmpty)
-    // the lazy contract form (guarded union, zero jobs at build) makes
-    // the same choice at RUNTIME: identical rows
-    assert(DedupOps.txtContainmentAuto(spark, TestSpark.sfDir)
-      .collect().map(_.toSeq).toSeq == denseRows)
+    assert(rows(DedupOps.txtContainmentPrefix(spark, sf)) == denseRows)
 
-    // Skewed corpus: one hot token in EVERY doc; doc 0 is fully
-    // contained in doc 1 (plus one extra token) via rare tokens — the
-    // prefix filter's home turf (the hot token never anchors a prefix).
-    val dir = java.nio.file.Files.createTempDirectory("graft_cskew").toString
-    import spark.implicits._
-    val docs = (0 until 80).map { i =>
-      val text =
-        if (i == 0) "hot a0 b0 c0 d0"
-        else if (i == 1) "hot a0 b0 c0 d0 e0"
-        else s"hot u$i v$i w$i x$i"
-      (i.toLong, text, "en", "web", 0L)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val (skewBranch, skewDf) = DedupOps.txtContainmentAutoChoice(spark, dir)
-    assert(skewBranch == "prefix", s"skewed corpus chose $skewBranch")
-    val skewRows = skewDf.collect().map(_.toSeq).toSeq
+    // Skewed corpus: doc 0 is fully contained in doc 1 (plus one extra
+    // token) via rare tokens.
+    val dir = ScaleData.hotTokenDir(spark, "hot a0 b0 c0 d0 e0")
+    assert(DedupOps.prefixJoinPays(DedupOps.dfSkewOf(spark, dir)))
+    val skew = DedupOps.txtContainmentAuto(spark, dir)
+    assert(skew.sameSemantics(DedupOps.txtContainmentPrefix(spark, dir)))
+    assert(!skew.sameSemantics(DedupOps.txtContainmentCount(spark, dir)))
+    val skewRows = rows(skew)
     // result-identical to the count-join branch on the same corpus
-    assert(skewRows ==
-      DedupOps.txtContainmentCount(spark, dir).collect().map(_.toSeq).toSeq)
-    // lazy contract form routes to the prefix regime here too
-    assert(DedupOps.txtContainmentAuto(spark, dir)
-      .collect().map(_.toSeq).toSeq == skewRows)
+    assert(skewRows == rows(DedupOps.txtContainmentCount(spark, dir)))
     // exactly the genuine containment: doc 0's 5 tokens all inside
     // doc 1 (containment 1.0); the reverse direction is 5/6 < 0.9 and
     // the hot token alone is 1/5 per pair
@@ -529,40 +519,29 @@ class DedupOpsSpec extends AnyFunSuite {
 
   test("dedupNearAuto: df-skew rule picks count on uniform, prefix on " +
     "skewed; branches result-identical on both corpora") {
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     // Uniform contract corpus: every token is vocabulary-frequent, so
-    // median(df)/max(df) ~ 1 and the count-join branch wins.
-    val (uniformBranch, uniformDf) =
-      DedupOps.dedupNearAutoChoice(spark, TestSpark.sfDir)
-    assert(uniformBranch == "count", s"uniform corpus chose $uniformBranch")
-    val uniformRows = uniformDf.collect().map(_.toSeq).toSeq
-    assert(uniformRows ==
-      DedupOps.dedupNearPrefix(spark, TestSpark.sfDir)
-        .collect().map(_.toSeq).toSeq)
+    // median(df)/max(df) ~ 1, the rule picks the count join, and the
+    // router's plan is that branch's plan.
+    val sf = TestSpark.sfDir
+    assert(!DedupOps.prefixJoinPays(DedupOps.dfSkewOf(spark, sf)))
+    val uniform = DedupOps.dedupNearAuto(spark, sf)
+    assert(uniform.sameSemantics(DedupOps.dedupNearRelational(spark, sf)))
+    assert(!uniform.sameSemantics(
+      DedupOps.dedupNearPrefix(spark, sf, positional = true)))
+    val uniformRows = rows(uniform)
+    assert(uniformRows == rows(DedupOps.dedupNearPrefix(spark, sf)))
     assert(uniformRows.nonEmpty)
-    // the lazy contract form (guarded union, zero jobs at build —
-    // LazinessSpec) makes the same choice at RUNTIME: identical rows
-    assert(DedupOps.dedupNearAuto(spark, TestSpark.sfDir)
-      .collect().map(_.toSeq).toSeq == uniformRows)
 
-    // Skewed corpus: one hot token in EVERY doc, rare tokens anchoring
-    // the one true near-dup pair — the prefix filter's home turf.
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
-    val docs = (0 until 80).map { i =>
-      val text =
-        if (i == 0) "hot a0 b0 c0 d0"
-        else if (i == 1) "hot a0 b0 c0 e0"
-        else s"hot u$i v$i w$i x$i"
-      (i.toLong, text, "en", "web", 0L)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val (skewBranch, skewDf) = DedupOps.dedupNearAutoChoice(spark, dir)
-    assert(skewBranch == "prefix", s"skewed corpus chose $skewBranch")
-    val skewRows = skewDf.collect().map(_.toSeq).toSeq
-    assert(skewRows ==
-      DedupOps.dedupNearRelational(spark, dir).collect().map(_.toSeq).toSeq)
-    // lazy contract form routes to the prefix regime on this corpus too
-    assert(DedupOps.dedupNearAuto(spark, dir)
-      .collect().map(_.toSeq).toSeq == skewRows)
+    // Skewed corpus: rare tokens anchor the one true near-dup pair.
+    val dir = ScaleData.hotTokenDir(spark, "hot a0 b0 c0 e0")
+    assert(DedupOps.prefixJoinPays(DedupOps.dfSkewOf(spark, dir)))
+    val skew = DedupOps.dedupNearAuto(spark, dir)
+    assert(skew.sameSemantics(
+      DedupOps.dedupNearPrefix(spark, dir, positional = true)))
+    assert(!skew.sameSemantics(DedupOps.dedupNearRelational(spark, dir)))
+    val skewRows = rows(skew)
+    assert(skewRows == rows(DedupOps.dedupNearRelational(spark, dir)))
     // only the genuinely-similar pair qualifies (jaccard 4/6)
     assert(skewRows.map(r => (r.head, r(1))) == Seq((0L, 1L)))
 
@@ -710,32 +689,6 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(got == simulate(ids, es, segments))
     assert(got == simulate(ids, es, 32), "post-fixpoint pairs moved labels")
     assert(got == componentMin)
-    graft.core.Core.releaseShared()
-  }
-
-  test("comboJoin2 emits exactly the cross pairs of the self-join") {
-    // the two-relation (batch x corpus) form must surface exactly the
-    // left-right pairs the self-join over the union finds — no
-    // within-side pairs, no misses, each pair once
-    val rnd = new scala.util.Random(17)
-    val centers = Seq.fill(6)(rnd.nextLong() & ((1L << 62) - 1))
-    def jitter(c: Long) =
-      (0 until rnd.nextInt(4)).foldLeft(c)((s, _) => s ^ (1L << rnd.nextInt(62)))
-    val left = (0L until 60L).map(i =>
-      (i, jitter(centers(rnd.nextInt(centers.size)))))
-    val right = (1000L until 1120L).map(i =>
-      (i, jitter(centers(rnd.nextInt(centers.size)))))
-    val got = DedupOps.comboJoin2(left.toDF("doc_id", "simhash"),
-        right.toDF("doc_id", "simhash"),
-        bits = 62, hammingMax = 3, blocks = DedupOps.Simhash64Blocks)
-      .select("a_id", "b_id", "hamming")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    val want = for {
-      (ia, sa) <- left; (ib, sb) <- right
-      h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
-    } yield (ia, ib, h)
-    assert(got.length == got.distinct.length, "duplicate cross pairs")
-    assert(got.toSet == want.toSet)
     graft.core.Core.releaseShared()
   }
 

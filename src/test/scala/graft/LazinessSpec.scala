@@ -41,9 +41,8 @@ class LazinessSpec extends AnyFunSuite {
     // sf0.1 because each dead branch carries a full Lloyd chain.
     // sim_ann_lsh_auto (round 15): the LSH->IVF FAMILY handoff runs
     // the same bounded count at build (annFamilyFor) — a lazy IVF arm
-    // would carry a dead Lloyd chain into every LSH-regime plan. The
-    // LSH-regime plan it returns below the ceiling is the same lazy
-    // guarded union as before.
+    // would carry a dead Lloyd chain into every LSH-regime plan. Below
+    // the ceiling it returns annLsh's plan at the routed plane count.
     // curate family (round 16): the fused-curate cache is SIZE-GATED
     // by one bounded count at build (TextOps.CurateFuseMaxDocs — the
     // scan never reads past 2M+1 rows): below the gate the pass
@@ -67,12 +66,11 @@ class LazinessSpec extends AnyFunSuite {
     // former lazy plans carried the full nested training lineage into
     // every consumer stage (1,137-line formatted plans, 2-3 MiB task
     // binaries — OPTIMIZATION_r18.md).
-    // Round 18 also moves the df-skew routing (dedup_near_auto /
-    // txt_containment) to the same eager bounded-stat convention: the
-    // statistic is a 2048-doc sample aggregate, and the former lazy
-    // guarded union carried the DEAD branch's full plan (df-ranking
-    // window + salted candidate join + verify passes, 924/866
-    // formatted lines) through every execution.
+    // dedup_near_auto / txt_containment: the df-skew rule reads its
+    // statistic at build from one bounded 2048-doc sample job
+    // (DedupOps.dfSkewOf), so the plan holds only the branch it runs —
+    // a plan holding both carried the dead branch's df-ranking window,
+    // salted candidate join and verify passes through every execution.
     val exempt = Set("txt_bpe_vocab", "txt_bpe_vocab64", "txt_bpe_encode",
       "sim_pq_topk",
       "sim_ivfpq_topk", "dedup_semdedup", "sim_ann_ivf_rerank",

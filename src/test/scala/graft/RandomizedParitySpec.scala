@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.DedupOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * must hold on ANY corpus, not just the driver testdata. Three seeded
   * synthetic corpora stress the edge cases the real corpus doesn't:
   * singleton-token docs, exact duplicates, disjoint docs, skewed token
-  * frequencies. */
+  * frequencies. Adversarial corpora (empty, one document, identical,
+  * null and empty texts, unicode, a hub token) hold the df-skew
+  * routers' branches to one answer and their statistic to its SQL
+  * form. */
 class RandomizedParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -44,19 +48,94 @@ class RandomizedParitySpec extends AnyFunSuite {
     dir
   }
 
+  /** Documents in the hub corpus below: its hub token's document
+    * frequency. The count-join branches pair every two of them on the
+    * hub (about 500k candidate pairs), which keeps the corpus inside
+    * the tier-1 time budget. */
+  private val HubDocs = 1000
+
+  /** Adversarial corpora for the df-skew routers' branches, each with
+    * the branch the rule must pick (true: the prefix join). */
+  private lazy val adversarial: Seq[(String, String, Boolean)] = {
+    def docs(texts: Seq[String]) = ScaleData.documentsDir(spark, texts)
+    Seq(
+      ("empty", docs(Nil), false),
+      ("one document", docs(Seq("a lone document")), false),
+      ("all identical", docs(Seq.fill(30)("the same words in every doc")),
+        false),
+      // "" and " " split to the empty token, "a  b c" carries one too
+      ("null and empty texts", docs(Seq(null, "", "a b c", null, "",
+        "a b c", " ", "a  b c", "x y", null)), false),
+      ("unicode-heavy", docs(Seq(
+        "café naïve résumé über straße", "café naïve résumé über strasse",
+        "日本語のトークン 中文分词 한국어", "日本語のトークン 中文分词 한국어 追加",
+        "emoji 😀😁 mixed🎉token plain", "emoji 😀😁 mixed🎉token",
+        "😀 😀😀 x😀 😀x", "ÉCOLE École école", "ǅ ǆ Ǆ",
+        "İstanbul ISTANBUL istanbul")), false),
+      // pairs (2j, 2j+1) share the hub and two tokens: Jaccard exactly
+      // 0.6; every tenth doc drops its own token, so it is contained
+      // in its partner
+      (s"hub token in all $HubDocs docs", docs((0 until HubDocs).map { i =>
+        val shared = s"hub a${i / 2} b${i / 2}"
+        if (i % 10 == 0) shared else s"$shared c$i"
+      }), true))
+  }
+
   test("prefix-filtered join == unfiltered join on random corpora " +
     "(with and without the positional rank bound)") {
-    for (seed <- Seq(1, 2, 3)) {
-      val dir = corpus(seed, n = 60, vocab = 40)
-      val full = DedupOps.dedupNearRelational(spark, dir)
-        .collect().map(_.toSeq).toSeq
-      val pref = DedupOps.dedupNearPrefix(spark, dir)
-        .collect().map(_.toSeq).toSeq
-      assert(pref == full, s"seed=$seed")
-      val positional = DedupOps.dedupNearPrefix(spark, dir, positional = true)
-        .collect().map(_.toSeq).toSeq
-      assert(positional == full, s"seed=$seed (positional)")
-      assert(full.nonEmpty, s"seed=$seed produced no pairs — weak test")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    // the seeded corpora's 40-word vocabularies read a df skew of
+    // 0.25-0.57, above the prefix bound: the rule picks the count join
+    val seeded = Seq(1, 2, 3).map(seed =>
+      (s"seed=$seed", corpus(seed, n = 60, vocab = 40), false))
+    for ((name, dir, prefixPicked) <- seeded ++ adversarial) {
+      val full = rows(DedupOps.dedupNearRelational(spark, dir))
+      assert(rows(DedupOps.dedupNearPrefix(spark, dir)) == full, name)
+      assert(rows(DedupOps.dedupNearPrefix(spark, dir, positional = true))
+        == full, s"$name (positional)")
+      val contained = rows(DedupOps.txtContainmentCount(spark, dir))
+      assert(rows(DedupOps.txtContainmentPrefix(spark, dir)) == contained,
+        s"$name (containment)")
+      val prefix = DedupOps.prefixJoinPays(DedupOps.dfSkewOf(spark, dir))
+      info(s"$name: ${full.size} near pairs, ${contained.size} contained " +
+        s"pairs; the rule picks ${if (prefix) "prefix" else "count"}")
+      assert(prefix == prefixPicked, s"$name branch")
+      if (name.startsWith("seed"))
+        assert(full.nonEmpty, s"$name produced no pairs — weak test")
+    }
+  }
+
+  test("dfSkewOf's driver fold == percentile_approx(df, 0.5, 10000) / " +
+    "max(df) over the same sample") {
+    // the reference: the statistic in Spark SQL over the collected
+    // sample, as the routers computed it before the driver fold
+    def sqlSkew(dir: String): Option[Double] = {
+      val docs = graft.core.Core.table(spark, dir, "documents").select("text")
+      val r = spark.createDataFrame(java.util.Arrays.asList(
+          docs.head(DedupOps.DfSkewSampleDocs).toSeq: _*), docs.schema)
+        .select(explode(array_distinct(split(lower(col("text")), " ")))
+          .as("tok"))
+        .groupBy("tok").agg(count(lit(1)).as("df"))
+        .agg(expr("percentile_approx(df, 0.5, 10000)").cast("double"),
+          max(col("df")).cast("double"))
+        .head()
+      if (r.isNullAt(0) || r.isNullAt(1)) None
+      else Some(r.getDouble(0) / r.getDouble(1))
+    }
+    val corpora = Seq("sf0.001" -> TestSpark.sfDir,
+        "skewed near-dup" -> ScaleData.hotTokenDir(spark, "hot a0 b0 c0 e0"),
+        "skewed containment" ->
+          ScaleData.hotTokenDir(spark, "hot a0 b0 c0 d0 e0")) ++
+      Seq(1, 2, 3).map(seed => s"seed=$seed" -> corpus(seed, 60, 40)) ++
+      adversarial.map { case (name, dir, _) => name -> dir } :+
+      // four tokens of df 1, 2, 3 and 4: the two middle frequencies
+      // differ, and the SQL form answers the lower one (0.5, not 0.75)
+      "df staircase" ->
+        ScaleData.documentsDir(spark, Seq("a b c d", "b c d", "c d", "d"))
+    for ((name, dir) <- corpora) {
+      val fold = DedupOps.dfSkewOf(spark, dir)
+      info(s"$name: ${fold.fold("none")(v => f"$v%.4f")}")
+      assert(fold == sqlSkew(dir), name)
     }
   }
 

@@ -56,6 +56,30 @@ object ScaleData {
       k % 10)
   }
 
+  /** A `documents` table of `texts` (doc_id = position, lang "en",
+    * source "web") in a fresh temporary directory, which it returns. A
+    * null text stays null. */
+  def documentsDir(s: SparkSession, texts: Seq[String]): String = {
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_docs").toString
+    texts.zipWithIndex
+      .map { case (t, i) => Doc(i.toLong, t, "en", "web", 0L) }
+      .toDF().write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  /** The skewed-df corpus of the df-skew router specs: 80 documents
+    * that share one hot token and are otherwise made of rare tokens.
+    * Doc 0 is "hot a0 b0 c0 d0" and doc 1 is `second`, so the only
+    * similar pair is anchored by rare tokens, the prefix filter's home
+    * turf (the hot token never anchors a prefix). */
+  def hotTokenDir(s: SparkSession, second: String): String =
+    documentsDir(s, (0 until 80).map {
+      case 0 => "hot a0 b0 c0 d0"
+      case 1 => second
+      case i => s"hot u$i v$i w$i x$i"
+    })
+
   /** Clustered embeddings relation: nVec vectors over nClusters
     * planted clusters, cluster membership id % nClusters so any vec_id
     * prefix (the bounded probe convention) spans many clusters. */

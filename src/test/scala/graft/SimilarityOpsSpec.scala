@@ -128,19 +128,23 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // config at Verify scale (sim_ann_lsh_auto shares sim_ann_lsh's SQL)
     assert(SimilarityOps.autoPlanesFor(500) == SimilarityOps.Planes)
 
-    // contract corpus (500 vectors): eager choice = 8 planes, and both
-    // the eager and the lazy guarded-union form reproduce annLsh(8)
-    val (p01, eager) = SimilarityOps.annLshAutoChoice(spark, TestSpark.sfDir)
-    assert(p01 == 8)
-    val direct = SimilarityOps.annLsh(spark, TestSpark.sfDir, nPlanes = 8)
-      .collect().map(_.toSeq).toSeq
-    assert(direct.nonEmpty)
-    assert(eager.collect().map(_.toSeq).toSeq == direct)
-    assert(SimilarityOps.annLshAuto(spark, TestSpark.sfDir)
-      .collect().map(_.toSeq).toSeq == direct)
+    // the rule over the router's own statistic picks the plane count,
+    // and the router's plan is annLsh's plan at that count: 8 planes on
+    // the contract corpus (500 vectors)
+    def planes(dir: String): Int = SimilarityOps.annFamilyFor(
+        SimilarityOps.embeddingsCount(
+          graft.core.Core.table(spark, dir, "embeddings")))
+      .swap.getOrElse(fail(s"$dir left the LSH regime"))
+    assert(planes(TestSpark.sfDir) == 8)
+    val auto = SimilarityOps.annLshAuto(spark, TestSpark.sfDir)
+    assert(auto.sameSemantics(
+      SimilarityOps.annLsh(spark, TestSpark.sfDir, nPlanes = 8)))
+    assert(!auto.sameSemantics(
+      SimilarityOps.annLsh(spark, TestSpark.sfDir, nPlanes = 10)))
+    assert(auto.collect().nonEmpty)
 
     // a corpus past the 8-plane boundary routes to 10 planes without
-    // code change, lazy == eager == direct annLsh(10)
+    // code change
     val dir = java.nio.file.Files.createTempDirectory("graft_ann").toString
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -148,14 +152,10 @@ class SimilarityOpsSpec extends AnyFunSuite {
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f), rnd.nextInt(10))
     }.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val (p3k, eager3k) = SimilarityOps.annLshAutoChoice(spark, dir)
-    assert(p3k == 10, s"3000 vectors sized to $p3k planes")
-    val direct3k = SimilarityOps.annLsh(spark, dir, nPlanes = 10)
-      .collect().map(_.toSeq).toSeq
-    assert(direct3k.nonEmpty)
-    assert(eager3k.collect().map(_.toSeq).toSeq == direct3k)
-    assert(SimilarityOps.annLshAuto(spark, dir)
-      .collect().map(_.toSeq).toSeq == direct3k)
+    assert(planes(dir) == 10, s"3000 vectors sized to ${planes(dir)} planes")
+    val auto3k = SimilarityOps.annLshAuto(spark, dir)
+    assert(auto3k.sameSemantics(SimilarityOps.annLsh(spark, dir, nPlanes = 10)))
+    assert(auto3k.collect().nonEmpty)
   }
 
   test("annLshAuto FAMILY handoff: past the plane-menu ceiling the auto " +
@@ -188,11 +188,8 @@ class SimilarityOpsSpec extends AnyFunSuite {
       == lshSchema,
       "handoff branch schema diverged from the LSH regime's")
     // below the ceiling the contract plan is untouched: the auto query
-    // still reproduces annLsh at the routed plane count (asserted by
-    // the occupancy-rule test above; re-pinned here on the gate corpus)
-    assert(annLshAuto(spark, TestSpark.sfDir).collect().map(_.toSeq).toSeq
-      == annLsh(spark, TestSpark.sfDir, nPlanes = 8)
-        .collect().map(_.toSeq).toSeq)
+    // IS annLsh at the routed plane count (the occupancy-rule test
+    // above checks the plans)
     // the bucket-carrying IVF shape is the plain ivfKnn ranking plus
     // the query's own nearest-list id: identical (a_id, rank, b_id,
     // cos) rows, bucket = a seed cid in [0, k)
@@ -214,26 +211,30 @@ class SimilarityOpsSpec extends AnyFunSuite {
     assert(pqFamilyFor(PqFlatMaxVectors) == Left(()))
     assert(pqFamilyFor(PqFlatMaxVectors + 1)
       == Right(semDedupKFor(PqFlatMaxVectors + 1)))
-    // contract scale: the routed query IS the flat plan — same rows,
+    // contract scale: the rule over the router's statistic keeps the
+    // flat family, and the routed query IS the flat plan — same rows,
     // so the DuckDB oracle replay is untouched
+    val n = embeddingsCount(graft.core.Core.table(spark, TestSpark.sfDir,
+      "embeddings"))
+    assert(pqFamilyFor(n) == Left(()))
     val auto = pqTopKAuto(spark, TestSpark.sfDir)
     val flat = pqTopK(spark, TestSpark.sfDir)
-    assert(auto.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      == flat.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    assert(auto.collect().map(_.toSeq).toSeq
-      == flat.collect().map(_.toSeq).toSeq)
+    assert(auto.sameSemantics(flat))
+    assert(auto.collect().nonEmpty)
     graft.core.Core.releaseShared()
-    // boundary regime FORCED on an executable corpus (flatMax
-    // parameterized for exactly this): identical rows and schema to
-    // ivfpqTopK at the routed k (= IvfK at this corpus size — the
-    // same landing the other routed queries' oracles rely on)
+    // boundary regime FORCED on an executable corpus (flatMax exists
+    // for exactly this: no spec can train IVF-PQ past 20M vectors):
+    // ivfpqTopK's plan at the routed k (= IvfK at this corpus size —
+    // the same landing the other routed queries' oracles rely on), with
+    // the flat regime's schema
+    assert(pqFamilyFor(n, flatMax = 1L) == Right(IvfK))
     val handed = pqTopKAuto(spark, TestSpark.sfDir, flatMax = 1L)
     assert(handed.schema.fields.map(f => (f.name, f.dataType)).toSeq
       == flat.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       "handoff branch schema diverged from the flat regime's")
-    val ivf = ivfpqTopK(spark, TestSpark.sfDir)
-    assert(handed.collect().map(_.toSeq).toSeq
-      == ivf.collect().map(_.toSeq).toSeq)
+    assert(handed.sameSemantics(ivfpqTopK(spark, TestSpark.sfDir)))
+    assert(!handed.sameSemantics(flat))
+    assert(handed.collect().nonEmpty)
     graft.core.Core.releaseShared()
   }
 
@@ -257,23 +258,20 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // IvfK at Verify scale (dedup_semdedup / sim_ann_ivf_rerank share
     // their fixed-k oracle SQL)
 
-    // contract corpus: eager choice = IvfK; lazy == eager == fixed-k
-    val (k01, eagerSem) = semDedupAutoChoice(spark, TestSpark.sfDir)
-    assert(k01 == IvfK)
-    val directSem = semDedup(spark, TestSpark.sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(directSem.nonEmpty)
-    assert(eagerSem.collect().map(_.toSeq).toSeq == directSem)
-    assert(semDedupAuto(spark, TestSpark.sfDir)
-      .collect().map(_.toSeq).toSeq == directSem)
-    val directIvf = ivfKnn(spark, TestSpark.sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(directIvf.nonEmpty)
-    assert(ivfKnnAuto(spark, TestSpark.sfDir)
-      .collect().map(_.toSeq).toSeq == directIvf)
+    // contract corpus: the rule over the routers' statistic picks
+    // IvfK, and each router reproduces its fixed-k form there
+    def k(dir: String): Int = semDedupKFor(
+      embeddingsCount(graft.core.Core.table(spark, dir, "embeddings")))
+    assert(k(TestSpark.sfDir) == IvfK)
+    val sem = semDedupAuto(spark, TestSpark.sfDir)
+    assert(sem.sameSemantics(semDedup(spark, TestSpark.sfDir)))
+    assert(sem.collect().nonEmpty)
+    val ivf = ivfKnnAuto(spark, TestSpark.sfDir)
+    assert(ivf.sameSemantics(ivfKnn(spark, TestSpark.sfDir)))
+    assert(ivf.collect().nonEmpty)
 
     // a corpus past the IvfK boundary routes to k=32 without code
-    // change; lazy == direct fixed-k for BOTH routed queries
+    // change; each router reproduces its fixed-k form at the routed k
     val dir = java.nio.file.Files.createTempDirectory("graft_sd").toString
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -281,12 +279,14 @@ class SimilarityOpsSpec extends AnyFunSuite {
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f), rnd.nextInt(10))
     }.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val direct3k = semDedup(spark, dir, k = 32).collect().map(_.toSeq).toSeq
-    assert(direct3k.nonEmpty)
-    assert(semDedupAuto(spark, dir).collect().map(_.toSeq).toSeq == direct3k)
-    val directIvf3k = ivfKnn(spark, dir, k = 32).collect().map(_.toSeq).toSeq
-    assert(directIvf3k.nonEmpty)
-    assert(ivfKnnAuto(spark, dir).collect().map(_.toSeq).toSeq == directIvf3k)
+    assert(k(dir) == 32)
+    val sem3k = semDedupAuto(spark, dir)
+    assert(sem3k.sameSemantics(semDedup(spark, dir, k = 32)))
+    assert(!sem3k.sameSemantics(semDedup(spark, dir, k = IvfK)))
+    assert(sem3k.collect().nonEmpty)
+    val ivf3k = ivfKnnAuto(spark, dir)
+    assert(ivf3k.sameSemantics(ivfKnn(spark, dir, k = 32)))
+    assert(ivf3k.collect().nonEmpty)
     graft.core.Core.releaseShared()
   }
 
