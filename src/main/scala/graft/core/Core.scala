@@ -1,10 +1,18 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Shared table loaders and oracle-safe expression helpers.
@@ -30,7 +38,7 @@ object Core {
     // DuckDB oracle reads the same column.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val raw = s.read.parquet(path)
+    val raw = footerSchema(s, path).fold(s.read)(s.read.schema).parquet(path)
     val normalized = if (name == "events") raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -41,6 +49,79 @@ object Core {
     else raw
     if (ScanFloorTables(name)) scanFloor(s, dir, name, normalized)
     else normalized
+  }
+
+  /** The schema `s.read.parquet(path)` infers, read on the driver with
+    * no job: Spark's non-merging inference reads ONE footer — the first
+    * `_common_metadata`, else the first `_metadata`, else the first
+    * data file in path order — on a one-task job per call, which was
+    * most of the jobs a contract query ran while it was built. This
+    * reads that same footer and converts it as Spark does: the row
+    * schema Spark stored in the file's metadata when it carries one,
+    * else `ParquetToSparkSchemaConverter` under the session's conf (so
+    * `nanosAsLong` and the NTZ inference apply). None, and the caller
+    * infers, when the session merges schemas, the directory is
+    * partitioned (`k=v` subdirectories add columns) or holds no file. */
+  private def footerSchema(s: SparkSession, path: String)
+      : Option[StructType] = {
+    val state = sessionState(s)
+    val conf = state.newHadoopConf()
+    val files = parquetLeaves(conf, path)
+    val summaries = Seq("_common_metadata", "_metadata")
+      .flatMap(n => files.find(_.getName == n))
+    val partitioned = files.exists(_.getParent.getName.contains("="))
+    if (state.conf.isParquetSchemaMergingEnabled || partitioned) None
+    else (summaries ++ files.filterNot(f => isSummary(f.getName)))
+      .headOption.map { f =>
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer(conf, f)),
+          new ParquetToSparkSchemaConverter(state.conf))
+      }
+  }
+
+  /** Rows of table `name` under `dir`, summed from its data files'
+    * Parquet footers on the driver in path order, no job. Reading stops
+    * once the running sum passes `cap`, so the driver reads a bounded
+    * number of footers at any scale: the result is exact up to `cap`
+    * and some value above `cap` past it. */
+  def footerRows(s: SparkSession, dir: String, name: String,
+      cap: Long): Long = {
+    val conf = sessionState(s).newHadoopConf()
+    val files = parquetLeaves(conf, s"$dir/$name.parquet")
+      .filterNot(f => isSummary(f.getName)).iterator
+    var rows = 0L
+    while (rows <= cap && files.hasNext)
+      rows += footer(conf, files.next()).getBlocks.asScala
+        .map(_.getRowCount).sum
+    rows
+  }
+
+  private def sessionState(s: SparkSession) =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+
+  private def isSummary(name: String): Boolean =
+    name == "_common_metadata" || name == "_metadata"
+
+  private def footer(conf: Configuration, f: Path): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try r.getFooter finally r.close()
+  }
+
+  /** The files under `path` that Spark's file index lists, sorted by
+    * path as its Parquet inference sorts them: a name beginning with
+    * `_` or `.` is hidden at every level, except the two summary files
+    * and `k=v` partition directories. */
+  private def parquetLeaves(conf: Configuration, path: String): Seq[Path] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(n: String) =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
+    def walk(st: FileStatus): Seq[Path] =
+      if (st.isFile) Seq(st.getPath)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    walk(fs.getFileStatus(root)).sortBy(_.toString)
   }
 
   /** Scan-parallelism floor for small low-split inputs (optimization

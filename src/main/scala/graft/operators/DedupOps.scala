@@ -8,6 +8,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable
+
 /** Deduplication operators for a training-data pipeline (north-star
   * extensions): exact keep-first, token-set Jaccard, bigram-shingle
   * Jaccard, MinHash+LSH, SimHash. All hash arithmetic is the
@@ -848,11 +850,10 @@ object DedupOps {
       val q = TextOps.qualityParts(s, dir).select("doc_id", "quality")
       val w = Window.partitionBy("cluster")
         .orderBy(col("quality").desc, col("doc_id"))
-      // ccUnrolled, not dedupClusterCC: the standalone operator's
+      // ccRouted, not dedupClusterCC: the standalone operator's
       // total-order sort would be a full range exchange the quality
       // join immediately destroys — the pick re-sorts once, at the end
-      val nodes = table(s, dir, "documents").select("doc_id")
-      ccUnrolled(nodes, simhashEdges(s, dir), CcRounds)
+      ccRouted(s, dir, CcRounds)
         .join(q, "doc_id")
         .withColumn("is_kept", row_number().over(w) === 1)
         .select("doc_id", "cluster", "quality", "is_kept")
@@ -1819,9 +1820,103 @@ object DedupOps {
     // under-merge. For corpora whose duplicate chains may exceed
     // CcRounds, [[ccPsLoop]] runs to a certified fixpoint — the
     // unrolled form here is the oracle-checkable contract configuration.
-    val nodes = table(s, dir, "documents").select("doc_id")
-    ccUnrolled(nodes, simhashEdges(s, dir), rounds).orderBy("doc_id")
+    ccRouted(s, dir, rounds).orderBy("doc_id")
   }
+
+  /** The contract CC labels of `dedup_cluster_cc` and
+    * `dedup_canonical_pick`: `rounds` min-label rounds over the
+    * documents and their SimHash edges, in one task ([[ccOneTask]])
+    * when [[ccFitsOneTask]] holds for the documents' footer row count
+    * ([[footerRows]], driver IO only, stopped past the bound), else as
+    * the relational chain ([[ccUnrolled]]). Both give the same labels. */
+  private def ccRouted(s: SparkSession, dir: String, rounds: Int)
+      : DataFrame = {
+    val nodes = table(s, dir, "documents").select("doc_id")
+    val edges = simhashEdges(s, dir)
+    if (ccFitsOneTask(footerRows(s, dir, "documents", CcRowsPerPart)))
+      ccOneTask(nodes, edges, rounds)
+    else ccUnrolled(nodes, edges, rounds)
+  }
+
+  /** Whether `nodeRows` documents take the one-task CC kernel: at most
+    * [[CcRowsPerPart]], the rows [[ccLoopParts]] already gives one
+    * partition. Above it the rounds stay relational, the only path for
+    * inputs one task cannot hold. */
+  private[graft] def ccFitsOneTask(nodeRows: Long): Boolean =
+    nodeRows <= CcRowsPerPart
+
+  /** [[ccUnrolled]]'s labels from one task of fixed Scala code: the
+    * rows of [[withSelfLoops]], each flagged as a node's loop or an
+    * edge, go through one exchange into one partition, and
+    * [[ccLocalRounds]] runs the `rounds` synchronous rounds on primitive
+    * arrays. Lazy, and no round compiles a class of its own: at
+    * contract scale the relational chain's cost is its jobs (two
+    * exchanges and an aggregate per round), not its data. The flag is
+    * what a bare self-loop cannot say: whether `v` starts labelled, or
+    * is an explicit (v, v) edge whose `v` is missing from `nodes`. */
+  private[graft] def ccOneTask(nodes: DataFrame, edges: DataFrame,
+      rounds: Int): DataFrame = {
+    val s = nodes.sparkSession
+    import s.implicits._
+    edges.select(col("n"), col("m"), lit(false).as("node"))
+      .unionByName(nodes.select(col("doc_id").as("n"),
+        col("doc_id").as("m"), lit(true).as("node")))
+      .repartition(1)
+      .as[(java.lang.Long, java.lang.Long, Boolean)]
+      .mapPartitions(rows => ccLocalRounds(rows, rounds))
+      .toDF("doc_id", "cluster")
+  }
+
+  /** `rounds` synchronous min-label rounds over rows (n, m, node), the
+    * relational semantics of [[ccUnrolled]] exactly: the nodes start
+    * labelled with their own id, and each round label'(n) = min of
+    * label(m) over the rows (n, m) whose `m` has a label — an `n` with
+    * no labelled `m` has no label, whether or not it is a node. A null
+    * `m` never matches, and the null `n` is one more group, as in the
+    * join and the `groupBy`. Round 0 returns the node rows as given. */
+  private def ccLocalRounds(
+      rows: Iterator[(java.lang.Long, java.lang.Long, Boolean)],
+      rounds: Int): Iterator[(java.lang.Long, java.lang.Long)] =
+    if (rounds == 0) rows.collect { case (v, _, true) => (v, v) }
+    else {
+      val (ns, ms) = (new mutable.ArrayBuilder.ofLong,
+        new mutable.ArrayBuilder.ofLong)
+      val (seeds, nullNs) = (new mutable.ArrayBuilder.ofLong,
+        new mutable.ArrayBuilder.ofLong)
+      rows.foreach { case (n, m, node) =>
+        if (m != null) {
+          if (node) seeds += m
+          if (n == null) nullNs += m else { ns += n; ms += m }
+        }
+      }
+      val (nArr, mArr) = (ns.result(), ms.result())
+      val ids = (nArr ++ mArr).distinct.sorted
+      def at(v: Long) = java.util.Arrays.binarySearch(ids, v)
+      val (ni, mi) = (nArr.map(at), mArr.map(at))
+      var (label, has) = (new Array[Long](ids.length),
+        new Array[Boolean](ids.length))
+      seeds.result().foreach { v => label(at(v)) = v; has(at(v)) = true }
+      var nullLabel = Option.empty[Long]
+      for (_ <- 1 to rounds) {
+        // synchronous: every row reads the previous round's labels
+        val (next, nextHas) = (new Array[Long](ids.length),
+          new Array[Boolean](ids.length))
+        var e = 0
+        while (e < ni.length) {
+          val (n, m) = (ni(e), mi(e))
+          if (has(m) && (!nextHas(n) || label(m) < next(n))) {
+            next(n) = label(m); nextHas(n) = true
+          }
+          e += 1
+        }
+        nullLabel = nullNs.result().map(at)
+          .filter(i => i >= 0 && has(i)).map(label).minOption
+        label = next; has = nextHas
+      }
+      ids.indices.iterator.filter(has)
+        .map(i => (Long.box(ids(i)), Long.box(label(i)))) ++
+        nullLabel.iterator.map(l => (null: java.lang.Long, Long.box(l)))
+    }
 
   /** The unrolled propagation core of [[dedupClusterCC]] over an
     * explicit (nodes, edges) pair — also the unit PlanShapeSpec holds
@@ -1877,7 +1972,9 @@ object DedupOps {
       .select(col("doc_id"), col("cc").as("cluster"))
 
   /** Loop rows per partition in [[ccPsLoop]]: 2M rows of 2–3 longs is
-    * about 50 MB, inside the "fewer, larger partitions" range. */
+    * about 50 MB, inside the "fewer, larger partitions" range. Also the
+    * documents bound below which the contract rounds run in one task
+    * ([[ccFitsOneTask]]). */
   private val CcRowsPerPart = 2000000L
 
   /** [[ccPsLoop]]'s partition count for `rows` loop rows: one partition

@@ -24,6 +24,22 @@ object CcReference {
     * work is O(d·|E|) with the corpus read once. Labels decrease
     * monotonically, so "no label changed" certifies the true CC
     * fixpoint regardless of diameter. */
+  /** The labels after exactly `k` synchronous min-label rounds, on the
+    * driver over Scala maps: the nodes start labelled with their own
+    * id, and each round label'(n) = min of label(m) over the edges and
+    * node loops (n, m) whose `m` has a label. The k-round reference of
+    * the contract rounds ([[DedupOps.ccUnrolled]] and
+    * [[DedupOps.ccOneTask]]); edge endpoints missing from `nodes`
+    * start unlabelled. */
+  def labelsAfter(nodes: Seq[Long], edges: Seq[(Long, Long)],
+      k: Int): Map[Long, Long] = {
+    val loops = edges ++ nodes.map(v => (v, v))
+    (1 to k).foldLeft(nodes.map(v => v -> v).toMap) { (l, _) =>
+      loops.filter(e => l.contains(e._2))
+        .groupMapReduce(_._1)(e => l(e._2))(math.min)
+    }
+  }
+
   def ccFixpoint(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 64): DataFrame =
     ccFixpointWithRounds(nodes, edges, maxRounds)._1

@@ -16,11 +16,10 @@ class DedupOpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("dedup_near/dedup_ngram plan construction runs no data-scan jobs") {
-    // spark.read.parquet launches one footer-read job per table() call
-    // for schema inference — the unavoidable cost of ANY lazy builder.
-    // The round-1 defect was a full scan+explode+shuffle count() at
-    // build time; assert build cost is now exactly the footer reads of
-    // a trivially-lazy plan over the same table.
+    // Core.table reads each schema from a Parquet footer on the driver,
+    // so a bare table read runs no job. The round-1 defect was a full
+    // scan+explode+shuffle count() at build time; assert build cost is
+    // no more than that of a trivially-lazy plan over the same table.
     def jobsDuring(f: => Unit): Int = {
       val t = spark.sparkContext.statusTracker
       val before = t.getJobIdsForGroup(null).length
