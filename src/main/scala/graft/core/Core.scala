@@ -1,11 +1,12 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -56,26 +57,29 @@ object Core {
     * `_common_metadata`, else the first `_metadata`, else the first
     * data file in path order — on a one-task job per call, which was
     * most of the jobs a contract query ran while it was built. This
-    * reads that same footer and converts it as Spark does: the row
-    * schema Spark stored in the file's metadata when it carries one,
-    * else `ParquetToSparkSchemaConverter` under the session's conf (so
-    * `nanosAsLong` and the NTZ inference apply). None, and the caller
-    * infers, when the session merges schemas, the directory is
-    * partitioned (`k=v` subdirectories add columns) or holds no file. */
+    * reads that same footer, from the files Spark's own file index
+    * lists, and converts it as Spark does: the row schema Spark stored
+    * in the file's metadata when it carries one, else
+    * `ParquetToSparkSchemaConverter` under the session's conf (so
+    * `nanosAsLong` and the NTZ inference apply). Partition columns of
+    * `k=v` directories need no footer: Spark appends them to a given
+    * schema as it does to an inferred one. None, and the caller infers,
+    * when the session merges schemas or the index lists no file. */
   private def footerSchema(s: SparkSession, path: String)
       : Option[StructType] = {
     val state = sessionState(s)
-    val conf = state.newHadoopConf()
-    val files = parquetLeaves(conf, path)
-    val summaries = Seq("_common_metadata", "_metadata")
-      .flatMap(n => files.find(_.getName == n))
-    val partitioned = files.exists(_.getParent.getName.contains("="))
-    if (state.conf.isParquetSchemaMergingEnabled || partitioned) None
-    else (summaries ++ files.filterNot(f => isSummary(f.getName)))
-      .headOption.map { f =>
-        ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer(conf, f)),
-          new ParquetToSparkSchemaConverter(state.conf))
-      }
+    if (state.conf.isParquetSchemaMergingEnabled) None
+    else {
+      val (summaries, data) = fileIndex(s, path).allFiles().map(_.getPath)
+        .sortBy(_.toString).partition(f => isSummary(f.getName))
+      (Seq("_common_metadata", "_metadata")
+        .flatMap(n => summaries.find(_.getName == n)) ++ data)
+        .headOption.map { f =>
+          ParquetFileFormat.readSchemaFromFooter(
+            new Footer(f, footer(state.newHadoopConf(), f)),
+            new ParquetToSparkSchemaConverter(state.conf))
+        }
+    }
   }
 
   /** Rows of table `name` under `dir`, summed from its data files'
@@ -86,8 +90,9 @@ object Core {
   def footerRows(s: SparkSession, dir: String, name: String,
       cap: Long): Long = {
     val conf = sessionState(s).newHadoopConf()
-    val files = parquetLeaves(conf, s"$dir/$name.parquet")
-      .filterNot(f => isSummary(f.getName)).iterator
+    val files = fileIndex(s, s"$dir/$name.parquet").allFiles()
+      .map(_.getPath).filterNot(f => isSummary(f.getName))
+      .sortBy(_.toString).iterator
     var rows = 0L
     while (rows <= cap && files.hasNext)
       rows += footer(conf, files.next()).getBlocks.asScala
@@ -98,30 +103,17 @@ object Core {
   private def sessionState(s: SparkSession) =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
 
+  /** Spark's listing of `path`, with its hidden-file rules and its
+    * partition discovery, as a read of `path` builds it. */
+  private def fileIndex(s: SparkSession, path: String) =
+    new InMemoryFileIndex(s, Seq(new Path(path)), Map.empty, None)
+
   private def isSummary(name: String): Boolean =
     name == "_common_metadata" || name == "_metadata"
 
   private def footer(conf: Configuration, f: Path): ParquetMetadata = {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
     try r.getFooter finally r.close()
-  }
-
-  /** The files under `path` that Spark's file index lists, sorted by
-    * path as its Parquet inference sorts them: a name beginning with
-    * `_` or `.` is hidden at every level, except the two summary files
-    * and `k=v` partition directories. */
-  private def parquetLeaves(conf: Configuration, path: String): Seq[Path] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    def hidden(n: String) =
-      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
-        n.endsWith("._COPYING_")) &&
-        !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
-    def walk(st: FileStatus): Seq[Path] =
-      if (st.isFile) Seq(st.getPath)
-      else fs.listStatus(st.getPath).toSeq
-        .filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
-    walk(fs.getFileStatus(root)).sortBy(_.toString)
   }
 
   /** Scan-parallelism floor for small low-split inputs (optimization

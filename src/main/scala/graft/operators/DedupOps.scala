@@ -1833,17 +1833,26 @@ object DedupOps {
       : DataFrame = {
     val nodes = table(s, dir, "documents").select("doc_id")
     val edges = simhashEdges(s, dir)
-    if (ccFitsOneTask(footerRows(s, dir, "documents", CcRowsPerPart)))
+    if (ccFitsOneTask(footerRows(s, dir, "documents", CcOneTaskDocs)))
       ccOneTask(nodes, edges, rounds)
     else ccUnrolled(nodes, edges, rounds)
   }
 
   /** Whether `nodeRows` documents take the one-task CC kernel: at most
-    * [[CcRowsPerPart]], the rows [[ccLoopParts]] already gives one
-    * partition. Above it the rounds stay relational, the only path for
-    * inputs one task cannot hold. */
+    * [[CcOneTaskDocs]]. Above it the rounds stay relational, the only
+    * path for inputs one task cannot hold. */
   private[graft] def ccFitsOneTask(nodeRows: Long): Boolean =
-    nodeRows <= CcRowsPerPart
+    nodeRows <= CcOneTaskDocs
+
+  /** Documents up to which the contract rounds run in one task. The task
+    * holds the loop rows, |E| + n, and n documents give at most n² of
+    * them (every pair an edge), so the bound covers the worst case too.
+    * Measured on 4 cores with a 2 GB heap (`CcCrossover`, SCALE.md): on
+    * sf0.1's 5,000 documents (1.24M loop rows) the kernel beat the
+    * relational chain, 1.69 s to 2.01 s; the 25M loop rows of 5,000
+    * documents whose every pair is an edge completed in it, 2x slower
+    * than the chain. Synthetic graphs put the crossover near 5M rows. */
+  private val CcOneTaskDocs = 5000L
 
   /** [[ccUnrolled]]'s labels from one task of fixed Scala code: the
     * rows of [[withSelfLoops]], each flagged as a node's loop or an
@@ -1873,50 +1882,71 @@ object DedupOps {
     * label(m) over the rows (n, m) whose `m` has a label — an `n` with
     * no labelled `m` has no label, whether or not it is a node. A null
     * `m` never matches, and the null `n` is one more group, as in the
-    * join and the `groupBy`. Round 0 returns the node rows as given. */
+    * join and the `groupBy`. Round 0 returns the node rows as given.
+    * Memory is primitive arrays only: the rows' ids once as longs, then
+    * an int index pair per row and two labels per distinct id. */
   private def ccLocalRounds(
       rows: Iterator[(java.lang.Long, java.lang.Long, Boolean)],
       rounds: Int): Iterator[(java.lang.Long, java.lang.Long)] =
     if (rounds == 0) rows.collect { case (v, _, true) => (v, v) }
     else {
-      val (ns, ms) = (new mutable.ArrayBuilder.ofLong,
-        new mutable.ArrayBuilder.ofLong)
-      val (seeds, nullNs) = (new mutable.ArrayBuilder.ofLong,
-        new mutable.ArrayBuilder.ofLong)
-      rows.foreach { case (n, m, node) =>
-        if (m != null) {
-          if (node) seeds += m
-          if (n == null) nullNs += m else { ns += n; ms += m }
+      val (nm, seeds, nullNs) = ccLocalRows(rows)
+      // the distinct ids, sorted: a row's endpoints become positions
+      val ids = {
+        val v = nm.clone()
+        java.util.Arrays.sort(v)
+        var k = 0
+        for (i <- v.indices) if (k == 0 || v(i) != v(k - 1)) {
+          v(k) = v(i); k += 1
         }
+        java.util.Arrays.copyOf(v, k)
       }
-      val (nArr, mArr) = (ns.result(), ms.result())
-      val ids = (nArr ++ mArr).distinct.sorted
       def at(v: Long) = java.util.Arrays.binarySearch(ids, v)
-      val (ni, mi) = (nArr.map(at), mArr.map(at))
+      val nmi = nm.map(at) // n at 2e, m at 2e + 1
+      val nullMi = nullNs.map(at)
       var (label, has) = (new Array[Long](ids.length),
         new Array[Boolean](ids.length))
-      seeds.result().foreach { v => label(at(v)) = v; has(at(v)) = true }
+      var (next, nextHas) = (new Array[Long](ids.length),
+        new Array[Boolean](ids.length))
+      seeds.foreach { v => label(at(v)) = v; has(at(v)) = true }
       var nullLabel = Option.empty[Long]
       for (_ <- 1 to rounds) {
         // synchronous: every row reads the previous round's labels
-        val (next, nextHas) = (new Array[Long](ids.length),
-          new Array[Boolean](ids.length))
+        java.util.Arrays.fill(nextHas, false)
         var e = 0
-        while (e < ni.length) {
-          val (n, m) = (ni(e), mi(e))
+        while (e < nmi.length) {
+          val (n, m) = (nmi(e), nmi(e + 1))
           if (has(m) && (!nextHas(n) || label(m) < next(n))) {
             next(n) = label(m); nextHas(n) = true
           }
-          e += 1
+          e += 2
         }
-        nullLabel = nullNs.result().map(at)
-          .filter(i => i >= 0 && has(i)).map(label).minOption
-        label = next; has = nextHas
+        nullLabel = nullMi.filter(i => i >= 0 && has(i)).map(label).minOption
+        val (l, h) = (label, has)
+        label = next; has = nextHas; next = l; nextHas = h
       }
       ids.indices.iterator.filter(has)
         .map(i => (Long.box(ids(i)), Long.box(label(i)))) ++
         nullLabel.iterator.map(l => (null: java.lang.Long, Long.box(l)))
     }
+
+  /** [[ccLocalRounds]]'s input as primitive arrays: the (n, m) rows
+    * with both ids, interleaved; the node ids, which start labelled;
+    * and the `m` of each row whose `n` is null. A null `m` never
+    * matches, so its row is dropped. */
+  private def ccLocalRows(
+      rows: Iterator[(java.lang.Long, java.lang.Long, Boolean)])
+      : (Array[Long], Array[Long], Array[Long]) = {
+    val (nm, seeds, nullNs) = (new mutable.ArrayBuilder.ofLong,
+      new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+    rows.foreach { case (n, m, node) =>
+      if (m != null) {
+        if (node) seeds += m
+        if (n == null) nullNs += m else { nm += n; nm += m }
+      }
+    }
+    (nm.result(), seeds.result(), nullNs.result())
+  }
 
   /** The unrolled propagation core of [[dedupClusterCC]] over an
     * explicit (nodes, edges) pair — also the unit PlanShapeSpec holds
@@ -1972,9 +2002,7 @@ object DedupOps {
       .select(col("doc_id"), col("cc").as("cluster"))
 
   /** Loop rows per partition in [[ccPsLoop]]: 2M rows of 2–3 longs is
-    * about 50 MB, inside the "fewer, larger partitions" range. Also the
-    * documents bound below which the contract rounds run in one task
-    * ([[ccFitsOneTask]]). */
+    * about 50 MB, inside the "fewer, larger partitions" range. */
   private val CcRowsPerPart = 2000000L
 
   /** [[ccPsLoop]]'s partition count for `rows` loop rows: one partition

@@ -109,11 +109,11 @@ class CcKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("router rule: one task up to 2,000,000 documents, relational " +
+  test("router rule: one task up to 5,000 documents, relational " +
     "rounds past it") {
     assert(DedupOps.ccFitsOneTask(0L))
-    assert(DedupOps.ccFitsOneTask(2000000L))
-    assert(!DedupOps.ccFitsOneTask(2000001L))
+    assert(DedupOps.ccFitsOneTask(5000L))
+    assert(!DedupOps.ccFitsOneTask(5001L))
   }
 
   test("dedup_cluster_cc routes to the kernel on the fixture, with the " +

@@ -11,19 +11,6 @@ import org.apache.spark.sql.functions._
   * shortcut changes convergence speed, never the converged labels. */
 object CcReference {
 
-  /** Exact connected components over an ARBITRARY symmetric edge
-    * relation, iterated to fixpoint — exact at any duplicate-chain
-    * diameter (the contract query's unrolled
-    * [[DedupOps.dedupClusterCC]] is exact only to diameter
-    * [[DedupOps.CcRounds]]). `nodes` is one row per node id;
-    * `edges(n, m)` must contain both directions of each edge. Each iteration is one
-    * propagate pass plus one driver-side convergence check (a count —
-    * this is a utility with a loop, deliberately outside the lazy
-    * oracle contract); iterations = component diameter in the worst
-    * case, and each one joins only the cached edge relation, so total
-    * work is O(d·|E|) with the corpus read once. Labels decrease
-    * monotonically, so "no label changed" certifies the true CC
-    * fixpoint regardless of diameter. */
   /** The labels after exactly `k` synchronous min-label rounds, on the
     * driver over Scala maps: the nodes start labelled with their own
     * id, and each round label'(n) = min of label(m) over the edges and
@@ -40,6 +27,19 @@ object CcReference {
     }
   }
 
+  /** Exact connected components over an ARBITRARY symmetric edge
+    * relation, iterated to fixpoint — exact at any duplicate-chain
+    * diameter (the contract query's unrolled
+    * [[DedupOps.dedupClusterCC]] is exact only to diameter
+    * [[DedupOps.CcRounds]]). `nodes` is one row per node id;
+    * `edges(n, m)` must contain both directions of each edge. Each iteration is one
+    * propagate pass plus one driver-side convergence check (a count —
+    * this is a utility with a loop, deliberately outside the lazy
+    * oracle contract); iterations = component diameter in the worst
+    * case, and each one joins only the cached edge relation, so total
+    * work is O(d·|E|) with the corpus read once. Labels decrease
+    * monotonically, so "no label changed" certifies the true CC
+    * fixpoint regardless of diameter. */
   def ccFixpoint(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 64): DataFrame =
     ccFixpointWithRounds(nodes, edges, maxRounds)._1

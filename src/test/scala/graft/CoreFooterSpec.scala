@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Core.footerRows` sums row counts from the footers. Both must read
   * what Spark reads: the schema equals `s.read.parquet(path).schema`
   * after the same `events.ts` normalization, for every table of both
-  * fixtures, and the row count equals `count()`. */
+  * fixtures, and the row count equals `count()`. A partitioned table
+  * reads its partition columns as inference does, and a
+  * schema-merging session keeps Spark's inference. */
 class CoreFooterSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -71,6 +73,33 @@ class CoreFooterSpec extends AnyFunSuite {
       // past a cap of 15 the sum stops after the second 10-row file
       assert(Core.footerRows(spark, dir, "wide", 15L) == 20L)
       assert(Core.footerRows(spark, dir, "wide", 0L) == 10L)
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("partitioned and schema-merging tables read Spark's inferred " +
+    "schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-footer").toString
+    try {
+      // k=v directories add a column no footer holds; Spark appends it
+      // to the footer's schema
+      spark.range(0, 10).withColumn("k", col("id") % 2)
+        .write.partitionBy("k").parquet(s"$dir/part.parquet")
+      assert(Core.table(spark, dir, "part").schema ==
+        spark.read.parquet(s"$dir/part.parquet").schema)
+      assert(Core.table(spark, dir, "part").schema.fieldNames
+        .sameElements(Seq("id", "k")))
+      // two files with disjoint columns: merging reads both footers
+      spark.range(0, 5).select(col("id").as("a"))
+        .write.parquet(s"$dir/merged.parquet")
+      spark.range(0, 5).select(col("id").as("b"))
+        .write.mode("append").parquet(s"$dir/merged.parquet")
+      spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+      try {
+        val merged = Core.table(spark, dir, "merged").schema
+        assert(merged == spark.read.parquet(s"$dir/merged.parquet").schema)
+        assert(merged.fieldNames.sorted.sameElements(Seq("a", "b")))
+      } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
