@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -39,7 +39,8 @@ object Core {
     // DuckDB oracle reads the same column.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val raw = footerSchema(s, path).fold(s.read)(s.read.schema).parquet(path)
+    val files = fileIndex(s, path).allFiles()
+    val raw = footerSchema(s, files).fold(s.read)(s.read.schema).parquet(path)
     val normalized = if (name == "events") raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -48,7 +49,7 @@ object Core {
       case _ => raw
     }
     else raw
-    if (ScanFloorTables(name)) scanFloor(s, dir, name, normalized)
+    if (ScanFloorTables(name)) scanFloor(s, files, normalized)
     else normalized
   }
 
@@ -57,20 +58,21 @@ object Core {
     * `_common_metadata`, else the first `_metadata`, else the first
     * data file in path order — on a one-task job per call, which was
     * most of the jobs a contract query ran while it was built. This
-    * reads that same footer, from the files Spark's own file index
-    * lists, and converts it as Spark does: the row schema Spark stored
-    * in the file's metadata when it carries one, else
-    * `ParquetToSparkSchemaConverter` under the session's conf (so
-    * `nanosAsLong` and the NTZ inference apply). Partition columns of
-    * `k=v` directories need no footer: Spark appends them to a given
-    * schema as it does to an inferred one. None, and the caller infers,
-    * when the session merges schemas or the index lists no file. */
-  private def footerSchema(s: SparkSession, path: String)
+    * reads that same footer, from `files`, the listing Spark's own
+    * file index makes of the path, and converts it as Spark does: the
+    * row schema Spark stored in the file's metadata when it carries
+    * one, else `ParquetToSparkSchemaConverter` under the session's
+    * conf (so `nanosAsLong` and the NTZ inference apply). Partition
+    * columns of `k=v` directories need no footer: Spark appends them to
+    * a given schema as it does to an inferred one. None, and the caller
+    * infers, when the session merges schemas or the index lists no
+    * file. */
+  private def footerSchema(s: SparkSession, files: Seq[FileStatus])
       : Option[StructType] = {
     val state = sessionState(s)
     if (state.conf.isParquetSchemaMergingEnabled) None
     else {
-      val (summaries, data) = fileIndex(s, path).allFiles().map(_.getPath)
+      val (summaries, data) = files.map(_.getPath)
         .sortBy(_.toString).partition(f => isSummary(f.getName))
       (Seq("_common_metadata", "_metadata")
         .flatMap(n => summaries.find(_.getName == n)) ++ data)
@@ -127,29 +129,30 @@ object Core {
     * `spark.sql.files.maxPartitionBytes`, so the fix must be an explicit
     * round-robin exchange after the read). [[table]] applies it to the
     * tables in [[ScanFloorTables]]; [[scanFloorFires]] gates it on the
-    * driver-side file stat, so the exchange exists only where it pays.
+    * parquet files of the table's one listing, so the exchange exists
+    * only where it pays.
     *
     * Round-robin (`repartition(n)`) rather than a key: even spread with
     * no key-skew risk, and deterministic under retries because Spark
     * local-sorts before round-robin assignment (SPARK-23207, on by
     * default). Row content is untouched and every contract query ends
     * in a total-order sort, so results are unchanged (oracle-verified).
-    * Lazy: the file stat is bounded driver IO at plan build (the
-    * corpusTag convention), no job runs (LazinessSpec).
+    * Lazy: the listing is bounded driver IO at plan build, no job runs
+    * (LazinessSpec).
     */
   private[graft] def scanFloor(s: SparkSession, dir: String, name: String,
+      df: DataFrame): DataFrame =
+    scanFloor(s, fileIndex(s, s"$dir/$name.parquet").allFiles(), df)
+
+  private def scanFloor(s: SparkSession, files: Seq[FileStatus],
       df: DataFrame): DataFrame = {
     val n = s.sparkContext.defaultParallelism
-    try {
-      // only parquet leaves count toward the gate: sidecars (_SUCCESS,
-      // .crc) are not scannable bytes
-      val ls = leaves(new java.io.File(s"$dir/$name.parquet"))
-        .filter(_.getName.endsWith(".parquet"))
-      if (scanFloorFires(ls.map(_.length).sum, ls.size, n)) df.repartition(n)
-      else df
-    } catch {
-      case NonFatal(_) => df // stat failure ⇒ plain read
-    }
+    // only parquet data files count toward the gate: the suffix drops
+    // the summary files (_metadata, _common_metadata) the index lists
+    val data = files.filter(_.getPath.getName.endsWith(".parquet"))
+    if (scanFloorFires(data.map(_.getLen).sum, data.size, n))
+      df.repartition(n)
+    else df
   }
 
   /** The tables [[table]] reads through [[scanFloor]]. The exchange
@@ -188,13 +191,6 @@ object Core {
   def scanFloorFires(bytes: Long, files: Int, cores: Int): Boolean =
     cores > 1 && bytes >= ScanFloorMinBytes && bytes <= ScanFloorMaxBytes &&
       files < cores / 2
-
-  /** The files under `f`, depth first in name order (`f` itself if it
-    * is a file). */
-  private def leaves(f: java.io.File): Seq[java.io.File] =
-    if (f.isFile) Seq(f)
-    else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-      .sortBy(_.getName).toSeq.flatMap(leaves)
 
   /** Mark a multiply-referenced subplan as compute-once. Catalyst does
     * not common-subexpression-eliminate repeated subplans, so an
@@ -247,21 +243,6 @@ object Core {
       df.unpersist(blocking = false)
       df = sharedRegistry.poll()
     }
-  }
-
-  /** `min(rows of df, cap)`, the eager bounded probe the auto-routers
-    * decide on. Each partition stops reading at `cap` rows: one job
-    * over the plan's own partitions, no exchange. `df.limit(cap)
-    * .count()` gives the same number, but Spark names each generated
-    * limit's counter from a JVM-global sequence, so every such probe
-    * compiled a class no earlier probe had compiled. */
-  def boundedCount(df: DataFrame, cap: Long): Long = {
-    val perPartition = df.select().queryExecution.toRdd.mapPartitions { it =>
-      var n = 0L
-      while (n < cap && it.hasNext) { it.next(); n += 1 }
-      Iterator.single(n)
-    }
-    math.min(perPartition.fold(0L)(_ + _), cap)
   }
 
   /** Exact money arithmetic: double -> integer cents. Test values carry
@@ -336,7 +317,9 @@ object Core {
           // Spark-written parquet DIRECTORIES: File.length on a dir is
           // filesystem-dependent — walk the leaves and fold size + mtime
           // so a size-coincident rewrite still moves the tag (ADVICE r7)
-          val ls = leaves(e)
+          val ls = scala.util.Using.resource(
+            java.nio.file.Files.walk(e.toPath))(
+            _.iterator.asScala.map(_.toFile).filter(_.isFile).toList)
           s"${e.getName}:${ls.map(_.length).sum}:" +
             s"${if (ls.isEmpty) 0L else ls.map(_.lastModified).max}"
         }

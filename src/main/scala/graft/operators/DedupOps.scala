@@ -179,11 +179,10 @@ object DedupOps {
   /** Token-set Jaccard >= 0.6 near-dup pairs within `source` blocks,
     * as a lazy relational set-similarity join (see the `dedup_near`
     * entry in [[queries]]). */
-  def dedupNearRelational(s: SparkSession, dir: String,
-      source: Option[DataFrame] = None): DataFrame = {
+  def dedupNearRelational(s: SparkSession, dir: String): DataFrame = {
     // three references (both join sides + sizes): compute the exploded
     // token relation once, not once per reference
-    val toks = shared(tokSetsOf(source.getOrElse(table(s, dir, "documents")))
+    val toks = shared(tokSetsOf(table(s, dir, "documents"))
       .select(col("doc_id"), col("source"), explode(col("toks")).as("tok")))
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     SkewJoin.saltedCandidateJoin(
@@ -216,8 +215,7 @@ object DedupOps {
     * reduction. Fully lazy: the df ranking is a window inside the
     * plan. */
   def dedupNearPrefix(s: SparkSession, dir: String,
-      threshold: Double = 0.6, positional: Boolean = false,
-      source: Option[DataFrame] = None): DataFrame = {
+      threshold: Double = 0.6, positional: Boolean = false): DataFrame = {
     // docs feeds the token explode AND both verify joins; toks feeds the
     // df agg AND the prefix join; prefix is both sides of the candidate
     // self-join. Without `shared`, lineage re-derives the token relation
@@ -226,7 +224,7 @@ object DedupOps {
     // toks) as one int, never the token array itself — caching the
     // array per exploded row would columnar-encode a |toks|x blowup of
     // every document on every cold run (the round-3 interim regression).
-    val docs = shared(tokSetsOf(source.getOrElse(table(s, dir, "documents"))))
+    val docs = shared(tokSetsOf(table(s, dir, "documents")))
     val toks = shared(docs
       .select(col("doc_id"), col("source"), size(col("toks")).as("sz"),
         explode(col("toks")).as("tok")))
@@ -1138,9 +1136,8 @@ object DedupOps {
     * output lower bound). The contract `txt_containment` routes here on
     * such corpora via [[txtContainmentAuto]]. */
   def txtContainmentCount(s: SparkSession, dir: String,
-      threshold: Double = 0.9,
-      source: Option[DataFrame] = None): DataFrame = {
-    val toks = shared(tokSetsOf(source.getOrElse(table(s, dir, "documents")))
+      threshold: Double = 0.9): DataFrame = {
+    val toks = shared(tokSetsOf(table(s, dir, "documents"))
       .select(col("doc_id"), col("source"), explode(col("toks")).as("tok")))
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     // |A∩B| is SYMMETRIC, so the pair stream carries each unordered
@@ -1213,9 +1210,8 @@ object DedupOps {
     * the count-join wins; the two are result-identical (asserted), so
     * the choice is pure planning. */
   def txtContainmentPrefix(s: SparkSession, dir: String,
-      threshold: Double = 0.9,
-      source: Option[DataFrame] = None): DataFrame = {
-    val docs = shared(tokSetsOf(source.getOrElse(table(s, dir, "documents"))))
+      threshold: Double = 0.9): DataFrame = {
+    val docs = shared(tokSetsOf(table(s, dir, "documents")))
     val toks = shared(docs
       .select(col("doc_id"), col("source"), size(col("toks")).as("sz"),
         explode(col("toks")).as("tok")))
@@ -2101,18 +2097,22 @@ object DedupOps {
     // input checkpoint jobs: the seed's cluster column is doc_id
     val (eIn, eObs) =
       checkpointObserving(withSelfLoops(nodes, edges), Seq(count(lit(1))))
-    val (l0, l0Obs) = checkpointObserving(
-      nodes.select(col("doc_id"), col("doc_id").as("cluster")), cert)
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (vE, vL) = (s"graft_cc_e_$tag", s"graft_cc_l_$tag")
     val gdb = origin.conf.get("spark.sql.globalTempDatabase", "global_temp")
-    // whichever edge checkpoint is live; the finally frees it and l0
-    // on every path, so a failure anywhere below leaks neither
+    // whichever edge checkpoint is live, and the seed labels once they
+    // exist; the finally frees both on every path, so a failure
+    // anywhere below, the seed's own checkpoint job included, leaks
+    // neither
     var eLive = eIn
+    var l0Opt: Option[DataFrame] = None
     var scopedOpt: Option[SparkSession] = None
     var segments = 0
     var ok = false
     try {
+      val (l0, l0Obs) = checkpointObserving(
+        nodes.select(col("doc_id"), col("doc_id").as("cluster")), cert)
+      l0Opt = Some(l0)
       val (eRows, nRows) = (eObs.getLong(0), l0Obs.getLong(0))
       val parts = ccLoopParts(math.max(eRows, nRows),
         SkewJoin.defaultParts(origin))
@@ -2186,7 +2186,7 @@ object DedupOps {
       // unless no segment ran, and are freed via the ORIGIN handle (the
       // clone's view wrapper is not a LogicalRDD root)
       freeLocalCheckpoint(eLive)
-      if (!ok || segments > 0) freeLocalCheckpoint(l0)
+      if (!ok || segments > 0) l0Opt.foreach(freeLocalCheckpoint)
       scopedOpt.foreach { scoped =>
         // the returned labels Dataset belongs to the clone: restore its
         // AQE and shuffle partitions to the caller's current values so

@@ -98,14 +98,16 @@ object SimilarityOps {
       .getOrElse(SemDedupKConfigs.last)
 
   /** The one statistic every embeddings router reads ([[annLshAuto]],
-    * [[pqTopKAuto]], [[routedK]]): the row count, capped one row past
-    * the largest √n menu boundary (k_max²·occ + 1 = 204,800,001), so
-    * [[boundedCount]] stops the scan there no matter the corpus. Exact
-    * wherever a rule's answer still depends on it: every family and
-    * menu boundary sits at or below the cap. */
-  private[graft] def embeddingsCount(emb: DataFrame): Long = {
+    * [[pqTopKAuto]], [[routedK]]): the `embeddings` row count, summed
+    * from Parquet footers on the driver ([[footerRows]], no job) and
+    * capped one row past the largest √n menu boundary
+    * (k_max²·occ + 1 = 204,800,001), so the driver stops reading
+    * footers there no matter the corpus. Exact wherever a rule's
+    * answer still depends on it: every family and menu boundary sits
+    * at or below the cap, and each rule is a monotone threshold. */
+  private[graft] def embeddingsCount(s: SparkSession, dir: String): Long = {
     val kMax = SemDedupKConfigs.last.toLong
-    boundedCount(emb, kMax * kMax * SemDedupOcc + 1)
+    footerRows(s, dir, "embeddings", kMax * kMax * SemDedupOcc + 1)
   }
 
   /** multimodal_align_filter cosine threshold: the corpus's median
@@ -170,15 +172,9 @@ object SimilarityOps {
     * references this relation at least twice (self-join sides, Lloyd
     * rounds, probe/list splits), so it is marked compute-once: the
     * parquet scan + cast + norm run a single time per action. */
-  private def vecs(s: SparkSession, dir: String): DataFrame =
-    vecsOf(s, table(s, dir, "embeddings"))
-
-  /** [[vecs]] over an explicit embeddings-shaped relation: the
-    * operators that take an optional `source` in place of the
-    * `embeddings` table read it through here. */
-  private def vecsOf(s: SparkSession, emb: DataFrame): DataFrame = {
+  private def vecs(s: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(s)
-    shared(emb
+    shared(table(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
       .withColumn("norm", sqrt(dot(col("v"), col("v")))))
@@ -393,8 +389,7 @@ object SimilarityOps {
     * probe set (probePlanes = 0) — its oracle replays every flip. */
   def annLsh(s: SparkSession, dir: String, nPlanes: Int = Planes,
       multiprobe: Boolean = true, topK: Int = AnnTopK,
-      probePlanes: Int = 0,
-      source: Option[DataFrame] = None): DataFrame = {
+      probePlanes: Int = 0): DataFrame = {
     val ps = planesFor(nPlanes)
     val gated = multiprobe && probePlanes > 0 && probePlanes < nPlanes
     // one dot product per plane, shared by the sign bit and the margin
@@ -403,7 +398,7 @@ object SimilarityOps {
         lit(j).as("j"))): _*)
     val bucketFromPd = expr(
       "aggregate(pd, 0, (acc, s) -> acc + IF(s.d > 0.0, shiftleft(1, s.j), 0))")
-    val withB = vecsOf(s, source.getOrElse(table(s, dir, "embeddings")))
+    val withB = vecs(s, dir)
       .withColumn("pd", planeDots)
       .withColumn("bucket", bucketFromPd)
     // cache stays narrow (wide-cache rule, docs/BENCH_NOTES.md round 3):
@@ -507,30 +502,27 @@ object SimilarityOps {
     * the occupancy rule above, codified the way [[DedupOps.dedupNearAuto]]
     * codifies the df-skew rule — and, past the plane menu's ceiling,
     * the FAMILY handoff to routed IVF-rerank ([[annFamilyFor]],
-    * round 15). BOTH decisions ride the same ONE eager bounded count,
+    * round 15). BOTH decisions ride the same ONE footer row count,
     * [[embeddingsCount]]: it is exact everywhere the LSH regime can hold
     * (its cap sits far above the plane menu's 524,288-vector ceiling),
     * so `annFamilyFor`'s `Left(planes)` IS the occupancy-routed plane
     * choice, and the plan holds only the one branch that runs:
     * annLsh(autoPlanesFor(n)). Same oracle SQL. */
   def annLshAuto(s: SparkSession, dir: String,
-      topK: Int = AnnTopK, source: Option[DataFrame] = None): DataFrame = {
-    // Eager-bounded-count routing is the [[routedK]] convention
-    // (LazinessSpec-exempt on the same grounds: bounded state, never
-    // corpus-scaled results); a lazy IVF arm would carry a dead Lloyd
-    // training chain — the measured +2 s/query dead-branch planning
-    // cost that made dedup_semdedup's routing eager in round 13.
-    val emb = source.getOrElse(table(s, dir, "embeddings"))
-    annFamilyFor(embeddingsCount(emb)) match {
+      topK: Int = AnnTopK): DataFrame =
+    // Routing at build is the [[routedK]] convention: a lazy IVF arm
+    // would carry a dead Lloyd training chain — the measured +2 s/query
+    // dead-branch planning cost that made dedup_semdedup's routing
+    // eager in round 13.
+    annFamilyFor(embeddingsCount(s, dir)) match {
       case Right(k) =>
         // same determinism rules (9-dp rounding, id tiebreaks), same
         // output shape: `bucket` = the query's own nearest coarse
         // list — the IVF analog of the LSH reporting bucket
-        ivfKnn(s, dir, k, source, topK = topK, withBucket = true)
+        ivfKnn(s, dir, k, topK = topK, withBucket = true)
       case Left(p) =>
-        annLsh(s, dir, nPlanes = p, topK = topK, source = source)
+        annLsh(s, dir, nPlanes = p, topK = topK)
     }
-  }
 
   private def pairs(s: SparkSession, dir: String,
       joinKey: String): DataFrame = {
@@ -759,18 +751,17 @@ object SimilarityOps {
       }
     }: _*)
 
-  private[graft] def pqTopK(s: SparkSession, dir: String,
-      source: Option[DataFrame] = None): DataFrame = {
+  private[graft] def pqTopK(s: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(s)
-    // NOT [[vecsOf]] (round 17): the shared full-corpus cache (with a
+    // NOT [[vecs]] (round 17): the shared full-corpus cache (with a
     // norm column this query never reads) was the 20M decomposition's
     // third term — a 148 s GC-heavy columnar build of ~10 GB serving
     // exactly one encode scan and one 50-row probe scan. Only the
     // TRAINING SAMPLE is cached now (≤ [[PqTrainVectors]] rows — it is
     // scanned once per Lloyd round plus the init collect); the encode
-    // and the probes read the source directly, with the probe filter
+    // and the probes read the table directly, with the probe filter
     // pushed to the scan.
-    val ev = source.getOrElse(table(s, dir, "embeddings"))
+    val ev = table(s, dir, "embeddings")
       .select(col("vec_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val train = shared(ev.filter(col("vec_id") < PqTrainVectors))
@@ -867,36 +858,27 @@ object SimilarityOps {
   private[graft] val PqFlatMaxVectors: Long = 20000000L
 
   /** The PQ FAMILY decision, as a pure function: flat all-pairs ADC
-    * (Left) within `flatMax` vectors, IVF-PQ at the √n-routed coarse
-    * list count (Right) past it. `flatMax` is [[PqFlatMaxVectors]]
-    * everywhere but one spec: [[ivfpqTopK]] trains eagerly, so no
-    * executable spec can reach the IVF-PQ branch through a corpus of
-    * more than 20M rows, and SimilarityOpsSpec lowers the boundary
-    * instead. It must stay below [[embeddingsCount]]'s cap. */
-  private[graft] def pqFamilyFor(n: Long,
-      flatMax: Long = PqFlatMaxVectors): Either[Unit, Int] =
-    if (n <= flatMax) Left(()) else Right(semDedupKFor(n))
+    * (Left) within [[PqFlatMaxVectors]] vectors, IVF-PQ at the
+    * √n-routed coarse list count (Right) past it. The boundary must
+    * stay below [[embeddingsCount]]'s cap. */
+  private[graft] def pqFamilyFor(n: Long): Either[Unit, Int] =
+    if (n <= PqFlatMaxVectors) Left(()) else Right(semDedupKFor(n))
 
   /** [[pqTopK]] with the FAMILY derived from a corpus statistic — the
     * `sim_pq_topk` contract query since round 17 (the [[annLshAuto]]
     * handoff convention, r16 verdict #3: the ≥10⁸-vector deployment
     * guidance was prose in SCALE.md, now it's the plan the query
-    * builds). [[pqFamilyFor]] over the one eager bounded count
+    * builds). [[pqFamilyFor]] over the footer row count
     * [[embeddingsCount]] (the [[routedK]] convention) either keeps the
     * flat-PQ regime — built EXACTLY as before, so the contract-scale
     * plan and the DuckDB oracle replay are untouched — or hands off to
     * [[ivfpqTopK]] at the routed list count with the same output
-    * schema (a_id, rank, b_id, adc_micro). `flatMax`: see
-    * [[pqFamilyFor]]. */
-  private[graft] def pqTopKAuto(s: SparkSession, dir: String,
-      source: Option[DataFrame] = None,
-      flatMax: Long = PqFlatMaxVectors): DataFrame = {
-    val emb = source.getOrElse(table(s, dir, "embeddings"))
-    pqFamilyFor(embeddingsCount(emb), flatMax) match {
-      case Left(()) => pqTopK(s, dir, Some(emb))
-      case Right(k) => ivfpqTopK(s, dir, Some(emb), ivfK = k)
+    * schema (a_id, rank, b_id, adc_micro). */
+  private[graft] def pqTopKAuto(s: SparkSession, dir: String): DataFrame =
+    pqFamilyFor(embeddingsCount(s, dir)) match {
+      case Left(()) => pqTopK(s, dir)
+      case Right(k) => ivfpqTopK(s, dir, ivfK = k)
     }
-  }
 
   /** Per-vector coarse-list ranking as ONE map-side expression over
     * (v, norm): the (−ccos, cid) struct array sorts ascending ⇒
@@ -936,8 +918,8 @@ object SimilarityOps {
     * `dedup_semdedup_scaledk`), and a production index holds pairing
     * linear with k ∝ n at the price of hierarchical assignment. */
   private[graft] def semDedup(s: SparkSession, dir: String,
-      k: Int = IvfK, source: Option[DataFrame] = None): DataFrame = {
-    val e = vecsOf(s, source.getOrElse(table(s, dir, "embeddings")))
+      k: Int = IvfK): DataFrame = {
+    val e = vecs(s, dir)
     val cents = kmeansCentroids(e, k = k, iters = IvfIters)
     val assigned = shared(assignBest(
         e.select(col("vec_id"), col("v"), col("norm")), cents)
@@ -960,17 +942,16 @@ object SimilarityOps {
       .orderBy("vec_id")
   }
 
-  /** The routed k: [[semDedupKFor]] over the one eager bounded count
+  /** The routed k: [[semDedupKFor]] over the footer row count
     * [[embeddingsCount]], decided at build time. EAGER by measured
     * design: each k branch here carries a FULL Lloyd training chain —
     * the most plan-heavy subtree in the library — and a 4-branch lazy
     * guarded union measured +2.2 s (`dedup_semdedup`) / +2.0 s
     * (`sim_ann_ivf_rerank` vs `sim_ivf_knn`) per query at sf0.1 purely
-    * from dead-branch planning. The MLlib iterative-estimator pattern
-    * `sim_ivfpq_topk` already carries, LazinessSpec-exempted on the
-    * same grounds (bounded state, never corpus-scaled results). */
+    * from dead-branch planning. The count is driver IO on Parquet
+    * footers, so routing runs no job. */
   private def routedK(s: SparkSession, dir: String): Int =
-    semDedupKFor(embeddingsCount(table(s, dir, "embeddings")))
+    semDedupKFor(embeddingsCount(s, dir))
 
   /** [[semDedup]] with the cluster count DERIVED from the corpus — the
     * contract `dedup_semdedup` since round 13 (round-12 verdict #2:
@@ -980,8 +961,8 @@ object SimilarityOps {
     * (asserted in SimilarityOpsSpec); at the Verify/bench corpus sizes
     * the rule lands on the contract k = [[IvfK]], so the DuckDB oracle
     * replays the same fixed-k algebra it always has (the
-    * [[annLshAuto]] oracle convention). Eager bounded-count routing —
-    * see [[routedK]]. */
+    * [[annLshAuto]] oracle convention). Routed at build from the footer
+    * row count — see [[routedK]]. */
   def semDedupAuto(s: SparkSession, dir: String): DataFrame =
     semDedup(s, dir, routedK(s, dir))
 
@@ -995,9 +976,9 @@ object SimilarityOps {
     * ~n^1.5 while ROUTING recall (is the true neighbor's list probed?)
     * stays measured-1.0 across the embedding decades. */
   private[graft] def ivfKnn(s: SparkSession, dir: String,
-      k: Int = IvfK, source: Option[DataFrame] = None,
+      k: Int = IvfK,
       topK: Int = AnnTopK, withBucket: Boolean = false): DataFrame = {
-    val e = vecsOf(s, source.getOrElse(table(s, dir, "embeddings")))
+    val e = vecs(s, dir)
     val cents = kmeansCentroids(e, k = k, iters = IvfIters)
     val e3 = e.select(col("vec_id"), col("v"), col("norm"))
     // crn = 1 (nearest list) via the partial-aggregating argmax; both
@@ -1055,14 +1036,15 @@ object SimilarityOps {
   /** [[ivfKnn]] with the list count DERIVED from the corpus — the
     * `sim_ann_ivf_rerank` contract query (round-12 verdict #6).
     * Result-identical to [[ivfKnn]] at the routed k
-    * (SimilarityOpsSpec); eager bounded-count routing ([[routedK]]). */
+    * (SimilarityOpsSpec); routed at build from the footer row count
+    * ([[routedK]]). */
   def ivfKnnAuto(s: SparkSession, dir: String): DataFrame =
     ivfKnn(s, dir, routedK(s, dir))
 
   private[graft] def ivfpqTopK(s: SparkSession, dir: String,
-      source: Option[DataFrame] = None, nprobe: Int = IvfNprobe,
+      nprobe: Int = IvfNprobe,
       ivfK: Int = IvfK, pqK: Int = PqK): DataFrame = {
-    val e = vecsOf(s, source.getOrElse(table(s, dir, "embeddings")))
+    val e = vecs(s, dir)
     // DRIVER-COORDINATED training (the txt_bpe_vocab / MLlib-KMeans
     // pattern, LazinessSpec-exempted): the fully-lazy relational
     // composition of coarse k-means × residual join × subspace k-means
@@ -1103,15 +1085,16 @@ object SimilarityOps {
     // flat-PQ wall (714 s + sibling stages parked on its cache
     // locks) — and the Lloyd rounds only ever read the
     // [[PqTrainVectors]]-capped sample anyway (the oracle's `tv`
-    // CTE). SIZE-GATED like the curate cache (one bounded count, the
-    // routedK convention): within the cap the capped slice IS the
-    // whole relation, so the encode reads the same cache the rounds
-    // train from — the r16 contract-scale plan, whose removal
-    // measured +3-8 s/query at sf0.1 from re-deriving the lists
-    // chain per consumer — while past the cap the encode's single
-    // pass streams sv uncached (the 20M regime, where the cache IS
-    // the wall).
-    val withinCap = boundedCount(e, PqTrainVectors + 1L) <= PqTrainVectors
+    // CTE). SIZE-GATED like the curate cache, on the footer row count
+    // of `embeddings` (`e` keeps every row of it): within the cap the
+    // capped slice IS the whole relation, so the encode reads the
+    // same cache the rounds train from — the r16 contract-scale plan,
+    // whose removal measured +3-8 s/query at sf0.1 from re-deriving
+    // the lists chain per consumer — while past the cap the encode's
+    // single pass streams sv uncached (the 20M regime, where the cache
+    // IS the wall).
+    val withinCap =
+      footerRows(s, dir, "embeddings", PqTrainVectors) <= PqTrainVectors
     val tv = shared(sv.filter(col("vec_id") < PqTrainVectors))
     val codesSrc = if (withinCap) tv else sv
     // residual-PQ Lloyd rounds, each a map-side assign + one bounded
@@ -1225,18 +1208,18 @@ object SimilarityOps {
     * brute-force exact top-k, over the bounded [[KnnEvalProbes]] probe
     * prefix of an arbitrary embeddings-shaped relation — the
     * sim_ann_recall measurement factored so the specs can point it at
-    * a CLUSTERED corpus: the shipped corpus's neighbors are
+    * the `embeddings` table of a CLUSTERED corpus under `dir`: the shipped corpus's neighbors are
     * near-orthogonal (recall ≈ 0.13 is the theory-correct answer
     * there), so the claim that planes/probes tune recall up on
     * locality-bearing vectors needs a measurement instead of
     * Goemans–Williamson prose (round-8 verdict ask #1). */
-  private[graft] def annRecallMean(s: SparkSession, emb: DataFrame,
+  private[graft] def annRecallMean(s: SparkSession, dir: String,
       nPlanes: Int = Planes, multiprobe: Boolean = true,
       probePlanes: Int = 0): Double = {
-    val e = vecsOf(s, emb)
-    val ann = annLsh(s, dir = "", nPlanes = nPlanes,
+    val e = vecs(s, dir)
+    val ann = annLsh(s, dir, nPlanes = nPlanes,
         multiprobe = multiprobe, topK = AnnTopK,
-        probePlanes = probePlanes, source = Some(emb))
+        probePlanes = probePlanes)
       .filter(col("a_id") < KnnEvalProbes)
     recallOf(exactTopK(e), ann)
   }
@@ -1256,9 +1239,9 @@ object SimilarityOps {
     * literals, the rerank join is (list)-keyed with the bounded probe
     * side broadcast — candidates per query = nprobe × n/k, the IVF
     * contract. */
-  private[graft] def ivfRerankRecallMean(s: SparkSession, emb: DataFrame,
+  private[graft] def ivfRerankRecallMean(s: SparkSession, dir: String,
       nprobe: Int = IvfNprobe, ivfK: Int = IvfK): Double = {
-    val e = vecsOf(s, emb)
+    val e = vecs(s, dir)
     val coarse = kmeansCentroids(e, ivfK, IvfIters)
       .collect().sortBy(_.getLong(0))
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
@@ -1389,8 +1372,8 @@ object SimilarityOps {
     // The oracle replays the margin-ranked probe set. See [[annLsh]].
     "sim_ann_lsh_qd" -> { (s, dir) => annLsh(s, dir, probePlanes = 3) },
 
-    // Plane count derived from the corpus (occupancy rule): one eager
-    // bounded count routes between the discrete plane configs (and past
+    // Plane count derived from the corpus (occupancy rule): the footer
+    // row count routes between the discrete plane configs (and past
     // the menu's ceiling to IVF-rerank) — at the
     // sf0.01/sf0.1 corpus sizes the rule lands on the contract's 8
     // planes (same oracle); at sf1's 8,000 vectors it picks 10. See

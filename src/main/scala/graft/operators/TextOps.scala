@@ -396,29 +396,30 @@ object TextOps {
     * `pipeline_stats`: one map-side flag pass + the bounded broadcast
     * gram join. One definition, three consumers — composed outputs
     * cannot drift from the standalone operator by construction. */
-  /** Fused-curate cache gate (round-15 verdict weak #2): BELOW this
+  /** Fused-curate cache gate (round-15 verdict weak #2): UP TO this
     * doc count the curate pass persists the corpus-sized grams arrays
     * — one cache, one corpus text scan for both the gram and flag
     * branches, measured −20 s/run on the pipeline family at sf0.1.
-    * AT/ABOVE it only the narrow funnel columns persist and the gram
+    * ABOVE it only the narrow funnel columns persist and the gram
     * branch re-scans the parquet column-pruned: at the 100 TB design
     * point a MEMORY_AND_DISK persist of ~corpus-sized gram arrays is a
     * multi-copy local-disk write a second pruned scan beats (the
     * round-3 wide-cache trap class). 2M docs ≈ a few GB of cached
     * gram arrays on the measured corpus shape — the working-set size
     * where cache build + eviction pressure starts losing to the
-    * rescan. Decided by one bounded count (the routedK convention:
-    * the scan never reads past the gate, eager at build time,
-    * LazinessSpec-exempt on the same bounded-state grounds). */
+    * rescan. Decided at build from the `documents` footer row count
+    * ([[footerRows]]: driver IO that stops past the gate, no job). */
   private[graft] val CurateFuseMaxDocs = 2000000L
 
   private def curateWithReasons(s: SparkSession, dir: String): DataFrame =
-    curateWithReasonsGated(s, dir, CurateFuseMaxDocs)
+    curateWithReasonsGated(s, dir,
+      footerRows(s, dir, "documents", CurateFuseMaxDocs) <= CurateFuseMaxDocs)
 
-  /** [[curateWithReasons]] with the fusion gate exposed — specs force
-    * both regimes on the same corpus and assert identical output. */
+  /** [[curateWithReasons]] in the regime the gate's outcome `fused`
+    * names — specs force both regimes on the same corpus and assert
+    * identical output. */
   private[graft] def curateWithReasonsGated(s: SparkSession,
-      dir: String, fuseMaxDocs: Long): DataFrame = {
+      dir: String, fused: Boolean): DataFrame = {
     // ONE curate pass shared by both branches (round-15 A/B): the
     // gram branch and the flag branch previously each carried their
     // own curateMapSide subtree — two corpus text scans per
@@ -434,10 +435,6 @@ object TextOps {
     // cached at all: the funnel cache drops `grams` and the gram
     // branch is its own column-pruned rescan.
     val docs = table(s, dir, "documents").select("doc_id", "text")
-    // a gate at or past Int.MaxValue keeps the rescan regime without
-    // a probe: a corpus that large is deep in that regime anyway
-    val fused = fuseMaxDocs < Int.MaxValue.toLong &&
-      boundedCount(docs, fuseMaxDocs + 1) <= fuseMaxDocs
     val (cmNarrow, grams) =
       if (fused) {
         val cm = shared(curateMapSide(docs)

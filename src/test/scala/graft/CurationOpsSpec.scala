@@ -225,7 +225,7 @@ class CurationOpsSpec extends AnyFunSuite {
   test("ANN recall on clustered vectors: the locality lever measured, not prose") {
     // the complement of the uniform-corpus band above (round-8 verdict
     // ask #1): on PLANTED neighbors at pairwise cos ≈ 0.94
-    // (ScaleData.clusteredDf — 25 clusters × 20 members), per-plane
+    // (ScaleData.clusteredDir — 25 clusters × 20 members), per-plane
     // agreement p = 1 − θ/π ≈ 0.89, so 8-plane ±1-bit multiprobe
     // bounds single-bucket collision at p⁸ + 8p⁷(1−p) ≈ 0.79 from
     // below — measured 0.93/0.91/0.86/0.51 (full/qd3/qd2/single):
@@ -234,11 +234,11 @@ class CurationOpsSpec extends AnyFunSuite {
     // trusting the index: same code, same planes, same probe algebra
     // as the contract queries, only the corpus's angular locality
     // differs.
-    val emb = graft.ScaleData.clusteredDf(spark, 500, 25)
-    val full = SimilarityOps.annRecallMean(spark, emb)
-    val qd3 = SimilarityOps.annRecallMean(spark, emb, probePlanes = 3)
-    val qd2 = SimilarityOps.annRecallMean(spark, emb, probePlanes = 2)
-    val single = SimilarityOps.annRecallMean(spark, emb,
+    val clustered = graft.ScaleData.clusteredDir(spark, 500, 25)
+    val full = SimilarityOps.annRecallMean(spark, clustered)
+    val qd3 = SimilarityOps.annRecallMean(spark, clustered, probePlanes = 3)
+    val qd2 = SimilarityOps.annRecallMean(spark, clustered, probePlanes = 2)
+    val single = SimilarityOps.annRecallMean(spark, clustered,
       multiprobe = false)
     info(f"clustered recall@3: full=$full%.3f qd3=$qd3%.3f " +
       f"qd2=$qd2%.3f single=$single%.3f")

@@ -15,33 +15,6 @@ class DedupOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("dedup_near/dedup_ngram plan construction runs no data-scan jobs") {
-    // Core.table reads each schema from a Parquet footer on the driver,
-    // so a bare table read runs no job. The round-1 defect was a full
-    // scan+explode+shuffle count() at build time; assert build cost is
-    // no more than that of a trivially-lazy plan over the same table.
-    def jobsDuring(f: => Unit): Int = {
-      val t = spark.sparkContext.statusTracker
-      val before = t.getJobIdsForGroup(null).length
-      f
-      t.getJobIdsForGroup(null).length - before
-    }
-    val perTable = jobsDuring {
-      graft.core.Core.table(spark, TestSpark.sfDir, "documents")
-        .select("doc_id")
-    }
-    val near = jobsDuring {
-      DedupOps.queries("dedup_near")(spark, TestSpark.sfDir)
-    }
-    val ngram = jobsDuring {
-      DedupOps.queries("dedup_ngram")(spark, TestSpark.sfDir)
-    }
-    assert(near <= perTable,
-      s"dedup_near build ran $near jobs vs $perTable for a bare read")
-    assert(ngram <= 2 * perTable, // reads documents twice (shingles+count)
-      s"dedup_ngram build ran $ngram jobs vs $perTable for a bare read")
-  }
-
   test("bitmask fast path == relational dedup_near on a small-vocab corpus") {
     val rel = DedupOps.dedupNearRelational(spark, TestSpark.sfDir)
       .collect().map(_.toSeq).toSeq
@@ -418,6 +391,29 @@ class DedupOpsSpec extends AnyFunSuite {
       s"expected <=3 retained checkpoint RDDs after the loop " +
         s"(returned labels + in-flight), got ${after.size}")
     graft.core.Core.releaseShared()
+  }
+
+  test("ccPsLoop frees its edge checkpoint when the seed checkpoint " +
+      "job fails") {
+    import spark.implicits._
+    // String ids: the edge checkpoint (a union of the edges and the
+    // nodes' self-loops) only moves them, while the seed's certificate
+    // casts each to DECIMAL(38,0), which fails under ANSI on "x". So
+    // the seed's checkpoint job is the one that fails.
+    val nodes = Seq("0", "1", "x").toDF("doc_id")
+    val edges = Seq(("0", "1"), ("1", "0")).toDF("n", "m")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[Exception](DedupOps.ccPsLoop(nodes, edges, 4))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("CAST_INVALID_INPUT")),
+      s"the seed checkpoint did not fail on its cast: $err")
+    // the failed job's own RDD stays registered (Spark gives no handle
+    // to it), but it never materialized; every checkpoint the loop
+    // completed is freed
+    val left = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before(id) }
+    assert(left.values.forall(!_.isCheckpointed),
+      s"checkpoint RDDs left registered: ${left.keys.mkString(", ")}")
   }
 
   test("ccPsLoop sizes its loop parallelism to the measured input rows, " +

@@ -34,39 +34,21 @@ class LazinessSpec extends AnyFunSuite {
     // driver re-planning was the measured dominant manifest cost
     // (docs/PLANS.md round 12), and early-exits at the corpus's own
     // measured fixpoint (7 segments at sf0.01 vs the 17-pair cap).
-    // dedup_semdedup / sim_ann_ivf_rerank (round 13): the √n k-routing
-    // decides its menu entry from ONE bounded count at build
-    // (SimilarityOps.routedK — never reads past 204,800,001 rows). Same
-    // bounded-state class as sim_ivfpq_topk's training collects; the
-    // lazy guarded-union alternative measured +2.2 s per query at
-    // sf0.1 because each dead branch carries a full Lloyd chain.
-    // sim_ann_lsh_auto (round 15): the LSH->IVF FAMILY handoff runs
-    // the same bounded count at build (annFamilyFor) — a lazy IVF arm
-    // would carry a dead Lloyd chain into every LSH-regime plan. Below
-    // the ceiling it returns annLsh's plan at the routed plane count.
-    // curate family (round 16): the fused-curate cache is SIZE-GATED
-    // by one bounded count at build (TextOps.CurateFuseMaxDocs — the
-    // scan never reads past 2M+1 rows): below the gate the pass
-    // persists the grams arrays (one corpus scan for both branches),
-    // above it only narrow funnel columns persist and the gram branch
-    // rescans pruned. Same bounded-state class as routedK.
     // sim_pq_topk (round 16): flat-PQ sub-centroids now train via the
     // same bounded driver-side literal rounds as sim_ivfpq_topk
     // (pqCentroidsLit — the measured 5th decade retired the relational
     // chain's n·M exchanges); identical bounded-state rationale.
-    // Round 17: the contract query additionally routes the FAMILY
-    // (pqTopKAuto — flat PQ within the measured boundary, IVF-PQ past
-    // it) via one more bounded count, the annFamilyFor convention.
     // Round 18 (VERDICT r17 #1, the codegen/plan-size floor):
     // kmeansCentroids hands its trained k-row state to consumers as a
     // driver-side LITERAL relation — the same bounded-state collect
     // class as sim_ivfpq_topk/sim_pq_topk's quantizer training (k rows
     // of one array, never corpus-scaled results). That moves the
     // training execution to build time for every k-means consumer, so
-    // sim_ivf_knn and sim_centroid_assign join the exemption; their
-    // former lazy plans carried the full nested training lineage into
-    // every consumer stage (1,137-line formatted plans, 2-3 MiB task
-    // binaries — OPTIMIZATION_r18.md).
+    // sim_ivf_knn, sim_centroid_assign, dedup_semdedup and
+    // sim_ann_ivf_rerank are exempt; their former lazy plans carried
+    // the full nested training lineage into every consumer stage
+    // (1,137-line formatted plans, 2-3 MiB task binaries —
+    // OPTIMIZATION_r18.md).
     // dedup_near_auto / txt_containment: the df-skew rule reads its
     // statistic at build from one bounded 2048-doc sample job
     // (DedupOps.dfSkewOf), so the plan holds only the branch it runs —
@@ -75,10 +57,9 @@ class LazinessSpec extends AnyFunSuite {
     val exempt = Set("txt_bpe_vocab", "txt_bpe_vocab64", "txt_bpe_encode",
       "sim_pq_topk",
       "sim_ivfpq_topk", "dedup_semdedup", "sim_ann_ivf_rerank",
-      "sim_ann_lsh_auto", "sim_ivf_knn", "sim_centroid_assign",
+      "sim_ivf_knn", "sim_centroid_assign",
       "dedup_near_auto", "txt_containment",
-      "pipeline_tokenize", "pipeline_dedup", "pipeline_full",
-      "pipeline_curate", "pipeline_stats", "pipeline_pack")
+      "pipeline_tokenize", "pipeline_dedup", "pipeline_full")
     val tracker = spark.sparkContext.statusTracker
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(kv => exempt(kv._1)).flatMap {

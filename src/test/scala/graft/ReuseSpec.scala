@@ -22,10 +22,11 @@ class ReuseSpec extends AnyFunSuite {
     compiled - before
   }
 
-  // curation's four queries, then every query an eager router decides:
-  // sim_ann_lsh_auto, sim_pq_topk, sim_ivfpq_topk, sim_ann_ivf_rerank,
-  // dedup_semdedup and pipeline_curate on a bounded count,
-  // dedup_near_auto and txt_containment on the df-skew sample
+  // curation's four queries, then every query a router decides at
+  // build: sim_ann_lsh_auto, sim_pq_topk, sim_ivfpq_topk,
+  // sim_ann_ivf_rerank, dedup_semdedup and pipeline_curate on a footer
+  // row count, dedup_near_auto and txt_containment on the df-skew
+  // sample
   private val queries = Seq("dedup_cluster_cc", "dedup_simhash_global",
     "dedup_near_auto", "txt_perplexity_filter", "sim_ann_lsh_auto",
     "sim_pq_topk", "sim_ivfpq_topk", "sim_ann_ivf_rerank",

@@ -68,6 +68,19 @@ object ScaleData {
     dir
   }
 
+  /** An `embeddings` table of `emb`'s rows in a fresh temporary
+    * directory, which it returns. */
+  def embeddingsDir(emb: org.apache.spark.sql.DataFrame): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_emb").toString
+    emb.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  /** [[clusteredDf]] as the `embeddings` table of a fresh temporary
+    * directory, which it returns. */
+  def clusteredDir(s: SparkSession, nVec: Long, nClusters: Int): String =
+    embeddingsDir(clusteredDf(s, nVec, nClusters))
+
   /** The skewed-df corpus of the df-skew router specs: 80 documents
     * that share one hot token and are otherwise made of rare tokens.
     * Doc 0 is "hot a0 b0 c0 d0" and doc 1 is `second`, so the only

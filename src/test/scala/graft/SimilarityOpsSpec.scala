@@ -13,6 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class SimilarityOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** 500 planted-cluster vectors over 25 clusters, as an `embeddings`
+    * table. */
+  private lazy val clustered500 = ScaleData.clusteredDir(spark, 500, 25)
+
   /** Global brute-force top-k by the same 9-dp-rounded cosine +
     * b_id tiebreak the ANN operators rank with. */
   private def bruteTopK(k: Int): Map[Long, Set[Long]] = {
@@ -132,8 +136,7 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // and the router's plan is annLsh's plan at that count: 8 planes on
     // the contract corpus (500 vectors)
     def planes(dir: String): Int = SimilarityOps.annFamilyFor(
-        SimilarityOps.embeddingsCount(
-          graft.core.Core.table(spark, dir, "embeddings")))
+        SimilarityOps.embeddingsCount(spark, dir))
       .swap.getOrElse(fail(s"$dir left the LSH regime"))
     assert(planes(TestSpark.sfDir) == 8)
     val auto = SimilarityOps.annLshAuto(spark, TestSpark.sfDir)
@@ -171,17 +174,18 @@ class SimilarityOpsSpec extends AnyFunSuite {
     assert(annFamilyFor(2000000) == Right(320))
     assert(annFamilyFor(20000000) == Right(1000))
     // the handoff FIRES through the public query builder on a >524k
-    // corpus: the family count sees 525k vectors and the returned
-    // plan is the IVF path — same output schema as the LSH regime,
-    // so downstream consumers never see the switch. (Plan-built and
-    // schema-checked, not executed: a 525k-vector IVF run is too big
-    // for a spec — the 2M-vector emb1000x census measured recall 1.0,
-    // docs/SCALE.md.)
-    import spark.implicits._
-    val big = spark.range(525000).select(col("id").as("vec_id"),
-      array(lit(0.1f), lit(0.2f), lit(0.3f), lit(0.4f)).as("embedding"),
-      (col("id") % 10).cast("int").as("label"))
-    val handed = annLshAuto(spark, dir = "", source = Some(big))
+    // corpus: the footer count of its `embeddings` table reads 525k
+    // vectors and the returned plan is the IVF path — same output
+    // schema as the LSH regime, so downstream consumers never see the
+    // switch. (Plan-built and schema-checked, not executed: a
+    // 525k-vector IVF run is too big for a spec — the 2M-vector
+    // emb1000x census measured recall 1.0, docs/SCALE.md.)
+    val big = graft.ScaleData.embeddingsDir(spark.range(525000)
+      .select(col("id").as("vec_id"),
+        array(lit(0.1f), lit(0.2f), lit(0.3f), lit(0.4f)).as("embedding"),
+        (col("id") % 10).cast("int").as("label")))
+    assert(annFamilyFor(embeddingsCount(spark, big)) == Right(320))
+    val handed = annLshAuto(spark, big)
     val lshSchema = annLsh(spark, TestSpark.sfDir).schema
       .fields.map(f => (f.name, f.dataType)).toSeq
     assert(handed.schema.fields.map(f => (f.name, f.dataType)).toSeq
@@ -214,27 +218,21 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // contract scale: the rule over the router's statistic keeps the
     // flat family, and the routed query IS the flat plan — same rows,
     // so the DuckDB oracle replay is untouched
-    val n = embeddingsCount(graft.core.Core.table(spark, TestSpark.sfDir,
-      "embeddings"))
+    val n = embeddingsCount(spark, TestSpark.sfDir)
     assert(pqFamilyFor(n) == Left(()))
     val auto = pqTopKAuto(spark, TestSpark.sfDir)
     val flat = pqTopK(spark, TestSpark.sfDir)
     assert(auto.sameSemantics(flat))
     assert(auto.collect().nonEmpty)
     graft.core.Core.releaseShared()
-    // boundary regime FORCED on an executable corpus (flatMax exists
-    // for exactly this: no spec can train IVF-PQ past 20M vectors):
-    // ivfpqTopK's plan at the routed k (= IvfK at this corpus size —
-    // the same landing the other routed queries' oracles rely on), with
-    // the flat regime's schema
-    assert(pqFamilyFor(n, flatMax = 1L) == Right(IvfK))
-    val handed = pqTopKAuto(spark, TestSpark.sfDir, flatMax = 1L)
-    assert(handed.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    // the handoff branch: no spec can train IVF-PQ on a corpus past
+    // 20M vectors, so the branch's operator is checked directly.
+    // ivfpqTopK produces the flat regime's schema, and rows.
+    val ivf = ivfpqTopK(spark, TestSpark.sfDir)
+    assert(ivf.schema.fields.map(f => (f.name, f.dataType)).toSeq
       == flat.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       "handoff branch schema diverged from the flat regime's")
-    assert(handed.sameSemantics(ivfpqTopK(spark, TestSpark.sfDir)))
-    assert(!handed.sameSemantics(flat))
-    assert(handed.collect().nonEmpty)
+    assert(ivf.collect().nonEmpty)
     graft.core.Core.releaseShared()
   }
 
@@ -260,8 +258,7 @@ class SimilarityOpsSpec extends AnyFunSuite {
 
     // contract corpus: the rule over the routers' statistic picks
     // IvfK, and each router reproduces its fixed-k form there
-    def k(dir: String): Int = semDedupKFor(
-      embeddingsCount(graft.core.Core.table(spark, dir, "embeddings")))
+    def k(dir: String): Int = semDedupKFor(embeddingsCount(spark, dir))
     assert(k(TestSpark.sfDir) == IvfK)
     val sem = semDedupAuto(spark, TestSpark.sfDir)
     assert(sem.sameSemantics(semDedup(spark, TestSpark.sfDir)))
@@ -307,8 +304,7 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // code, which is why production PQ reranks its candidates exactly
     // — so the correct claim at this k is CLUSTER RETRIEVAL: a probe's
     // ADC top-3 should come from the probe's own planted cluster.
-    val emb = graft.ScaleData.clusteredDf(spark, 500, 25)
-    val out = SimilarityOps.pqTopK(spark, dir = "", source = Some(emb))
+    val out = SimilarityOps.pqTopK(spark, clustered500)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getLong(3)))
     val probes = out.groupBy(_._1)
@@ -379,13 +375,12 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // bounded (≥ flat − 0.08) and above the 0.75 floor — a routing bug
     // (wrong list join, residual drift) craters retrieval far below
     // either bound.
-    val emb = graft.ScaleData.clusteredDf(spark, 500, 25)
     def hitRate(df: org.apache.spark.sql.DataFrame): Double = {
       val rows = df.collect().map(r => (r.getLong(0), r.getLong(2)))
       rows.count { case (a, b) => a % 25 == b % 25 }.toDouble / rows.length
     }
-    val flat = hitRate(SimilarityOps.pqTopK(spark, "", source = Some(emb)))
-    val ivf = hitRate(SimilarityOps.ivfpqTopK(spark, "", source = Some(emb)))
+    val flat = hitRate(SimilarityOps.pqTopK(spark, clustered500))
+    val ivf = hitRate(SimilarityOps.ivfpqTopK(spark, clustered500))
     info(f"cluster retrieval @3: flat PQ $flat%.3f, IVF-PQ $ivf%.3f")
     assert(ivf >= flat - 0.08, s"IVF-PQ $ivf vs flat PQ $flat")
     assert(ivf >= 0.75, s"IVF-PQ retrieval $ivf")
@@ -401,9 +396,9 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // clusters of 40 → ~8 vectors/list) so nprobe=1 genuinely leaks
     // neighbors into sibling lists and the monotone climb is real,
     // not vacuous.
-    val emb = graft.ScaleData.clusteredDf(spark, 400, 10)
+    val clustered = graft.ScaleData.clusteredDir(spark, 400, 10)
     val recs = Seq(1, 2, 4, 50).map(np =>
-      SimilarityOps.ivfRerankRecallMean(spark, emb, np, ivfK = 50))
+      SimilarityOps.ivfRerankRecallMean(spark, clustered, np, ivfK = 50))
     info(recs.map(r => f"$r%.3f").mkString("recall@3 by nprobe: ", ", ", ""))
     assert(recs.sliding(2).forall { case Seq(a, b) => b >= a - 1e-9 },
       s"recall not monotone: $recs")
@@ -415,11 +410,11 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // not CHANGE any common pair's score (the round-9 residual-dot
     // form failed exactly this: scores depended on which probed list
     // was 'nearest', collapsing multi-probe recall to 0)
-    val s1 = SimilarityOps.ivfpqTopK(spark, "", source = Some(emb),
-        nprobe = 1).collect()
+    val s1 = SimilarityOps.ivfpqTopK(spark, clustered, nprobe = 1)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
-    val s2 = SimilarityOps.ivfpqTopK(spark, "", source = Some(emb),
-        nprobe = 2).collect()
+    val s2 = SimilarityOps.ivfpqTopK(spark, clustered, nprobe = 2)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
     val common = s1.keySet.intersect(s2.keySet)
     assert(common.nonEmpty)
